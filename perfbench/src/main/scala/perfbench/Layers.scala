@@ -75,12 +75,19 @@ object Layers {
     if (tracedLat.nonEmpty && plainLat.nonEmpty)
       l("trace.overhead_ms") =
         Stats.median(tracedLat.map(_._1).toSeq) - Stats.median(plainLat.map(_._1).toSeq)
-    val walls = tr.opWallNs.values.sum.toDouble
-    if (walls > 0) l("trace.self_time_coverage") = tr.selfNanos.values.sum / walls
+    // share of the traced operations' wall time that the layer spans
+    // cover: what remains as the root span's own self time ran outside
+    // every layer span
+    val roots = tr.spans.filter(_.parent < 0)
+    val rootNs = roots.map(s => s.end - s.start).sum.toDouble
+    if (rootNs > 0) {
+      val self = tr.selfNanos
+      l("trace.self_time_coverage") = 1.0 - roots.map(s => self(s.id)).sum / rootNs
+    }
     l("trace.spans_per_op") = tr.spans.length / ops
     if (out.kernelOps > 0) {
       l("functions.pairs_per_query") = out.kernelPairs.toDouble / out.kernelOps
-      val busyMs = tr.opKinds.collect { case (id, k) if k == out.kernelKind =>
+      val busyMs = tr.opKinds.collect { case (id, k) if k.startsWith(out.kernelKind) =>
         tr.listener.totals.get(s"op-$id").map(_.runMs).getOrElse(0L) }.sum
       out.notes("kernel_pairs") = out.kernelPairs.toString
       out.notes("kernel_busy_ms") = busyMs.toString

@@ -23,9 +23,7 @@ final class Ledger(trace: Trace) {
     val result =
       try Right(if (traced) trace.op(kind)(body) else body)
       catch { case NonFatal(e) => Left(e) }
-    val ns = System.nanoTime() - t0
-    if (traced) trace.opWallNs(trace.lastOp) = ns
-    val secs = ns / 1e9
+    val secs = (System.nanoTime() - t0) / 1e9
     result match {
       case Left(e) =>
         fail(kind, e.getClass.getName)

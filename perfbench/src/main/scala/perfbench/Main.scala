@@ -13,8 +13,8 @@ final case class Ctx(spark: SparkSession, ledger: Ledger, trace: Trace,
 
 /** What a workload measured. Main turns it into the result line. */
 final class Outcome {
-  /** Seconds of each set-up repetition (corpus + index), session excluded. */
-  val setups = mutable.ArrayBuffer.empty[Double]
+  /** Seconds of the set-up (corpus + index), session excluded. */
+  var setupS = Double.NaN
   var residentMb = Double.NaN
   /** Latency samples (ms, traced?) of the workload's timed operation,
     * passed operations only. */
@@ -32,13 +32,6 @@ final class Outcome {
   /** Per-workload metric names (topk_p50_ms, ...), for the run record. */
   val named = mutable.LinkedHashMap.empty[String, (Double, String)]
   val layer = mutable.LinkedHashMap.empty[String, Double]
-  private val reps = mutable.LinkedHashMap.empty[String, mutable.ArrayBuffer[Double]]
-  /** A per-layer value measured once per set-up repetition; the layer
-    * metric is their median. */
-  def perRep(name: String, v: Double): Unit = {
-    reps.getOrElseUpdate(name, mutable.ArrayBuffer.empty) += v
-    layer(name) = Stats.median(reps(name).toSeq)
-  }
   val notes = mutable.LinkedHashMap.empty[String, String]
 
   def sample(ms: Double, traced: Boolean): Unit = samples += ((ms, traced))
@@ -47,7 +40,6 @@ final class Outcome {
 object Main {
   val Dims = 64
   val CorpusRows = 5000
-  val SetupReps = 3
 
   def main(args: Array[String]): Unit = {
     val opts = args.sliding(2, 1).collect {
@@ -82,7 +74,7 @@ object Main {
     spark.stop()
     val controlPost = HostControl.seconds(cores)
 
-    val setupS = sessionS + Stats.median(out.setups.toSeq)
+    val setupS = sessionS + out.setupS
     val p50 = Stats.pct(out.latMs, 0.5)
     val p95 = Stats.pct(out.latMs, 0.95)
     val endToEnd = Seq(
@@ -108,7 +100,7 @@ object Main {
       "corpus" -> Json.obj("rows" -> CorpusRows.toString, "dims" -> Dims.toString,
         "clusters" -> corpus.Clusters.toString, "labels" -> corpus.Labels.toString),
       "session_start_s" -> Json.num(sessionS),
-      "setup_reps_s" -> Json.arr(out.setups.map(Json.num).toSeq),
+      "setup_body_s" -> Json.num(out.setupS),
       "samples" -> out.latMs.length.toString,
       "attempted" -> ledger.attempted.toString,
       "failed" -> ledger.failed.toString,

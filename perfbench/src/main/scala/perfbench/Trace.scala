@@ -16,10 +16,6 @@ final class Trace {
   val spans = mutable.ArrayBuffer.empty[Span]
   /** op id -> operation kind */
   val opKinds = mutable.LinkedHashMap.empty[Int, String]
-  /** op id -> wall ns as the ledger timed it */
-  val opWallNs = mutable.LinkedHashMap.empty[Int, Long]
-  /** id of the most recent traced operation */
-  def lastOp: Int = nextOp - 1
   private var stack: List[Int] = Nil
   private var curOp = -1
   private var nextSpan = 0

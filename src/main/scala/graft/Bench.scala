@@ -52,18 +52,22 @@ object Bench {
     graft.queries.LifecycleQueries.ensureAll(spark, sfDir)
     // untimed warmup: JIT + codegen + parquet reader init
     SparkEntry.queries("q_topk_l2")(spark, sfDir).count()
-    def timedPass() = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+    // a query that throws is not timed: it is reported in `failed` with
+    // its error class and left out of the maps and totals
+    def timedPass() = SparkEntry.queries.toSeq.sortBy(_._1).partitionMap { case (name, fn) =>
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      name -> (System.nanoTime() - t0) / 1e9
+      try {
+        fn(spark, sfDir).count()
+        Right(name -> (System.nanoTime() - t0) / 1e9)
+      } catch { case e: Throwable => Left(name -> e.getClass.getName) }
     }
-    val results = timedPass()
+    val (failedCold, results) = timedPass()
     // second pass = WARM numbers (planning/codegen amortized — the
     // steady-state a long-lived session sees; cold-vs-warm is ~2x on the
     // heavy dedup chains and regressions are only diagnosable against
     // like-for-like). The headline total stays COLD for cross-round
     // comparability.
-    val warm = timedPass()
+    val (failedWarm, warm) = timedPass()
     // Round 18: the driver contract expects the per-query `queries` map ON
     // STDOUT (PERF_r17 had per_query:{} / now_bench_ok:false because round 7
     // demoted stdout to a total-only short line). Print the full map as the
@@ -74,8 +78,12 @@ object Bench {
     val total = results.map(_._2).sum
     def jmap(rs: Seq[(String, Double)], f: Double => String) =
       rs.map { case (k, v) => "\"" + k + "\":" + f(v) }.mkString("{", ",", "}")
-    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":${jmap(results, _.toString)},"warm":${jmap(warm, _.toString)},"warm_total":${warm.map(_._2).sum},"host_control_sec":${ms(hostControl)},"sf":"$sfDir"}"""
-    val stdoutLine = s"""{"metric":"total","value":${ms(total)},"unit":"sec","n":${results.size},"queries":${jmap(results, ms)},"warm":${jmap(warm, ms)},"host_control_sec":${ms(hostControl)},"sf":"$sfDir"}"""
+    val failed = (failedCold.map((_, "cold")) ++ failedWarm.map((_, "warm")))
+      .map { case ((q, err), pass) =>
+        s"""{"query":"$q","pass":"$pass","error":"$err"}""" }
+      .mkString("[", ",", "]")
+    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":${jmap(results, _.toString)},"warm":${jmap(warm, _.toString)},"warm_total":${warm.map(_._2).sum},"failed":$failed,"host_control_sec":${ms(hostControl)},"sf":"$sfDir"}"""
+    val stdoutLine = s"""{"metric":"total","value":${ms(total)},"unit":"sec","n":${results.size},"queries":${jmap(results, ms)},"warm":${jmap(warm, ms)},"failed":$failed,"host_control_sec":${ms(hostControl)},"sf":"$sfDir"}"""
     java.nio.file.Files.writeString(java.nio.file.Paths.get("bench_out.json"), fullLine + "\n")
     spark.stop()
     println(stdoutLine)

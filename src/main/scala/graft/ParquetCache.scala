@@ -7,7 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Why: every bare `spark.read.parquet(path)` pays ~100 ms of
   * driver-side work (fresh Hadoop conf, file listing, footer schema
-  * inference) — measured with `graft.tools.ProfRead` at sf0.1: 98–126
+  * inference) — measured at sf0.1 by timing repeated reads: 98–126
   * ms/call. The bench makes ~700 such calls across its two passes, so
   * repeated listings of IMMUTABLE inputs dominated many queries' warm
   * floor. Real deployments get this for free from catalog/table-format

@@ -11,6 +11,7 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.functions.{col, xxhash64}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+import scala.util.control.NonFatal
 
 /** Build-time selectivity sample for dense index artifacts (round 10).
   *
@@ -201,7 +202,7 @@ object SampleSidecar {
           Some(s)
         } finally in.close()
       }
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
   }
 
   /** Evaluate `cond` on the sample driver-side. Some((matched, sampled,
@@ -234,7 +235,7 @@ object SampleSidecar {
         i += 1
       }
       Some((m, sample.rows.length.toLong, sample.total))
-    } catch { case _: Throwable => None }
+    } catch { case NonFatal(_) => None }
   }
 
   /** Wilson lower confidence bound (z=2, ~97.7% one-sided) on the match

@@ -220,7 +220,7 @@ object SqlDdl {
     *    (Sq8 / Pq / Rabitq artifacts: code-column coarse scan +
     *    windowed exact rerank; window<=0 = exact).
     *  - hnsw.scalar/product/rabitq → the coded graph fleets
-    *    (HnswSq / HnswPq / HnswRq).
+    *    (CodedHnsw over the SQ8 / PQ / RaBitQ codec).
     *  - ivf.scalar/product → the residual-coded pruned scans
     *    (IvfSq / IvfPq). ivf.rabitq is rejected with a pointer to
     *    flat.rabitq (the rabitq artifact here is corpus-wide).
@@ -241,8 +241,8 @@ object SqlDdl {
       val base = TableSnapshotResolver.readSource(spark, source)
       if (where.isEmpty) base else base.filter(where)
     }
-    import graft.operators.{HnswPq, HnswRq, HnswSq, IvfPq, IvfSq, Pq,
-      Rabitq, SparseSearch, Sq8}
+    import graft.operators.{CodedHnsw, IvfPq, IvfSq, Pq, Rabitq,
+      SparseSearch, Sq8}
     val allowedKeys: Set[String] = indexing match {
       case "hnsw" => Set("m", "ef_construction")
       case "ivf" => Set("lists", "nlist")
@@ -309,22 +309,16 @@ object SqlDdl {
       case ("flat", "rabitq") =>
         if (rebuild) Rabitq.reindex(spark, name, df, source, idCol, vecCol)
         else Rabitq.ensure(spark, name, df, source, idCol, vecCol)
-      case ("hnsw", "scalar") =>
-        requireBits8()
-        if (rebuild) HnswSq.reindex(spark, name, df, source, idCol, vecCol,
-          parts, hm, efc)
-        else HnswSq.ensure(spark, name, df, source, idCol, vecCol,
-          parts, hm, efc)
-      case ("hnsw", "product") =>
-        if (rebuild) HnswPq.reindex(spark, name, df, source, idCol, vecCol,
-          parts, pqM, pqKs, hm, efc)
-        else HnswPq.ensure(spark, name, df, source, idCol, vecCol,
-          parts, pqM, pqKs, hm, efc)
-      case ("hnsw", "rabitq") =>
-        if (rebuild) HnswRq.reindex(spark, name, df, source, idCol, vecCol,
-          parts, hm, efc)
-        else HnswRq.ensure(spark, name, df, source, idCol, vecCol,
-          parts, hm, efc)
+      case ("hnsw", q @ ("scalar" | "product" | "rabitq")) =>
+        val quant = q match {
+          case "scalar" => requireBits8(); CodedHnsw.Sq8Quant
+          case "product" => CodedHnsw.PqQuant(pqM, pqKs)
+          case _ => CodedHnsw.RabitqQuant
+        }
+        if (rebuild) CodedHnsw.reindex(spark, name, df, source, idCol, vecCol,
+          parts, quant, hm, efc)
+        else CodedHnsw.ensure(spark, name, df, source, idCol, vecCol,
+          parts, quant, hm, efc)
       case ("ivf", "scalar") =>
         requireBits8()
         if (rebuild) IvfSq.reindex(spark, name, df, source, idCol, vecCol,

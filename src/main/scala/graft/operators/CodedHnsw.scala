@@ -1,0 +1,544 @@
+package graft.operators
+
+import scala.collection.mutable
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import graft.index.IndexCatalog
+
+/**
+ * HNSW over a quantizer codec — the Spark analog of the reference's
+ * sealed HNSW × {Sq, Pq, Rq} compositions
+ * (crates/indexing/src/sealed.rs:25-29). The persisted graph stores
+ * CODES instead of raw f32 (SQ8: one byte per dimension; PQ: one byte
+ * per subspace; RaBitQ: D sign bits plus two f32 corrections per node),
+ * so the executor-resident artifact is 4× to ~32× smaller; traversal
+ * scores approximate distances through a per-query lookup table, and
+ * the ef frontier is exact-reranked by re-fetching just the candidate
+ * rows from the source table (the reranker-heap analog,
+ * crates/quantization/src/reranker/flat.rs).
+ *
+ * Graph CONSTRUCTION runs on raw f32 (exact neighbor selection — build
+ * cost is one-time; a graph built on quantized distances bakes the
+ * quantization error into its edges). Codes are produced at snapshot.
+ *
+ * Exact mode follows the [[Sq8]] window<=0 precedent: skip the coarse
+ * graphs entirely and score every source row exactly — provably the
+ * flat top-k, which is what lets the twins carry the flat DuckDB
+ * oracle.
+ */
+object CodedHnsw {
+
+  /** Per-query scorer over a [[CodedGraph]]: the estimate for a node is
+    * Σ_i lut(i·stride + code_i), followed by RaBitQ's per-node
+    * correction when the graph carries (norm, cos) columns — `qNorm` and
+    * `scale` (= √D·qNorm) serve only that correction. */
+  final class Probe(val lut: Array[Double], val stride: Int,
+      val qNorm: Double = 0.0, val scale: Double = 0.0) extends Serializable
+
+  /** What CREATE INDEX asks for before any training has run: the codec
+    * family, its artifact naming and format key, its default rerank
+    * window, and its training parameters. */
+  sealed abstract class Quant(val kind: String, val prefix: String,
+      val format: String, val window: Int) extends Serializable {
+    /** The codec's own `requires` entries; `m` is the graph degree. */
+    protected def ownRequires(m: Int): Map[String, String] =
+      Map("m" -> m.toString)
+
+    /** Manifest entries an existing artifact must match to be reused. */
+    final def requires(m: Int, efConstruction: Int, parts: Int)
+        : Map[String, String] =
+      Map("format" -> format, "ef_construction" -> efConstruction.toString,
+        "parts" -> parts.toString) ++ ownRequires(m) ++
+        (if (parts > 1) Map("routing" -> Hnsw.RoutingGen) else Map.empty)
+
+    /** Train the codec over the build rows (non-null, finite). */
+    def train(rows: DataFrame, vecCol: String): Codec
+    /** The trained codec an existing manifest persisted. */
+    def load(mf: IndexCatalog.Manifest): Codec
+  }
+
+  /** `[indexing.hnsw.quantization.scalar]`, bits=8: per-dimension
+    * (min, width) bounds. SQ8's estimate error is small, so the rerank
+    * window is the Sq8 one (4). */
+  case object Sq8Quant extends Quant("hnsw_sq8", "sqgraph", "sqflatbin3", 4) {
+    def train(rows: DataFrame, vecCol: String): Codec = {
+      val (mins, widths) = Sq8.train(rows, vecCol)
+      Sq8Codec(mins, widths)
+    }
+    def load(mf: IndexCatalog.Manifest): Codec =
+      Sq8Codec(mf.floats("mins"), mf.floats("widths"))
+  }
+
+  /** `[indexing.hnsw.quantization.product]`: `m` subspaces of `ks`
+    * centroids (the graph degree is persisted as `hnsw_m`). PQ's ADC
+    * estimate error is large enough that an ef == k beam misses true
+    * neighbors the rerank could have recovered (measured recall@100 0.66
+    * at ef=100 vs >=0.95 at k·window), hence the wider window (8). */
+  final case class PqQuant(m: Int = 8, ks: Int = 16)
+      extends Quant("hnsw_pq", "pqgraph", "pqflatbin3", 8) {
+    override protected def ownRequires(hm: Int): Map[String, String] =
+      Map("m" -> m.toString, "ks" -> ks.toString, "hnsw_m" -> hm.toString)
+    def train(rows: DataFrame, vecCol: String): Codec =
+      PqCodec(Pq.train(rows, vecCol, m, ks))
+    def load(mf: IndexCatalog.Manifest): Codec =
+      PqCodec(Pq.Model(mf.params("dims").toInt, mf.params("m").toInt,
+        mf.params("ks").toInt, mf.floats("codebook")))
+  }
+
+  /** `[indexing.hnsw.quantization.rabitq]`: a seeded rotation about the
+    * corpus centroid. Bit-estimate error at ef == k leaves recoverable
+    * neighbors outside the beam, hence k·window with window 4. */
+  case object RabitqQuant extends Quant("hnsw_rabitq", "rqgraph", "rqflatbin3", 4) {
+    def train(rows: DataFrame, vecCol: String): Codec =
+      RabitqCodec(Rabitq.train(rows, vecCol))
+    def load(mf: IndexCatalog.Manifest): Codec =
+      RabitqCodec(Rabitq.Model(mf.params("dims").toInt,
+        mf.floats("centroid"), mf.floats("rot")))
+  }
+
+  /** A trained quantizer: what the manifest persists, how a raw graph
+    * snapshot becomes codes, and how a query becomes a [[Probe]]. */
+  sealed trait Codec extends Serializable {
+    def quant: Quant
+    /** Manifest params the trained codec adds beside `requires`. */
+    def params: Map[String, String]
+    def floats: Map[String, Array[Float]]
+    def encode(g: Hnsw.FlatGraph): CodedGraph
+    def probe(q: Array[Float]): Probe
+  }
+
+  final case class Sq8Codec(mins: Array[Float], widths: Array[Float])
+      extends Codec {
+    def quant: Quant = Sq8Quant
+    def params: Map[String, String] = Map("bits" -> "8")
+    def floats: Map[String, Array[Float]] =
+      Map("mins" -> mins, "widths" -> widths)
+
+    def encode(g: Hnsw.FlatGraph): CodedGraph = {
+      val codes = new Array[Byte](g.ids.length * g.dims)
+      var i = 0
+      while (i < codes.length) {
+        val d = i % g.dims
+        val x = (g.vecs(i) - mins(d)) / widths(d)
+        codes(i) = math.round(math.max(0.0f, math.min(1.0f, x)) * 255.0f).toByte
+        i += 1
+      }
+      CodedGraph.fromFlat(g, g.dims, codes, null, null)
+    }
+
+    /** lut(i*256+c) = (decode(i,c) - q_i)² with the same float decode as
+      * Sq8.l2Kernel — every distance eval is then dims table adds with
+      * no decode arithmetic. */
+    def probe(q: Array[Float]): Probe = {
+      val dims = mins.length
+      val lut = new Array[Double](dims * 256)
+      var i = 0
+      while (i < dims) {
+        val mn = mins(i); val w = widths(i); val qi = q(i).toDouble
+        var c = 0
+        while (c < 256) {
+          val dec = mn + (c / 255.0f) * w
+          val dd = dec.toDouble - qi
+          lut(i * 256 + c) = dd * dd
+          c += 1
+        }
+        i += 1
+      }
+      new Probe(lut, 256)
+    }
+  }
+
+  final case class PqCodec(model: Pq.Model) extends Codec {
+    def quant: Quant = PqQuant(model.m, model.ks)
+    def params: Map[String, String] = Map("dims" -> model.dims.toString)
+    def floats: Map[String, Array[Float]] = Map("codebook" -> model.codebook)
+
+    /** Plain-Scala PQ encoder (the executor-side snapshot path — the
+      * Column-based [[Pq.Encode]] serves table builds). */
+    def encode(g: Hnsw.FlatGraph): CodedGraph = {
+      val subDim = model.subDim
+      val codes = new Array[Byte](g.ids.length * model.m)
+      var node = 0
+      while (node < g.ids.length) {
+        val off = node * g.dims
+        var s = 0
+        while (s < model.m) {
+          var best = 0; var bestD = Double.MaxValue
+          var c = 0
+          while (c < model.ks) {
+            var d = 0.0; var i = 0
+            val cb = (s * model.ks + c) * subDim
+            while (i < subDim) {
+              val diff = g.vecs(off + s * subDim + i).toDouble - model.codebook(cb + i)
+              d += diff * diff; i += 1
+            }
+            if (d < bestD) { bestD = d; best = c }
+            c += 1
+          }
+          codes(node * model.m + s) = best.toByte
+          s += 1
+        }
+        node += 1
+      }
+      CodedGraph.fromFlat(g, model.m, codes, null, null)
+    }
+
+    def probe(q: Array[Float]): Probe =
+      new Probe(model.lut(q).map(_.toDouble), model.ks)
+  }
+
+  final case class RabitqCodec(model: Rabitq.Model) extends Codec {
+    def quant: Quant = RabitqQuant
+    def params: Map[String, String] = Map("dims" -> model.dims.toString)
+    def floats: Map[String, Array[Float]] =
+      Map("centroid" -> model.centroid, "rot" -> model.rot)
+
+    /** Sign bits of the rotated residual + (norm, cos) corrections —
+      * [[Rabitq.encodeKernel]] semantics over the flat vector matrix. */
+    def encode(g: Hnsw.FlatGraph): CodedGraph = {
+      val n = g.ids.length
+      val dims = g.dims
+      val bpr = (dims + 7) / 8
+      val bits = new Array[Byte](n * bpr)
+      val norms = new Array[Float](n)
+      val cosvs = new Array[Float](n)
+      val r = new Array[Double](dims)
+      var node = 0
+      while (node < n) {
+        val off = node * dims
+        var norm2 = 0.0
+        var i = 0
+        while (i < dims) {
+          r(i) = g.vecs(off + i).toDouble - model.centroid(i)
+          norm2 += r(i) * r(i); i += 1
+        }
+        var dotSign = 0.0
+        var row = 0
+        while (row < dims) {
+          var acc = 0.0; var j = 0; val ro = row * dims
+          while (j < dims) { acc += model.rot(ro + j).toDouble * r(j); j += 1 }
+          if (acc >= 0) {
+            bits(node * bpr + (row >> 3)) =
+              (bits(node * bpr + (row >> 3)) | (1 << (row & 7))).toByte
+            dotSign += acc
+          } else dotSign -= acc
+          row += 1
+        }
+        val norm = math.sqrt(norm2)
+        norms(node) = norm.toFloat
+        cosvs(node) =
+          (if (norm == 0.0) 1.0 else dotSign / (norm * math.sqrt(dims.toDouble))).toFloat
+        node += 1
+      }
+      CodedGraph.fromFlat(g, dims, bits, norms, cosvs)
+    }
+
+    /** Byte LUT over the rotated query: lut(b*256 + byte) =
+      * Σ_{j<8} (bit_j ? +rq(8b+j) : -rq(8b+j)) — the sign-bit dot product
+      * becomes D/8 table adds. */
+    def probe(q: Array[Float]): Probe = {
+      val dims = model.dims
+      val rq = model.rotate(q)
+      val qNorm = math.sqrt(rq.map(x => x * x).sum)
+      val bpr = (dims + 7) / 8
+      val lut = new Array[Double](bpr * 256)
+      var b = 0
+      while (b < bpr) {
+        var v = 0
+        while (v < 256) {
+          var acc = 0.0; var j = 0
+          while (j < 8) {
+            val dim = b * 8 + j
+            if (dim < dims) {
+              val s = if (((v >>> j) & 1) == 1) 1.0 else -1.0
+              acc += s * rq(dim)
+            }
+            j += 1
+          }
+          lut(b * 256 + v) = acc
+          v += 1
+        }
+        b += 1
+      }
+      new Probe(lut, 256, qNorm, math.sqrt(dims.toDouble) * qNorm)
+    }
+  }
+
+  object RabitqCodec {
+    /** The RaBitQ distance estimate from the sign-bit dot product
+      * ([[Rabitq.scoreKernel]] semantics). */
+    @inline private[operators] def estimate(dot: Double, norm: Double,
+        cos: Double, p: Probe): Double = {
+      val qNorm = p.qNorm
+      if (norm == 0.0 || qNorm == 0.0) return norm * norm + qNorm * qNorm
+      val c = math.max(cos, 1e-9)
+      val est = dot / p.scale / c
+      norm * norm + qNorm * qNorm - 2.0 * norm * qNorm * est
+    }
+  }
+
+  /** Columnar coded graph: FlatGraph's CSR adjacency with `codeBytes`
+    * code bytes per node instead of the float vector matrix, plus the
+    * per-node (norm, cos) columns of a RaBitQ graph (null otherwise).
+    * `dims` is the artifact header's dimension field: code bytes per
+    * node for SQ8/PQ graphs, vector dims for RaBitQ graphs. */
+  final class CodedGraph(
+      val dims: Int, val ids: Array[Long], val codes: Array[Byte],
+      val norms: Array[Float], val cosvs: Array[Float],
+      val levels: Array[Int], val listStart: Array[Int],
+      val nbrOff: Array[Int], val nbrs: Array[Int],
+      val entry: Int, val maxLevel: Int) extends Serializable {
+
+    val codeBytes: Int = if (norms == null) dims else (dims + 7) / 8
+
+    @inline private def distTo(p: Probe, node: Int): Double = {
+      val lut = p.lut; val stride = p.stride
+      val off = node * codeBytes
+      var acc = 0.0; var i = 0
+      while (i < codeBytes) { acc += lut(i * stride + (codes(off + i) & 0xff)); i += 1 }
+      if (norms == null) acc
+      else RabitqCodec.estimate(acc, norms(node).toDouble, cosvs(node).toDouble, p)
+    }
+
+    private def greedyStep(p: Probe, start: Int, level: Int): Int = {
+      var cur = start
+      var curD = distTo(p, cur)
+      var improved = true
+      while (improved) {
+        improved = false
+        val li = listStart(cur) + level
+        var j = nbrOff(li)
+        val end = nbrOff(li + 1)
+        while (j < end) {
+          val n = nbrs(j)
+          val d = distTo(p, n)
+          if (d < curD) { curD = d; cur = n; improved = true }
+          j += 1
+        }
+      }
+      cur
+    }
+
+    private def searchLayer(p: Probe, ep: Int, ef: Int,
+        level: Int): IndexedSeq[(Double, Int)] = {
+      val visited = mutable.BitSet(ep)
+      val epD = distTo(p, ep)
+      val cand = mutable.PriorityQueue((-epD, ep))(Ordering.by(_._1))
+      val res = mutable.PriorityQueue((epD, ep))(Ordering.by(_._1))
+      while (cand.nonEmpty) {
+        val (ncd, c) = cand.dequeue()
+        val cd = -ncd
+        if (cd > res.head._1 && res.size >= ef) { cand.clear() }
+        else {
+          val li = listStart(c) + level
+          var j = nbrOff(li)
+          val end = nbrOff(li + 1)
+          while (j < end) {
+            val n = nbrs(j)
+            if (!visited.contains(n)) {
+              visited += n
+              val d = distTo(p, n)
+              if (res.size < ef || d < res.head._1) {
+                cand.enqueue((-d, n))
+                res.enqueue((d, n))
+                if (res.size > ef) res.dequeue()
+              }
+            }
+            j += 1
+          }
+        }
+      }
+      res.dequeueAll.reverse.toIndexedSeq
+    }
+
+    /** The ef FRONTIER (approximate dist, id) ascending — callers rerank
+      * exactly; this never truncates to k before the rerank. */
+    def searchFrontier(p: Probe, ef: Int): Seq[(Double, Long)] = {
+      if (entry < 0 || ids.length == 0) return Nil
+      var ep = entry
+      var lc = maxLevel
+      while (lc > 0) { ep = greedyStep(p, ep, lc); lc -= 1 }
+      searchLayer(p, ep, ef, 0).map { case (d, n) => (d, ids(n)) }
+    }
+  }
+
+  /** The two on-disk layouts: GRSQ (SQ8 and PQ codes) and GRRQ (sign
+    * bits followed by the norm and cos columns). Both are version 1. */
+  object CodedGraph {
+    private val SqMagic = 0x47525351 // "GRSQ"
+    private val RqMagic = 0x47525251 // "GRRQ"
+    private val Version = 1
+
+    private[operators] def fromFlat(g: Hnsw.FlatGraph, dims: Int,
+        codes: Array[Byte], norms: Array[Float],
+        cosvs: Array[Float]): CodedGraph =
+      new CodedGraph(dims, g.ids, codes, norms, cosvs, g.levels,
+        g.listStart, g.nbrOff, g.nbrs, g.entry, g.maxLevel)
+
+    def write(out: java.io.DataOutputStream, g: CodedGraph): Unit = {
+      out.writeInt(if (g.norms == null) SqMagic else RqMagic)
+      out.writeInt(Version)
+      out.writeInt(g.dims); out.writeInt(g.ids.length)
+      out.writeInt(g.entry); out.writeInt(g.maxLevel)
+      var i = 0
+      while (i < g.ids.length) { out.writeLong(g.ids(i)); i += 1 }
+      out.write(g.codes)
+      if (g.norms != null) {
+        i = 0
+        while (i < g.norms.length) { out.writeFloat(g.norms(i)); i += 1 }
+        i = 0
+        while (i < g.cosvs.length) { out.writeFloat(g.cosvs(i)); i += 1 }
+      }
+      i = 0
+      while (i < g.levels.length) { out.writeInt(g.levels(i)); i += 1 }
+      out.writeInt(g.nbrOff.length)
+      i = 0
+      while (i < g.nbrOff.length) { out.writeInt(g.nbrOff(i)); i += 1 }
+      out.writeInt(g.nbrs.length)
+      i = 0
+      while (i < g.nbrs.length) { out.writeInt(g.nbrs(i)); i += 1 }
+    }
+
+    def read(in: java.io.DataInputStream): CodedGraph = {
+      val magic = in.readInt()
+      require(magic == SqMagic || magic == RqMagic,
+        "not a graft coded hnsw artifact")
+      require(in.readInt() == Version, "unsupported coded hnsw artifact version")
+      val rabitq = magic == RqMagic
+      val dims = in.readInt(); val n = in.readInt()
+      val entry = in.readInt(); val maxLevel = in.readInt()
+      val ids = new Array[Long](n)
+      var i = 0
+      while (i < n) { ids(i) = in.readLong(); i += 1 }
+      val codes = new Array[Byte](n * (if (rabitq) (dims + 7) / 8 else dims))
+      in.readFully(codes)
+      val (norms, cosvs) =
+        if (!rabitq) (null, null)
+        else {
+          val norms = new Array[Float](n)
+          i = 0
+          while (i < n) { norms(i) = in.readFloat(); i += 1 }
+          val cosvs = new Array[Float](n)
+          i = 0
+          while (i < n) { cosvs(i) = in.readFloat(); i += 1 }
+          (norms, cosvs)
+        }
+      val levels = new Array[Int](n)
+      i = 0
+      while (i < n) { levels(i) = in.readInt(); i += 1 }
+      val listStart = new Array[Int](n + 1)
+      i = 0
+      while (i < n) { listStart(i + 1) = listStart(i) + levels(i) + 1; i += 1 }
+      val nOff = in.readInt()
+      val nbrOff = new Array[Int](nOff)
+      i = 0
+      while (i < nOff) { nbrOff(i) = in.readInt(); i += 1 }
+      val nN = in.readInt()
+      val nbrs = new Array[Int](nN)
+      i = 0
+      while (i < nN) { nbrs(i) = in.readInt(); i += 1 }
+      new CodedGraph(dims, ids, codes, norms, cosvs, levels, listStart,
+        nbrOff, nbrs, entry, maxLevel)
+    }
+  }
+
+  /** One-time CREATE INDEX job: train the codec over the table, build
+    * one raw-f32 graph per spatial partition (exact edges) plus the
+    * routing sidecar at parts>1, snapshot each to its coded form and
+    * persist `<prefix>-<pid>.bin`. Returns (codec, dataDir). */
+  def ensure(spark: org.apache.spark.sql.SparkSession, name: String,
+      df: => DataFrame, source: String, idCol: String, vecCol: String,
+      parts: Int, quant: Quant, m: Int = 12, efConstruction: Int = 300)
+      : (Codec, String) = {
+    val mf = IndexCatalog.ensure(spark, name, source,
+        requires = quant.requires(m, efConstruction, parts))(
+      buildInto(spark, df, source, idCol, vecCol, parts, quant, m,
+        efConstruction))
+    (quant.load(mf), IndexCatalog.dataDir(spark, name))
+  }
+
+  /** REINDEX: rebuild into a fresh generation dir with one atomic
+    * pointer flip — the vacuum path for SQL-created
+    * `[indexing.hnsw.quantization.*]` artifacts. */
+  def reindex(spark: org.apache.spark.sql.SparkSession, name: String,
+      df: => DataFrame, source: String, idCol: String, vecCol: String,
+      parts: Int, quant: Quant, m: Int = 12, efConstruction: Int = 300)
+      : (Codec, String) = {
+    val mf = IndexCatalog.reindex(spark, name)(
+      buildInto(spark, df, source, idCol, vecCol, parts, quant, m,
+        efConstruction))
+    (quant.load(mf), IndexCatalog.dataDir(spark, name))
+  }
+
+  private def buildInto(spark: org.apache.spark.sql.SparkSession,
+      df: => DataFrame, source: String, idCol: String, vecCol: String,
+      parts: Int, quant: Quant, m: Int, efConstruction: Int)(dataDir: String)
+      : IndexCatalog.Manifest = {
+    import spark.implicits._
+    val nonNull = df.filter(col(vecCol).isNotNull &&
+      graft.functions.vectorIsFinite(col(vecCol)))
+    val codec = quant.train(nonNull, vecCol)
+    val rows0 = nonNull.select(col(idCol).cast("long"), col(vecCol))
+      .as[(Long, Array[Float])]
+    val (nFiles, routingParams) = Hnsw.buildGraphFiles(spark, rows0,
+      parts, dataDir, m, efConstruction, codec)
+    manifest(codec, source, parts, m, efConstruction, nFiles, routingParams)
+  }
+
+  /** The manifest a build commits; its params are the `requires` map
+    * plus the codec's params, the file count and the routing params. */
+  private[graft] def manifest(codec: Codec, source: String, parts: Int,
+      m: Int, efConstruction: Int, nFiles: Int,
+      routingParams: Map[String, String]): IndexCatalog.Manifest =
+    IndexCatalog.Manifest(codec.quant.kind, source, "l2",
+      codec.quant.requires(m, efConstruction, parts) ++ codec.params ++
+        Map("files" -> nFiles.toString) ++ routingParams,
+      floats = codec.floats)
+
+  /** Two-stage search: coded-graph frontier per resident graph (the
+    * routed top-`probeGraphs` by the sidecar's l2 bounds on the RAW
+    * query — RaBitQ's rotation is an isometry, so raw-space ranking is
+    * the rotated-space ranking) -> exact rerank of the union frontier
+    * re-fetched from the SOURCE table by id (IN pushdown -> row-group
+    * pruning). The frontier breadth is k·window candidates (window
+    * defaults to the codec's), bounded below by efSearch. `exact = true`
+    * skips the graphs and scores every source row — provably the flat
+    * top-k. */
+  def searchIndex(spark: org.apache.spark.sql.SparkSession, path: String,
+      indexed: DataFrame, idCol: String, vecCol: String, q: Array[Float],
+      k: Int, codec: Codec, efSearch: Int = 100,
+      window: Option[Int] = None, exact: Boolean = false,
+      probeGraphs: Int = 0): DataFrame = {
+    import spark.implicits._
+    import graft.functions.l2sq
+    val coarse =
+      if (exact) indexed.select(col(idCol), col(vecCol))
+      else {
+        val dirPath = new org.apache.hadoop.fs.Path(path)
+        val fs = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val allFiles = fs.globStatus(
+            new org.apache.hadoop.fs.Path(path, s"${codec.quant.prefix}-*.bin"))
+          .map(_.getPath.toString).sorted.toSeq
+        if (allFiles.isEmpty)
+          return spark.emptyDataset[(Long, Double)].toDF(idCol, "dist")
+        val files = Hnsw.routeFiles(spark, path, allFiles, q, probeGraphs)
+        val bProbe = spark.sparkContext.broadcast(codec.probe(q))
+        val ef = math.max(efSearch,
+          k * math.max(window.getOrElse(codec.quant.window), 1))
+        val hconf = Hnsw.confEntries(spark)
+        val frontier = spark.sparkContext
+          .parallelize(files, Hnsw.fileSlices(spark, files.length))
+          .mapPartitions { it =>
+            val conf = Hnsw.mkConf(hconf)
+            it.flatMap { f =>
+              Hnsw.GraphCache.getCoded(f, conf)
+                .searchFrontier(bProbe.value, ef)
+                .iterator.map { case (d, id) => (id, d) }
+            }
+          }.toDF(idCol, "approx_dist")
+        Rerank.fetchByIds(indexed, idCol, vecCol, frontier)
+      }
+    coarse.select(col(idCol), l2sq(col(vecCol), typedLit(q)).as("dist"))
+      .orderBy(col("dist"), col(idCol)).limit(k)
+  }
+}

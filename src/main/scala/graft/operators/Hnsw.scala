@@ -1,6 +1,7 @@
 package graft.operators
 
 import scala.collection.mutable
+import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
@@ -257,7 +258,8 @@ object Hnsw {
       * unchanged (HybridSpec asserts byte-identity; a beam-search
       * variant was evaluated and REJECTED: under symmetric ties a local
       * search provably cannot reproduce the global lowest-index
-      * tie-break, measured diverging in graft.tools.RepairBench). */
+      * tie-break, measured diverging at ~2000 symmetric duplicate
+      * cliques). */
     private def repairConnectivity(forceScan: Boolean): Unit = {
       val n = vecs.length
       lastRepairBridges = 0
@@ -643,7 +645,9 @@ object Hnsw {
     * (path + mtime + length) — each executor JVM deserializes a sealed
     * graph ONCE and reuses it across queries, the resident-segment analog
     * of the reference (crates/index/src/lib.rs:386-423). A rebuilt
-    * artifact bumps mtime/length and evicts itself naturally. */
+    * artifact bumps mtime/length and evicts itself naturally. Raw
+    * ([[FlatGraph]]) and coded ([[CodedHnsw.CodedGraph]]) graphs share
+    * one LRU and one budget. */
   object GraphCache {
     /** Residency is bounded by an approximate BYTE budget per executor
       * JVM (LRU eviction), not a graph count: 128 arbitrarily-large
@@ -665,7 +669,7 @@ object Hnsw {
         val env = org.apache.spark.SparkEnv.get
         if (env == null) DefaultBudget
         else env.conf.getLong("spark.graft.hnsw.cacheBytes", DefaultBudget)
-      } catch { case _: Throwable => DefaultBudget }
+      } catch { case NonFatal(_) => DefaultBudget }
     }
 
     private[graft] def estBytes(g: FlatGraph): Long =
@@ -673,8 +677,17 @@ object Hnsw {
         g.levels.length.toLong * 4 + g.listStart.length.toLong * 4 +
         g.nbrOff.length.toLong * 4 + g.nbrs.length.toLong * 4 + 256L
 
+    private[graft] def estBytes(g: CodedHnsw.CodedGraph): Long =
+      g.ids.length.toLong * 8 + g.codes.length.toLong +
+        (if (g.norms == null) 0L else g.norms.length.toLong * 8) +
+        g.levels.length.toLong * 4 + g.listStart.length.toLong * 4 +
+        g.nbrOff.length.toLong * 4 + g.nbrs.length.toLong * 4 + 256L
+
+    /** (mtime, length, graph, estimated bytes) of one resident artifact. */
+    private final case class Resident(mtime: Long, len: Long, graph: AnyRef,
+        bytes: Long)
     private val cache =
-      new java.util.LinkedHashMap[String, (Long, Long, FlatGraph)](
+      new java.util.LinkedHashMap[String, Resident](
         16, 0.75f, /* accessOrder = */ true)
     private var curBytes = 0L
 
@@ -686,15 +699,24 @@ object Hnsw {
     /** (hits, loads) since JVM start. */
     def counters: (Long, Long) = (hitCount.get, loadCount.get)
 
-    def get(path: String, conf: org.apache.hadoop.conf.Configuration): FlatGraph = {
+    def get(path: String, conf: org.apache.hadoop.conf.Configuration): FlatGraph =
+      load(path, conf)(FlatGraph.read, estBytes(_: FlatGraph))
+
+    def getCoded(path: String,
+        conf: org.apache.hadoop.conf.Configuration): CodedHnsw.CodedGraph =
+      load(path, conf)(CodedHnsw.CodedGraph.read, estBytes(_: CodedHnsw.CodedGraph))
+
+    private def load[G <: AnyRef](path: String,
+        conf: org.apache.hadoop.conf.Configuration)(
+        read: java.io.DataInputStream => G, est: G => Long): G = {
       val p = new org.apache.hadoop.fs.Path(path)
       val fs = p.getFileSystem(conf)
       val st = fs.getFileStatus(p)
       cache.synchronized {
         val cur = cache.get(path)
-        if (cur != null && cur._1 == st.getModificationTime && cur._2 == st.getLen) {
+        if (cur != null && cur.mtime == st.getModificationTime && cur.len == st.getLen) {
           hitCount.incrementAndGet()
-          return cur._3
+          return cur.graph.asInstanceOf[G]
         }
       }
       loadCount.incrementAndGet()
@@ -702,18 +724,20 @@ object Hnsw {
       // of the same path waste work at worst, never corrupt)
       val in = new java.io.DataInputStream(
         new java.io.BufferedInputStream(fs.open(p), 1 << 20))
-      val g = try FlatGraph.read(in) finally in.close()
+      val g = try read(in) finally in.close()
       cache.synchronized {
-        val old = cache.put(path, (st.getModificationTime, st.getLen, g))
-        if (old != null) curBytes -= estBytes(old._3)
-        curBytes += estBytes(g)
+        val bytes = est(g)
+        val old = cache.put(path,
+          Resident(st.getModificationTime, st.getLen, g, bytes))
+        if (old != null) curBytes -= old.bytes
+        curBytes += bytes
         // evict eldest-by-access until under budget; keep the newest
         val budget = budgetBytes
         val it = cache.entrySet().iterator()
         while (curBytes > budget && cache.size() > 1 && it.hasNext) {
           val e = it.next()
           if (e.getKey != path) {
-            curBytes -= estBytes(e.getValue._3)
+            curBytes -= e.getValue.bytes
             it.remove()
           }
         }
@@ -1401,9 +1425,8 @@ object Hnsw {
 
   private[graft] def buildGraphFiles(spark: org.apache.spark.sql.SparkSession,
       rows0: org.apache.spark.sql.Dataset[(Long, Array[Float])],
-      parts: Int, dataDir: String, filePrefix: String, m: Int,
-      efConstruction: Int,
-      encode: GraphEncode): (Int, Map[String, String]) = {
+      parts: Int, dataDir: String, m: Int, efConstruction: Int,
+      codec: CodedHnsw.Codec): (Int, Map[String, String]) = {
     import spark.implicits._
     val dirPath = new org.apache.hadoop.fs.Path(dataDir)
     val fs = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1411,9 +1434,10 @@ object Hnsw {
     fs.mkdirs(dirPath)
     val hconf = confEntries(spark)
     val df = rows0.toDF("id", "vec")
+    val bCodec = spark.sparkContext.broadcast(codec)
     if (parts <= 1) {
-      val writer = new GraphFileWriter(dataDir, filePrefix, m,
-        efConstruction, hconf, null, encode)
+      val writer = new GraphFileWriter(dataDir, m, efConstruction, hconf,
+        null, bCodec)
       (df.as[(Long, Array[Float])].coalesce(1)
         .mapPartitions(writer.run _).collect().length, Map.empty)
     } else {
@@ -1422,8 +1446,8 @@ object Hnsw {
         .withColumn("cl", IvfIndex.nearestCentroid(col("vec"), model))
       val (pidCol, centroids) = balancedPids(assigned, "vec", parts, model)
       val bcent = spark.sparkContext.broadcast(centroids)
-      val writer = new GraphFileWriter(dataDir, filePrefix, m,
-        efConstruction, hconf, bcent, encode)
+      val writer = new GraphFileWriter(dataDir, m, efConstruction, hconf,
+        bcent, bCodec)
       val stats = assigned
         .select(pidCol.as("pid"), col("id"), col("vec"))
         .as[(Int, Long, Array[Float])]
@@ -2101,22 +2125,16 @@ object Hnsw {
   }
 }
 
-/** Serializable per-partition graph encoder for
-  * [[Hnsw.buildGraphFiles]] — a named trait instead of a Function2 so
-  * family implementations are explicit serializable objects/closures. */
-private[graft] trait GraphEncode extends Serializable {
-  def write(g: Hnsw.FlatGraph, out: java.io.DataOutputStream): Unit
-}
-
 /** Top-level serializable task for [[Hnsw.buildGraphFiles]]: a lambda
   * or local def here would be lifted as an Hnsw$ instance method and
   * capture the non-serializable singleton (measured — the closure
   * cleaner cannot null indylambda captures). Fields are all
   * serializable; `bcent` is null on the single/hash path. */
-private[graft] class GraphFileWriter(dataDir: String, filePrefix: String,
-    m: Int, efConstruction: Int, hconf: Seq[(String, String)],
+private[graft] class GraphFileWriter(dataDir: String, m: Int,
+    efConstruction: Int, hconf: Seq[(String, String)],
     bcent: org.apache.spark.broadcast.Broadcast[Array[Array[Float]]],
-    encode: GraphEncode) extends Serializable {
+    codec: org.apache.spark.broadcast.Broadcast[CodedHnsw.Codec])
+    extends Serializable {
   def run(it: Iterator[(Long, Array[Float])])
       : Iterator[(Int, Long, Double)] = {
     val rows = it.toArray.sortBy(_._1)
@@ -2138,6 +2156,7 @@ private[graft] class GraphFileWriter(dataDir: String, filePrefix: String,
         rad = java.lang.Math.nextUp(java.lang.Math.nextUp(rad))
       }
       val attempt = tc.taskAttemptId()
+      val filePrefix = codec.value.quant.prefix
       val p = new org.apache.hadoop.fs.Path(
         f"$dataDir/$filePrefix-$pid%05d.bin")
       val tmp = new org.apache.hadoop.fs.Path(
@@ -2145,7 +2164,8 @@ private[graft] class GraphFileWriter(dataDir: String, filePrefix: String,
       val pfs = p.getFileSystem(Hnsw.mkConf(hconf))
       val out = new java.io.DataOutputStream(
         new java.io.BufferedOutputStream(pfs.create(tmp, true), 1 << 20))
-      try encode.write(g.snapshot, out) finally out.close()
+      try CodedHnsw.CodedGraph.write(out, codec.value.encode(g.snapshot))
+      finally out.close()
       if (!pfs.rename(tmp, p)) {
         if (!pfs.exists(p))
           throw new java.io.IOException(s"failed to publish $p")

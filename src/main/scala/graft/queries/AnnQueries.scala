@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions._
-import graft.operators.{Hnsw, HnswPq, HnswRq, HnswSq, IncrHnsw, IvfIndex, IvfPq, IvfSq, KnnJoin, MaxSimJoin, Pq, Rabitq, Rabitq4, SparseSearch, Sq8, TypedAnn}
+import graft.operators.{CodedHnsw, Hnsw, IncrHnsw, IvfIndex, IvfPq, IvfSq, KnnJoin, MaxSimJoin, Pq, Rabitq, Rabitq4, SparseSearch, Sq8, TypedAnn}
 
 /**
  * ANN search paths (SURVEY §2.6): IVF (partition-pruned index table),
@@ -38,18 +38,17 @@ object AnnQueries {
     Hnsw.ensure(s, s"hnsw_${metric}_p${parts}_${san(d)}", t(s, d, "embeddings"), d,
       "vec_id", "embedding", metric, parts)
 
-  def hnswsq(s: SparkSession, d: String, parts: Int)
-      : (Array[Float], Array[Float], String) =
-    HnswSq.ensure(s, s"hnswsq8_p${parts}_${san(d)}", t(s, d, "embeddings"), d,
-      "vec_id", "embedding", parts)
+  def hnswsq(s: SparkSession, d: String, parts: Int): (CodedHnsw.Codec, String) =
+    CodedHnsw.ensure(s, s"hnswsq8_p${parts}_${san(d)}", t(s, d, "embeddings"), d,
+      "vec_id", "embedding", parts, CodedHnsw.Sq8Quant)
 
-  def hnswpq(s: SparkSession, d: String, parts: Int): (Pq.Model, String) =
-    HnswPq.ensure(s, s"hnswpq_p${parts}_${san(d)}", t(s, d, "embeddings"), d,
-      "vec_id", "embedding", parts)
+  def hnswpq(s: SparkSession, d: String, parts: Int): (CodedHnsw.Codec, String) =
+    CodedHnsw.ensure(s, s"hnswpq_p${parts}_${san(d)}", t(s, d, "embeddings"), d,
+      "vec_id", "embedding", parts, CodedHnsw.PqQuant())
 
-  def hnswrq(s: SparkSession, d: String, parts: Int): (Rabitq.Model, String) =
-    HnswRq.ensure(s, s"hnswrq_p${parts}_${san(d)}", t(s, d, "embeddings"), d,
-      "vec_id", "embedding", parts)
+  def hnswrq(s: SparkSession, d: String, parts: Int): (CodedHnsw.Codec, String) =
+    CodedHnsw.ensure(s, s"hnswrq_p${parts}_${san(d)}", t(s, d, "embeddings"), d,
+      "vec_id", "embedding", parts, CodedHnsw.RabitqQuant)
 
   def sparse(s: SparkSession, d: String): String =
     SparseSearch.ensure(s, s"sparse_${san(d)}", sparseDocs(s, d), d, "vec_id", "sv")
@@ -1685,52 +1684,52 @@ object AnnQueries {
     // HNSW×SQ8: coded resident graphs (4x smaller), LUT traversal,
     // exact rerank of the ef frontier re-fetched from the source
     "q_hnswsq8_topk_l2" -> ((s, d) => {
-      val (mins, widths, path) = hnswsq(s, d, 4)
+      val (codec, path) = hnswsq(s, d, 4)
       // ROUTED (round 9): top-2-of-4 spatially partitioned coded graphs
       // by the sidecar's l2 bounds; recall in RECALL.json (hnsw_sq8)
-      HnswSq.searchIndex(s, path, t(s, d, "embeddings"), "vec_id",
-        "embedding", qvec(s, d), k = 100, mins, widths,
+      CodedHnsw.searchIndex(s, path, t(s, d, "embeddings"), "vec_id",
+        "embedding", qvec(s, d), k = 100, codec,
         efSearch = efSearchConf(s), probeGraphs = 2)
     }),
     // exact mode (Sq8 window<=0 contract): skip the graphs, score every
     // source row -> provably the flat top-k, carries the flat oracle
     "q_hnswsq8_exact_l2" -> ((s, d) => {
-      val (mins, widths, path) = hnswsq(s, d, 4)
-      HnswSq.searchIndex(s, path, t(s, d, "embeddings"), "vec_id",
-        "embedding", qvec(s, d), k = 100, mins, widths, exact = true)
+      val (codec, path) = hnswsq(s, d, 4)
+      CodedHnsw.searchIndex(s, path, t(s, d, "embeddings"), "vec_id",
+        "embedding", qvec(s, d), k = 100, codec, exact = true)
     }),
 
     // HNSW×PQ: m-byte coded resident graphs (deepest compression of the
     // composition matrix), ADC-LUT traversal, exact frontier rerank
     "q_hnswpq_topk_l2" -> ((s, d) => {
-      val (model, path) = hnswpq(s, d, 4)
-      HnswPq.searchIndex(s, path, t(s, d, "embeddings"), "vec_id",
-        "embedding", qvec(s, d), k = 100, model,
-        efSearch = efSearchConf(s), window = pqWindowConf(s),
+      val (codec, path) = hnswpq(s, d, 4)
+      CodedHnsw.searchIndex(s, path, t(s, d, "embeddings"), "vec_id",
+        "embedding", qvec(s, d), k = 100, codec,
+        efSearch = efSearchConf(s), window = Some(pqWindowConf(s)),
         probeGraphs = 2)
     }),
     // exact mode: skip graphs, score every source row -> flat oracle
     "q_hnswpq_exact_l2" -> ((s, d) => {
-      val (model, path) = hnswpq(s, d, 4)
-      HnswPq.searchIndex(s, path, t(s, d, "embeddings"), "vec_id",
-        "embedding", qvec(s, d), k = 100, model, exact = true)
+      val (codec, path) = hnswpq(s, d, 4)
+      CodedHnsw.searchIndex(s, path, t(s, d, "embeddings"), "vec_id",
+        "embedding", qvec(s, d), k = 100, codec, exact = true)
     }),
 
     // HNSW×RaBitQ: sign-bit coded resident graphs (~3% of raw bytes),
     // estimator-scored traversal via a per-query byte LUT, exact rerank
     "q_hnswrq_topk_l2" -> ((s, d) => {
-      val (model, path) = hnswrq(s, d, 4)
-      HnswRq.searchIndex(s, path, t(s, d, "embeddings"), "vec_id",
-        "embedding", qvec(s, d), k = 100, model,
+      val (codec, path) = hnswrq(s, d, 4)
+      CodedHnsw.searchIndex(s, path, t(s, d, "embeddings"), "vec_id",
+        "embedding", qvec(s, d), k = 100, codec,
         efSearch = efSearchConf(s),
-        window = s.conf.get("spark.graft.rabitq.rerankWindow", "4").toInt,
+        window = Some(s.conf.get("spark.graft.rabitq.rerankWindow", "4").toInt),
         probeGraphs = 2)
     }),
     // exact mode: skip graphs, score every source row -> flat oracle
     "q_hnswrq_exact_l2" -> ((s, d) => {
-      val (model, path) = hnswrq(s, d, 4)
-      HnswRq.searchIndex(s, path, t(s, d, "embeddings"), "vec_id",
-        "embedding", qvec(s, d), k = 100, model, exact = true)
+      val (codec, path) = hnswrq(s, d, 4)
+      CodedHnsw.searchIndex(s, path, t(s, d, "embeddings"), "vec_id",
+        "embedding", qvec(s, d), k = 100, codec, exact = true)
     }),
 
     // SQ8: persisted codes -> coarse scan -> rerank window -> exact top-k

@@ -333,18 +333,18 @@ object Recall {
       }
       def dists(df: org.apache.spark.sql.DataFrame) =
         df.collect().map(_.get(1).asInstanceOf[Number].doubleValue())
-      val (mins, widths, sqPath) = A.hnswsq(spark, dir, 4)
+      val (sqc, sqPath) = A.hnswsq(spark, dir, 4)
       val csq = scoreRow("hnsw_sq8_auto",
-        dists(HnswSq.searchIndex(spark, sqPath, emb, "vec_id", "embedding",
-          q0, 100, mins, widths, probeGraphs = auto)), "q_hnswsq8_exact_l2")
-      val (pqm, pqPath) = A.hnswpq(spark, dir, 4)
+        dists(CodedHnsw.searchIndex(spark, sqPath, emb, "vec_id", "embedding",
+          q0, 100, sqc, probeGraphs = auto)), "q_hnswsq8_exact_l2")
+      val (pqc, pqPath) = A.hnswpq(spark, dir, 4)
       val cpq = scoreRow("hnsw_pq_auto",
-        dists(HnswPq.searchIndex(spark, pqPath, emb, "vec_id", "embedding",
-          q0, 100, pqm, probeGraphs = auto)), "q_hnswpq_exact_l2")
-      val (rqm, rqPath) = A.hnswrq(spark, dir, 4)
+        dists(CodedHnsw.searchIndex(spark, pqPath, emb, "vec_id", "embedding",
+          q0, 100, pqc, probeGraphs = auto)), "q_hnswpq_exact_l2")
+      val (rqc, rqPath) = A.hnswrq(spark, dir, 4)
       val crq = scoreRow("hnsw_rabitq_auto",
-        dists(HnswRq.searchIndex(spark, rqPath, emb, "vec_id", "embedding",
-          q0, 100, rqm, probeGraphs = auto)), "q_hnswrq_exact_l2")
+        dists(CodedHnsw.searchIndex(spark, rqPath, emb, "vec_id", "embedding",
+          q0, 100, rqc, probeGraphs = auto)), "q_hnswrq_exact_l2")
       // the dense IVF family at the RESOLVED default: max(10, the
       // ensure-calibrated probe_hint) per artifact and metric
       val ivfAuto = Seq("l2", "cos", "dot").map { metric =>

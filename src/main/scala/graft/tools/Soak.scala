@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Scale soak for the skew-sensitive pipeline families (dedup chain,
   * connected components, events, packing): synthesizes a 10× corpus by
@@ -103,7 +104,7 @@ object Soak {
     // the timed sf0.1 pass isn't penalized for running first
     for (q <- queries)
       try graft.SparkEntry.queries(q)(spark, src).count()
-      catch { case _: Throwable => }
+      catch { case NonFatal(_) => }
     // the warm-up re-built the small-scale cluster artifact: drop it
     // again so the timed pass pays the full chain at both scales
     graft.index.IndexCatalog.drop(spark, s"dedupcc_${san(src)}")
@@ -315,18 +316,18 @@ object Soak {
     // partitions while the corpus grows 10x — the combined-model pass
     // must scale with the probed fraction, not the partition count.
     def routedSoak(d: String, parts: Int): Seq[(String, Double)] = {
-      import graft.operators.{HnswSq, HnswPq, HnswRq, MaxSimJoin}
+      import graft.operators.{CodedHnsw, MaxSimJoin}
       val tag = san(d)
       val ePath = s"$d/embeddings.parquet"
       def e = spark.read.parquet(ePath)
       val q0 = e.filter(col("vec_id") === 0)
         .select(col("embedding")).head().getSeq[Float](0).toArray
-      val (mins, widths, sqPath) = HnswSq.ensure(spark, s"soaksq_$tag",
-        e, ePath, "vec_id", "embedding", parts)
-      val (pqModel, pqPath) = HnswPq.ensure(spark, s"soakpq_$tag",
-        e, ePath, "vec_id", "embedding", parts)
-      val (rqModel, rqPath) = HnswRq.ensure(spark, s"soakrq_$tag",
-        e, ePath, "vec_id", "embedding", parts)
+      val (sqCodec, sqPath) = CodedHnsw.ensure(spark, s"soaksq_$tag",
+        e, ePath, "vec_id", "embedding", parts, CodedHnsw.Sq8Quant)
+      val (pqCodec, pqPath) = CodedHnsw.ensure(spark, s"soakpq_$tag",
+        e, ePath, "vec_id", "embedding", parts, CodedHnsw.PqQuant())
+      val (rqCodec, rqPath) = CodedHnsw.ensure(spark, s"soakrq_$tag",
+        e, ePath, "vec_id", "embedding", parts, CodedHnsw.RabitqQuant)
       val svPath = graft.queries.AnnQueries.svecHnsw(spark, d, parts)
       val sparsifyQ = transform(col("embedding"),
         x => when(abs(x) > lit(0.15f), x).otherwise(lit(0.0f)))
@@ -354,14 +355,14 @@ object Soak {
         val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
       }
       def runs = Seq(
-        "hnsw_sq8_routed(g=4)" -> (() => HnswSq.searchIndex(spark, sqPath,
-          e, "vec_id", "embedding", q0, 100, mins, widths,
+        "hnsw_sq8_routed(g=4)" -> (() => CodedHnsw.searchIndex(spark, sqPath,
+          e, "vec_id", "embedding", q0, 100, sqCodec,
           probeGraphs = 4).count()),
-        "hnsw_pq_routed(g=4)" -> (() => HnswPq.searchIndex(spark, pqPath,
-          e, "vec_id", "embedding", q0, 100, pqModel,
+        "hnsw_pq_routed(g=4)" -> (() => CodedHnsw.searchIndex(spark, pqPath,
+          e, "vec_id", "embedding", q0, 100, pqCodec,
           probeGraphs = 4).count()),
-        "hnsw_rq_routed(g=4)" -> (() => HnswRq.searchIndex(spark, rqPath,
-          e, "vec_id", "embedding", q0, 100, rqModel,
+        "hnsw_rq_routed(g=4)" -> (() => CodedHnsw.searchIndex(spark, rqPath,
+          e, "vec_id", "embedding", q0, 100, rqCodec,
           probeGraphs = 4).count()),
         "svec_hnsw_knn_join_routed(500q,g=4)" -> (() =>
           graft.operators.Hnsw.knnJoinMetric(spark, svPath, "vec_id",

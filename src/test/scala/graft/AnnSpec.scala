@@ -454,11 +454,12 @@ class AnnSpec extends SparkSpec {
   }
 
   test("HNSW×SQ8: coded artifact ~4x smaller, recall@50 >= 0.9 at defaults, rerank exact") {
-    import graft.operators.HnswSq
+    import graft.operators.CodedHnsw
     val name = "annspec_hnswsq"
     graft.index.IndexCatalog.drop(spark, name)
-    val (mins, widths, path) = HnswSq.ensure(spark, name, emb.toDF(),
-      s"$sf001/embeddings.parquet", "vec_id", "embedding", parts = 2)
+    val (codec, path) = CodedHnsw.ensure(spark, name, emb.toDF(),
+      s"$sf001/embeddings.parquet", "vec_id", "embedding", parts = 2,
+      quant = CodedHnsw.Sq8Quant)
     // coded graphs store 1 byte/dim vs 4: the artifact must be at least
     // the 3-bytes/dim vector saving smaller than the raw-f32 graphs over
     // the same rows (adjacency bytes are identical on both sides)
@@ -478,8 +479,8 @@ class AnnSpec extends SparkSpec {
       s"coded artifact not smaller: sq=$sqBytes raw=$rawBytes n=$n dims=$dims")
     graft.index.IndexCatalog.drop(spark, rawName)
     // defaults: ef=100 frontier, exact rerank
-    val got = HnswSq.searchIndex(spark, path, emb.toDF(), "vec_id",
-      "embedding", q, 50, mins, widths)
+    val got = CodedHnsw.searchIndex(spark, path, emb.toDF(), "vec_id",
+      "embedding", q, 50, codec)
       .as[(Long, Double)].collect()
     assert(got.length == 50)
     assert(recall(got.map(_._1), flatTopk(50, "l2")) >= 0.9)
@@ -488,8 +489,8 @@ class AnnSpec extends SparkSpec {
       .select(l2sq($"embedding", typedLit(q))).as[Double].head()
     assert(got.head._2 == exact)
     // exact mode is provably the flat top-k
-    val ex = HnswSq.searchIndex(spark, path, emb.toDF(), "vec_id",
-      "embedding", q, 50, mins, widths, exact = true)
+    val ex = CodedHnsw.searchIndex(spark, path, emb.toDF(), "vec_id",
+      "embedding", q, 50, codec, exact = true)
       .as[(Long, Double)].collect()
     assert(ex.map(_._1).toSet == flatTopk(50, "l2"))
     // binary roundtrip of the coded graph
@@ -497,22 +498,23 @@ class AnnSpec extends SparkSpec {
     emb.select($"vec_id", $"embedding").as[(Long, Array[Float])]
       .collect().sortBy(_._1).take(500)
       .foreach { case (id, v) => g.insert(id, v) }
-    val sq = HnswSq.SqGraph.fromFlat(g.snapshot, mins, widths)
+    val sq = codec.encode(g.snapshot)
     val bos = new java.io.ByteArrayOutputStream()
-    HnswSq.SqGraph.write(new java.io.DataOutputStream(bos), sq)
-    val back = HnswSq.SqGraph.read(new java.io.DataInputStream(
+    CodedHnsw.CodedGraph.write(new java.io.DataOutputStream(bos), sq)
+    val back = CodedHnsw.CodedGraph.read(new java.io.DataInputStream(
       new java.io.ByteArrayInputStream(bos.toByteArray)))
-    assert(back.searchFrontier(q, mins, widths, 64) ==
-      sq.searchFrontier(q, mins, widths, 64))
+    assert(back.searchFrontier(codec.probe(q), 64) ==
+      sq.searchFrontier(codec.probe(q), 64))
     graft.index.IndexCatalog.drop(spark, name)
   }
 
   test("HNSW×PQ: m-byte coded graphs, recall@50 at defaults, rerank exact") {
-    import graft.operators.HnswPq
+    import graft.operators.CodedHnsw
     val name = "annspec_hnswpq"
     graft.index.IndexCatalog.drop(spark, name)
-    val (model, path) = HnswPq.ensure(spark, name, emb.toDF(),
-      s"$sf001/embeddings.parquet", "vec_id", "embedding", parts = 2)
+    val (codec, path) = CodedHnsw.ensure(spark, name, emb.toDF(),
+      s"$sf001/embeddings.parquet", "vec_id", "embedding", parts = 2,
+      quant = CodedHnsw.PqQuant())
     // codes are m bytes per node (8 vs 256 raw): artifact must be at
     // least (dims*4 - m) bytes/node smaller than raw graphs
     val rawName = "annspec_hnswpq_raw"
@@ -528,8 +530,8 @@ class AnnSpec extends SparkSpec {
     assert(duGraphs(path, "pqgraph-") <= duGraphs(rawPath, "graph-") - 3L * n * dims,
       "pq-coded artifact not smaller than raw graphs")
     graft.index.IndexCatalog.drop(spark, rawName)
-    val got = HnswPq.searchIndex(spark, path, emb.toDF(), "vec_id",
-      "embedding", q, 50, model)
+    val got = CodedHnsw.searchIndex(spark, path, emb.toDF(), "vec_id",
+      "embedding", q, 50, codec)
       .as[(Long, Double)].collect()
     assert(got.length == 50)
     // PQ traversal is coarser than SQ8 (8 bytes/node): softer bar
@@ -537,19 +539,20 @@ class AnnSpec extends SparkSpec {
     val exact = emb.filter($"vec_id" === got.head._1)
       .select(l2sq($"embedding", typedLit(q))).as[Double].head()
     assert(got.head._2 == exact)
-    val ex = HnswPq.searchIndex(spark, path, emb.toDF(), "vec_id",
-      "embedding", q, 50, model, exact = true)
+    val ex = CodedHnsw.searchIndex(spark, path, emb.toDF(), "vec_id",
+      "embedding", q, 50, codec, exact = true)
       .as[(Long, Double)].collect()
     assert(ex.map(_._1).toSet == flatTopk(50, "l2"))
     graft.index.IndexCatalog.drop(spark, name)
   }
 
   test("HNSW×RaBitQ: bit-coded graphs, estimator traversal, rerank exact") {
-    import graft.operators.HnswRq
+    import graft.operators.CodedHnsw
     val name = "annspec_hnswrq"
     graft.index.IndexCatalog.drop(spark, name)
-    val (model, path) = HnswRq.ensure(spark, name, emb.toDF(),
-      s"$sf001/embeddings.parquet", "vec_id", "embedding", parts = 2)
+    val (codec, path) = CodedHnsw.ensure(spark, name, emb.toDF(),
+      s"$sf001/embeddings.parquet", "vec_id", "embedding", parts = 2,
+      quant = CodedHnsw.RabitqQuant)
     // sign bits + 8 correction bytes per node: must beat raw by at least
     // 3 bytes/dim (the PQ/SQ8 assertions' sibling)
     val rawName = "annspec_hnswrq_raw"
@@ -565,8 +568,8 @@ class AnnSpec extends SparkSpec {
     assert(duGraphs(path, "rqgraph-") <= duGraphs(rawPath, "graph-") - 3L * n * dims,
       "bit-coded artifact not smaller than raw graphs")
     graft.index.IndexCatalog.drop(spark, rawName)
-    val got = HnswRq.searchIndex(spark, path, emb.toDF(), "vec_id",
-      "embedding", q, 50, model)
+    val got = CodedHnsw.searchIndex(spark, path, emb.toDF(), "vec_id",
+      "embedding", q, 50, codec)
       .as[(Long, Double)].collect()
     assert(got.length == 50)
     // 1-bit estimator is the coarsest of the composition matrix
@@ -574,8 +577,8 @@ class AnnSpec extends SparkSpec {
     val exact = emb.filter($"vec_id" === got.head._1)
       .select(l2sq($"embedding", typedLit(q))).as[Double].head()
     assert(got.head._2 == exact)
-    val ex = HnswRq.searchIndex(spark, path, emb.toDF(), "vec_id",
-      "embedding", q, 50, model, exact = true)
+    val ex = CodedHnsw.searchIndex(spark, path, emb.toDF(), "vec_id",
+      "embedding", q, 50, codec, exact = true)
       .as[(Long, Double)].collect()
     assert(ex.map(_._1).toSet == flatTopk(50, "l2"))
     graft.index.IndexCatalog.drop(spark, name)

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Headline bench: times every SparkEntry query at SPARK_GRAFT_SF_DIR.
   * Index artifacts are pre-built untimed (the CREATE INDEX phase); timed
@@ -28,6 +28,20 @@ object Bench {
     (System.nanoTime() - t0) / 1e9
   }
 
+  /** One timed pass over `queries` in order: (failed (query, error
+    * class), timed (query, seconds)). A query that throws is not timed:
+    * it is reported with its error class and left out of the timings. */
+  private[graft] def timedPass(spark: SparkSession, sfDir: String,
+      queries: Seq[(String, (SparkSession, String) => DataFrame)])
+      : (Seq[(String, String)], Seq[(String, Double)]) =
+    queries.partitionMap { case (name, fn) =>
+      val t0 = System.nanoTime()
+      try {
+        fn(spark, sfDir).count()
+        Right(name -> (System.nanoTime() - t0) / 1e9)
+      } catch { case e: Throwable => Left(name -> e.getClass.getName) }
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -52,22 +66,14 @@ object Bench {
     graft.queries.LifecycleQueries.ensureAll(spark, sfDir)
     // untimed warmup: JIT + codegen + parquet reader init
     SparkEntry.queries("q_topk_l2")(spark, sfDir).count()
-    // a query that throws is not timed: it is reported in `failed` with
-    // its error class and left out of the maps and totals
-    def timedPass() = SparkEntry.queries.toSeq.sortBy(_._1).partitionMap { case (name, fn) =>
-      val t0 = System.nanoTime()
-      try {
-        fn(spark, sfDir).count()
-        Right(name -> (System.nanoTime() - t0) / 1e9)
-      } catch { case e: Throwable => Left(name -> e.getClass.getName) }
-    }
-    val (failedCold, results) = timedPass()
+    val queries = SparkEntry.queries.toSeq.sortBy(_._1)
+    val (failedCold, results) = timedPass(spark, sfDir, queries)
     // second pass = WARM numbers (planning/codegen amortized — the
     // steady-state a long-lived session sees; cold-vs-warm is ~2x on the
     // heavy dedup chains and regressions are only diagnosable against
     // like-for-like). The headline total stays COLD for cross-round
     // comparability.
-    val (failedWarm, warm) = timedPass()
+    val (failedWarm, warm) = timedPass(spark, sfDir, queries)
     // Round 18: the driver contract expects the per-query `queries` map ON
     // STDOUT (PERF_r17 had per_query:{} / now_bench_ok:false because round 7
     // demoted stdout to a total-only short line). Print the full map as the

@@ -1,5 +1,7 @@
 package graft.operators
 
+import org.apache.spark.SparkContext
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -241,11 +243,6 @@ object IncrHnsw {
     graftDir(spark, name)
   }
 
-  /** Compact the segment store WITHOUT rebuilding graphs: snapshot the
-    * live tombstone versions into the index's `dead/` parquet (those ids
-    * stay resident in the graphs, filtered at search), then fold the
-    * data side. Side graphs are hereby "promoted" — they simply remain
-    * part of the sealed search set. */
   /** Full optimize: fold the store, rebuild base graphs from scratch —
     * reclaims tombstoned rows and folds side graphs into the base
     * (shared [[IncrMaint.vacuum]] contract). */
@@ -256,6 +253,11 @@ object IncrHnsw {
       ensure(spark, name, segDir, idCol, vecCol, metric, m, efConstruction)
     }
 
+  /** Compact the segment store WITHOUT rebuilding graphs: snapshot the
+    * live tombstone versions into the index's `dead/` parquet (those ids
+    * stay resident in the graphs, filtered at search), then fold the
+    * data side. Side graphs are hereby "promoted" — they simply remain
+    * part of the sealed search set. */
   def promoteOnCompact(spark: SparkSession, name: String, segDir: String,
       idCol: String): Unit = synchronized {
     import graft.index.IndexCatalog
@@ -289,21 +291,90 @@ object IncrHnsw {
   private def binOrParquetNonEmpty(dir: java.io.File): Boolean =
     Option(dir.listFiles()).getOrElse(Array.empty).exists(_.getName.endsWith(".parquet"))
 
-  /** DRIVER-side tombstone snapshot cache (round 16): the merged
-    * (id → max tomb version) pairs of live tombstones + the promoted
-    * dead/ parquet, keyed per (store, index) and fingerprinted on the
-    * store's VERSION pointer (every delete/append/compact rewrites it)
-    * plus the dead/ dir identity (promote-on-compact swaps it whole) —
-    * without this, EVERY search paid a tombstone read job. One entry
-    * per (store, index), pruned when the store's VERSION disappears
-    * (the tupleCache convention); memory is the tombstone count the
-    * broadcast already held. */
-  private val tombCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Array[(Long, Long)])]()
+  /** The visibility snapshot of one (store, index): every tombstone —
+    * the store's live `tombs-<s>` dirs plus the promoted `dead/` parquet
+    * — folded max-per-id into id-sorted primitive arrays (the reference
+    * keeps the same map in memory, crates/index/src/delete.rs:10-75).
+    * Published arrays are never mutated; a newer snapshot copies. */
+  private[graft] final class Tombs(val ids: Array[Long], val vers: Array[Long])
+      extends Serializable {
+    /** A row of `id` from a graph carrying version `ver` is hidden. */
+    def hides(id: Long, ver: Long): Boolean = {
+      val i = java.util.Arrays.binarySearch(ids, id)
+      i >= 0 && vers(i) >= ver
+    }
+  }
 
-  private def tombstoneSnapshot(spark: SparkSession, segDir: String,
-      dataDir: java.io.File, idCol: String): Array[(Long, Long)] = {
-    import spark.implicits._
+  /** [[Tombs]] with the committed store state they cover. `origin` holds
+    * the rest of what the fold read: the artifact dir, the store
+    * generation's identity and the dead/ fingerprint; `dirsRead` counts
+    * the `tombs-<s>` dirs the fold that built it read. The snapshot
+    * carries one broadcast of its tombstones, made by the first search
+    * on a SparkContext and reused until a commit supersedes the
+    * snapshot. A superseded broadcast is never destroyed (a concurrent
+    * search may still hold it); the ContextCleaner reclaims it. */
+  private[graft] final class TombSnapshot(val gen: Long, val seq: Long,
+      val origin: String, val tombs: Tombs, val dirsRead: Int) {
+    private var bc: (SparkContext, Broadcast[Tombs]) = _
+    def broadcast(sc: SparkContext): Broadcast[Tombs] = synchronized {
+      if (bc == null || (bc._1 ne sc)) bc = (sc, sc.broadcast(tombs))
+      bc._2
+    }
+  }
+
+  /** DRIVER-side snapshot cache, one entry per (store, index), pruned
+    * when the store's VERSION disappears (the tupleCache convention).
+    * Freshness is the committed (gen, seq), never mtime — seq strictly
+    * increases per commit, so rapid-fire delete/search sequences can't
+    * alias — plus the snapshot's origin: compaction bumps gen, promote
+    * rewrites dead/, REINDEX moves the artifact dir. */
+  private val tombCache =
+    new java.util.concurrent.ConcurrentHashMap[String, TombSnapshot]()
+
+  /** Fold tombstones max-per-id into `prior`: the dead/ parquet when
+    * `dead` is given, then every `tombs-<s>` dir with afterSeq < s <=
+    * st.seq, all read on the driver. The one fold for both cases: a
+    * snapshot whose origin is unchanged and whose seq advanced folds
+    * only the new dirs; anything else folds dead/ and every committed
+    * dir into an empty snapshot. */
+  private def fold(prior: Tombs, dead: Option[java.io.File], segDir: String,
+      idCol: String, st: Segments.State, afterSeq: Long,
+      origin: String): TombSnapshot = {
+    val m = new scala.collection.mutable.LongMap[Long]()
+    val add = (id: Long, v: Long) =>
+      if (v > m.getOrElse(id, Long.MinValue)) m.update(id, v)
+    dead.foreach(Segments.readIdVersions(_, idCol, "_tomb_ver")(add))
+    val dirsRead = Segments.tombstonesAfter(segDir, idCol, st, afterSeq)(add)
+    new TombSnapshot(st.gen, st.seq, origin, merge(prior, m), dirsRead)
+  }
+
+  /** `prior` with `m`'s versions merged in max-per-id, as new arrays. */
+  private def merge(prior: Tombs,
+      m: scala.collection.mutable.LongMap[Long]): Tombs = {
+    if (m.isEmpty) return prior
+    val ks = m.keys.toArray
+    java.util.Arrays.sort(ks)
+    val (a, av) = (prior.ids, prior.vers)
+    val ids = new Array[Long](a.length + ks.length)
+    val vers = new Array[Long](ids.length)
+    var i = 0; var j = 0; var n = 0
+    while (i < a.length || j < ks.length) {
+      if (j == ks.length || (i < a.length && a(i) < ks(j))) {
+        ids(n) = a(i); vers(n) = av(i); i += 1
+      } else if (i == a.length || ks(j) < a(i)) {
+        ids(n) = ks(j); vers(n) = m(ks(j)); j += 1
+      } else {
+        ids(n) = a(i); vers(n) = math.max(av(i), m(ks(j))); i += 1; j += 1
+      }
+      n += 1
+    }
+    new Tombs(java.util.Arrays.copyOf(ids, n), java.util.Arrays.copyOf(vers, n))
+  }
+
+  /** The snapshot a search of `name` over `segDir` checks: the cached
+    * one when the store has not committed since, else a fold. */
+  private[graft] def tombstoneSnapshot(spark: SparkSession, name: String,
+      segDir: String, idCol: String): TombSnapshot = {
     locally {
       val it = tombCache.keys()
       while (it.hasMoreElements) {
@@ -312,37 +383,27 @@ object IncrHnsw {
         if (!new java.io.File(sd, "VERSION").isFile) tombCache.remove(key)
       }
     }
+    val dataDir = new java.io.File(graftDir(spark, name))
     val deadDir = new java.io.File(dataDir, "dead")
-    val deadFiles = Option(deadDir.listFiles()).getOrElse(Array.empty)
-    // the committed (gen, seq) is the fingerprint's core — seq strictly
-    // increases per commit, so rapid-fire delete/search sequences can't
-    // alias through mtime granularity; dead/ identity covers
-    // promote-on-compact's whole-dir swap
     val st = Segments.state(segDir)
-    val fp = s"${st.gen}:${st.seq}:" +
-      s"${deadDir.lastModified()}:${deadFiles.length}"
-    val key = s"$segDir|${dataDir.getPath}"
+    val origin = s"${dataDir.getPath}|${Segments.generationId(segDir, st)}|" +
+      IncrMaint.deadFp(deadDir)
+    val key = s"$segDir|${graft.index.IndexCatalog.dir(spark, name)}"
     val cur = tombCache.get(key)
-    if (cur != null && cur._1 == fp) return cur._2
-    // build OUTSIDE the map lock (round-17 advice): the read+collect
-    // jobs take seconds on a miss, and compute() would pin the CHM bin
-    // lock for their whole duration — blocking concurrent searches of
-    // this store AND unrelated keys hashing to the same bin. A racing
-    // duplicate build is idempotent; put() publishes whichever finishes
-    // last, both carrying the same fingerprint.
-    val dead = if (deadDir.isDirectory && binOrParquetNonEmpty(deadDir))
-      Some(graft.ParquetCache.read(spark, deadDir.getAbsolutePath)) else None
-    val live = Segments.tombstoneMax(spark, segDir, idCol)
-    val tombs = (dead, live) match {
-      case (Some(a), Some(b)) => Some(a.unionByName(b)
-        .groupBy(col(idCol)).agg(max(col("_tomb_ver")).as("_tomb_ver")))
-      case (a, b) => a.orElse(b)
-    }
-    val arr = tombs.map(
-      _.select(col(idCol).cast("long"), col("_tomb_ver").cast("long"))
-        .as[(Long, Long)].collect()).getOrElse(Array.empty[(Long, Long)])
-    tombCache.put(key, (fp, arr))
-    arr
+    val sameOrigin = cur != null && cur.gen == st.gen && cur.origin == origin
+    if (sameOrigin && cur.seq == st.seq) return cur
+    // fold OUTSIDE the map lock (round-17 advice): compute() would pin
+    // the CHM bin lock for the whole read, blocking concurrent searches
+    // of this store AND unrelated keys hashing to the same bin. A racing
+    // duplicate fold is harmless: put() publishes whichever finishes
+    // last, and the next search folds forward from it.
+    val snap =
+      if (sameOrigin && cur.seq < st.seq)
+        fold(cur.tombs, None, segDir, idCol, st, cur.seq, origin)
+      else fold(new Tombs(Array.emptyLongArray, Array.emptyLongArray),
+        Some(deadDir), segDir, idCol, st, Long.MinValue, origin)
+    tombCache.put(key, snap)
+    snap
   }
 
   /** Search every resident graph (base + promoted + fresh sides), then
@@ -357,8 +418,9 @@ object IncrHnsw {
     val files = binFiles(dataDir).map(f => (f.getAbsolutePath, fileVer(f.getName)))
     if (files.isEmpty)
       return spark.emptyDataset[(Long, Double)].toDF(idCol, "dist")
-    // Tombstones travel as a BROADCAST map and visibility is checked
-    // IN the search task (round 16): the former broadcast JOIN
+    // Tombstones travel as the snapshot's broadcast (one per commit, not
+    // per query) and visibility is a binary search IN the search task
+    // (round 16: the former broadcast JOIN
     // collected the same rows to the driver anyway, but forced every
     // graph to over-fetch by the TOTAL tombstone count up front — a 1%
     // delete wave at the 5M smoke made every search a per-graph full
@@ -367,10 +429,10 @@ object IncrHnsw {
     // over-fetches by a BOUNDED slack and a graph re-searches at the
     // sound k+deadCount ceiling only when its fetch both filled up AND
     // yielded fewer than k visible rows — locally, in the same task,
-    // no second job. Exact mode keeps its proof: bruteForce at the
+    // no second job). Exact mode keeps its proof: bruteForce at the
     // ceiling returns the graph's true visible top-k.
-    val tombArr = tombstoneSnapshot(spark, segDir, dataDir, idCol)
-    val deadCount = tombArr.length.toLong
+    val snap = tombstoneSnapshot(spark, name, segDir, idCol)
+    val deadCount = snap.tombs.ids.length.toLong
     val fetch0 = math.min(k.toLong + math.min(deadCount, 4L * k),
       Int.MaxValue.toLong).toInt
     val fetchMax = math.min(k.toLong + deadCount, Int.MaxValue.toLong).toInt
@@ -383,9 +445,8 @@ object IncrHnsw {
     // cost (the union/top-k stays k-bounded). Routing was considered
     // and rejected: the base fleet here is one graph + small side
     // graphs, so the loss was beam-local, not fleet-selection.
-    val efMult = spark.conf.get("spark.graft.incrhnsw.efMult", "2").toInt
     val bq = spark.sparkContext.broadcast(q)
-    val btombs = spark.sparkContext.broadcast(tombArr.toMap)
+    val btombs = snap.broadcast(spark.sparkContext)
     val hconf = Hnsw.confEntries(spark)
     val kk = k
     val ef0 = efSearch
@@ -407,10 +468,9 @@ object IncrHnsw {
           def run(fetch: Int): Seq[(Double, Long)] =
             if (ex) g.bruteForce(bq.value, fetch)
             else g.search(bq.value, fetch,
-              math.max(ef0, fetch * efMult))
+              math.max(ef0, fetch * 2))
           def visible(rs: Seq[(Double, Long)]): Seq[(Double, Long)] =
-            rs.filter { case (_, id) =>
-              tm.get(id).forall(_ < ver) }
+            rs.filter { case (_, id) => !tm.hides(id, ver) }
           val first = run(fetch0)
           var vis = visible(first)
           if (fetchMax > fetch0 && vis.lengthCompare(kk) < 0 &&

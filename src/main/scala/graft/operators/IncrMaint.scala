@@ -57,8 +57,9 @@ object IncrMaint {
     String, (String, Option[(Array[org.apache.spark.sql.Row],
       org.apache.spark.sql.types.StructType)])](1024)
 
-  private def deadFp(spark: SparkSession, name: String): String = {
-    val dd = deadDir(spark, name)
+  /** Content fingerprint of a promoted-dead dir: file count plus a hash
+    * of each file's name, length and mtime. */
+  private[operators] def deadFp(dd: java.io.File): String = {
     val fs = Option(dd.listFiles()).getOrElse(Array.empty)
     var h = 0L
     fs.foreach(f => h += f.getName.hashCode.toLong * 1000003L +
@@ -70,7 +71,7 @@ object IncrMaint {
       idCol: String): Option[DataFrame] = {
     val st = Segments.state(segDir)
     val key = IndexCatalog.dir(spark, name) + "|" + segDir + "|" + idCol
-    val fp = s"${st.gen}:${st.seq}:${deadFp(spark, name)}"
+    val fp = s"${st.gen}:${st.seq}:${deadFp(deadDir(spark, name))}"
     val cached = tombCache.get(key)
     val v = if (cached != null && cached._1 == fp) cached._2
     else {

@@ -162,6 +162,95 @@ object Segments {
       .groupBy(col(idCol)).agg(max(col("_ver")).as("_tomb_ver")))
   }
 
+  /** Identity of the committed generation's data: the names of its base
+    * parquet files, which carry the writing job's unique id. A store
+    * deleted and re-initialised at the same path reuses (gen, seq)
+    * numbers but never these names. */
+  private[graft] def generationId(dir: String, s: State): Int =
+    Option(new File(dir, s"base-${s.gen}").list()).getOrElse(Array.empty[String])
+      .sorted.mkString(",").hashCode
+
+  /** Driver-side read of the tombstones committed after `afterSeq`: every
+    * (id, _ver) pair of the `tombs-<s>` dirs with afterSeq < s <= st.seq,
+    * passed to `f`, with no Spark job. Committed tombs dirs are immutable
+    * (a later commit only adds dirs; compaction bumps the gen and removes
+    * them all), so a reader that has folded everything up to some seq
+    * needs only the dirs after it. An id may arrive once per dir it was
+    * tombstoned in; callers keep the max version. Returns the number of
+    * dirs read. */
+  def tombstonesAfter(dir: String, idCol: String, st: State, afterSeq: Long)
+      (f: (Long, Long) => Unit): Int = {
+    val dirs = listDirs(dir, "tombs-", st)
+      .filter(new File(_).getName.stripPrefix("tombs-").toLong > afterSeq)
+    dirs.foreach(d => readIdVersions(new File(d), idCol, "_ver")(f))
+    dirs.length
+  }
+
+  /** Read the (id, version) columns of every parquet file under `dir` on
+    * the driver through parquet-hadoop (the footer-read precedent of
+    * [[graft.index.IndexCatalog.footerRows]]). INT32 and INT64 columns
+    * read as long, as `cast("long")` would; any other physical type
+    * throws, naming the file and the column. A row whose id or version is
+    * null hides nothing and is skipped. */
+  private[graft] def readIdVersions(dir: File, idCol: String, verCol: String)
+      (f: (Long, Long) => Unit): Unit = {
+    import org.apache.parquet.column.impl.ColumnReadStoreImpl
+    import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.parquet.schema.{MessageType, PrimitiveType, Type}
+    import PrimitiveType.PrimitiveTypeName.{INT32, INT64}
+    import scala.jdk.CollectionConverters._
+    val files = Option(dir.listFiles()).getOrElse(Array.empty)
+      .filter(p => p.isFile && p.getName.endsWith(".parquet") &&
+        !p.getName.startsWith(".") && !p.getName.startsWith("_"))
+    if (files.isEmpty) return
+    val conf = new org.apache.hadoop.conf.Configuration()
+    files.foreach { p =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(p.getAbsolutePath), conf))
+      try {
+        val meta = r.getFooter.getFileMetaData
+        val fields = meta.getSchema.getFields.asScala
+        // Spark resolves column names case-insensitively by default
+        def column(name: String): Type = {
+          val t = fields.find(_.getName == name)
+            .orElse(fields.find(_.getName.equalsIgnoreCase(name)))
+            .getOrElse(throw new IllegalArgumentException(
+              s"$p: no column '$name' in tombstone file"))
+          if (!t.isPrimitive || t.isRepetition(Type.Repetition.REPEATED) ||
+              !Set(INT32, INT64).contains(t.asPrimitiveType.getPrimitiveTypeName))
+            throw new IllegalArgumentException(
+              s"$p: column '${t.getName}' is '$t'; tombstone id and version " +
+                "columns must be INT32 or INT64")
+          t
+        }
+        val proj = new MessageType(meta.getSchema.getName, column(idCol), column(verCol))
+        r.setRequestedSchema(proj)
+        val Seq(idDesc, verDesc) = proj.getColumns.asScala.toSeq
+        val idInt = idDesc.getPrimitiveType.getPrimitiveTypeName == INT32
+        val verInt = verDesc.getPrimitiveType.getPrimitiveTypeName == INT32
+        val conv = new GroupRecordConverter(proj).getRootConverter
+        var pages = r.readNextRowGroup()
+        while (pages != null) {
+          val store = new ColumnReadStoreImpl(pages, conv, proj, meta.getCreatedBy)
+          val ids = store.getColumnReader(idDesc)
+          val vers = store.getColumnReader(verDesc)
+          var i = 0L
+          while (i < pages.getRowCount) {
+            if (ids.getCurrentDefinitionLevel == idDesc.getMaxDefinitionLevel &&
+                vers.getCurrentDefinitionLevel == verDesc.getMaxDefinitionLevel)
+              f(if (idInt) ids.getInteger.toLong else ids.getLong,
+                if (verInt) vers.getInteger.toLong else vers.getLong)
+            ids.consume(); vers.consume()
+            i += 1
+          }
+          pages = r.readNextRowGroup()
+        }
+      } finally r.close()
+    }
+  }
+
   /** Round-17 optimization: the SEARCH-path form of [[tombstoneMaxAt]] —
     * a driver-cached LocalRelation of the (id, max _tomb_ver) rows,
     * keyed on the committed (gen, seq) exactly like IncrHnsw's round-16

@@ -66,6 +66,35 @@ class GraftExplodeSpec extends SparkSpec {
     assert(got == exp)
   }
 
+  test("the Generate over explodeOnce runs inside whole-stage codegen") {
+    // guards a Spark upgrade: GraftExplode delegates codegen to its child
+    // the way ExplodeBase does, so its Generate stays in the fused stage
+    import org.apache.spark.sql.execution.{GenerateExec, InputAdapter, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val dir = java.nio.file.Files.createTempDirectory("graft_gx_cg").toFile
+    dir.deleteOnExit()
+    val pq = dir.getAbsolutePath + "/t"
+    fixture.write.mode("overwrite").parquet(pq)
+    val df = spark.read.parquet(pq)
+      .select(col("id"), GraftExplode.explodeOnce(col("arr")).as("x"))
+    assert(df.collect().length == 3)
+    // the operators fused into one stage stop at its InputAdapters
+    def fused(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case _: InputAdapter => Nil
+      case _ => p.children.flatMap(fused)
+    })
+    val stages = new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+      case w: WholeStageCodegenExec => w
+    }
+    val graftGenerate: SparkPlan => Boolean = {
+      case g: GenerateExec => g.generator.isInstanceOf[GraftExplode]
+      case _ => false
+    }
+    assert(stages.exists(w => fused(w.child).exists(graftGenerate)),
+      s"GraftExplode's Generate is not under WholeStageCodegenExec:\n" +
+        df.queryExecution.executedPlan)
+  }
+
   test("non-array input fails analysis cleanly") {
     val e = intercept[Exception] {
       fixture.select(GraftExplode.explodeOnce(col("id"))).collect()

@@ -87,7 +87,7 @@ object SqlDdl {
       "spherical_centroids is not supported — centroids are trained in " +
         "the stored space (cos artifacts already normalize at build)")
     // residual_quantization: accepted and recorded; the IVF×PQ/SQ8
-    // builds here ALWAYS encode residuals (IvfPq.residual) — a strict
+    // builds here ALWAYS encode residuals (CodedIvf.residual) — a strict
     // estimate-quality improvement over the reference's non-residual
     // default, and exact twins (window<=0) never read codes.
     // spherical/residual are stripped on BOTH paths (valid [indexing.ivf]
@@ -216,13 +216,13 @@ object SqlDdl {
     *    there is no artifact to build and nothing registers with the
     *    planner — the reference's flat index is its brute-force scan
     *    operator, which Spark already executes optimally.
-    *  - flat.scalar/product/rabitq → the standalone coded flat scans
-    *    (Sq8 / Pq / Rabitq artifacts: code-column coarse scan +
-    *    windowed exact rerank; window<=0 = exact).
+    *  - flat.scalar/product/rabitq → the coded flat scan
+    *    ([[CodedFlat]] over the SQ8 / PQ / RaBitQ codec: code-column
+    *    coarse scan + windowed exact rerank; window<=0 = exact).
     *  - hnsw.scalar/product/rabitq → the coded graph fleets
-    *    (CodedHnsw over the SQ8 / PQ / RaBitQ codec).
+    *    ([[CodedHnsw]] over the same codecs).
     *  - ivf.scalar/product → the residual-coded pruned scans
-    *    (IvfSq / IvfPq). ivf.rabitq is rejected with a pointer to
+    *    ([[CodedIvf]]). ivf.rabitq is rejected with a pointer to
     *    flat.rabitq (the rabitq artifact here is corpus-wide).
     *  - sparse_inverted_index → the token-bucketed posting index
     *    (SparseSearch) over the sparsified view, svector_dot_ops only.
@@ -241,8 +241,8 @@ object SqlDdl {
       val base = TableSnapshotResolver.readSource(spark, source)
       if (where.isEmpty) base else base.filter(where)
     }
-    import graft.operators.{CodedHnsw, IvfPq, IvfSq, Pq, Rabitq,
-      SparseSearch, Sq8}
+    import graft.operators.{Codec, CodedFlat, CodedHnsw, CodedIvf, ListQuant,
+      PqQuant, Quant, RabitqQuant, SparseSearch, Sq8Quant}
     val allowedKeys: Set[String] = indexing match {
       case "hnsw" => Set("m", "ef_construction")
       case "ivf" => Set("lists", "nlist")
@@ -297,45 +297,33 @@ object SqlDdl {
       k == "m" || k == "ef_construction" })
     def nlist = IndexOptions.ivf(rest.filter { case (k, _) =>
       k == "lists" || k == "nlist" })
-    (indexing, quant.get) match {
-      case ("flat", "scalar") =>
-        requireBits8()
-        if (rebuild) Sq8.reindex(spark, name, df, source, idCol, vecCol)
-        else Sq8.ensure(spark, name, df, source, idCol, vecCol)
-      case ("flat", "product") =>
-        if (rebuild) Pq.reindex(spark, name, df, source, idCol, vecCol,
-          pqM, pqKs)
-        else Pq.ensure(spark, name, df, source, idCol, vecCol, pqM, pqKs)
-      case ("flat", "rabitq") =>
-        if (rebuild) Rabitq.reindex(spark, name, df, source, idCol, vecCol)
-        else Rabitq.ensure(spark, name, df, source, idCol, vecCol)
-      case ("hnsw", q @ ("scalar" | "product" | "rabitq")) =>
-        val quant = q match {
-          case "scalar" => requireBits8(); CodedHnsw.Sq8Quant
-          case "product" => CodedHnsw.PqQuant(pqM, pqKs)
-          case _ => CodedHnsw.RabitqQuant
-        }
+    val quantizer: Quant[Codec] = quant.get match {
+      case "scalar" => requireBits8(); Sq8Quant
+      case "product" => PqQuant(pqM, pqKs)
+      case _ => RabitqQuant
+    }
+    (indexing, quantizer) match {
+      case ("flat", _) =>
+        if (rebuild) CodedFlat.reindex(spark, name, df, source, idCol, vecCol,
+          quantizer)
+        else CodedFlat.ensure(spark, name, df, source, idCol, vecCol, quantizer)
+      case ("hnsw", _) =>
         if (rebuild) CodedHnsw.reindex(spark, name, df, source, idCol, vecCol,
-          parts, quant, hm, efc)
+          parts, quantizer, hm, efc)
         else CodedHnsw.ensure(spark, name, df, source, idCol, vecCol,
-          parts, quant, hm, efc)
-      case ("ivf", "scalar") =>
-        requireBits8()
-        if (rebuild) IvfSq.reindex(spark, name, df, source, idCol, vecCol,
-          nlist)
-        else IvfSq.ensure(spark, name, df, source, idCol, vecCol, nlist)
-      case ("ivf", "product") =>
-        if (rebuild) IvfPq.reindex(spark, name, df, source, idCol, vecCol,
-          nlist, pqM, pqKs)
-        else IvfPq.ensure(spark, name, df, source, idCol, vecCol,
-          nlist, pqM, pqKs)
-      case ("ivf", "rabitq") =>
+          parts, quantizer, hm, efc)
+      case ("ivf", listQuant: ListQuant[_]) =>
+        if (rebuild) CodedIvf.reindex(spark, name, df, source, idCol, vecCol,
+          nlist, listQuant)
+        else CodedIvf.ensure(spark, name, df, source, idCol, vecCol,
+          nlist, listQuant)
+      case ("ivf", _) =>
         throw new IllegalArgumentException(
           "ivf.quantization.rabitq is not built here — the rabitq " +
             "artifact is a corpus-wide coded scan: use " +
             "[indexing.flat.quantization.rabitq]")
-      case other => throw new IllegalArgumentException(
-        s"unsupported (indexing, quantization) combination: $other")
+      case _ => throw new IllegalArgumentException(
+        s"unsupported (indexing, quantization) combination: ${(indexing, quant.get)}")
     }
   }
 

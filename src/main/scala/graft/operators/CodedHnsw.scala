@@ -21,7 +21,7 @@ import graft.index.IndexCatalog
  * cost is one-time; a graph built on quantized distances bakes the
  * quantization error into its edges). Codes are produced at snapshot.
  *
- * Exact mode follows the [[Sq8]] window<=0 precedent: skip the coarse
+ * Exact mode follows the [[CodedFlat]] window<=0 precedent: skip the coarse
  * graphs entirely and score every source row exactly — provably the
  * flat top-k, which is what lets the twins carry the flat DuckDB
  * oracle.
@@ -35,247 +35,37 @@ object CodedHnsw {
   final class Probe(val lut: Array[Double], val stride: Int,
       val qNorm: Double = 0.0, val scale: Double = 0.0) extends Serializable
 
-  /** What CREATE INDEX asks for before any training has run: the codec
-    * family, its artifact naming and format key, its default rerank
-    * window, and its training parameters. */
-  sealed abstract class Quant(val kind: String, val prefix: String,
-      val format: String, val window: Int) extends Serializable {
-    /** The codec's own `requires` entries; `m` is the graph degree. */
-    protected def ownRequires(m: Int): Map[String, String] =
-      Map("m" -> m.toString)
+  /** The coded-graph layout of a codec family: graph file prefix,
+    * format key and default rerank window. SQ8's estimate error is
+    * small (window 4). PQ's ADC estimate error is large enough that an
+    * ef == k beam misses true neighbors the rerank could have recovered
+    * (measured recall@100 0.66 at ef=100 vs >=0.95 at k·window), hence
+    * its wider window (8). RaBitQ's bit-estimate error at ef == k also
+    * leaves recoverable neighbors outside the beam; window 4 recovers
+    * them. */
+  final case class Layout(prefix: String, format: String, window: Int)
 
-    /** Manifest entries an existing artifact must match to be reused. */
-    final def requires(m: Int, efConstruction: Int, parts: Int)
-        : Map[String, String] =
-      Map("format" -> format, "ef_construction" -> efConstruction.toString,
-        "parts" -> parts.toString) ++ ownRequires(m) ++
-        (if (parts > 1) Map("routing" -> Hnsw.RoutingGen) else Map.empty)
-
-    /** Train the codec over the build rows (non-null, finite). */
-    def train(rows: DataFrame, vecCol: String): Codec
-    /** The trained codec an existing manifest persisted. */
-    def load(mf: IndexCatalog.Manifest): Codec
+  def layout(quant: Quant[Codec]): Layout = quant match {
+    case Sq8Quant => Layout("sqgraph", "sqflatbin3", 4)
+    case PqQuant(_, _, false) => Layout("pqgraph", "pqflatbin3", 8)
+    case RabitqQuant => Layout("rqgraph", "rqflatbin3", 4)
+    case q => throw new IllegalArgumentException(
+      s"${q.name} codes have no coded-graph layout")
   }
 
-  /** `[indexing.hnsw.quantization.scalar]`, bits=8: per-dimension
-    * (min, width) bounds. SQ8's estimate error is small, so the rerank
-    * window is the Sq8 one (4). */
-  case object Sq8Quant extends Quant("hnsw_sq8", "sqgraph", "sqflatbin3", 4) {
-    def train(rows: DataFrame, vecCol: String): Codec = {
-      val (mins, widths) = Sq8.train(rows, vecCol)
-      Sq8Codec(mins, widths)
-    }
-    def load(mf: IndexCatalog.Manifest): Codec =
-      Sq8Codec(mf.floats("mins"), mf.floats("widths"))
-  }
-
-  /** `[indexing.hnsw.quantization.product]`: `m` subspaces of `ks`
-    * centroids (the graph degree is persisted as `hnsw_m`). PQ's ADC
-    * estimate error is large enough that an ef == k beam misses true
-    * neighbors the rerank could have recovered (measured recall@100 0.66
-    * at ef=100 vs >=0.95 at k·window), hence the wider window (8). */
-  final case class PqQuant(m: Int = 8, ks: Int = 16)
-      extends Quant("hnsw_pq", "pqgraph", "pqflatbin3", 8) {
-    override protected def ownRequires(hm: Int): Map[String, String] =
-      Map("m" -> m.toString, "ks" -> ks.toString, "hnsw_m" -> hm.toString)
-    def train(rows: DataFrame, vecCol: String): Codec =
-      PqCodec(Pq.train(rows, vecCol, m, ks))
-    def load(mf: IndexCatalog.Manifest): Codec =
-      PqCodec(Pq.Model(mf.params("dims").toInt, mf.params("m").toInt,
-        mf.params("ks").toInt, mf.floats("codebook")))
-  }
-
-  /** `[indexing.hnsw.quantization.rabitq]`: a seeded rotation about the
-    * corpus centroid. Bit-estimate error at ef == k leaves recoverable
-    * neighbors outside the beam, hence k·window with window 4. */
-  case object RabitqQuant extends Quant("hnsw_rabitq", "rqgraph", "rqflatbin3", 4) {
-    def train(rows: DataFrame, vecCol: String): Codec =
-      RabitqCodec(Rabitq.train(rows, vecCol))
-    def load(mf: IndexCatalog.Manifest): Codec =
-      RabitqCodec(Rabitq.Model(mf.params("dims").toInt,
-        mf.floats("centroid"), mf.floats("rot")))
-  }
-
-  /** A trained quantizer: what the manifest persists, how a raw graph
-    * snapshot becomes codes, and how a query becomes a [[Probe]]. */
-  sealed trait Codec extends Serializable {
-    def quant: Quant
-    /** Manifest params the trained codec adds beside `requires`. */
-    def params: Map[String, String]
-    def floats: Map[String, Array[Float]]
-    def encode(g: Hnsw.FlatGraph): CodedGraph
-    def probe(q: Array[Float]): Probe
-  }
-
-  final case class Sq8Codec(mins: Array[Float], widths: Array[Float])
-      extends Codec {
-    def quant: Quant = Sq8Quant
-    def params: Map[String, String] = Map("bits" -> "8")
-    def floats: Map[String, Array[Float]] =
-      Map("mins" -> mins, "widths" -> widths)
-
-    def encode(g: Hnsw.FlatGraph): CodedGraph = {
-      val codes = new Array[Byte](g.ids.length * g.dims)
-      var i = 0
-      while (i < codes.length) {
-        val d = i % g.dims
-        val x = (g.vecs(i) - mins(d)) / widths(d)
-        codes(i) = math.round(math.max(0.0f, math.min(1.0f, x)) * 255.0f).toByte
-        i += 1
-      }
-      CodedGraph.fromFlat(g, g.dims, codes, null, null)
-    }
-
-    /** lut(i*256+c) = (decode(i,c) - q_i)² with the same float decode as
-      * Sq8.l2Kernel — every distance eval is then dims table adds with
-      * no decode arithmetic. */
-    def probe(q: Array[Float]): Probe = {
-      val dims = mins.length
-      val lut = new Array[Double](dims * 256)
-      var i = 0
-      while (i < dims) {
-        val mn = mins(i); val w = widths(i); val qi = q(i).toDouble
-        var c = 0
-        while (c < 256) {
-          val dec = mn + (c / 255.0f) * w
-          val dd = dec.toDouble - qi
-          lut(i * 256 + c) = dd * dd
-          c += 1
-        }
-        i += 1
-      }
-      new Probe(lut, 256)
-    }
-  }
-
-  final case class PqCodec(model: Pq.Model) extends Codec {
-    def quant: Quant = PqQuant(model.m, model.ks)
-    def params: Map[String, String] = Map("dims" -> model.dims.toString)
-    def floats: Map[String, Array[Float]] = Map("codebook" -> model.codebook)
-
-    /** Plain-Scala PQ encoder (the executor-side snapshot path — the
-      * Column-based [[Pq.Encode]] serves table builds). */
-    def encode(g: Hnsw.FlatGraph): CodedGraph = {
-      val subDim = model.subDim
-      val codes = new Array[Byte](g.ids.length * model.m)
-      var node = 0
-      while (node < g.ids.length) {
-        val off = node * g.dims
-        var s = 0
-        while (s < model.m) {
-          var best = 0; var bestD = Double.MaxValue
-          var c = 0
-          while (c < model.ks) {
-            var d = 0.0; var i = 0
-            val cb = (s * model.ks + c) * subDim
-            while (i < subDim) {
-              val diff = g.vecs(off + s * subDim + i).toDouble - model.codebook(cb + i)
-              d += diff * diff; i += 1
-            }
-            if (d < bestD) { bestD = d; best = c }
-            c += 1
-          }
-          codes(node * model.m + s) = best.toByte
-          s += 1
-        }
-        node += 1
-      }
-      CodedGraph.fromFlat(g, model.m, codes, null, null)
-    }
-
-    def probe(q: Array[Float]): Probe =
-      new Probe(model.lut(q).map(_.toDouble), model.ks)
-  }
-
-  final case class RabitqCodec(model: Rabitq.Model) extends Codec {
-    def quant: Quant = RabitqQuant
-    def params: Map[String, String] = Map("dims" -> model.dims.toString)
-    def floats: Map[String, Array[Float]] =
-      Map("centroid" -> model.centroid, "rot" -> model.rot)
-
-    /** Sign bits of the rotated residual + (norm, cos) corrections —
-      * [[Rabitq.encodeKernel]] semantics over the flat vector matrix. */
-    def encode(g: Hnsw.FlatGraph): CodedGraph = {
-      val n = g.ids.length
-      val dims = g.dims
-      val bpr = (dims + 7) / 8
-      val bits = new Array[Byte](n * bpr)
-      val norms = new Array[Float](n)
-      val cosvs = new Array[Float](n)
-      val r = new Array[Double](dims)
-      var node = 0
-      while (node < n) {
-        val off = node * dims
-        var norm2 = 0.0
-        var i = 0
-        while (i < dims) {
-          r(i) = g.vecs(off + i).toDouble - model.centroid(i)
-          norm2 += r(i) * r(i); i += 1
-        }
-        var dotSign = 0.0
-        var row = 0
-        while (row < dims) {
-          var acc = 0.0; var j = 0; val ro = row * dims
-          while (j < dims) { acc += model.rot(ro + j).toDouble * r(j); j += 1 }
-          if (acc >= 0) {
-            bits(node * bpr + (row >> 3)) =
-              (bits(node * bpr + (row >> 3)) | (1 << (row & 7))).toByte
-            dotSign += acc
-          } else dotSign -= acc
-          row += 1
-        }
-        val norm = math.sqrt(norm2)
-        norms(node) = norm.toFloat
-        cosvs(node) =
-          (if (norm == 0.0) 1.0 else dotSign / (norm * math.sqrt(dims.toDouble))).toFloat
-        node += 1
-      }
-      CodedGraph.fromFlat(g, dims, bits, norms, cosvs)
-    }
-
-    /** Byte LUT over the rotated query: lut(b*256 + byte) =
-      * Σ_{j<8} (bit_j ? +rq(8b+j) : -rq(8b+j)) — the sign-bit dot product
-      * becomes D/8 table adds. */
-    def probe(q: Array[Float]): Probe = {
-      val dims = model.dims
-      val rq = model.rotate(q)
-      val qNorm = math.sqrt(rq.map(x => x * x).sum)
-      val bpr = (dims + 7) / 8
-      val lut = new Array[Double](bpr * 256)
-      var b = 0
-      while (b < bpr) {
-        var v = 0
-        while (v < 256) {
-          var acc = 0.0; var j = 0
-          while (j < 8) {
-            val dim = b * 8 + j
-            if (dim < dims) {
-              val s = if (((v >>> j) & 1) == 1) 1.0 else -1.0
-              acc += s * rq(dim)
-            }
-            j += 1
-          }
-          lut(b * 256 + v) = acc
-          v += 1
-        }
-        b += 1
-      }
-      new Probe(lut, 256, qNorm, math.sqrt(dims.toDouble) * qNorm)
-    }
-  }
-
-  object RabitqCodec {
-    /** The RaBitQ distance estimate from the sign-bit dot product
-      * ([[Rabitq.scoreKernel]] semantics). */
-    @inline private[operators] def estimate(dot: Double, norm: Double,
-        cos: Double, p: Probe): Double = {
-      val qNorm = p.qNorm
-      if (norm == 0.0 || qNorm == 0.0) return norm * norm + qNorm * qNorm
-      val c = math.max(cos, 1e-9)
-      val est = dot / p.scale / c
-      norm * norm + qNorm * qNorm - 2.0 * norm * qNorm * est
-    }
-  }
+  /** Manifest entries an existing artifact must match to be reused. `m`
+    * is the graph degree; PQ persists it as `hnsw_m` beside its own
+    * subspace count `m`. */
+  def requires(quant: Quant[Codec], m: Int, efConstruction: Int,
+      parts: Int): Map[String, String] =
+    Map("format" -> layout(quant).format,
+      "ef_construction" -> efConstruction.toString,
+      "parts" -> parts.toString) ++
+      (quant match {
+        case pq: PqQuant => pq.requires + ("hnsw_m" -> m.toString)
+        case _ => Map("m" -> m.toString)
+      }) ++
+      (if (parts > 1) Map("routing" -> Hnsw.RoutingGen) else Map.empty)
 
   /** Columnar coded graph: FlatGraph's CSR adjacency with `codeBytes`
     * code bytes per node instead of the float vector matrix, plus the
@@ -446,12 +236,12 @@ object CodedHnsw {
     * one raw-f32 graph per spatial partition (exact edges) plus the
     * routing sidecar at parts>1, snapshot each to its coded form and
     * persist `<prefix>-<pid>.bin`. Returns (codec, dataDir). */
-  def ensure(spark: org.apache.spark.sql.SparkSession, name: String,
+  def ensure[C <: Codec](spark: org.apache.spark.sql.SparkSession, name: String,
       df: => DataFrame, source: String, idCol: String, vecCol: String,
-      parts: Int, quant: Quant, m: Int = 12, efConstruction: Int = 300)
-      : (Codec, String) = {
+      parts: Int, quant: Quant[C], m: Int = 12, efConstruction: Int = 300)
+      : (C, String) = {
     val mf = IndexCatalog.ensure(spark, name, source,
-        requires = quant.requires(m, efConstruction, parts))(
+        requires = requires(quant, m, efConstruction, parts))(
       buildInto(spark, df, source, idCol, vecCol, parts, quant, m,
         efConstruction))
     (quant.load(mf), IndexCatalog.dataDir(spark, name))
@@ -460,10 +250,10 @@ object CodedHnsw {
   /** REINDEX: rebuild into a fresh generation dir with one atomic
     * pointer flip — the vacuum path for SQL-created
     * `[indexing.hnsw.quantization.*]` artifacts. */
-  def reindex(spark: org.apache.spark.sql.SparkSession, name: String,
+  def reindex[C <: Codec](spark: org.apache.spark.sql.SparkSession, name: String,
       df: => DataFrame, source: String, idCol: String, vecCol: String,
-      parts: Int, quant: Quant, m: Int = 12, efConstruction: Int = 300)
-      : (Codec, String) = {
+      parts: Int, quant: Quant[C], m: Int = 12, efConstruction: Int = 300)
+      : (C, String) = {
     val mf = IndexCatalog.reindex(spark, name)(
       buildInto(spark, df, source, idCol, vecCol, parts, quant, m,
         efConstruction))
@@ -472,7 +262,7 @@ object CodedHnsw {
 
   private def buildInto(spark: org.apache.spark.sql.SparkSession,
       df: => DataFrame, source: String, idCol: String, vecCol: String,
-      parts: Int, quant: Quant, m: Int, efConstruction: Int)(dataDir: String)
+      parts: Int, quant: Quant[Codec], m: Int, efConstruction: Int)(dataDir: String)
       : IndexCatalog.Manifest = {
     import spark.implicits._
     val nonNull = df.filter(col(vecCol).isNotNull &&
@@ -490,8 +280,8 @@ object CodedHnsw {
   private[graft] def manifest(codec: Codec, source: String, parts: Int,
       m: Int, efConstruction: Int, nFiles: Int,
       routingParams: Map[String, String]): IndexCatalog.Manifest =
-    IndexCatalog.Manifest(codec.quant.kind, source, "l2",
-      codec.quant.requires(m, efConstruction, parts) ++ codec.params ++
+    IndexCatalog.Manifest("hnsw_" + codec.quant.name, source, "l2",
+      requires(codec.quant, m, efConstruction, parts) ++ codec.params ++
         Map("files" -> nFiles.toString) ++ routingParams,
       floats = codec.floats)
 
@@ -510,21 +300,20 @@ object CodedHnsw {
       window: Option[Int] = None, exact: Boolean = false,
       probeGraphs: Int = 0): DataFrame = {
     import spark.implicits._
-    import graft.functions.l2sq
     val coarse =
       if (exact) indexed.select(col(idCol), col(vecCol))
       else {
         val dirPath = new org.apache.hadoop.fs.Path(path)
         val fs = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
         val allFiles = fs.globStatus(
-            new org.apache.hadoop.fs.Path(path, s"${codec.quant.prefix}-*.bin"))
+            new org.apache.hadoop.fs.Path(path, s"${layout(codec.quant).prefix}-*.bin"))
           .map(_.getPath.toString).sorted.toSeq
         if (allFiles.isEmpty)
           return spark.emptyDataset[(Long, Double)].toDF(idCol, "dist")
         val files = Hnsw.routeFiles(spark, path, allFiles, q, probeGraphs)
         val bProbe = spark.sparkContext.broadcast(codec.probe(q))
         val ef = math.max(efSearch,
-          k * math.max(window.getOrElse(codec.quant.window), 1))
+          k * math.max(window.getOrElse(layout(codec.quant).window), 1))
         val hconf = Hnsw.confEntries(spark)
         val frontier = spark.sparkContext
           .parallelize(files, Hnsw.fileSlices(spark, files.length))
@@ -538,7 +327,6 @@ object CodedHnsw {
           }.toDF(idCol, "approx_dist")
         Rerank.fetchByIds(indexed, idCol, vecCol, frontier)
       }
-    coarse.select(col(idCol), l2sq(col(vecCol), typedLit(q)).as("dist"))
-      .orderBy(col("dist"), col(idCol)).limit(k)
+    Rerank.exactTopK(coarse, idCol, vecCol, q, k)
   }
 }

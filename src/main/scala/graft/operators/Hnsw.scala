@@ -1426,7 +1426,7 @@ object Hnsw {
   private[graft] def buildGraphFiles(spark: org.apache.spark.sql.SparkSession,
       rows0: org.apache.spark.sql.Dataset[(Long, Array[Float])],
       parts: Int, dataDir: String, m: Int, efConstruction: Int,
-      codec: CodedHnsw.Codec): (Int, Map[String, String]) = {
+      codec: Codec): (Int, Map[String, String]) = {
     import spark.implicits._
     val dirPath = new org.apache.hadoop.fs.Path(dataDir)
     val fs = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -2133,7 +2133,7 @@ object Hnsw {
 private[graft] class GraphFileWriter(dataDir: String, m: Int,
     efConstruction: Int, hconf: Seq[(String, String)],
     bcent: org.apache.spark.broadcast.Broadcast[Array[Array[Float]]],
-    codec: org.apache.spark.broadcast.Broadcast[CodedHnsw.Codec])
+    codec: org.apache.spark.broadcast.Broadcast[Codec])
     extends Serializable {
   def run(it: Iterator[(Long, Array[Float])])
       : Iterator[(Int, Long, Double)] = {
@@ -2156,7 +2156,7 @@ private[graft] class GraphFileWriter(dataDir: String, m: Int,
         rad = java.lang.Math.nextUp(java.lang.Math.nextUp(rad))
       }
       val attempt = tc.taskAttemptId()
-      val filePrefix = codec.value.quant.prefix
+      val filePrefix = CodedHnsw.layout(codec.value.quant).prefix
       val p = new org.apache.hadoop.fs.Path(
         f"$dataDir/$filePrefix-$pid%05d.bin")
       val tmp = new org.apache.hadoop.fs.Path(

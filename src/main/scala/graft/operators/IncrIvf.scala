@@ -204,12 +204,6 @@ object IncrIvf {
     dataDir
   }
 
-  /** Compact the store WITHOUT rebuilding the artifact (shared
-    * [[IncrMaint.promoteOnCompact]] dead-snapshot path). */
-  def promoteOnCompact(spark: SparkSession, name: String, segDir: String,
-      idCol: String): Unit =
-    IncrMaint.promoteOnCompact(spark, name, segDir, idCol)
-
   /** Full optimize: fold the store, rebuild from scratch — reclaims
     * tombstoned rows and re-centers drifted centroids. */
   def vacuum(spark: SparkSession, name: String, segDir: String,

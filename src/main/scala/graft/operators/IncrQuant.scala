@@ -1,8 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.Shims
 import graft.index.IndexCatalog
 
 /**
@@ -39,108 +38,27 @@ import graft.index.IndexCatalog
  */
 object IncrQuant {
 
-  /** Scheme-specific train/encode/approx behavior. The manifest carries
-    * everything needed to rebuild the encode/approx columns (frozen
-    * quantizer parameters in `floats`/`params`). */
-  private sealed trait Scheme {
-    def kind: String
-    /** Train on the base segment; return the manifest params/floats. */
-    def train(base: DataFrame, fCol: String): IndexCatalog.Manifest
-    def encodeCol(mf: IndexCatalog.Manifest, v: Column): Column
-    def approxCol(mf: IndexCatalog.Manifest, codes: Column, q: Array[Float]): Column
-  }
+  private def kind(quant: Quant[Codec]): String = quant.name + "_incr"
 
-  private object SchemeSq8 extends Scheme {
-    val kind = "sq8_incr"
-    def train(base: DataFrame, fCol: String): IndexCatalog.Manifest = {
-      val (mins, widths) = Sq8.train(base, fCol)
-      IndexCatalog.Manifest(kind, "", "l2", Map("bits" -> "8"),
-        floats = Map("mins" -> mins, "widths" -> widths))
-    }
-    def encodeCol(mf: IndexCatalog.Manifest, v: Column): Column =
-      Sq8.encode(v, mf.floats("mins"), mf.floats("widths"))
-    def approxCol(mf: IndexCatalog.Manifest, codes: Column, q: Array[Float]): Column =
-      Sq8.l2Approx(codes, q, mf.floats("mins"), mf.floats("widths"))
-  }
-
-  private object SchemePq extends Scheme {
-    val kind = "pq_incr"
-    private def model(mf: IndexCatalog.Manifest) = Pq.Model(
-      mf.params("dims").toInt, mf.params("m").toInt, mf.params("ks").toInt,
-      mf.floats("codebook"))
-    def train(base: DataFrame, fCol: String): IndexCatalog.Manifest = {
-      val m = Pq.train(base, fCol, m = 8, ks = 16)
-      IndexCatalog.Manifest(kind, "", "l2",
-        Map("m" -> m.m.toString, "ks" -> m.ks.toString, "dims" -> m.dims.toString),
-        floats = Map("codebook" -> m.codebook))
-    }
-    def encodeCol(mf: IndexCatalog.Manifest, v: Column): Column =
-      Pq.encode(v, model(mf))
-    def approxCol(mf: IndexCatalog.Manifest, codes: Column, q: Array[Float]): Column = {
-      val m = model(mf)
-      Pq.adcScore(codes, m.lut(q), m.ks)
-    }
-  }
-
-  private object SchemeRabitq extends Scheme {
-    val kind = "rabitq_incr"
-    private def model(mf: IndexCatalog.Manifest) = Rabitq.Model(
-      mf.params("dims").toInt, mf.floats("centroid"), mf.floats("rot"))
-    def train(base: DataFrame, fCol: String): IndexCatalog.Manifest = {
-      val m = Rabitq.train(base, fCol)
-      IndexCatalog.Manifest(kind, "", "l2", Map("dims" -> m.dims.toString),
-        floats = Map("centroid" -> m.centroid, "rot" -> m.rot))
-    }
-    def encodeCol(mf: IndexCatalog.Manifest, v: Column): Column =
-      Rabitq.encode(v, model(mf))
-    def approxCol(mf: IndexCatalog.Manifest, codes: Column, q: Array[Float]): Column = {
-      val m = model(mf)
-      val rq = m.rotate(q)
-      val qNorm = math.sqrt(rq.map(x => x * x).sum)
-      Shims.column(Rabitq.Score(Shims.expression(codes),
-        Shims.expression(typedLit(rq.map(_.toFloat))), qNorm))
-    }
-  }
-
-  private def schemeFor(s: String): Scheme = s match {
-    case "sq8" => SchemeSq8
-    case "pq" => SchemePq
-    case "rabitq" => SchemeRabitq
-    case other => throw new IllegalArgumentException(s"unknown scheme $other")
-  }
-
-  private def schemeForKind(k: String): Scheme = k match {
-    case "sq8_incr" => SchemeSq8
-    case "pq_incr" => SchemePq
-    case "rabitq_incr" => SchemeRabitq
-    case other => throw new IllegalArgumentException(s"unknown kind $other")
-  }
-
-  /** Encode one segment's rows with the frozen quantizer and append them
-    * to the flat artifact (Overwrite only for the very first base write). */
-  private def writeSegment(spark: SparkSession, sch: Scheme,
-      mf: IndexCatalog.Manifest, dataDir: String, rows: DataFrame,
-      idCol: String, fCol: String, ver: Long, overwrite: Boolean): Unit = {
+  /** One segment's rows encoded with the frozen codec and stamped with
+    * their version. The code column is `codes` for every codec. */
+  private def encoded(rows: DataFrame, codec: Codec, idCol: String,
+      fCol: String, ver: Long): DataFrame =
     rows.filter(col(fCol).isNotNull &&
         graft.functions.vectorIsFinite(col(fCol)))
       .select(col(idCol), col(fCol).as("vec"),
-        sch.encodeCol(mf, col(fCol)).as("codes"), lit(ver).as("_ver"))
-      .write.mode(if (overwrite) "overwrite" else "append").parquet(dataDir)
-  }
+        codec.encode(col(fCol)).as("codes"), lit(ver).as("_ver"))
 
   /** ONE append write for a SET of new deltas (round 16, the IncrIvf
     * convention): per-delta encode jobs paid one overhead each — rows
     * are identical (frozen manifest encode; each delta's rows stamp
     * their own seq as _ver). */
-  private def writeSegments(spark: SparkSession, sch: Scheme,
-      mf: IndexCatalog.Manifest, dataDir: String,
-      segs: Seq[(Long, String)], idCol: String, fCol: String): Unit = {
+  private def writeSegments(spark: SparkSession, codec: Codec,
+      dataDir: String, segs: Seq[(Long, String)], idCol: String,
+      fCol: String): Unit = {
     if (segs.isEmpty) return
     segs.map { case (ver, dd) =>
-      graft.ParquetCache.read(spark, dd).filter(col(fCol).isNotNull &&
-          graft.functions.vectorIsFinite(col(fCol)))
-        .select(col(idCol), col(fCol).as("vec"),
-          sch.encodeCol(mf, col(fCol)).as("codes"), lit(ver).as("_ver"))
+      encoded(graft.ParquetCache.read(spark, dd), codec, idCol, fCol, ver)
     }.reduce(_ unionAll _)
       .write.mode("append").parquet(dataDir)
   }
@@ -148,8 +66,7 @@ object IncrQuant {
   /** Sync the artifact to the store's committed state, building only
     * what is new (one encode+append per new delta). Returns the data dir. */
   def ensure(spark: SparkSession, name: String, segDir: String,
-      idCol: String, fCol: String, scheme: String): String = synchronized {
-    val sch = schemeFor(scheme)
+      idCol: String, fCol: String, quant: Quant[Codec]): String = synchronized {
     // delete_threshold policy (round 17): a due store takes the vacuum
     // prologue here — the rebuild below then runs over the folded store
     IncrMaint.vacuumIfDue(spark, name, segDir, idCol)
@@ -157,7 +74,7 @@ object IncrQuant {
     require(st.gen >= 0, s"no committed generation under $segDir")
     val dataDir = IndexCatalog.dataDir(spark, name)
     val prior = IndexCatalog.load(spark, name)
-      .filter(_.source == segDir).filter(_.kind == sch.kind)
+      .filter(_.source == segDir).filter(_.kind == kind(quant))
     val priorGen = prior.flatMap(_.params.get("gen")).map(_.toLong).getOrElse(-1L)
     val priorSeq = prior.flatMap(_.params.get("seq")).map(_.toLong).getOrElse(-1L)
     val promotedGen = prior.flatMap(_.params.get("promoted_gen")).map(_.toLong).getOrElse(-1L)
@@ -167,16 +84,17 @@ object IncrQuant {
       val base = graft.ParquetCache.read(spark, s"$segDir/base-${st.gen}")
         .filter(col(fCol).isNotNull &&
           graft.functions.vectorIsFinite(col(fCol)))
-      val mf0 = sch.train(base, fCol).copy(source = segDir)
-      writeSegment(spark, sch, mf0, dataDir, base, idCol, fCol,
-        ver = 0L, overwrite = true)
-      writeSegments(spark, sch, mf0, dataDir,
+      val codec = quant.train(base, fCol)
+      encoded(base, codec, idCol, fCol, ver = 0L)
+        .write.mode("overwrite").parquet(dataDir)
+      writeSegments(spark, codec, dataDir,
         IncrMaint.deltasAfter(segDir, st, -1L), idCol, fCol)
-      IndexCatalog.commit(spark, name, mf0.copy(params = mf0.params +
-        ("gen" -> st.gen.toString) + ("seq" -> st.seq.toString)))
+      IndexCatalog.commit(spark, name, IndexCatalog.Manifest(kind(quant),
+        segDir, "l2", codec.params ++ Map("gen" -> st.gen.toString,
+          "seq" -> st.seq.toString), floats = codec.floats))
     } else if (st.seq > priorSeq) {
       val pm = prior.get
-      writeSegments(spark, sch, pm, dataDir,
+      writeSegments(spark, quant.load(pm), dataDir,
         IncrMaint.deltasAfter(segDir, st, priorSeq), idCol, fCol)
       IndexCatalog.commit(spark, name, pm.copy(
         params = pm.params + ("seq" -> st.seq.toString)))
@@ -184,17 +102,12 @@ object IncrQuant {
     dataDir
   }
 
-  /** Compact the store without touching the artifact (shared promote). */
-  def promoteOnCompact(spark: SparkSession, name: String, segDir: String,
-      idCol: String): Unit =
-    IncrMaint.promoteOnCompact(spark, name, segDir, idCol)
-
   /** Full optimize: fold the store, rebuild from scratch — reclaims
     * tombstoned rows and retrains the quantizer on the folded data. */
   def vacuum(spark: SparkSession, name: String, segDir: String,
-      idCol: String, fCol: String, scheme: String): String =
+      idCol: String, fCol: String, quant: Quant[Codec]): String =
     IncrMaint.vacuum(spark, name, segDir, idCol) {
-      ensure(spark, name, segDir, idCol, fCol, scheme)
+      ensure(spark, name, segDir, idCol, fCol, quant)
     }
 
   /** Two-stage search over the visible rows: coarse scan of the code
@@ -204,26 +117,21 @@ object IncrQuant {
     * against the already-version-filtered frame so a deleted row can
     * never resurface. window <= 0 scores every visible row exactly and
     * ignores codes entirely (the provably-exact mode the oracle twin
-    * uses). Returns (idCol, dist) ascending. */
+    * uses). `quant` must be the family the index was built with.
+    * Returns (idCol, dist) ascending. */
   def search(spark: SparkSession, name: String, segDir: String,
-      idCol: String, q: Array[Float], k: Int, window: Int = 8): DataFrame = {
-    import graft.functions.l2sq
+      idCol: String, q: Array[Float], k: Int, quant: Quant[Codec],
+      window: Int = 8): DataFrame = {
     val pm = IndexCatalog.load(spark, name).getOrElse(
       throw new IllegalStateException(s"no committed index $name"))
-    val sch = schemeForKind(pm.kind)
+    require(pm.kind == kind(quant),
+      s"index $name is ${pm.kind}, not ${kind(quant)}")
     val scan = graft.ParquetCache.read(spark, IndexCatalog.dataDir(spark, name))
     val tombs = IncrMaint.tombstones(spark, name, segDir, idCol)
     val vis = IncrMaint.visible(scan, tombs, idCol)
-    val coarse =
-      if (window <= 0) vis.select(col(idCol), col("vec"))
-      else {
-        val w = math.min(k.toLong * window, Int.MaxValue.toLong).toInt
-        val candidates = vis
-          .select(col(idCol), sch.approxCol(pm, col("codes"), q).as("approx_dist"))
-          .orderBy(col("approx_dist"), col(idCol)).limit(w)
-        Rerank.fetchByIds(vis, idCol, "vec", candidates)
-      }
-    coarse.select(col(idCol), l2sq(col("vec"), typedLit(q)).as("dist"))
-      .orderBy(col("dist"), col(idCol)).limit(k)
+    Rerank.twoStage(vis, idCol, "vec", q, k, window) {
+      vis.select(col(idCol),
+        quant.load(pm).score(col("codes"), q).as("approx_dist"))
+    }
   }
 }

@@ -103,11 +103,6 @@ object IncrSparse {
     dataDir
   }
 
-  /** Compact the store without touching the artifact (shared promote). */
-  def promoteOnCompact(spark: SparkSession, name: String, segDir: String,
-      idCol: String): Unit =
-    IncrMaint.promoteOnCompact(spark, name, segDir, idCol)
-
   /** Full optimize: fold the store, rebuild from scratch — reclaims
     * tombstoned postings. */
   def vacuum(spark: SparkSession, name: String, segDir: String,

@@ -1,31 +1,26 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.Shims
 import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType}
-import graft.index.IndexCatalog
 
 /**
- * Product quantization (PQ), the Spark-native analog of the reference's
- * product quantizer (crates/quantization/src/product.rs): dims split into
- * `m` subspaces, each sub-vector coded by its nearest of `ks` per-subspace
- * k-means centroids (defaults crates/base/src/index.rs:452-505: 8-bit
- * codes; scaled-down ks for small corpora).
+ * Product quantization (PQ) kernels, the Spark-native analog of the
+ * reference's product quantizer (crates/quantization/src/product.rs):
+ * dims split into `m` subspaces, each sub-vector coded by its nearest of
+ * `ks` per-subspace k-means centroids (defaults
+ * crates/base/src/index.rs:452-505: 8-bit codes; scaled-down ks for
+ * small corpora).
  *
- * Search is asymmetric-distance (ADC): the query builds an m×ks LUT of
- * exact sub-distances once on the driver, broadcast as a literal; the
- * coarse scan is then `sum(LUT[s][code[s]])` per row — m byte lookups, no
- * float math on raw vectors. A windowed exact rerank follows (the
- * reranker-heap analog, crates/quantization/src/reranker/flat.rs);
- * window<=0 reranks everything = exact mode.
- *
- * Scale shape: codes are m bytes/row (dims×4 → m bytes compression), the
- * coarse scan reads ONLY the code column (column pruning), and training
- * samples a bounded set — never the full table.
+ * Scoring is asymmetric-distance (ADC): the query builds an m×ks LUT of
+ * exact sub-distances once on the driver; the coarse scan is then
+ * `sum(LUT[s][code[s]])` per row — m byte lookups, no float math on raw
+ * vectors. Codes are m bytes/row (dims×4 → m bytes compression), and
+ * training samples a bounded set — never the full table. [[PqCodec]]
+ * builds its columns from these; the coarse layers search through it.
  */
 object Pq {
 
@@ -192,14 +187,6 @@ object Pq {
     override def prettyName = "pq_adc_score"
   }
 
-  def encode(v: Column, model: Model): Column =
-    Shims.column(Encode(Shims.expression(v),
-      Shims.expression(typedLit(model.codebook)), model.m, model.ks))
-
-  def adcScore(codes: Column, lut: Array[Float], ks: Int): Column =
-    Shims.column(AdcScore(Shims.expression(codes),
-      Shims.expression(typedLit(lut)), ks))
-
   // --- 4-bit packed codes (fast_scan layout analog) ---------------------
   //
   // The reference's fast_scan path (crates/quantization/src/fast_scan/)
@@ -266,114 +253,5 @@ object Pq {
     override protected def withNewChildrenInternal(l: Expression, r: Expression) =
       copy(codesE = l, lutE = r)
     override def prettyName = "pq4_adc_score"
-  }
-
-  def encodePacked(v: Column, model: Model): Column = {
-    require(model.ks <= 16, s"4-bit codes need ks<=16, got ${model.ks}")
-    Shims.column(EncodePacked(Shims.expression(v),
-      Shims.expression(typedLit(model.codebook)), model.m, model.ks))
-  }
-
-  def adcPackedScore(codes: Column, lut: Array[Float], ks: Int, m: Int): Column =
-    Shims.column(AdcPackedScore(Shims.expression(codes),
-      Shims.expression(typedLit(lut)), ks, m))
-
-  /** 4-bit build: identical training to [[ensure]], codes packed
-    * two-per-byte (m/2 bytes per row scanned by the coarse pass). */
-  def ensurePacked(spark: SparkSession, name: String, df: => DataFrame,
-      source: String, idCol: String, vecCol: String, m: Int = 8, ks: Int = 16)
-      : (Model, String) = {
-    require(ks <= 16, s"4-bit codes need ks<=16, got $ks")
-    val mf = IndexCatalog.ensure(spark, name, source) { dataDir =>
-      val nn = df.filter(col(vecCol).isNotNull &&
-        graft.functions.vectorIsFinite(col(vecCol)))
-      val model = train(nn, vecCol, m, ks)
-      nn.select(col(idCol), col(vecCol),
-          encodePacked(col(vecCol), model).as("codes"))
-        .write.mode("overwrite").parquet(dataDir)
-      IndexCatalog.Manifest("pq4", source, "l2",
-        Map("m" -> m.toString, "ks" -> ks.toString, "dims" -> model.dims.toString),
-        floats = Map("codebook" -> model.codebook))
-    }
-    val model = Model(mf.params("dims").toInt, mf.params("m").toInt,
-      mf.params("ks").toInt, mf.floats("codebook"))
-    (model, IndexCatalog.dataDir(spark, name))
-  }
-
-  /** Packed-ADC coarse scan + windowed exact rerank; window<=0 = exact
-    * mode (codes are lossy -> skip them and score every row, the Sq8
-    * window<=0 precedent). */
-  def searchPacked(indexed: DataFrame, idCol: String, vecCol: String,
-      codeCol: String, q: Array[Float], k: Int, model: Model, window: Int = 8)
-      : DataFrame = {
-    import graft.functions.l2sq
-    val coarse =
-      if (window <= 0) indexed.select(col(idCol), col(vecCol))
-      else {
-        val w = math.min(k.toLong * window, Int.MaxValue.toLong).toInt
-        val candidates = indexed.select(col(idCol),
-            adcPackedScore(col(codeCol), model.lut(q), model.ks, model.m)
-              .as("approx_dist"))
-          .orderBy(col("approx_dist"), col(idCol)).limit(w)
-        Rerank.fetchByIds(indexed, idCol, vecCol, candidates)
-      }
-    coarse.select(col(idCol), l2sq(col(vecCol), typedLit(q)).as("dist"))
-      .orderBy(col("dist"), col(idCol)).limit(k)
-  }
-
-  // --- catalog build + search ------------------------------------------
-
-  def ensure(spark: SparkSession, name: String, df: => DataFrame,
-      source: String, idCol: String, vecCol: String, m: Int = 8, ks: Int = 16)
-      : (Model, String) = {
-    val mf = IndexCatalog.ensure(spark, name, source)(
-      buildInto(df, source, idCol, vecCol, m, ks))
-    val model = Model(mf.params("dims").toInt, mf.params("m").toInt,
-      mf.params("ks").toInt, mf.floats("codebook"))
-    (model, IndexCatalog.dataDir(spark, name))
-  }
-
-  /** REINDEX: rebuild into a fresh generation dir with one atomic
-    * pointer flip — the vacuum path for SQL-created
-    * `[indexing.flat.quantization.product]` artifacts. */
-  def reindex(spark: SparkSession, name: String, df: => DataFrame,
-      source: String, idCol: String, vecCol: String, m: Int = 8, ks: Int = 16)
-      : (Model, String) = {
-    val mf = IndexCatalog.reindex(spark, name)(
-      buildInto(df, source, idCol, vecCol, m, ks))
-    val model = Model(mf.params("dims").toInt, mf.params("m").toInt,
-      mf.params("ks").toInt, mf.floats("codebook"))
-    (model, IndexCatalog.dataDir(spark, name))
-  }
-
-  private def buildInto(df: => DataFrame, source: String, idCol: String,
-      vecCol: String, m: Int, ks: Int)(dataDir: String)
-      : IndexCatalog.Manifest = {
-    val nn = df.filter(col(vecCol).isNotNull &&
-      graft.functions.vectorIsFinite(col(vecCol)))
-    val model = train(nn, vecCol, m, ks)
-    nn.select(col(idCol), col(vecCol), encode(col(vecCol), model).as("codes"))
-      .write.mode("overwrite").parquet(dataDir)
-    IndexCatalog.Manifest("pq", source, "l2",
-      Map("m" -> m.toString, "ks" -> ks.toString, "dims" -> model.dims.toString),
-      floats = Map("codebook" -> model.codebook))
-  }
-
-  /** ADC coarse scan over the m-byte code column ONLY + windowed exact
-    * rerank re-fetching candidates by id; window<=0 = exact mode. */
-  def search(indexed: DataFrame, idCol: String, vecCol: String, codeCol: String,
-      q: Array[Float], k: Int, model: Model, window: Int = 8): DataFrame = {
-    import graft.functions.l2sq
-    val coarse =
-      if (window <= 0) indexed.select(col(idCol), col(vecCol))
-      else {
-        val w = math.min(k.toLong * window, Int.MaxValue.toLong).toInt
-        val candidates = indexed.select(col(idCol),
-            adcScore(col(codeCol), model.lut(q), model.ks).as("approx_dist"))
-          .orderBy(col("approx_dist"), col(idCol)).limit(w)
-        Rerank.fetchByIds(indexed, idCol, vecCol, candidates)
-      }
-    coarse.select(col(idCol), l2sq(col(vecCol), typedLit(q)).as("dist"))
-      .orderBy(col("dist"), col(idCol)).limit(k)
   }
 }

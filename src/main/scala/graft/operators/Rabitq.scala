@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -8,7 +8,6 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.Shims
 import org.apache.spark.sql.types._
-import graft.index.IndexCatalog
 
 /**
  * RaBitQ-style 1-bit quantization (reference:
@@ -24,8 +23,10 @@ import graft.index.IndexCatalog
  *   l2²(v,q) ≈ ||r||² + ||q-c||² - 2·||r||·||q-c||·<r̂, q̂>
  *
  * Storage: D bits + 2 floats per row (vs 4D bytes raw) — 1-bit ADC at
- * 100 TB scans ~3% of the raw bytes. A windowed exact rerank restores
- * precision; window<=0 reranks everything (exact mode, flat oracle).
+ * 100 TB scans ~3% of the raw bytes. [[RabitqCodec]] builds its columns
+ * from these kernels and the coarse layers' windowed exact rerank
+ * restores precision; [[searchBounded]] sizes the rerank by the
+ * estimator's error bound instead.
  */
 object Rabitq {
 
@@ -205,64 +206,6 @@ object Rabitq {
     override def prettyName = "rabitq_score_bound"
   }
 
-  def encode(v: Column, model: Model): Column =
-    Shims.column(Encode(Shims.expression(v),
-      Shims.expression(typedLit(model.centroid)),
-      Shims.expression(typedLit(model.rot))))
-
-  def ensure(spark: SparkSession, name: String, df: => DataFrame,
-      source: String, idCol: String, vecCol: String): (Model, String) = {
-    val mf = IndexCatalog.ensure(spark, name, source)(
-      buildInto(df, source, idCol, vecCol))
-    val model = Model(mf.params("dims").toInt, mf.floats("centroid"), mf.floats("rot"))
-    (model, IndexCatalog.dataDir(spark, name))
-  }
-
-  /** REINDEX: rebuild into a fresh generation dir with one atomic
-    * pointer flip — the vacuum path for SQL-created
-    * `[indexing.flat.quantization.rabitq]` artifacts. */
-  def reindex(spark: SparkSession, name: String, df: => DataFrame,
-      source: String, idCol: String, vecCol: String): (Model, String) = {
-    val mf = IndexCatalog.reindex(spark, name)(
-      buildInto(df, source, idCol, vecCol))
-    val model = Model(mf.params("dims").toInt, mf.floats("centroid"), mf.floats("rot"))
-    (model, IndexCatalog.dataDir(spark, name))
-  }
-
-  private def buildInto(df: => DataFrame, source: String, idCol: String,
-      vecCol: String)(dataDir: String): IndexCatalog.Manifest = {
-    val nn = df.filter(col(vecCol).isNotNull &&
-      graft.functions.vectorIsFinite(col(vecCol)))
-    val model = train(nn, vecCol)
-    nn.select(col(idCol), col(vecCol), encode(col(vecCol), model).as("code"))
-      .write.mode("overwrite").parquet(dataDir)
-    IndexCatalog.Manifest("rabitq", source, "l2",
-      Map("dims" -> model.dims.toString),
-      floats = Map("centroid" -> model.centroid, "rot" -> model.rot))
-  }
-
-  /** Bit-estimated coarse scan over codes ONLY + windowed exact rerank
-    * re-fetching candidates by id; window<=0 exact. */
-  def search(indexed: DataFrame, idCol: String, vecCol: String, codeCol: String,
-      q: Array[Float], k: Int, model: Model, window: Int = 8): DataFrame = {
-    import graft.functions.l2sq
-    val coarse =
-      if (window <= 0) indexed.select(col(idCol), col(vecCol))
-      else {
-        val rq = model.rotate(q)
-        val qNorm = math.sqrt(rq.map(x => x * x).sum)
-        val rqF = rq.map(_.toFloat)
-        val score = Shims.column(Score(Shims.expression(col(codeCol)),
-          Shims.expression(typedLit(rqF)), qNorm))
-        val w = math.min(k.toLong * window, Int.MaxValue.toLong).toInt
-        val candidates = indexed.select(col(idCol), score.as("approx_dist"))
-          .orderBy(col("approx_dist"), col(idCol)).limit(w)
-        Rerank.fetchByIds(indexed, idCol, vecCol, candidates)
-      }
-    coarse.select(col(idCol), l2sq(col(vecCol), typedLit(q)).as("dist"))
-      .orderBy(col("dist"), col(idCol)).limit(k)
-  }
-
   /** BOUND-DRIVEN rerank (the error.rs contract): no tuned window. Pass 1
     * scans codes, takes the k-th smallest UPPER bound τ = max over the
     * top-k of (est + err); pass 2 reranks exactly every row whose LOWER
@@ -276,7 +219,6 @@ object Rabitq {
   def searchBounded(indexed: DataFrame, idCol: String, vecCol: String,
       codeCol: String, q: Array[Float], k: Int, model: Model,
       eps: Double = 1.9): DataFrame = {
-    import graft.functions.l2sq
     val rq = model.rotate(q)
     val qNorm = math.sqrt(rq.map(x => x * x).sum)
     val rqF = rq.map(_.toFloat)
@@ -294,10 +236,7 @@ object Rabitq {
       return indexed.sparkSession.emptyDataFrame
         .select(lit(0L).as(idCol), lit(0.0).as("dist")).limit(0)
     val tau = tauRow.getDouble(0)
-    indexed
-      .withColumn("sb", sb)
-      .filter(col("sb.est") - col("sb.err") <= tau)
-      .select(col(idCol), l2sq(col(vecCol), typedLit(q)).as("dist"))
-      .orderBy(col("dist"), col(idCol)).limit(k)
+    Rerank.exactTopK(indexed.withColumn("sb", sb)
+      .filter(col("sb.est") - col("sb.err") <= tau), idCol, vecCol, q, k)
   }
 }

@@ -164,26 +164,26 @@ object Rabitq4 {
     override def prettyName = "rabitq4_block_est"
   }
 
-  /** One-time CREATE INDEX job: train the rotation, write `rows/` and
-    * the 32-vector interleaved `blocks/`. */
+  /** One-time CREATE INDEX job: train the RaBitQ codec, write `rows/`
+    * and the 32-vector interleaved `blocks/`. */
   def ensure(spark: SparkSession, name: String, df: => DataFrame,
       source: String, idCol: String, vecCol: String): (Rabitq.Model, String) = {
     val mf = IndexCatalog.ensure(spark, name, source,
         requires = Map("format" -> "rq4block1")) { dataDir =>
       val nn = df.filter(col(vecCol).isNotNull &&
         graft.functions.vectorIsFinite(col(vecCol)))
-      val model = Rabitq.train(nn, vecCol)
+      val codec = RabitqQuant.train(nn, vecCol)
       nn.select(col(idCol), col(vecCol))
         .write.mode("overwrite").parquet(s"$dataDir/rows")
       val coded = nn.select(col(idCol).cast("long").as("id"),
-        Rabitq.encode(col(vecCol), model).as("code"))
+        codec.encode(col(vecCol)).as("code"))
       // partition-local slotting: no global sort at any scale
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy(spark_partition_id()).orderBy(col("id"))
       val slotted = coded
         .withColumn("_pid", spark_partition_id())
         .withColumn("_rn", row_number().over(w) - 1)
-      val dims = model.dims
+      val dims = codec.model.dims
       // build-time only (once per block), never on a query path
       val packUdf = udf { (ids: Seq[Long], bits: Seq[Seq[Long]],
           norms: Seq[Float], cosvs: Seq[Float]) =>
@@ -203,11 +203,9 @@ object Rabitq4 {
           col("b._3").as("norms"), col("b._4").as("cosvs"))
         .write.mode("overwrite").parquet(s"$dataDir/blocks")
       IndexCatalog.Manifest("rabitq4", source, "l2",
-        Map("dims" -> model.dims.toString, "format" -> "rq4block1"),
-        floats = Map("centroid" -> model.centroid, "rot" -> model.rot))
+        codec.params + ("format" -> "rq4block1"), floats = codec.floats)
     }
-    (Rabitq.Model(mf.params("dims").toInt, mf.floats("centroid"),
-      mf.floats("rot")), IndexCatalog.dataDir(spark, name))
+    (RabitqQuant.load(mf).model, IndexCatalog.dataDir(spark, name))
   }
 
   /** Blocked coarse scan (one LUT sweep per block scores 32 vectors) +
@@ -216,27 +214,19 @@ object Rabitq4 {
   def search(spark: SparkSession, dataDir: String, idCol: String,
       vecCol: String, q: Array[Float], k: Int, model: Rabitq.Model,
       window: Int = 8): DataFrame = {
-    import graft.functions.l2sq
     val rows = graft.ParquetCache.read(spark, s"$dataDir/rows")
-    val coarse =
-      if (window <= 0) rows.select(col(idCol), col(vecCol))
-      else {
-        val rq = model.rotate(q)
-        val qNorm = math.sqrt(rq.map(x => x * x).sum)
-        val lut = buildLut(rq)
-        val est = Shims.column(BlockEst(
-          Shims.expression(col("packed")), Shims.expression(col("norms")),
-          Shims.expression(col("cosvs")), Shims.expression(typedLit(lut)),
-          qNorm, model.dims))
-        val w = math.min(k.toLong * window, Int.MaxValue.toLong).toInt
-        val cand = graft.ParquetCache.read(spark, s"$dataDir/blocks")
-          .select(explode(arrays_zip(col("ids"), est.as("ests"))).as("z"))
-          .select(col("z.ids").as(idCol), col("z.ests").as("approx_dist"))
-          .filter(col(idCol) >= 0)
-          .orderBy(col("approx_dist"), col(idCol)).limit(w)
-        Rerank.fetchByIds(rows, idCol, vecCol, cand)
-      }
-    coarse.select(col(idCol), l2sq(col(vecCol), typedLit(q)).as("dist"))
-      .orderBy(col("dist"), col(idCol)).limit(k)
+    Rerank.twoStage(rows, idCol, vecCol, q, k, window) {
+      val rq = model.rotate(q)
+      val qNorm = math.sqrt(rq.map(x => x * x).sum)
+      val lut = buildLut(rq)
+      val est = Shims.column(BlockEst(
+        Shims.expression(col("packed")), Shims.expression(col("norms")),
+        Shims.expression(col("cosvs")), Shims.expression(typedLit(lut)),
+        qNorm, model.dims))
+      graft.ParquetCache.read(spark, s"$dataDir/blocks")
+        .select(explode(arrays_zip(col("ids"), est.as("ests"))).as("z"))
+        .select(col("z.ids").as(idCol), col("z.ests").as("approx_dist"))
+        .filter(col(idCol) >= 0)
+    }
   }
 }

@@ -1,23 +1,19 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.Shims
 import org.apache.spark.sql.types._
 
 /**
- * Scalar quantization (SQ8): per-dimension min/max learned at build, each
- * float encoded to one u8 code; searches score the codes cheaply, keep a
- * rerank window, then exact-rescore (reference: scalar quantizer
- * crates/quantization/src/scalar.rs, windowed rerank
- * crates/quantization/src/reranker/flat.rs; defaults bits=8,
- * crates/base/src/index.rs:452-505).
- *
- * The two-stage plan (cheap distance -> limit(window) -> exact distance
- * -> top-k) is the Catalyst-native form of the reference's reranker heap.
+ * Scalar quantization (SQ8) kernels: per-dimension min/max learned at
+ * build, each float encoded to one u8 code, approximate l2 decoded in
+ * float and accumulated in double (reference: scalar quantizer
+ * crates/quantization/src/scalar.rs; defaults bits=8,
+ * crates/base/src/index.rs:452-505). [[Sq8Codec]] builds its columns
+ * from these; the coarse layers search through the codec.
  */
 object Sq8 {
 
@@ -34,44 +30,6 @@ object Sq8 {
       if (w <= 0f) 1.0f else w
     }.toArray
     (mins, widths)
-  }
-
-  /** One-time CREATE INDEX job: train bounds, encode every row once,
-    * persist (id, vec, codes) parquet + quantizer params in the catalog.
-    * (Round-1 re-encoded the whole table on every query.) */
-  def ensure(spark: org.apache.spark.sql.SparkSession, name: String,
-      df: => DataFrame, source: String, idCol: String, vecCol: String)
-      : (Array[Float], Array[Float], String) = {
-    import graft.index.IndexCatalog
-    val m = IndexCatalog.ensure(spark, name, source)(
-      buildInto(df, source, idCol, vecCol))
-    (m.floats("mins"), m.floats("widths"), IndexCatalog.dataDir(spark, name))
-  }
-
-  /** REINDEX: the same build into a fresh generation dir, committed by
-    * one atomic pointer flip (readers served throughout) — the vacuum
-    * path for SQL-created `[indexing.flat.quantization.scalar]`
-    * artifacts. */
-  def reindex(spark: org.apache.spark.sql.SparkSession, name: String,
-      df: => DataFrame, source: String, idCol: String, vecCol: String)
-      : (Array[Float], Array[Float], String) = {
-    import graft.index.IndexCatalog
-    val m = IndexCatalog.reindex(spark, name)(
-      buildInto(df, source, idCol, vecCol))
-    (m.floats("mins"), m.floats("widths"), IndexCatalog.dataDir(spark, name))
-  }
-
-  private def buildInto(df: => DataFrame, source: String, idCol: String,
-      vecCol: String)(dataDir: String): graft.index.IndexCatalog.Manifest = {
-    import graft.index.IndexCatalog
-    val nn = df.filter(col(vecCol).isNotNull &&
-      graft.functions.vectorIsFinite(col(vecCol)))
-    val (mins, widths) = train(nn, vecCol)
-    nn.select(col(idCol), col(vecCol),
-        encode(col(vecCol), mins, widths).as("codes"))
-      .write.mode("overwrite").parquet(dataDir)
-    IndexCatalog.Manifest("sq8", source, "l2", Map("bits" -> "8"),
-      floats = Map("mins" -> mins, "widths" -> widths))
   }
 
   def encodeKernel(v: ArrayData, mins: ArrayData, widths: ArrayData): Array[Byte] = {
@@ -130,37 +88,5 @@ object Sq8 {
     override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression, d: Expression) =
       copy(codesE = a, qE = b, minsE = c, widthsE = d)
     override def prettyName = "sq8_l2_approx"
-  }
-
-  def encode(v: Column, mins: Array[Float], widths: Array[Float]): Column =
-    Shims.column(Encode(Shims.expression(v),
-      Shims.expression(typedLit(mins)), Shims.expression(typedLit(widths))))
-
-  def l2Approx(codes: Column, q: Array[Float], mins: Array[Float], widths: Array[Float]): Column =
-    Shims.column(L2Approx(Shims.expression(codes), Shims.expression(typedLit(q)),
-      Shims.expression(typedLit(mins)), Shims.expression(typedLit(widths))))
-
-  /** Two-stage search: coarse top-(k*window) over the CODE COLUMN ONLY
-    * (the scan never touches raw vectors — codes are ~the compression
-    * ratio of the data), then an exact rerank that re-fetches just the
-    * candidate rows by id (the IN filter reaches the parquet scan for
-    * row-group pruning). window <= 0 means "rerank everything" — the
-    * exact mode (full-window rerank is provably exact: the final stage
-    * scores true distances). */
-  def search(indexed: DataFrame, idCol: String, vecCol: String, codeCol: String,
-      q: Array[Float], k: Int, mins: Array[Float], widths: Array[Float],
-      window: Int = 4): DataFrame = {
-    val coarse =
-      if (window <= 0) indexed.select(col(idCol), col(vecCol))
-      else {
-        val w = math.min(k.toLong * window, Int.MaxValue.toLong).toInt
-        val candidates = indexed
-          .select(col(idCol), l2Approx(col(codeCol), q, mins, widths).as("approx_dist"))
-          .orderBy(col("approx_dist"), col(idCol)).limit(w)
-        Rerank.fetchByIds(indexed, idCol, vecCol, candidates)
-      }
-    import graft.functions.l2sq
-    coarse.select(col(idCol), l2sq(col(vecCol), typedLit(q)).as("dist"))
-      .orderBy(col("dist"), col(idCol)).limit(k)
   }
 }

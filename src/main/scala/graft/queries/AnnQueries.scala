@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions._
-import graft.operators.{CodedHnsw, Hnsw, IncrHnsw, IvfIndex, IvfPq, IvfSq, KnnJoin, MaxSimJoin, Pq, Rabitq, Rabitq4, SparseSearch, Sq8, TypedAnn}
+import graft.operators.{Codec, CodedFlat, CodedHnsw, CodedIvf, Hnsw, IncrHnsw, IncrQuant, IvfIndex, KnnJoin, MaxSimJoin, PqCodec, PqQuant, Rabitq, Rabitq4, RabitqCodec, RabitqQuant, SparseSearch, Sq8Codec, Sq8Quant, TypedAnn}
 
 /**
  * ANN search paths (SURVEY §2.6): IVF (partition-pruned index table),
@@ -31,24 +31,25 @@ object AnnQueries {
     IvfIndex.ensure(s, s"ivf_${metric}_${san(d)}", t(s, d, "embeddings"), d,
       "embedding", metric, nlist = 16)
 
-  def sq8(s: SparkSession, d: String): (Array[Float], Array[Float], String) =
-    Sq8.ensure(s, s"sq8_${san(d)}", t(s, d, "embeddings"), d, "vec_id", "embedding")
+  def sq8(s: SparkSession, d: String): (Sq8Codec, String) =
+    CodedFlat.ensure(s, s"sq8_${san(d)}", t(s, d, "embeddings"), d, "vec_id",
+      "embedding", Sq8Quant)
 
   def hnsw(s: SparkSession, d: String, parts: Int, metric: String = "l2"): String =
     Hnsw.ensure(s, s"hnsw_${metric}_p${parts}_${san(d)}", t(s, d, "embeddings"), d,
       "vec_id", "embedding", metric, parts)
 
-  def hnswsq(s: SparkSession, d: String, parts: Int): (CodedHnsw.Codec, String) =
+  def hnswsq(s: SparkSession, d: String, parts: Int): (Codec, String) =
     CodedHnsw.ensure(s, s"hnswsq8_p${parts}_${san(d)}", t(s, d, "embeddings"), d,
-      "vec_id", "embedding", parts, CodedHnsw.Sq8Quant)
+      "vec_id", "embedding", parts, Sq8Quant)
 
-  def hnswpq(s: SparkSession, d: String, parts: Int): (CodedHnsw.Codec, String) =
+  def hnswpq(s: SparkSession, d: String, parts: Int): (Codec, String) =
     CodedHnsw.ensure(s, s"hnswpq_p${parts}_${san(d)}", t(s, d, "embeddings"), d,
-      "vec_id", "embedding", parts, CodedHnsw.PqQuant())
+      "vec_id", "embedding", parts, PqQuant())
 
-  def hnswrq(s: SparkSession, d: String, parts: Int): (CodedHnsw.Codec, String) =
+  def hnswrq(s: SparkSession, d: String, parts: Int): (Codec, String) =
     CodedHnsw.ensure(s, s"hnswrq_p${parts}_${san(d)}", t(s, d, "embeddings"), d,
-      "vec_id", "embedding", parts, CodedHnsw.RabitqQuant)
+      "vec_id", "embedding", parts, RabitqQuant)
 
   def sparse(s: SparkSession, d: String): String =
     SparseSearch.ensure(s, s"sparse_${san(d)}", sparseDocs(s, d), d, "vec_id", "sv")
@@ -59,19 +60,20 @@ object AnnQueries {
     SparseSearch.ensurePruned(s, s"sparsepr_${san(d)}", sparseDocs(s, d), d,
       "vec_id", "sv", topM = 1024)
 
-  def pq(s: SparkSession, d: String): (Pq.Model, String) =
-    Pq.ensure(s, s"pq_${san(d)}", t(s, d, "embeddings"), d, "vec_id", "embedding")
+  def pq(s: SparkSession, d: String): (PqCodec, String) =
+    CodedFlat.ensure(s, s"pq_${san(d)}", t(s, d, "embeddings"), d, "vec_id",
+      "embedding", PqQuant())
 
   /** 4-bit packed PQ (the fast_scan layout analog,
     * crates/quantization/src/fast_scan/): codes two-per-byte, m/2 bytes
     * scanned per row by the coarse pass. */
-  def pq4(s: SparkSession, d: String): (Pq.Model, String) =
-    Pq.ensurePacked(s, s"pq4_${san(d)}", t(s, d, "embeddings"), d,
-      "vec_id", "embedding")
+  def pq4(s: SparkSession, d: String): (PqCodec, String) =
+    CodedFlat.ensure(s, s"pq4_${san(d)}", t(s, d, "embeddings"), d,
+      "vec_id", "embedding", PqQuant(packed = true))
 
-  def rabitq(s: SparkSession, d: String): (Rabitq.Model, String) =
-    Rabitq.ensure(s, s"rabitq_${san(d)}", t(s, d, "embeddings"), d,
-      "vec_id", "embedding")
+  def rabitq(s: SparkSession, d: String): (RabitqCodec, String) =
+    CodedFlat.ensure(s, s"rabitq_${san(d)}", t(s, d, "embeddings"), d,
+      "vec_id", "embedding", RabitqQuant)
 
   /** RaBitQ fast_scan blocked layout (rq_fast_scan analog): 32-vector
     * interleaved nibble blocks scored from per-query group LUTs. */
@@ -117,9 +119,9 @@ object AnnQueries {
         svecFromDense(col("embedding")).as("sv")),
       d, "vec_id", "sv", nlist = 16)
 
-  def ivfpq(s: SparkSession, d: String): (IvfPq.Model, String) =
-    IvfPq.ensure(s, s"ivfpq_${san(d)}", t(s, d, "embeddings"), d,
-      "vec_id", "embedding", nlist = 16)
+  def ivfpq(s: SparkSession, d: String): (CodedIvf.Model, String) =
+    CodedIvf.ensure(s, s"ivfpq_${san(d)}", t(s, d, "embeddings"), d,
+      "vec_id", "embedding", nlist = 16, PqQuant())
 
   /** bvector Hamming HNSW (opclass bvector_hamming_ops): graphs over the
     * densified 0/1 view — l2sq on 0/1 vectors IS Hamming distance, so
@@ -153,9 +155,9 @@ object AnnQueries {
       sparseDocs(s, d).select(col("vec_id"), svecToDense(col("sv")).as("dv")),
       d, "vec_id", "dv", "l2", parts)
 
-  def ivfsq(s: SparkSession, d: String): (IvfSq.Model, String) =
-    IvfSq.ensure(s, s"ivfsq8_${san(d)}", t(s, d, "embeddings"), d,
-      "vec_id", "embedding", nlist = 16)
+  def ivfsq(s: SparkSession, d: String): (CodedIvf.Model, String) =
+    CodedIvf.ensure(s, s"ivfsq8_${san(d)}", t(s, d, "embeddings"), d,
+      "vec_id", "embedding", nlist = 16, Sq8Quant)
 
   /** PARTIAL l2 IVF over `vec_id % 7 = 0` (reference partial indexes:
     * `CREATE INDEX ... WHERE pred`) — the artifact holds only matching
@@ -313,9 +315,9 @@ object AnnQueries {
     }
     graft.operators.IncrIvf.ensure(s, s"ivfincr_${san(d)}", segDir,
       "vec_id", "embedding", metric = "l2", nlist = 16)
-    Seq("sq8", "pq", "rabitq").foreach { sch =>
-      graft.operators.IncrQuant.ensure(s, s"${sch}incr_${san(d)}", segDir,
-        "vec_id", "embedding", sch)
+    Seq(Sq8Quant, PqQuant(), RabitqQuant).foreach { quant =>
+      IncrQuant.ensure(s, s"${quant.name}incr_${san(d)}", segDir,
+        "vec_id", "embedding", quant)
     }
     graft.operators.IncrSparse.ensure(s, s"sparseincr_${san(d)}",
       ensureSvecSegments(s, d), "vec_id", "embedding")
@@ -1734,15 +1736,15 @@ object AnnQueries {
 
     // SQ8: persisted codes -> coarse scan -> rerank window -> exact top-k
     "q_sq8_topk_l2" -> ((s, d) => {
-      val (mins, widths, path) = sq8(s, d)
-      Sq8.search(graft.ParquetCache.read(s, path), "vec_id", "embedding", "codes",
-        qvec(s, d), k = 100, mins, widths, window = sq8WindowConf(s))
+      val (codec, path) = sq8(s, d)
+      CodedFlat.search(graft.ParquetCache.read(s, path), "vec_id", "embedding",
+        qvec(s, d), k = 100, codec, window = Some(sq8WindowConf(s)))
     }),
     // exact mode: rerank window = everything
     "q_sq8_exact_l2" -> ((s, d) => {
-      val (mins, widths, path) = sq8(s, d)
-      Sq8.search(graft.ParquetCache.read(s, path), "vec_id", "embedding", "codes",
-        qvec(s, d), k = 100, mins, widths, window = 0)
+      val (codec, path) = sq8(s, d)
+      CodedFlat.search(graft.ParquetCache.read(s, path), "vec_id", "embedding",
+        qvec(s, d), k = 100, codec, window = Some(0))
     }),
 
     // PQ: ADC LUT coarse scan over m-byte codes -> windowed exact rerank
@@ -1753,47 +1755,47 @@ object AnnQueries {
     // code column.
     "q_pq_topk_l2" -> ((s, d) => {
       if (s.conf.get("spark.graft.pq.fastScan", "false").toBoolean) {
-        val (model, path) = pq4(s, d)
-        Pq.searchPacked(graft.ParquetCache.read(s, path), "vec_id", "embedding", "codes",
-          qvec(s, d), k = 100, model)
+        val (codec, path) = pq4(s, d)
+        CodedFlat.search(graft.ParquetCache.read(s, path), "vec_id", "embedding",
+          qvec(s, d), k = 100, codec)
       } else {
-        val (model, path) = pq(s, d)
-        Pq.search(graft.ParquetCache.read(s, path), "vec_id", "embedding", "codes",
-          qvec(s, d), k = 100, model, window = pqWindowConf(s))
+        val (codec, path) = pq(s, d)
+        CodedFlat.search(graft.ParquetCache.read(s, path), "vec_id", "embedding",
+          qvec(s, d), k = 100, codec, window = Some(pqWindowConf(s)))
       }
     }),
     // exact mode: rerank window = everything
     "q_pq_exact_l2" -> ((s, d) => {
-      val (model, path) = pq(s, d)
-      Pq.search(graft.ParquetCache.read(s, path), "vec_id", "embedding", "codes",
-        qvec(s, d), k = 100, model, window = 0)
+      val (codec, path) = pq(s, d)
+      CodedFlat.search(graft.ParquetCache.read(s, path), "vec_id", "embedding",
+        qvec(s, d), k = 100, codec, window = Some(0))
     }),
 
     // 4-bit packed PQ (fast_scan layout analog): half the coarse-scan
     // bytes of 8-bit PQ; packed ADC is bit-identical to unpacked (spec)
     "q_pq4_topk_l2" -> ((s, d) => {
-      val (model, path) = pq4(s, d)
-      Pq.searchPacked(graft.ParquetCache.read(s, path), "vec_id", "embedding", "codes",
-        qvec(s, d), k = 100, model)
+      val (codec, path) = pq4(s, d)
+      CodedFlat.search(graft.ParquetCache.read(s, path), "vec_id", "embedding",
+        qvec(s, d), k = 100, codec)
     }),
     "q_pq4_exact_l2" -> ((s, d) => {
-      val (model, path) = pq4(s, d)
-      Pq.searchPacked(graft.ParquetCache.read(s, path), "vec_id", "embedding", "codes",
-        qvec(s, d), k = 100, model, window = 0)
+      val (codec, path) = pq4(s, d)
+      CodedFlat.search(graft.ParquetCache.read(s, path), "vec_id", "embedding",
+        qvec(s, d), k = 100, codec, window = Some(0))
     }),
 
     // RaBitQ: 1-bit rotated sign codes + correction factors -> windowed
     // exact rerank
     "q_rabitq_topk_l2" -> ((s, d) => {
-      val (model, path) = rabitq(s, d)
-      Rabitq.search(graft.ParquetCache.read(s, path), "vec_id", "embedding", "code",
-        qvec(s, d), k = 100, model)
+      val (codec, path) = rabitq(s, d)
+      CodedFlat.search(graft.ParquetCache.read(s, path), "vec_id", "embedding",
+        qvec(s, d), k = 100, codec)
     }),
     // exact mode: rerank window = everything
     "q_rabitq_exact_l2" -> ((s, d) => {
-      val (model, path) = rabitq(s, d)
-      Rabitq.search(graft.ParquetCache.read(s, path), "vec_id", "embedding", "code",
-        qvec(s, d), k = 100, model, window = 0)
+      val (codec, path) = rabitq(s, d)
+      CodedFlat.search(graft.ParquetCache.read(s, path), "vec_id", "embedding",
+        qvec(s, d), k = 100, codec, window = Some(0))
     }),
 
     // fast_scan blocked layout (rq_fast_scan analog): one LUT sweep per
@@ -1814,9 +1816,9 @@ object AnnQueries {
     // (probabilistic guarantee -> rows-only; RabitqSpec checks equality
     // with the flat top-k on the fixture)
     "q_rabitq_bounded_l2" -> ((s, d) => {
-      val (model, path) = rabitq(s, d)
+      val (codec, path) = rabitq(s, d)
       Rabitq.searchBounded(graft.ParquetCache.read(s, path), "vec_id", "embedding",
-        "code", qvec(s, d), k = 100, model,
+        "code", qvec(s, d), k = 100, codec.model,
         eps = s.conf.get("spark.graft.rabitq.epsilon", "1.9").toDouble)
     }),
 
@@ -1824,28 +1826,28 @@ object AnnQueries {
     // LUT ADC over the code column, windowed exact rerank
     "q_ivfpq_topk_l2" -> ((s, d) => {
       val (m, path) = ivfpq(s, d)
-      IvfPq.search(s, path, m, "vec_id", "embedding", qvec(s, d),
-        k = 100, nprobe = nprobeConf(s), window = pqWindowConf(s))
+      CodedIvf.search(s, path, m, "vec_id", "embedding", qvec(s, d),
+        k = 100, nprobe = nprobeConf(s), window = Some(pqWindowConf(s)))
     }),
     // exact mode: every list probed, no ADC -> provably the flat scan
     "q_ivfpq_exact_l2" -> ((s, d) => {
       val (m, path) = ivfpq(s, d)
-      IvfPq.search(s, path, m, "vec_id", "embedding", qvec(s, d),
-        k = 100, nprobe = m.coarse.nlist, window = 0)
+      CodedIvf.search(s, path, m, "vec_id", "embedding", qvec(s, d),
+        k = 100, nprobe = m.coarse.nlist, window = Some(0))
     }),
 
     // IVF×SQ8 residual composition: pruned partitions, u8 residual codes
     // scored against the per-list residual query, windowed exact rerank
     "q_ivfsq8_topk_l2" -> ((s, d) => {
       val (m, path) = ivfsq(s, d)
-      IvfSq.search(s, path, m, "vec_id", "embedding", qvec(s, d),
-        k = 100, nprobe = nprobeConf(s), window = sq8WindowConf(s))
+      CodedIvf.search(s, path, m, "vec_id", "embedding", qvec(s, d),
+        k = 100, nprobe = nprobeConf(s), window = Some(sq8WindowConf(s)))
     }),
     // exact mode: every list probed, no decode -> provably the flat scan
     "q_ivfsq8_exact_l2" -> ((s, d) => {
       val (m, path) = ivfsq(s, d)
-      IvfSq.search(s, path, m, "vec_id", "embedding", qvec(s, d),
-        k = 100, nprobe = m.coarse.nlist, window = 0)
+      CodedIvf.search(s, path, m, "vec_id", "embedding", qvec(s, d),
+        k = 100, nprobe = m.coarse.nlist, window = Some(0))
     }),
 
     // bvector Hamming IVF: packed-word payload scan, 0/1-space centroids
@@ -2091,44 +2093,44 @@ object AnnQueries {
     "q_sq8incr_topk" -> ((s, d) => {
       val segDir = ensureVecSegments(s, d)
       val name = s"sq8incr_${san(d)}"
-      graft.operators.IncrQuant.ensure(s, name, segDir, "vec_id", "embedding", "sq8")
-      graft.operators.IncrQuant.search(s, name, segDir, "vec_id", qvec(s, d),
-        k = 100, window = sq8WindowConf(s))
+      IncrQuant.ensure(s, name, segDir, "vec_id", "embedding", Sq8Quant)
+      IncrQuant.search(s, name, segDir, "vec_id", qvec(s, d),
+        k = 100, Sq8Quant, window = sq8WindowConf(s))
     }),
     "q_sq8incr_exact" -> ((s, d) => {
       val segDir = ensureVecSegments(s, d)
       val name = s"sq8incr_${san(d)}"
-      graft.operators.IncrQuant.ensure(s, name, segDir, "vec_id", "embedding", "sq8")
-      graft.operators.IncrQuant.search(s, name, segDir, "vec_id", qvec(s, d),
-        k = 100, window = 0)
+      IncrQuant.ensure(s, name, segDir, "vec_id", "embedding", Sq8Quant)
+      IncrQuant.search(s, name, segDir, "vec_id", qvec(s, d),
+        k = 100, Sq8Quant, window = 0)
     }),
     "q_pqincr_topk" -> ((s, d) => {
       val segDir = ensureVecSegments(s, d)
       val name = s"pqincr_${san(d)}"
-      graft.operators.IncrQuant.ensure(s, name, segDir, "vec_id", "embedding", "pq")
-      graft.operators.IncrQuant.search(s, name, segDir, "vec_id", qvec(s, d),
-        k = 100, window = pqWindowConf(s))
+      IncrQuant.ensure(s, name, segDir, "vec_id", "embedding", PqQuant())
+      IncrQuant.search(s, name, segDir, "vec_id", qvec(s, d),
+        k = 100, PqQuant(), window = pqWindowConf(s))
     }),
     "q_pqincr_exact" -> ((s, d) => {
       val segDir = ensureVecSegments(s, d)
       val name = s"pqincr_${san(d)}"
-      graft.operators.IncrQuant.ensure(s, name, segDir, "vec_id", "embedding", "pq")
-      graft.operators.IncrQuant.search(s, name, segDir, "vec_id", qvec(s, d),
-        k = 100, window = 0)
+      IncrQuant.ensure(s, name, segDir, "vec_id", "embedding", PqQuant())
+      IncrQuant.search(s, name, segDir, "vec_id", qvec(s, d),
+        k = 100, PqQuant(), window = 0)
     }),
     "q_rqincr_topk" -> ((s, d) => {
       val segDir = ensureVecSegments(s, d)
       val name = s"rqincr_${san(d)}"
-      graft.operators.IncrQuant.ensure(s, name, segDir, "vec_id", "embedding", "rabitq")
-      graft.operators.IncrQuant.search(s, name, segDir, "vec_id", qvec(s, d),
-        k = 100, window = pqWindowConf(s))
+      IncrQuant.ensure(s, name, segDir, "vec_id", "embedding", RabitqQuant)
+      IncrQuant.search(s, name, segDir, "vec_id", qvec(s, d),
+        k = 100, RabitqQuant, window = pqWindowConf(s))
     }),
     "q_rqincr_exact" -> ((s, d) => {
       val segDir = ensureVecSegments(s, d)
       val name = s"rqincr_${san(d)}"
-      graft.operators.IncrQuant.ensure(s, name, segDir, "vec_id", "embedding", "rabitq")
-      graft.operators.IncrQuant.search(s, name, segDir, "vec_id", qvec(s, d),
-        k = 100, window = 0)
+      IncrQuant.ensure(s, name, segDir, "vec_id", "embedding", RabitqQuant)
+      IncrQuant.search(s, name, segDir, "vec_id", qvec(s, d),
+        k = 100, RabitqQuant, window = 0)
     }),
 
     // --- row-update semantics (update.slt): UPDATE decomposed as
@@ -2149,9 +2151,9 @@ object AnnQueries {
       val hn = graft.operators.IncrHnsw.search(s, hname, segDir, "vec_id", q,
         k = 100, exact = true)
       val qname = s"updsq8_${san(d)}"
-      graft.operators.IncrQuant.ensure(s, qname, segDir, "vec_id", "embedding", "sq8")
-      val sq = graft.operators.IncrQuant.search(s, qname, segDir, "vec_id", q,
-        k = 100, window = 0)
+      IncrQuant.ensure(s, qname, segDir, "vec_id", "embedding", Sq8Quant)
+      val sq = IncrQuant.search(s, qname, segDir, "vec_id", q,
+        k = 100, Sq8Quant, window = 0)
       val iname = s"updivf_${san(d)}"
       graft.operators.IncrIvf.ensure(s, iname, segDir, "vec_id", "embedding",
         "l2", nlist = 16)

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.functions._
 import graft.index.IndexCatalog
-import graft.operators.{Hnsw, IncrHnsw, IvfIndex, PartitionedIndex, Segments}
+import graft.operators.{CodedFlat, Hnsw, IncrHnsw, IvfIndex, PartitionedIndex, Segments, Sq8Quant}
 
 /**
  * Lifecycle + surface queries: result-set (and therefore driver-oracle)
@@ -1175,10 +1175,10 @@ object LifecycleQueries {
       import s0.implicits._
       // sq8 exact mode == brute force on the tiny source (in-query)
       val q = qvec(s, d)
-      val (mins, widths, sqDir) = graft.operators.Sq8.ensure(s,
-        s"pgq_sq_${san(d)}", graft.ParquetCache.read(s, src), src, "vec_id", "embedding")
-      val exact = graft.operators.Sq8.search(graft.ParquetCache.read(s, sqDir),
-        "vec_id", "embedding", "codes", q, k = 8, mins, widths, window = 0)
+      val (codec, sqDir) = CodedFlat.ensure(s, s"pgq_sq_${san(d)}",
+        graft.ParquetCache.read(s, src), src, "vec_id", "embedding", Sq8Quant)
+      val exact = CodedFlat.search(graft.ParquetCache.read(s, sqDir),
+        "vec_id", "embedding", q, k = 8, codec, window = Some(0))
         .collect().map(_.getLong(0)).toSeq
       val brute = graft.ParquetCache.read(s, src)
         .select(col("vec_id"), l2sq(col("embedding"), typedLit(q)).as("dist"))

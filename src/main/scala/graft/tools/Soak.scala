@@ -120,7 +120,7 @@ object Soak {
     // cost ~the delta (ratio ≈ 1×), while the initial full build scales
     // ~linearly with the corpus. This is the round-5 claim "a 0.1%
     // append costs 0.1%" made measurable.
-    import graft.operators.{IncrIvf, IncrQuant, Segments}
+    import graft.operators.{IncrIvf, IncrQuant, Segments, Sq8Quant}
     def rmrf(p: String): Unit = { def rm(f: java.io.File): Unit = {
       if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
       f.delete() }; rm(new java.io.File(p)) }
@@ -139,7 +139,7 @@ object Soak {
       val fullIvf = t(IncrIvf.ensure(spark, s"soakivf_$tag", segDir,
         "vec_id", "embedding", metric = "l2", nlist = 16))
       val fullSq8 = t(IncrQuant.ensure(spark, s"soaksq8_$tag", segDir,
-        "vec_id", "embedding", "sq8"))
+        "vec_id", "embedding", Sq8Quant))
       // identical delta at both scales: replica 0 is byte-equal to src
       val delta = emb.filter(col("vec_id") < 2000)
         .select((col("vec_id") + 900000000L).as("vec_id"), col("embedding"))
@@ -147,7 +147,7 @@ object Soak {
       val incrIvf = t(IncrIvf.ensure(spark, s"soakivf_$tag", segDir,
         "vec_id", "embedding", metric = "l2", nlist = 16))
       val incrSq8 = t(IncrQuant.ensure(spark, s"soaksq8_$tag", segDir,
-        "vec_id", "embedding", "sq8"))
+        "vec_id", "embedding", Sq8Quant))
       graft.index.IndexCatalog.drop(spark, s"soakivf_$tag")
       graft.index.IndexCatalog.drop(spark, s"soaksq8_$tag")
       rmrf(segDir)
@@ -316,18 +316,18 @@ object Soak {
     // partitions while the corpus grows 10x — the combined-model pass
     // must scale with the probed fraction, not the partition count.
     def routedSoak(d: String, parts: Int): Seq[(String, Double)] = {
-      import graft.operators.{CodedHnsw, MaxSimJoin}
+      import graft.operators.{CodedHnsw, MaxSimJoin, PqQuant, RabitqQuant}
       val tag = san(d)
       val ePath = s"$d/embeddings.parquet"
       def e = spark.read.parquet(ePath)
       val q0 = e.filter(col("vec_id") === 0)
         .select(col("embedding")).head().getSeq[Float](0).toArray
       val (sqCodec, sqPath) = CodedHnsw.ensure(spark, s"soaksq_$tag",
-        e, ePath, "vec_id", "embedding", parts, CodedHnsw.Sq8Quant)
+        e, ePath, "vec_id", "embedding", parts, Sq8Quant)
       val (pqCodec, pqPath) = CodedHnsw.ensure(spark, s"soakpq_$tag",
-        e, ePath, "vec_id", "embedding", parts, CodedHnsw.PqQuant())
+        e, ePath, "vec_id", "embedding", parts, PqQuant())
       val (rqCodec, rqPath) = CodedHnsw.ensure(spark, s"soakrq_$tag",
-        e, ePath, "vec_id", "embedding", parts, CodedHnsw.RabitqQuant)
+        e, ePath, "vec_id", "embedding", parts, RabitqQuant)
       val svPath = graft.queries.AnnQueries.svecHnsw(spark, d, parts)
       val sparsifyQ = transform(col("embedding"),
         x => when(abs(x) > lit(0.15f), x).otherwise(lit(0.0f)))

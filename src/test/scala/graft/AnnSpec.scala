@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.functions._
-import graft.operators.{Hnsw, IvfIndex, Sq8}
+import graft.operators.{CodedFlat, Hnsw, IvfIndex, PqQuant, RabitqQuant, Sq8Quant}
 
 /** Recall@k harness vs the brute-force flat oracle — the Spark analog of
   * the reference CLI's precision measurement (crates/cli/src/main.rs:20-33). */
@@ -459,7 +459,7 @@ class AnnSpec extends SparkSpec {
     graft.index.IndexCatalog.drop(spark, name)
     val (codec, path) = CodedHnsw.ensure(spark, name, emb.toDF(),
       s"$sf001/embeddings.parquet", "vec_id", "embedding", parts = 2,
-      quant = CodedHnsw.Sq8Quant)
+      quant = Sq8Quant)
     // coded graphs store 1 byte/dim vs 4: the artifact must be at least
     // the 3-bytes/dim vector saving smaller than the raw-f32 graphs over
     // the same rows (adjacency bytes are identical on both sides)
@@ -514,7 +514,7 @@ class AnnSpec extends SparkSpec {
     graft.index.IndexCatalog.drop(spark, name)
     val (codec, path) = CodedHnsw.ensure(spark, name, emb.toDF(),
       s"$sf001/embeddings.parquet", "vec_id", "embedding", parts = 2,
-      quant = CodedHnsw.PqQuant())
+      quant = PqQuant())
     // codes are m bytes per node (8 vs 256 raw): artifact must be at
     // least (dims*4 - m) bytes/node smaller than raw graphs
     val rawName = "annspec_hnswpq_raw"
@@ -552,7 +552,7 @@ class AnnSpec extends SparkSpec {
     graft.index.IndexCatalog.drop(spark, name)
     val (codec, path) = CodedHnsw.ensure(spark, name, emb.toDF(),
       s"$sf001/embeddings.parquet", "vec_id", "embedding", parts = 2,
-      quant = CodedHnsw.RabitqQuant)
+      quant = RabitqQuant)
     // sign bits + 8 correction bytes per node: must beat raw by at least
     // 3 bytes/dim (the PQ/SQ8 assertions' sibling)
     val rawName = "annspec_hnswrq_raw"
@@ -628,9 +628,9 @@ class AnnSpec extends SparkSpec {
   }
 
   test("SQ8: k rows, recall@50 >= 0.9; distances exact after rerank") {
-    val (mins, widths) = Sq8.train(emb, "embedding")
-    val encoded = emb.withColumn("codes", Sq8.encode($"embedding", mins, widths))
-    val got = Sq8.search(encoded, "vec_id", "embedding", "codes", q, 50, mins, widths)
+    val codec = Sq8Quant.train(emb, "embedding")
+    val encoded = emb.withColumn("codes", codec.encode($"embedding"))
+    val got = CodedFlat.search(encoded, "vec_id", "embedding", q, 50, codec)
       .as[(Long, Double)].collect()
     assert(got.length == 50)
     assert(recall(got.map(_._1), flatTopk(50, "l2")) >= 0.9)

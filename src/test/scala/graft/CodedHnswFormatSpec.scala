@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{CodedHnsw, Hnsw, Pq, Rabitq}
+import graft.operators.{CodedHnsw, Hnsw, Pq, PqCodec, Rabitq, RabitqCodec, Sq8Codec}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Format lock for the coded HNSW artifacts, and the shared residency
@@ -109,10 +109,10 @@ class CodedHnswFormatSpec extends AnyFunSuite {
           "files" -> "2", "dims" -> "16"),
         Seq("centroid", "rot")))
     for ((codec, kind, prefix, requires, params, floatKeys) <- want) {
-      assert(codec.quant.requires(12, 300, 2) == requires, kind)
-      assert(codec.quant.requires(12, 300, 1) ==
+      assert(CodedHnsw.requires(codec.quant, 12, 300, 2) == requires, kind)
+      assert(CodedHnsw.requires(codec.quant, 12, 300, 1) ==
         requires - "routing" + ("parts" -> "1"), kind)
-      assert(codec.quant.prefix == prefix, kind)
+      assert(layout(codec.quant).prefix == prefix, kind)
       val mf = CodedHnsw.manifest(codec, "src", 2, 12, 300, 2, routing)
       assert(mf.kind == kind && mf.metric == "l2" && mf.source == "src")
       assert(mf.params == params, kind)

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
-import graft.operators.{IncrIvf, Segments}
+import graft.operators.{IncrIvf, IncrMaint, Segments}
 
 /** Incremental IVF over the segment store: an append assigns to the
   * existing centroids and appends files — never rewrites sealed list
@@ -79,7 +79,7 @@ class IncrIvfSpec extends SparkSpec {
     assert(got(2).map(_._1) == Seq(9000L, 9002L))
 
     // compaction promotes (no artifact rebuild), visibility preserved
-    IncrIvf.promoteOnCompact(spark, name, segDir, "vec_id")
+    IncrMaint.promoteOnCompact(spark, name, segDir, "vec_id")
     assert(parquetFiles(dataDir) == m1, "compaction rebuilt the artifact")
     assert(got(2).map(_._1) == Seq(9000L, 9002L))
     assert(got(30) == want(30))

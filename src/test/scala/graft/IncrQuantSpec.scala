@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
-import graft.operators.{IncrQuant, Segments}
+import graft.operators.{Codec, IncrMaint, IncrQuant, PqQuant, Quant, RabitqQuant, Segments, Sq8Quant}
 
 /** Incremental flat-quantized artifacts (SQ8/PQ/RaBitQ) over the segment
   * store: an append encodes with the FROZEN base-trained quantizer and
@@ -21,9 +21,9 @@ class IncrQuantSpec extends SparkSpec {
       .map(f => f.getAbsolutePath -> f.lastModified()).toMap
   }
 
-  private def lifecycle(scheme: String): Unit = {
-    val segDir = Files.createTempDirectory(s"graft_incrq_${scheme}_seg").toString
-    val name = s"incrquantspec_$scheme"
+  private def lifecycle(quant: Quant[Codec]): Unit = {
+    val segDir = Files.createTempDirectory(s"graft_incrq_${quant.name}_seg").toString
+    val name = s"incrquantspec_${quant.name}"
     graft.index.IndexCatalog.drop(spark, name)
     val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
@@ -31,12 +31,12 @@ class IncrQuantSpec extends SparkSpec {
       .select(col("embedding")).head().getSeq[Float](0).toArray
 
     Segments.init(spark, segDir, emb, "vec_id")
-    val dataDir = IncrQuant.ensure(spark, name, segDir, "vec_id", "embedding", scheme)
+    val dataDir = IncrQuant.ensure(spark, name, segDir, "vec_id", "embedding", quant)
     val m0 = parquetFiles(dataDir)
     assert(m0.nonEmpty)
 
     def got(k: Int, window: Int = 0): Seq[(Long, Double)] =
-      IncrQuant.search(spark, name, segDir, "vec_id", q, k, window)
+      IncrQuant.search(spark, name, segDir, "vec_id", q, k, quant, window)
         .as[(Long, Double)].collect().toSeq
     def want(k: Int): Seq[(Long, Double)] =
       Segments.read(spark, segDir, "vec_id")
@@ -55,7 +55,7 @@ class IncrQuantSpec extends SparkSpec {
       .select(col("embedding")).crossJoin(Seq(9000L, 9001L, 9002L).toDF("vec_id"))
       .select(col("vec_id"), col("embedding"))
     Segments.append(spark, segDir, dups, "vec_id")
-    IncrQuant.ensure(spark, name, segDir, "vec_id", "embedding", scheme)
+    IncrQuant.ensure(spark, name, segDir, "vec_id", "embedding", quant)
     val m1 = parquetFiles(dataDir)
     assert(m0.keySet.subsetOf(m1.keySet), "an append deleted a sealed file")
     assert(m0.forall { case (f, t) => m1(f) == t }, "an append rewrote a sealed file")
@@ -70,13 +70,13 @@ class IncrQuantSpec extends SparkSpec {
 
     // delete: zero artifact changes, rows vanish from results
     Segments.delete(spark, segDir, Seq(9001L, 0L).toDF("vec_id"), "vec_id")
-    IncrQuant.ensure(spark, name, segDir, "vec_id", "embedding", scheme)
+    IncrQuant.ensure(spark, name, segDir, "vec_id", "embedding", quant)
     assert(parquetFiles(dataDir) == m1, "delete touched the artifact")
     assert(got(2).map(_._1) == Seq(9000L, 9002L))
     assert(got(2, window = 8).map(_._1).toSet == Set(9000L, 9002L))
 
     // compaction promotes (no artifact rebuild), visibility preserved
-    IncrQuant.promoteOnCompact(spark, name, segDir, "vec_id")
+    IncrMaint.promoteOnCompact(spark, name, segDir, "vec_id")
     assert(parquetFiles(dataDir) == m1, "compaction rebuilt the artifact")
     assert(got(2).map(_._1) == Seq(9000L, 9002L))
     assert(got(30) == want(30))
@@ -85,7 +85,7 @@ class IncrQuantSpec extends SparkSpec {
     Segments.append(spark, segDir, emb.filter(col("vec_id") === 0)
       .select(col("embedding")).crossJoin(Seq(9100L).toDF("vec_id"))
       .select(col("vec_id"), col("embedding")), "vec_id")
-    IncrQuant.ensure(spark, name, segDir, "vec_id", "embedding", scheme)
+    IncrQuant.ensure(spark, name, segDir, "vec_id", "embedding", quant)
     val m2 = parquetFiles(dataDir)
     assert(m1.forall { case (f, t) => m2(f) == t })
     assert(got(3).map(_._1) == Seq(9000L, 9002L, 9100L))
@@ -93,7 +93,7 @@ class IncrQuantSpec extends SparkSpec {
 
     // vacuum (full optimize): dead rows physically reclaimed — the
     // artifact scan no longer contains the deleted ids — search unchanged
-    IncrQuant.vacuum(spark, name, segDir, "vec_id", "embedding", scheme)
+    IncrQuant.vacuum(spark, name, segDir, "vec_id", "embedding", quant)
     val artIds = spark.read.parquet(dataDir).select(col("vec_id"))
       .as[Long].collect().toSet
     assert(!artIds.contains(0L) && !artIds.contains(9001L),
@@ -106,14 +106,14 @@ class IncrQuantSpec extends SparkSpec {
   }
 
   test("sq8: frozen-bounds append, tombstone delete, promote, exact search") {
-    lifecycle("sq8")
+    lifecycle(Sq8Quant)
   }
 
   test("pq: frozen-codebook append, tombstone delete, promote, exact search") {
-    lifecycle("pq")
+    lifecycle(PqQuant())
   }
 
   test("rabitq: frozen-rotation append, tombstone delete, promote, exact search") {
-    lifecycle("rabitq")
+    lifecycle(RabitqQuant)
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
-import graft.operators.{IncrSparse, Segments, SparseSearch}
+import graft.operators.{IncrMaint, IncrSparse, Segments, SparseSearch}
 
 /** Incremental sparse inverted index over the segment store: appends
   * explode only the delta into bucket partitions (sealed posting files
@@ -69,7 +69,7 @@ class IncrSparseSpec extends SparkSpec {
     assert(got(2).map(_._1).toSet == Set(9000L, 9002L))
 
     // compaction promotes (no artifact rebuild), visibility preserved
-    IncrSparse.promoteOnCompact(spark, name, segDir, "vec_id")
+    IncrMaint.promoteOnCompact(spark, name, segDir, "vec_id")
     assert(parquetFiles(dataDir) == m1, "compaction rebuilt the artifact")
     assert(got(30) == want(30))
 

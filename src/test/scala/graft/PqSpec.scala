@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Pq
+import graft.operators.{CodedFlat, CodedIvf, Pq, PqCodec, PqQuant, Sq8Quant}
 
 /** PQ quantizer: exactness at full window, recall under windowed rerank
   * (the quantization.slt analog), deterministic training. */
@@ -14,8 +14,10 @@ class PqSpec extends SparkSpec {
       .head().getSeq[Float](0).toArray
 
   private lazy val model = Pq.train(emb, "embedding", m = 8, ks = 16)
+  private lazy val codec = PqCodec(model)
+  private lazy val packedCodec = PqCodec(model, packed = true)
   private lazy val coded = emb.select(col("vec_id"), col("embedding"),
-    Pq.encode(col("embedding"), model).as("codes")).cache()
+    codec.encode(col("embedding")).as("codes")).cache()
 
   private def flatTopk(k: Int): Seq[Long] =
     emb.select(col("vec_id"), graft.functions.l2sq(col("embedding"),
@@ -24,55 +26,53 @@ class PqSpec extends SparkSpec {
       .select(col("vec_id")).as[Long].collect().toSeq
 
   test("full-window rerank is exact") {
-    val got = Pq.search(coded, "vec_id", "embedding", "codes", q, 50, model,
-      window = 0).select("vec_id").as[Long].collect().toSeq
+    val got = CodedFlat.search(coded, "vec_id", "embedding", q, 50, codec,
+      window = Some(0)).select("vec_id").as[Long].collect().toSeq
     assert(got == flatTopk(50))
   }
 
   test("windowed rerank recall@50 >= 0.9") {
-    val got = Pq.search(coded, "vec_id", "embedding", "codes", q, 50, model,
-      window = 8).select("vec_id").as[Long].collect().toSet
+    val got = CodedFlat.search(coded, "vec_id", "embedding", q, 50, codec,
+      window = Some(8)).select("vec_id").as[Long].collect().toSet
     val truth = flatTopk(50).toSet
     val recall = (got & truth).size.toDouble / truth.size
     assert(recall >= 0.9, s"recall=$recall")
   }
 
   test("IVF+PQ residual: exact at full probe/window; windowed recall >= 0.9") {
-    import graft.operators.IvfPq
     val name = "pqspec_ivfpq"
     graft.index.IndexCatalog.drop(spark, name)
-    val (m, path) = IvfPq.ensure(spark, name, emb,
-      s"$sf0001/embeddings.parquet", "vec_id", "embedding", nlist = 8)
-    val exact = IvfPq.search(spark, path, m, "vec_id", "embedding", q, 50,
-      nprobe = 8, window = 0).select("vec_id").as[Long].collect().toSeq
+    val (m, path) = CodedIvf.ensure(spark, name, emb,
+      s"$sf0001/embeddings.parquet", "vec_id", "embedding", nlist = 8, PqQuant())
+    val exact = CodedIvf.search(spark, path, m, "vec_id", "embedding", q, 50,
+      nprobe = 8, window = Some(0)).select("vec_id").as[Long].collect().toSeq
     assert(exact == flatTopk(50))
-    val got = IvfPq.search(spark, path, m, "vec_id", "embedding", q, 50,
-      nprobe = 8, window = 8).select("vec_id").as[Long].collect().toSet
+    val got = CodedIvf.search(spark, path, m, "vec_id", "embedding", q, 50,
+      nprobe = 8, window = Some(8)).select("vec_id").as[Long].collect().toSet
     val truth = flatTopk(50).toSet
     val recall = (got & truth).size.toDouble / truth.size
     assert(recall >= 0.9, s"recall=$recall")
     // residual coding beats raw-vector coding at the same budget: the
     // windowed candidate set from residual ADC should itself rank well
-    val rawGot = Pq.search(coded, "vec_id", "embedding", "codes", q, 50,
-      model, window = 1).select("vec_id").as[Long].collect().toSet
-    val residGot = IvfPq.search(spark, path, m, "vec_id", "embedding", q, 50,
-      nprobe = 8, window = 1).select("vec_id").as[Long].collect().toSet
+    val rawGot = CodedFlat.search(coded, "vec_id", "embedding", q, 50,
+      codec, window = Some(1)).select("vec_id").as[Long].collect().toSet
+    val residGot = CodedIvf.search(spark, path, m, "vec_id", "embedding", q, 50,
+      nprobe = 8, window = Some(1)).select("vec_id").as[Long].collect().toSet
     assert((residGot & truth).size >= (rawGot & truth).size,
       s"residual ADC (${(residGot & truth).size}) should not lose to raw ADC (${(rawGot & truth).size}) at window=1")
     graft.index.IndexCatalog.drop(spark, name)
   }
 
   test("IVF+SQ8 residual: exact at full probe/window; windowed recall >= 0.9") {
-    import graft.operators.IvfSq
     val name = "pqspec_ivfsq"
     graft.index.IndexCatalog.drop(spark, name)
-    val (m, path) = IvfSq.ensure(spark, name, emb,
-      s"$sf0001/embeddings.parquet", "vec_id", "embedding", nlist = 8)
-    val exact = IvfSq.search(spark, path, m, "vec_id", "embedding", q, 50,
-      nprobe = 8, window = 0).select("vec_id").as[Long].collect().toSeq
+    val (m, path) = CodedIvf.ensure(spark, name, emb,
+      s"$sf0001/embeddings.parquet", "vec_id", "embedding", nlist = 8, Sq8Quant)
+    val exact = CodedIvf.search(spark, path, m, "vec_id", "embedding", q, 50,
+      nprobe = 8, window = Some(0)).select("vec_id").as[Long].collect().toSeq
     assert(exact == flatTopk(50))
-    val got = IvfSq.search(spark, path, m, "vec_id", "embedding", q, 50,
-      nprobe = 8, window = 4).select("vec_id").as[Long].collect().toSet
+    val got = CodedIvf.search(spark, path, m, "vec_id", "embedding", q, 50,
+      nprobe = 8, window = Some(4)).select("vec_id").as[Long].collect().toSet
     val truth = flatTopk(50).toSet
     val recall = (got & truth).size.toDouble / truth.size
     assert(recall >= 0.9, s"recall=$recall")
@@ -88,16 +88,15 @@ class PqSpec extends SparkSpec {
 
   test("4-bit packed: codes halve to m/2 bytes, packed ADC == unpacked ADC") {
     val packed = emb.select(col("vec_id"), col("embedding"),
-      Pq.encodePacked(col("embedding"), model).as("codes"))
+      packedCodec.encode(col("embedding")).as("codes"))
     val c = packed.select(col("codes")).head().getAs[Array[Byte]](0)
     assert(c.length == 4, s"expected m/2=4 packed bytes, got ${c.length}")
     // same accumulation order -> bit-identical scores
-    val lut = model.lut(q)
     val a = coded.select(col("vec_id"),
-        Pq.adcScore(col("codes"), lut, model.ks).as("s"))
+        codec.score(col("codes"), q).as("s"))
       .orderBy("vec_id").select("s").as[Double].collect().toSeq
     val b = packed.select(col("vec_id"),
-        Pq.adcPackedScore(col("codes"), lut, model.ks, model.m).as("s"))
+        packedCodec.score(col("codes"), q).as("s"))
       .orderBy("vec_id").select("s").as[Double].collect().toSeq
     assert(a == b)
   }
@@ -116,12 +115,12 @@ class PqSpec extends SparkSpec {
 
   test("4-bit packed: full-window exact, windowed recall@50 >= 0.9") {
     val packed = emb.select(col("vec_id"), col("embedding"),
-      Pq.encodePacked(col("embedding"), model).as("codes")).cache()
-    val exact = Pq.searchPacked(packed, "vec_id", "embedding", "codes", q, 50,
-      model, window = 0).select("vec_id").as[Long].collect().toSeq
+      packedCodec.encode(col("embedding")).as("codes")).cache()
+    val exact = CodedFlat.search(packed, "vec_id", "embedding", q, 50,
+      packedCodec, window = Some(0)).select("vec_id").as[Long].collect().toSeq
     assert(exact == flatTopk(50))
-    val got = Pq.searchPacked(packed, "vec_id", "embedding", "codes", q, 50,
-      model, window = 8).select("vec_id").as[Long].collect().toSet
+    val got = CodedFlat.search(packed, "vec_id", "embedding", q, 50,
+      packedCodec, window = Some(8)).select("vec_id").as[Long].collect().toSet
     val truth = flatTopk(50).toSet
     val recall = (got & truth).size.toDouble / truth.size
     assert(recall >= 0.9, s"recall=$recall")

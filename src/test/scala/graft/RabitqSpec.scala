@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Rabitq
+import graft.operators.{CodedFlat, Rabitq, RabitqCodec}
 
 /** RaBitQ-style quantizer: rotation orthogonality, exactness at full
   * window, estimator recall under windowed rerank. */
@@ -13,8 +13,9 @@ class RabitqSpec extends SparkSpec {
     emb.filter(col("vec_id") === 0).select(col("embedding"))
       .head().getSeq[Float](0).toArray
   private lazy val model = Rabitq.train(emb, "embedding")
+  private lazy val codec = RabitqCodec(model)
   private lazy val coded = emb.select(col("vec_id"), col("embedding"),
-    Rabitq.encode(col("embedding"), model).as("code")).cache()
+    codec.encode(col("embedding")).as("code")).cache()
 
   private def flatTopk(k: Int): Seq[Long] =
     emb.select(col("vec_id"),
@@ -32,14 +33,14 @@ class RabitqSpec extends SparkSpec {
   }
 
   test("full-window rerank is exact") {
-    val got = Rabitq.search(coded, "vec_id", "embedding", "code", q, 50,
-      model, window = 0).select("vec_id").as[Long].collect().toSeq
+    val got = CodedFlat.search(coded, "vec_id", "embedding", q, 50,
+      codec, window = Some(0)).select("vec_id").as[Long].collect().toSeq
     assert(got == flatTopk(50))
   }
 
   test("windowed rerank recall@50 >= 0.8 from 1-bit codes") {
-    val got = Rabitq.search(coded, "vec_id", "embedding", "code", q, 50,
-      model, window = 8).select("vec_id").as[Long].collect().toSet
+    val got = CodedFlat.search(coded, "vec_id", "embedding", q, 50,
+      codec, window = Some(8)).select("vec_id").as[Long].collect().toSet
     val truth = flatTopk(50).toSet
     val recall = (got & truth).size.toDouble / truth.size
     assert(recall >= 0.8, s"recall=$recall")

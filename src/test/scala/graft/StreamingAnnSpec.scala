@@ -61,7 +61,7 @@ class StreamingAnnSpec extends SparkSpec {
 
   test("streaming ingest feeds incremental IVF and quantized artifacts: append-only, search sees streamed rows") {
     import java.nio.file.Files
-    import graft.operators.{IncrIvf, IncrQuant, Segments}
+    import graft.operators.{IncrIvf, IncrQuant, Segments, Sq8Quant}
     import graft.streaming.StreamingIngest
     val segDir = Files.createTempDirectory("graft_stream_incrq").toString
     val ivfName = "streamspec_incrivf"
@@ -73,7 +73,7 @@ class StreamingAnnSpec extends SparkSpec {
     Segments.init(spark, segDir, emb, "vec_id")
     val ivfDir = IncrIvf.ensure(spark, ivfName, segDir, "vec_id", "embedding",
       metric = "l2", nlist = 8)
-    val sqDir = IncrQuant.ensure(spark, sqName, segDir, "vec_id", "embedding", "sq8")
+    val sqDir = IncrQuant.ensure(spark, sqName, segDir, "vec_id", "embedding", Sq8Quant)
     def pqFiles(dir: String): Map[String, Long] = {
       def walk(f: java.io.File): Seq[java.io.File] =
         if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).toSeq.flatMap(walk)
@@ -100,7 +100,7 @@ class StreamingAnnSpec extends SparkSpec {
 
     IncrIvf.ensure(spark, ivfName, segDir, "vec_id", "embedding",
       metric = "l2", nlist = 8)
-    IncrQuant.ensure(spark, sqName, segDir, "vec_id", "embedding", "sq8")
+    IncrQuant.ensure(spark, sqName, segDir, "vec_id", "embedding", Sq8Quant)
     val ivf1 = pqFiles(ivfDir); val sq1 = pqFiles(sqDir)
     assert(ivf0.forall { case (f, t) => ivf1.get(f).contains(t) },
       "stream ingest rewrote a sealed IVF list file")
@@ -111,7 +111,7 @@ class StreamingAnnSpec extends SparkSpec {
     val gotIvf = IncrIvf.search(spark, ivfName, segDir, "vec_id", qv, 3, nprobe = 8)
       .as[(Long, Double)].collect().toSeq
     assert(gotIvf.map(_._1) == Seq(7L, 60007L, 60008L), s"got $gotIvf")
-    val gotSq = IncrQuant.search(spark, sqName, segDir, "vec_id", qv, 3, window = 0)
+    val gotSq = IncrQuant.search(spark, sqName, segDir, "vec_id", qv, 3, Sq8Quant, window = 0)
       .as[(Long, Double)].collect().toSeq
     assert(gotSq.map(_._1) == Seq(7L, 60007L, 60008L), s"got $gotSq")
     assert(gotSq.forall(_._2 == 0.0))

@@ -1,4 +1,5 @@
 package graft
+import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Headline bench: times every SparkEntry query at SPARK_GRAFT_SF_DIR.
@@ -10,8 +11,11 @@ object Bench {
     * with HOST load even when the guest shows 100% idle (round-5 / r12
     * diagnosis pattern — a uniformly-inflated bench total with zero
     * code change). 32 threads each run a fixed integer multiply-add
-    * loop; the wall time is emitted as host_control_sec so a judge can
-    * adjudicate a slow total WITHOUT re-measuring. Healthy reference on
+    * loop. It runs before and after the timed passes; the wall times are
+    * emitted as host_control_pre_sec / host_control_post_sec
+    * (host_control_sec repeats the pre value for older readers), so a
+    * slow total can be adjudicated WITHOUT re-measuring, and a host that
+    * got loaded DURING the passes shows in the post value. Healthy reference on
     * this box: ~0.55 s (record in CLAUDE.md; a 1.5x+ value means the
     * host was loaded and the totals are not comparable). JIT-warmed by
     * a single-thread pre-run. */
@@ -39,13 +43,13 @@ object Bench {
       try {
         fn(spark, sfDir).count()
         Right(name -> (System.nanoTime() - t0) / 1e9)
-      } catch { case e: Throwable => Left(name -> e.getClass.getName) }
+      } catch { case NonFatal(e) => Left(name -> e.getClass.getName) }
     }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val hostControl = hostControlSec()
+    val hostPre = hostControlSec()
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -74,6 +78,8 @@ object Bench {
     // like-for-like). The headline total stays COLD for cross-round
     // comparability.
     val (failedWarm, warm) = timedPass(spark, sfDir, queries)
+    spark.stop()
+    val hostPost = hostControlSec()
     // Round 18: the driver contract expects the per-query `queries` map ON
     // STDOUT (PERF_r17 had per_query:{} / now_bench_ok:false because round 7
     // demoted stdout to a total-only short line). Print the full map as the
@@ -88,10 +94,10 @@ object Bench {
       .map { case ((q, err), pass) =>
         s"""{"query":"$q","pass":"$pass","error":"$err"}""" }
       .mkString("[", ",", "]")
-    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":${jmap(results, _.toString)},"warm":${jmap(warm, _.toString)},"warm_total":${warm.map(_._2).sum},"failed":$failed,"host_control_sec":${ms(hostControl)},"sf":"$sfDir"}"""
-    val stdoutLine = s"""{"metric":"total","value":${ms(total)},"unit":"sec","n":${results.size},"queries":${jmap(results, ms)},"warm":${jmap(warm, ms)},"failed":$failed,"host_control_sec":${ms(hostControl)},"sf":"$sfDir"}"""
+    val host = s""""host_control_sec":${ms(hostPre)},"host_control_pre_sec":${ms(hostPre)},"host_control_post_sec":${ms(hostPost)}"""
+    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":${jmap(results, _.toString)},"warm":${jmap(warm, _.toString)},"warm_total":${warm.map(_._2).sum},"failed":$failed,$host,"sf":"$sfDir"}"""
+    val stdoutLine = s"""{"metric":"total","value":${ms(total)},"unit":"sec","n":${results.size},"queries":${jmap(results, ms)},"warm":${jmap(warm, ms)},"failed":$failed,$host,"sf":"$sfDir"}"""
     java.nio.file.Files.writeString(java.nio.file.Paths.get("bench_out.json"), fullLine + "\n")
-    spark.stop()
     println(stdoutLine)
   }
 }

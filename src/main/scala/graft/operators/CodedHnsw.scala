@@ -311,20 +311,15 @@ object CodedHnsw {
         if (allFiles.isEmpty)
           return spark.emptyDataset[(Long, Double)].toDF(idCol, "dist")
         val files = Hnsw.routeFiles(spark, path, allFiles, q, probeGraphs)
-        val bProbe = spark.sparkContext.broadcast(codec.probe(q))
+        val probe = codec.probe(q)
         val ef = math.max(efSearch,
           k * math.max(window.getOrElse(layout(codec.quant).window), 1))
-        val hconf = Hnsw.confEntries(spark)
-        val frontier = spark.sparkContext
-          .parallelize(files, Hnsw.fileSlices(spark, files.length))
-          .mapPartitions { it =>
-            val conf = Hnsw.mkConf(hconf)
-            it.flatMap { f =>
-              Hnsw.GraphCache.getCoded(f, conf)
-                .searchFrontier(bProbe.value, ef)
-                .iterator.map { case (d, id) => (id, d) }
-            }
-          }.toDF(idCol, "approx_dist")
+        val hconf = spark.sparkContext.hadoopConfiguration
+        val frontier = ResidentSearch.topK(spark, files, idCol, Int.MaxValue,
+            "approx_dist") { f =>
+          Hnsw.GraphCache.getCoded(f, hconf).searchFrontier(probe, ef)
+            .iterator.map { case (d, id) => (id, d) }
+        }
         Rerank.fetchByIds(indexed, idCol, vecCol, frontier)
       }
     Rerank.exactTopK(coarse, idCol, vecCol, q, k)

@@ -647,7 +647,8 @@ object Hnsw {
     * of the reference (crates/index/src/lib.rs:386-423). A rebuilt
     * artifact bumps mtime/length and evicts itself naturally. Raw
     * ([[FlatGraph]]) and coded ([[CodedHnsw.CodedGraph]]) graphs share
-    * one LRU and one budget. */
+    * one LRU and one budget. The driver JVM holds one too: single-query
+    * searches walk the graphs there ([[ResidentSearch]]). */
   object GraphCache {
     /** Residency is bounded by an approximate BYTE budget per executor
       * JVM (LRU eviction), not a graph count: 128 arbitrarily-large
@@ -1159,10 +1160,7 @@ object Hnsw {
       .orderBy(col("qh")).limit(64)
       .collect().map(_.getSeq[Float](0).toArray)
     if (qs.isEmpty) return EfLadder.head
-    val dirPath = new org.apache.hadoop.fs.Path(dataDir)
-    val fs = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = fs.globStatus(new org.apache.hadoop.fs.Path(dataDir, "graph-*.bin"))
-      .map(_.getPath.toString).sorted.toSeq
+    val files = graphFiles(spark, dataDir)
     if (files.isEmpty) return EfLadder.head
     val bq = spark.sparkContext.broadcast(qs)
     val hconf = confEntries(spark)
@@ -1552,20 +1550,15 @@ object Hnsw {
 
   /** Search persisted per-partition graphs; global ordered merge of the
     * per-graph top-k streams (the LoserTree analog). Per-query cost is
-    * k·efSearch distance evaluations per RESIDENT graph — graphs load
-    * once per executor (GraphCache) and the task carries only a file
-    * path, so repeat queries do no artifact I/O at all. */
+    * k·efSearch distance evaluations per RESIDENT graph — the walks run
+    * on the driver over graphs loaded once into the GraphCache
+    * ([[ResidentSearch]]), so repeat queries do no artifact I/O and run
+    * no Spark job. The result is a local relation. */
   def searchIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       idCol: String, q: Array[Float], k: Int, efSearch: Int = AutoEf,
       exact: Boolean = false, probeGraphs: Int = 0): DataFrame = {
-    import spark.implicits._
     val efSearch0 = resolveEf(path, efSearch)
-    val dirPath = new org.apache.hadoop.fs.Path(path)
-    val fs = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val allFiles = fs.globStatus(new org.apache.hadoop.fs.Path(path, "graph-*.bin"))
-      .map(_.getPath.toString).sorted.toSeq
-    if (allFiles.isEmpty)
-      return spark.emptyDataset[(Long, Double)].toDF(idCol, "dist")
+    val allFiles = graphFiles(spark, path)
     // routed scalar search (round 8): with a spatial routing sidecar,
     // rank graphs by the metric's lower bound DRIVER-side (the query is
     // a plan-time constant; G centroid distances are metadata work) and
@@ -1579,18 +1572,14 @@ object Hnsw {
   }
 
   /** Default beam floor for plain-graph searches: effective ef =
-    * max(efSearch, efMult·k), efMult = spark.graft.hnsw.efMult
-    * (default 2). The IncrHnsw ef=2× lesson (round 13, 0.96→1.00
+    * max(efSearch, 2·k). The IncrHnsw ef=2× lesson (round 13, 0.96→1.00
     * clustered) applied to every resident-graph beam: an ef == k beam
     * loses recoverable neighbors whenever the per-graph frontier is as
     * narrow as the answer set (measured hnsw_l2 clustered recall@100
     * 0.97 at ef = k = 100). An explicit efSearch above the floor always
-    * wins; efMult=1 restores the raw knob; exact modes never beam.
-    * Computed DRIVER-side (conf reads don't belong in tasks). */
-  private[graft] def beamEf(spark: org.apache.spark.sql.SparkSession,
-      efSearch: Int, k: Int): Int =
-    math.max(efSearch,
-      k * spark.conf.get("spark.graft.hnsw.efMult", "2").toInt)
+    * wins; exact modes never beam. */
+  private[graft] def beamEf(efSearch: Int, k: Int): Int =
+    math.max(efSearch, k * 2)
 
   /** AUTO beam breadth (round 17): `efSearch = AutoEf` (0, the default
     * on every dense search entry) resolves max(100, the ADJACENT
@@ -1608,7 +1597,7 @@ object Hnsw {
       .flatMap(_.params.get("ef_hint")).flatMap(_.toIntOption)
       .getOrElse(0))
 
-  /** Slice count for per-graph-file serving jobs (round 16): one task
+  /** Slice count for per-graph-file batch jobs (round 16): one task
     * per file puts hundreds of near-no-op tasks on the scheduler for
     * large fleets — scheduling, not search, dominated the 5M incr
     * smoke's p50 at 250 graphs (1120 ms → 78 ms packed at ~2 tasks per
@@ -1619,33 +1608,37 @@ object Hnsw {
       n: Int): Int =
     math.max(1, math.min(n, spark.sparkContext.defaultParallelism * 2))
 
-  /** Scalar search over an explicit graph-file list — the per-file tasks
-    * of [[searchIndex]] with discovery/routing already done. The
+  /** The artifact's `graph-*.bin` files under `path`, sorted. */
+  private[graft] def graphFiles(spark: org.apache.spark.sql.SparkSession,
+      path: String): Seq[String] = {
+    val dirPath = new org.apache.hadoop.fs.Path(path)
+    val fs = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.globStatus(new org.apache.hadoop.fs.Path(path, "graph-*.bin"))
+      .map(_.getPath.toString).sorted.toSeq
+  }
+
+  /** Scalar search over an explicit graph-file list — the per-file walks
+    * of [[searchIndex]] with discovery/routing already done, run on the
+    * driver over the resident graphs ([[ResidentSearch]]). The
     * partitioned parent's routed scalar path calls this with its
     * cross-partition top-g selection. */
   private[graft] def searchFiles(spark: org.apache.spark.sql.SparkSession,
       files: Seq[String], idCol: String, q: Array[Float], k: Int,
-      efSearch: Int, exact: Boolean): DataFrame = {
-    import spark.implicits._
-    val efb = beamEf(spark, efSearch, k)
-    val bq = spark.sparkContext.broadcast(q)
-    val hconf = confEntries(spark)
-    val hits = spark.sparkContext
-      .parallelize(files, fileSlices(spark, files.length))
-      .mapPartitions { it =>
-        val conf = mkConf(hconf)
-        it.flatMap { f =>
-          val g = GraphCache.get(f, conf)
-          // cos graphs store normalized vectors and search by -dot;
-          // report cosine distance 1 - dot, the reference's convention
-          // (am_options.rs:244-249), matching the IVF cos path.
-          val off = if (g.metric == "cos") 1.0 else 0.0
-          val res = if (exact) g.bruteForce(bq.value, k)
-                    else g.search(bq.value, k, efb)
-          res.iterator.map { case (d, id) => (id, d + off) }
-        }
-      }.toDF(idCol, "dist")
-    hits.orderBy(col("dist"), col(idCol)).limit(k)
+      efSearch: Int, exact: Boolean): DataFrame =
+    ResidentSearch.topK(spark, files, idCol, k)(
+      walkFile(spark, q, k, beamEf(efSearch, k), exact))
+
+  /** One graph file's scalar top-k as (id, dist). Cos graphs store
+    * normalized vectors and search by -dot; rows report cosine distance
+    * 1 - dot, the reference's convention (am_options.rs:244-249),
+    * matching the IVF cos path. */
+  private[graft] def walkFile(spark: org.apache.spark.sql.SparkSession,
+      q: Array[Float], k: Int, efb: Int, exact: Boolean)(
+      f: String): Iterator[(Long, Double)] = {
+    val g = GraphCache.get(f, spark.sparkContext.hadoopConfiguration)
+    val off = if (g.metric == "cos") 1.0 else 0.0
+    val res = if (exact) g.bruteForce(q, k) else g.search(q, k, efb)
+    res.iterator.map { case (d, id) => (id, d + off) }
   }
 
   /** Filtered top-k over the graph artifact — the reference's VBASE
@@ -1739,14 +1732,8 @@ object Hnsw {
       path: String, idCol: String, q: Array[Float], k: Int, metric: String,
       efSearch: Int = AutoEf, exact: Boolean = false,
       probeGraphs: Int = 0): DataFrame = {
-    import spark.implicits._
-    val efb = beamEf(spark, resolveEf(path, efSearch), k)
-    val dirPath = new org.apache.hadoop.fs.Path(path)
-    val fs = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val allFiles = fs.globStatus(new org.apache.hadoop.fs.Path(path, "graph-*.bin"))
-      .map(_.getPath.toString).sorted.toSeq
-    if (allFiles.isEmpty)
-      return spark.emptyDataset[(Long, Double)].toDF(idCol, "dist")
+    val efb = beamEf(resolveEf(path, efSearch), k)
+    val allFiles = graphFiles(spark, path)
     // routed typed scalar search (round 9): the same sidecar routes
     // override-metric searches through the TypedAnn.rankLists metric
     // map; exact mode never routes (flat-scan union = the oracle mode)
@@ -1754,20 +1741,13 @@ object Hnsw {
       if (exact) allFiles
       else routeFiles(spark, path, allFiles, q, probeGraphs,
         overrideMetric = Some(metric))
-    val bq = spark.sparkContext.broadcast(q)
-    val hconf = confEntries(spark)
-    val hits = spark.sparkContext
-      .parallelize(files, fileSlices(spark, files.length))
-      .mapPartitions { it =>
-        val conf = mkConf(hconf)
-        it.flatMap { f =>
-          val g = GraphCache.get(f, conf)
-          val res = if (exact) g.bruteForceMetric(bq.value, k, metric)
-                    else g.searchMetric(bq.value, k, efb, metric)
-          res.iterator.map { case (d, id) => (id, d) }
-        }
-      }.toDF(idCol, "dist")
-    hits.orderBy(col("dist"), col(idCol)).limit(k)
+    val hconf = spark.sparkContext.hadoopConfiguration
+    ResidentSearch.topK(spark, files, idCol, k) { f =>
+      val g = GraphCache.get(f, hconf)
+      val res = if (exact) g.bruteForceMetric(q, k, metric)
+                else g.searchMetric(q, k, efb, metric)
+      res.iterator.map { case (d, id) => (id, d) }
+    }
   }
 
   /** EXACT sphere-range over the graph artifact — the strategy-2 sphere
@@ -1782,10 +1762,7 @@ object Hnsw {
   def rangeSearchFlat(spark: org.apache.spark.sql.SparkSession, path: String,
       idCol: String, q: Array[Float], r: Double): DataFrame = {
     import spark.implicits._
-    val dirPath = new org.apache.hadoop.fs.Path(path)
-    val fs = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = fs.globStatus(new org.apache.hadoop.fs.Path(path, "graph-*.bin"))
-      .map(_.getPath.toString).sorted.toSeq
+    val files = graphFiles(spark, path)
     if (files.isEmpty)
       return spark.emptyDataset[(Long, Double)].toDF(idCol, "dist")
     val bq = spark.sparkContext.broadcast(q)
@@ -1992,7 +1969,7 @@ object Hnsw {
       metricOverride: Option[String] = None, hint: Int = 0): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
-    val efb = beamEf(spark, efSearch, k)
+    val efb = beamEf(efSearch, k)
     if (files.isEmpty)
       return spark.emptyDataset[(Long, Long, Double, Int)]
         .toDF("qid", idCol, "dist", "rn")
@@ -2095,11 +2072,8 @@ object Hnsw {
       k: Int, efSearch: Int = AutoEf, exact: Boolean = false): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
-    val efb = beamEf(spark, resolveEf(path, efSearch), k)
-    val dirPath = new org.apache.hadoop.fs.Path(path)
-    val fs = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = fs.globStatus(new org.apache.hadoop.fs.Path(path, "graph-*.bin"))
-      .map(_.getPath.toString).sorted.toSeq
+    val efb = beamEf(resolveEf(path, efSearch), k)
+    val files = graphFiles(spark, path)
     if (files.isEmpty)
       return spark.emptyDataset[(Long, Long, Double, Int)]
         .toDF("qid", idCol, "dist", "rn")

@@ -1,7 +1,5 @@
 package graft.operators
 
-import org.apache.spark.SparkContext
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -296,8 +294,7 @@ object IncrHnsw {
     * — folded max-per-id into id-sorted primitive arrays (the reference
     * keeps the same map in memory, crates/index/src/delete.rs:10-75).
     * Published arrays are never mutated; a newer snapshot copies. */
-  private[graft] final class Tombs(val ids: Array[Long], val vers: Array[Long])
-      extends Serializable {
+  private[graft] final class Tombs(val ids: Array[Long], val vers: Array[Long]) {
     /** A row of `id` from a graph carrying version `ver` is hidden. */
     def hides(id: Long, ver: Long): Boolean = {
       val i = java.util.Arrays.binarySearch(ids, id)
@@ -308,19 +305,9 @@ object IncrHnsw {
   /** [[Tombs]] with the committed store state they cover. `origin` holds
     * the rest of what the fold read: the artifact dir, the store
     * generation's identity and the dead/ fingerprint; `dirsRead` counts
-    * the `tombs-<s>` dirs the fold that built it read. The snapshot
-    * carries one broadcast of its tombstones, made by the first search
-    * on a SparkContext and reused until a commit supersedes the
-    * snapshot. A superseded broadcast is never destroyed (a concurrent
-    * search may still hold it); the ContextCleaner reclaims it. */
+    * the `tombs-<s>` dirs the fold that built it read. */
   private[graft] final class TombSnapshot(val gen: Long, val seq: Long,
-      val origin: String, val tombs: Tombs, val dirsRead: Int) {
-    private var bc: (SparkContext, Broadcast[Tombs]) = _
-    def broadcast(sc: SparkContext): Broadcast[Tombs] = synchronized {
-      if (bc == null || (bc._1 ne sc)) bc = (sc, sc.broadcast(tombs))
-      bc._2
-    }
-  }
+      val origin: String, val tombs: Tombs, val dirsRead: Int)
 
   /** DRIVER-side snapshot cache, one entry per (store, index), pruned
     * when the store's VERSION disappears (the tupleCache convention).
@@ -418,21 +405,18 @@ object IncrHnsw {
     val files = binFiles(dataDir).map(f => (f.getAbsolutePath, fileVer(f.getName)))
     if (files.isEmpty)
       return spark.emptyDataset[(Long, Double)].toDF(idCol, "dist")
-    // Tombstones travel as the snapshot's broadcast (one per commit, not
-    // per query) and visibility is a binary search IN the search task
-    // (round 16: the former broadcast JOIN
-    // collected the same rows to the driver anyway, but forced every
-    // graph to over-fetch by the TOTAL tombstone count up front — a 1%
-    // delete wave at the 5M smoke made every search a per-graph full
-    // scan (744 ms vs 102 ms p50). Per graph, k VISIBLE candidates
+    // Visibility is a binary search in the snapshot's tombstones, per
+    // graph, on the driver (round 16: the former broadcast JOIN forced
+    // every graph to over-fetch by the TOTAL tombstone count up front —
+    // a 1% delete wave at the 5M smoke made every search a per-graph
+    // full scan, 744 ms vs 102 ms p50). Per graph, k VISIBLE candidates
     // suffice for the global visible top-k, so the first pass
     // over-fetches by a BOUNDED slack and a graph re-searches at the
     // sound k+deadCount ceiling only when its fetch both filled up AND
-    // yielded fewer than k visible rows — locally, in the same task,
-    // no second job). Exact mode keeps its proof: bruteForce at the
-    // ceiling returns the graph's true visible top-k.
-    val snap = tombstoneSnapshot(spark, name, segDir, idCol)
-    val deadCount = snap.tombs.ids.length.toLong
+    // yielded fewer than k visible rows. Exact mode keeps its proof:
+    // bruteForce at the ceiling returns the graph's true visible top-k.
+    val tm = tombstoneSnapshot(spark, name, segDir, idCol).tombs
+    val deadCount = tm.ids.length.toLong
     val fetch0 = math.min(k.toLong + math.min(deadCount, 4L * k),
       Int.MaxValue.toLong).toInt
     val fetchMax = math.min(k.toLong + deadCount, Int.MaxValue.toLong).toInt
@@ -445,43 +429,23 @@ object IncrHnsw {
     // cost (the union/top-k stays k-bounded). Routing was considered
     // and rejected: the base fleet here is one graph + small side
     // graphs, so the loss was beam-local, not fleet-selection.
-    val bq = spark.sparkContext.broadcast(q)
-    val btombs = snap.broadcast(spark.sparkContext)
-    val hconf = Hnsw.confEntries(spark)
-    val kk = k
-    val ef0 = efSearch
-    val ex = exact
-    // graphs PACK into ~2 tasks per core (round 16): one task per file
-    // put 250+ near-no-op tasks on the scheduler per query at the 5M
-    // smoke — scheduling, not search, dominated the p50. Files in one
-    // task resolve through the GraphCache sequentially, one ref live at
-    // a time (the round-7 convention).
-    val slices = math.max(1, math.min(files.length,
-      spark.sparkContext.defaultParallelism * 2))
-    val hits = spark.sparkContext
-      .parallelize(files, slices)
-      .mapPartitions { it =>
-        val conf = Hnsw.mkConf(hconf)
-        val tm = btombs.value
-        it.flatMap { case (f, ver) =>
-          val g = Hnsw.GraphCache.get(f, conf)
-          def run(fetch: Int): Seq[(Double, Long)] =
-            if (ex) g.bruteForce(bq.value, fetch)
-            else g.search(bq.value, fetch,
-              math.max(ef0, fetch * 2))
-          def visible(rs: Seq[(Double, Long)]): Seq[(Double, Long)] =
-            rs.filter { case (_, id) => !tm.hides(id, ver) }
-          val first = run(fetch0)
-          var vis = visible(first)
-          if (fetchMax > fetch0 && vis.lengthCompare(kk) < 0 &&
-              first.lengthCompare(fetch0) >= 0)
-            vis = visible(run(fetchMax))
-          // per-graph cap at k: the global top-k is covered by the
-          // union of per-graph visible top-k (results are dist-sorted)
-          vis.take(kk).iterator.map { case (d, id) => (id, d) }
-        }
-      }.toDF(idCol, "dist")
-    hits.orderBy(col("dist"), col(idCol)).limit(k)
+    val hconf = spark.sparkContext.hadoopConfiguration
+    ResidentSearch.topK(spark, files, idCol, k) { case (f, ver) =>
+      val g = Hnsw.GraphCache.get(f, hconf)
+      def run(fetch: Int): Seq[(Double, Long)] =
+        if (exact) g.bruteForce(q, fetch)
+        else g.search(q, fetch, math.max(efSearch, fetch * 2))
+      def visible(rs: Seq[(Double, Long)]): Seq[(Double, Long)] =
+        rs.filter { case (_, id) => !tm.hides(id, ver) }
+      val first = run(fetch0)
+      var vis = visible(first)
+      if (fetchMax > fetch0 && vis.lengthCompare(k) < 0 &&
+          first.lengthCompare(fetch0) >= 0)
+        vis = visible(run(fetchMax))
+      // per-graph cap at k: the global top-k is covered by the union of
+      // per-graph visible top-k (results are dist-sorted)
+      vis.take(k).iterator.map { case (d, id) => (id, d) }
+    }
   }
 }
 

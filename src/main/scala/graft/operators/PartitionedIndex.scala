@@ -529,16 +529,20 @@ object PartitionedIndex {
     // either way the only driver-side work is one listStatus of the
     // source dir (metadata, never a job — safe inside an optimizer rule)
     val chosen = resolveValues(spark, source, partCol, values)
-    chosen.map { v =>
+    // every partition's graph files, walked with that partition's beam,
+    // in ONE driver-side merge: the global top-k of the per-partition
+    // top-k unions is the global top-k
+    val walks = chosen.flatMap { v =>
       val sub = subName(name, v)
       // a partition present in the layout but never ensured must be a
       // clear error, not an empty (silently-wrong) contribution
       require(graft.index.IndexCatalog.load(spark, sub).nonEmpty,
         s"no such index: $sub (run ensureHnsw after adding partitions)")
-      Hnsw.searchIndex(spark,
-        graft.index.IndexCatalog.dataDir(spark, sub),
-        idCol, q, k, efSearch, exact)
-    }.reduce(_ unionByName _)
-      .orderBy(col("dist"), col(idCol)).limit(k)
+      val dir = graft.index.IndexCatalog.dataDir(spark, sub)
+      val walk = Hnsw.walkFile(spark, q, k,
+        Hnsw.beamEf(Hnsw.resolveEf(dir, efSearch), k), exact) _
+      Hnsw.graphFiles(spark, dir).map(f => () => walk(f))
+    }
+    ResidentSearch.topK(spark, walks, idCol, k)(_())
   }
 }

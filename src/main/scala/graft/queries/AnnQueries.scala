@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions._
-import graft.operators.{Codec, CodedFlat, CodedHnsw, CodedIvf, Hnsw, IncrHnsw, IncrQuant, IvfIndex, KnnJoin, MaxSimJoin, PqCodec, PqQuant, Rabitq, Rabitq4, RabitqCodec, RabitqQuant, SparseSearch, Sq8Codec, Sq8Quant, TypedAnn}
+import graft.operators.{Codec, CodedFlat, CodedHnsw, CodedIvf, Hnsw, IncrHnsw, IncrQuant, IvfIndex, KnnJoin, MaxSimJoin, PqCodec, PqQuant, Quant, Rabitq, Rabitq4, RabitqCodec, RabitqQuant, SparseSearch, Sq8Codec, Sq8Quant, TypedAnn}
 
 /**
  * ANN search paths (SURVEY §2.6): IVF (partition-pruned index table),
@@ -316,11 +316,19 @@ object AnnQueries {
     graft.operators.IncrIvf.ensure(s, s"ivfincr_${san(d)}", segDir,
       "vec_id", "embedding", metric = "l2", nlist = 16)
     Seq(Sq8Quant, PqQuant(), RabitqQuant).foreach { quant =>
-      IncrQuant.ensure(s, s"${quant.name}incr_${san(d)}", segDir,
+      IncrQuant.ensure(s, incrQuantName(quant, d), segDir,
         "vec_id", "embedding", quant)
     }
     graft.operators.IncrSparse.ensure(s, s"sparseincr_${san(d)}",
       ensureSvecSegments(s, d), "vec_id", "embedding")
+  }
+
+  /** The incremental coded index of `quant` over the vec segment store:
+    * the one spelling for the untimed prebuild in [[ensureAll]] and the
+    * q_<family>incr queries. Tmp-sourced, so q_index_stat never sees it. */
+  private def incrQuantName(quant: Quant[Codec], d: String): String = {
+    val family = if (quant == RabitqQuant) "rq" else quant.name
+    s"${family}incr_${san(d)}"
   }
 
   private def qvec(s: SparkSession, dir: String): Array[Float] =
@@ -2092,42 +2100,42 @@ object AnnQueries {
     // same sealed ∪ growing ∖ deleted oracle (+ IncrQuantSpec lifecycle).
     "q_sq8incr_topk" -> ((s, d) => {
       val segDir = ensureVecSegments(s, d)
-      val name = s"sq8incr_${san(d)}"
+      val name = incrQuantName(Sq8Quant, d)
       IncrQuant.ensure(s, name, segDir, "vec_id", "embedding", Sq8Quant)
       IncrQuant.search(s, name, segDir, "vec_id", qvec(s, d),
         k = 100, Sq8Quant, window = sq8WindowConf(s))
     }),
     "q_sq8incr_exact" -> ((s, d) => {
       val segDir = ensureVecSegments(s, d)
-      val name = s"sq8incr_${san(d)}"
+      val name = incrQuantName(Sq8Quant, d)
       IncrQuant.ensure(s, name, segDir, "vec_id", "embedding", Sq8Quant)
       IncrQuant.search(s, name, segDir, "vec_id", qvec(s, d),
         k = 100, Sq8Quant, window = 0)
     }),
     "q_pqincr_topk" -> ((s, d) => {
       val segDir = ensureVecSegments(s, d)
-      val name = s"pqincr_${san(d)}"
+      val name = incrQuantName(PqQuant(), d)
       IncrQuant.ensure(s, name, segDir, "vec_id", "embedding", PqQuant())
       IncrQuant.search(s, name, segDir, "vec_id", qvec(s, d),
         k = 100, PqQuant(), window = pqWindowConf(s))
     }),
     "q_pqincr_exact" -> ((s, d) => {
       val segDir = ensureVecSegments(s, d)
-      val name = s"pqincr_${san(d)}"
+      val name = incrQuantName(PqQuant(), d)
       IncrQuant.ensure(s, name, segDir, "vec_id", "embedding", PqQuant())
       IncrQuant.search(s, name, segDir, "vec_id", qvec(s, d),
         k = 100, PqQuant(), window = 0)
     }),
     "q_rqincr_topk" -> ((s, d) => {
       val segDir = ensureVecSegments(s, d)
-      val name = s"rqincr_${san(d)}"
+      val name = incrQuantName(RabitqQuant, d)
       IncrQuant.ensure(s, name, segDir, "vec_id", "embedding", RabitqQuant)
       IncrQuant.search(s, name, segDir, "vec_id", qvec(s, d),
         k = 100, RabitqQuant, window = pqWindowConf(s))
     }),
     "q_rqincr_exact" -> ((s, d) => {
       val segDir = ensureVecSegments(s, d)
-      val name = s"rqincr_${san(d)}"
+      val name = incrQuantName(RabitqQuant, d)
       IncrQuant.ensure(s, name, segDir, "vec_id", "embedding", RabitqQuant)
       IncrQuant.search(s, name, segDir, "vec_id", qvec(s, d),
         k = 100, RabitqQuant, window = 0)

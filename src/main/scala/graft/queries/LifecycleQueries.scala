@@ -65,6 +65,14 @@ object LifecycleQueries {
       }
     }
 
+  /** Whether `plan` still reads a table through a file scan — a
+    * dispatched top-k reads only the sub-indexes' resident graphs (a
+    * local relation) or their artifacts. */
+  private def scansTable(
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Boolean =
+    plan.collectLeaves().exists(
+      _.isInstanceOf[org.apache.spark.sql.execution.datasources.LogicalRelation])
+
   /** The shared partitioned-parent fixture (partition.slt analog): a
     * 300-row Hive-layout source partitioned by category = vec_id % 3,
     * one SPATIAL (parts=2 → routing sidecar) HNSW sub-index per
@@ -474,7 +482,7 @@ object LifecycleQueries {
           // hnsw-filtered gate): the returned frame must stay the
           // dispatched plan after the conf/registration restore
           val opt = df.queryExecution.optimizedPlan
-          require(!opt.toString.contains("Relation"),
+          require(!scansTable(opt),
             "partitioned top-k did not dispatch to the sub-indexes")
           org.apache.spark.sql.graftshim.Shims.ofRows(s, opt)
         }
@@ -513,7 +521,7 @@ object LifecycleQueries {
               l2sq(col("embedding"), typedLit(q)).as("dist"))
             .filter(col("dist") < lit(r))
           val opt = df.queryExecution.optimizedPlan
-          require(!opt.toString.contains("Relation"),
+          require(!scansTable(opt),
             "partitioned range pushdown did not dispatch to the sub-indexes")
           org.apache.spark.sql.graftshim.Shims.ofRows(s, opt)
         }

@@ -495,11 +495,11 @@ object Recall {
       "(ef == k lost recoverable neighbors; 0.96 -> 1.00 clustered, " +
       "0.99 -> 1.00 random, timing unchanged - the graph walk is not " +
       "that query's bottleneck). ROUND 14: the ef=2x lesson " +
-      "generalized - every plain-graph beam floors ef at efMult*k " +
-      "(spark.graft.hnsw.efMult, default 2) and HnswSq frontiers take " +
+      "generalized - every plain-graph beam floors ef at 2*k " +
+      "(a constant since the efMult knob was removed) and HnswSq frontiers take " +
       "the coded-graph k*window convention, lifting hnsw_l2 and " +
       "hnsw_sq8 clustered 0.97 -> 1.00 with k=10 serving rows " +
-      "unchanged (the floor engages only when efMult*k exceeds " +
+      "unchanged (the floor engages only when 2*k exceeds " +
       "ef_search). ivf_l2's 0.98 is the cal3 DESIGN POINT, kept " +
       "deliberately: the calibrated hint targets 95%-coverage at p90 " +
       "of queries, and pushing the statistic to full coverage was " +

@@ -50,20 +50,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val hostPre = hostControlSec()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // static conf, default 100: a 215-query pass generates far more
-      // distinct codegen units than that, so the Janino cache thrashes
-      // and the warm pass re-COMPILES most stages. 2000 entries keeps
-      // every generated class of a full pass resident (round 10 —
-      // measured cold/warm win; weak-ref keys, bounded metaspace)
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = session(cpus)
     graft.queries.AnnQueries.ensureAll(spark, sfDir)
     graft.queries.DocQueries.ensureAll(spark, sfDir)
     graft.queries.CoreQueries.ensureSegments(spark, sfDir)
@@ -99,5 +86,26 @@ object Bench {
     val stdoutLine = s"""{"metric":"total","value":${ms(total)},"unit":"sec","n":${results.size},"queries":${jmap(results, ms)},"warm":${jmap(warm, ms)},"failed":$failed,$host,"sf":"$sfDir"}"""
     java.nio.file.Files.writeString(java.nio.file.Paths.get("bench_out.json"), fullLine + "\n")
     println(stdoutLine)
+  }
+
+  /** The measuring session shared by Bench and `graft.tools.Qps`, so
+    * both tools time queries under one config: `cpus` local cores and
+    * shuffle partitions, UTC, the graft extensions, no UI. */
+  def session(cpus: String): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+      .config("spark.ui.enabled", "false")
+      // static conf, default 100: a 215-query pass generates far more
+      // distinct codegen units than that, so the Janino cache thrashes
+      // and the warm pass re-COMPILES most stages. 2000 entries keeps
+      // every generated class of a full pass resident (round 10 —
+      // measured cold/warm win; weak-ref keys, bounded metaspace)
+      .config("spark.sql.codegen.cache.maxEntries", "2000")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    spark
   }
 }

@@ -646,9 +646,10 @@ object Hnsw {
     * graph ONCE and reuses it across queries, the resident-segment analog
     * of the reference (crates/index/src/lib.rs:386-423). A rebuilt
     * artifact bumps mtime/length and evicts itself naturally. Raw
-    * ([[FlatGraph]]) and coded ([[CodedHnsw.CodedGraph]]) graphs share
-    * one LRU and one budget. The driver JVM holds one too: single-query
-    * searches walk the graphs there ([[ResidentSearch]]). */
+    * ([[FlatGraph]]) and coded ([[CodedHnsw.CodedGraph]]) graphs and IVF
+    * list files ([[IvfIndex.ListRows]]) share one LRU and one budget.
+    * The driver JVM holds one too: single-query searches walk the graphs
+    * and scan the probed lists there ([[ResidentSearch]]). */
   object GraphCache {
     /** Residency is bounded by an approximate BYTE budget per executor
       * JVM (LRU eviction), not a graph count: 128 arbitrarily-large
@@ -701,20 +702,36 @@ object Hnsw {
     def counters: (Long, Long) = (hitCount.get, loadCount.get)
 
     def get(path: String, conf: org.apache.hadoop.conf.Configuration): FlatGraph =
-      load(path, conf)(FlatGraph.read, estBytes(_: FlatGraph))
+      load(path, path, conf)(stream(FlatGraph.read), estBytes(_: FlatGraph))
 
     def getCoded(path: String,
         conf: org.apache.hadoop.conf.Configuration): CodedHnsw.CodedGraph =
-      load(path, conf)(CodedHnsw.CodedGraph.read, estBytes(_: CodedHnsw.CodedGraph))
+      load(path, path, conf)(stream(CodedHnsw.CodedGraph.read),
+        estBytes(_: CodedHnsw.CodedGraph))
 
-    private def load[G <: AnyRef](path: String,
+    /** One IVF list file's (idCol, vecCol) rows; keyed by the columns
+      * too, since another search may read other columns of the file. */
+    def getList(path: String, conf: org.apache.hadoop.conf.Configuration,
+        idCol: String, vecCol: String): IvfIndex.ListRows =
+      load(s"$path\u0000$idCol\u0000$vecCol", path, conf)(
+        IvfIndex.ListRows.read(_, _, idCol, vecCol), (l: IvfIndex.ListRows) => l.bytes)
+
+    private def stream[G](read: java.io.DataInputStream => G)(
+        fs: org.apache.hadoop.fs.FileSystem, p: org.apache.hadoop.fs.Path): G = {
+      val in = new java.io.DataInputStream(
+        new java.io.BufferedInputStream(fs.open(p), 1 << 20))
+      try read(in) finally in.close()
+    }
+
+    private def load[G <: AnyRef](key: String, path: String,
         conf: org.apache.hadoop.conf.Configuration)(
-        read: java.io.DataInputStream => G, est: G => Long): G = {
+        read: (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) => G,
+        est: G => Long): G = {
       val p = new org.apache.hadoop.fs.Path(path)
       val fs = p.getFileSystem(conf)
       val st = fs.getFileStatus(p)
       cache.synchronized {
-        val cur = cache.get(path)
+        val cur = cache.get(key)
         if (cur != null && cur.mtime == st.getModificationTime && cur.len == st.getLen) {
           hitCount.incrementAndGet()
           return cur.graph.asInstanceOf[G]
@@ -723,12 +740,10 @@ object Hnsw {
       loadCount.incrementAndGet()
       // load OUTSIDE the lock (graphs are large; concurrent first loads
       // of the same path waste work at worst, never corrupt)
-      val in = new java.io.DataInputStream(
-        new java.io.BufferedInputStream(fs.open(p), 1 << 20))
-      val g = try read(in) finally in.close()
+      val g = read(fs, p)
       cache.synchronized {
         val bytes = est(g)
-        val old = cache.put(path,
+        val old = cache.put(key,
           Resident(st.getModificationTime, st.getLen, g, bytes))
         if (old != null) curBytes -= old.bytes
         curBytes += bytes
@@ -737,7 +752,7 @@ object Hnsw {
         val it = cache.entrySet().iterator()
         while (curBytes > budget && cache.size() > 1 && it.hasNext) {
           val e = it.next()
-          if (e.getKey != path) {
+          if (e.getKey != key) {
             curBytes -= e.getValue.bytes
             it.remove()
           }

@@ -21,12 +21,12 @@ import org.apache.spark.sql.functions._
  *    At 100 TB with daily-partitioned ingest this is the difference
  *    between an index maintenance job touching 1/N of the data and a
  *    full rebuild.
- *  - **Parent-table search = union + ordered merge.** Each partition's
- *    graphs return their top-k (per-graph tasks against the resident
- *    [[Hnsw.GraphCache]]); the union's global `ORDER BY dist LIMIT k`
- *    is a TakeOrderedAndProject — the same LoserTree-merge shape the
- *    multi-part HNSW search already uses. Exact mode flat-scans each
- *    graph, so the merged result is provably the global top-k.
+ *  - **Parent-table search = one ordered merge.** Each partition's
+ *    graphs (or probed IVF lists) return their top-k on the driver from
+ *    the resident [[Hnsw.GraphCache]], merged once in `ORDER BY dist,
+ *    id` order ([[ResidentSearch]]) — the same LoserTree-merge shape
+ *    the multi-part HNSW search already uses. Exact mode flat-scans
+ *    each graph, so the merged result is provably the global top-k.
  *  - **Partition pruning at the INDEX level.** A query carrying a
  *    partition predicate searches only the matching sub-indexes — the
  *    analog of Postgres pruning the partitions (and thereby their
@@ -153,24 +153,25 @@ object PartitionedIndex {
     built
   }
 
-  /** IVF parent search: per-partition pruned scans unioned, one ordered
-    * merge; exact at nprobe = nlist per sub-index (each partition's exact
-    * top-k is a superset of its global contribution). */
+  /** IVF parent search: every chosen sub-index's probed lists in ONE
+    * driver-side merge ([[IvfIndex.searchLists]]); exact at nprobe =
+    * nlist per sub-index (each partition's exact top-k is a superset of
+    * its global contribution). */
   def searchIvf(spark: SparkSession, name: String, source: String,
       partCol: String, idCol: String, vecCol: String, q: Array[Float],
       k: Int, nprobe: Int, values: Option[Seq[String]] = None): DataFrame = {
     val chosen = values.getOrElse(partitionValues(spark, source, partCol))
     require(chosen.nonEmpty, s"no partitions to search under $source")
-    chosen.map { v =>
+    val probed = chosen.map { v =>
       val sub = subName(name, v)
       val m = graft.index.IndexCatalog.load(spark, sub).getOrElse(
         throw new IllegalArgumentException(s"no such index: $sub"))
       val model = IvfIndex.Model(m.metric, m.centroids,
         m.floats.get("radii").orNull)
-      IvfIndex.search(spark, graft.index.IndexCatalog.dataDir(spark, sub),
-        model, idCol, vecCol, q, k, math.min(nprobe, model.nlist))
-    }.reduce(_ unionByName _)
-      .orderBy(col("dist"), col(idCol)).limit(k)
+      (model, graft.index.IndexCatalog.dataDir(spark, sub),
+        model.rankLists(q).take(nprobe).toSeq)
+    }
+    IvfIndex.searchLists(spark, probed, idCol, vecCol, q, k)
   }
 
   /** FILTERED IVF parent search (round 10 — the mixed-predicate form of

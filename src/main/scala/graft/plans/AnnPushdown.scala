@@ -138,7 +138,10 @@ object AnnPushdown {
     * optimizer infers and that carry no selectivity of their own); a
     * standalone `x IS NOT NULL` IS selective and must participate in the
     * match, otherwise a partial index built with it would silently claim
-    * broader queries. */
+    * broader queries. An attribute prints as its bare name — the
+    * unresolved-attribute spelling — but keeps its type, which an
+    * `InSet` (an IN list of more than 10 values after `OptimizeIn`)
+    * needs to print its values. */
   private[plans] def conjunctStrings(cond: Expression): Seq[String] = {
     def flatten(e: Expression): Seq[Expression] = e match {
       case And(l, r) => flatten(l) ++ flatten(r)
@@ -151,8 +154,9 @@ object AnnPushdown {
       case IsNotNull(a: AttributeReference) => otherRefs.contains(a)
       case _ => false
     }.map(_.transform {
-      case a: AttributeReference =>
-        org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute(a.name)
+      case a: AttributeReference => PrettyAttribute(
+        org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute(a.name).sql,
+        a.dataType)
     }.sql).sorted
   }
 
@@ -240,6 +244,31 @@ object AnnPushdown {
 
   private def normalize(p: String): String =
     p.stripPrefix("file:").replaceAll("/+$", "")
+
+  /** Source parquet paths of a leaf plan — sees through the cache
+    * manager's InMemoryRelation substitution. */
+  private[plans] def pathsOf(rel: LogicalPlan): Seq[String] = rel match {
+    case lr: LogicalRelation => lr.relation match {
+      case fs: HadoopFsRelation => fs.location.rootPaths.map(_.toString)
+      case _ => Nil
+    }
+    case imr: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
+      imr.cacheBuilder.cachedPlan.collect {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+          f.relation.location.rootPaths.map(_.toString)
+      }.flatten
+    case _ => Nil
+  }
+
+  /** Whether a leaf of `plan` scans files at or under `source` — the
+    * check that a top-k statement over `source` was dispatched to its
+    * index: the rewritten plan reads the index (the resident search's
+    * local relation, or an artifact scan), never the table's files. */
+  def scansSource(plan: LogicalPlan, source: String): Boolean = {
+    val root = normalize(source)
+    plan.collectLeaves().exists(pathsOf(_).map(normalize)
+      .exists(p => p == root || p.startsWith(root + "/")))
+  }
 
   /** Install on a live session (extraOptimizations) — usable without
     * restart; GraftExtensions covers spark.sql.extensions wiring. */
@@ -1794,21 +1823,6 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       Alias(byName(idx.idCol), idAttr.name)(exprId = idAttr.exprId),
       Alias(byName("dist"), distAlias.name)(exprId = distAlias.exprId)),
       newPlan))
-  }
-
-  /** Source parquet paths of a leaf plan — sees through the cache
-    * manager's InMemoryRelation substitution. */
-  private def pathsOf(rel: LogicalPlan): Seq[String] = rel match {
-    case lr: LogicalRelation => lr.relation match {
-      case fs: HadoopFsRelation => fs.location.rootPaths.map(_.toString)
-      case _ => Nil
-    }
-    case imr: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
-      imr.cacheBuilder.cachedPlan.collect {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-          f.relation.location.rootPaths.map(_.toString)
-      }.flatten
-    case _ => Nil
   }
 
   /** Dist alias extraction: Alias(metricExpr(vecAttr, queryLit)) for any

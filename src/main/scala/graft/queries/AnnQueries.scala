@@ -469,8 +469,12 @@ object AnnQueries {
   /** Install + register the metric's IVF index, run `mk` with the rewrite
     * enabled at nprobe=nlist (exact mode), assert the optimizer actually
     * rewrote, and freeze the rewritten plan so the temporary conf flags
-    * can't leak into other queries. */
-  private def withAnnRewrite(s: SparkSession, d: String, metric: String)
+    * can't leak into other queries. The rewrite shows as `needle` in the
+    * plan (the filtered and range arms scan the list-partitioned
+    * artifact); with None — the unfiltered top-k, answered on the driver
+    * as a local relation — as no leaf scanning the table's files. */
+  private def withAnnRewrite(s: SparkSession, d: String, metric: String,
+      needle: Option[String] = Some("list_id"))
       (mk: => DataFrame): DataFrame = {
     import graft.plans.AnnPushdown
     val (m, _) = ivf(s, d, metric)
@@ -490,7 +494,8 @@ object AnnQueries {
     try {
       val df = mk
       val optimized = df.queryExecution.optimizedPlan
-      assert(optimized.toString.contains("list_id"),
+      assert(needle.fold(!AnnPushdown.scansSource(optimized, srcPath))(
+          optimized.toString.contains(_)),
         "ann pushdown did not rewrite the top-k plan")
       org.apache.spark.sql.graftshim.Shims.ofRows(s, optimized)
         .orderBy(col("dist"), col("vec_id"))
@@ -539,7 +544,7 @@ object AnnQueries {
     // OPTIMIZER RULE into the IVF scan (exact at nprobe=nlist, so it
     // carries the flat oracle). The rewritten plan is frozen so the
     // temporary conf flags can't leak into other queries.
-    "q_topk_pushdown" -> ((s, d) => withAnnRewrite(s, d, "l2") {
+    "q_topk_pushdown" -> ((s, d) => withAnnRewrite(s, d, "l2", needle = None) {
       graft.ParquetCache.read(s, s"$d/embeddings.parquet")
         .select(col("vec_id"),
           l2sq(col("embedding"), typedLit(qvec(s, d))).as("dist"))
@@ -939,7 +944,7 @@ object AnnQueries {
     // cos opclass through the same rule: `ORDER BY cosdist(vec, q)` over
     // a cos-indexed table (exact at nprobe=nlist -> the normalized-replay
     // cos oracle)
-    "q_topk_pushdown_cos" -> ((s, d) => withAnnRewrite(s, d, "cos") {
+    "q_topk_pushdown_cos" -> ((s, d) => withAnnRewrite(s, d, "cos", needle = None) {
       graft.ParquetCache.read(s, s"$d/embeddings.parquet")
         .select(col("vec_id"),
           cosdist(col("embedding"), typedLit(qvec(s, d))).as("dist"))

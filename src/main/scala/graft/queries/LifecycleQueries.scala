@@ -65,14 +65,6 @@ object LifecycleQueries {
       }
     }
 
-  /** Whether `plan` still reads a table through a file scan — a
-    * dispatched top-k reads only the sub-indexes' resident graphs (a
-    * local relation) or their artifacts. */
-  private def scansTable(
-      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Boolean =
-    plan.collectLeaves().exists(
-      _.isInstanceOf[org.apache.spark.sql.execution.datasources.LogicalRelation])
-
   /** The shared partitioned-parent fixture (partition.slt analog): a
     * 300-row Hive-layout source partitioned by category = vec_id % 3,
     * one SPATIAL (parts=2 → routing sidecar) HNSW sub-index per
@@ -482,7 +474,7 @@ object LifecycleQueries {
           // hnsw-filtered gate): the returned frame must stay the
           // dispatched plan after the conf/registration restore
           val opt = df.queryExecution.optimizedPlan
-          require(!scansTable(opt),
+          require(!AnnPushdown.scansSource(opt, srcDir),
             "partitioned top-k did not dispatch to the sub-indexes")
           org.apache.spark.sql.graftshim.Shims.ofRows(s, opt)
         }
@@ -521,7 +513,7 @@ object LifecycleQueries {
               l2sq(col("embedding"), typedLit(q)).as("dist"))
             .filter(col("dist") < lit(r))
           val opt = df.queryExecution.optimizedPlan
-          require(!scansTable(opt),
+          require(!AnnPushdown.scansSource(opt, srcDir),
             "partitioned range pushdown did not dispatch to the sub-indexes")
           org.apache.spark.sql.graftshim.Shims.ofRows(s, opt)
         }
@@ -626,10 +618,9 @@ object LifecycleQueries {
               l2sq(col("embedding"), typedLit(q)).as("dist"))
             .orderBy(col("dist")).limit(k)
           val opt = df.queryExecution.optimizedPlan
-          // the rewritten plan scans the list-partitioned sub-artifacts
-          // (list_id appears); the base partitioned table has no such
-          // column, so this asserts the dispatch fired
-          require(opt.toString.contains("list_id"),
+          // the rewritten plan reads the sub-indexes' probed lists (a
+          // local relation), never the base partitioned table
+          require(!AnnPushdown.scansSource(opt, srcDir),
             "partitioned IVF top-k did not dispatch to the sub-indexes")
           org.apache.spark.sql.graftshim.Shims.ofRows(s, opt)
         }
@@ -1497,8 +1488,8 @@ object LifecycleQueries {
     //     spark.sql TEXT only, no Scala imports. CREATE registers the
     //     pushdown entry itself (pg_index analog), so the plain
     //     ORDER BY l2sq_distance(...) LIMIT k statement is rewritten
-    //     onto the artifact (required in-query via the list_id
-    //     discriminator); pg_vector_index_stat() is the injected SQL
+    //     onto the artifact (required in-query: no leaf scans the
+    //     source); pg_vector_index_stat() is the injected SQL
     //     table function. Exactness pinned via nprobe = nlist → full
     //     DuckDB oracle.
     "q_sql_e2e" -> ((s0, d) => {
@@ -1537,12 +1528,12 @@ object LifecycleQueries {
       s.conf.set("spark.graft.ann.nprobe", "4") // = nlist -> exact
       try {
         val optimized = s.sql(searchSql).queryExecution.optimizedPlan
-        require(optimized.toString.contains("list_id"),
+        require(!graft.plans.AnnPushdown.scansSource(optimized, srcDir),
           "the SQL-text search must be rewritten onto the artifact")
         // VACUUM mid-lifecycle: generation swap, searches keep working
         require(s.sql(s"VACUUM VECTOR INDEX $name").head().getString(0) == "ok")
         val optimized2 = s.sql(searchSql).queryExecution.optimizedPlan
-        require(optimized2.toString.contains("list_id"),
+        require(!graft.plans.AnnPushdown.scansSource(optimized2, srcDir),
           "the rewrite must survive VACUUM (fresh generation dir)")
         // DROP end-of-life on a scratch clone (the returned frame's own
         // artifact must outlive this query): stat stops listing it AND

@@ -47,9 +47,12 @@ object OperatorSqlQueries {
   /** Run reference-dialect `sql` on a parser-installed session with the
     * embeddings table registered for pushdown against the dense IVF
     * artifact of `metric`, in EXACT mode (nprobe = nlist); assert the
-    * optimizer rewrote onto the artifact scan and freeze the plan. */
+    * optimizer rewrote onto the index and freeze the plan. The rewrite
+    * shows as `needle` in the plan (the filtered, range and join arms
+    * scan the artifact); with None — the unfiltered top-k, answered on
+    * the driver as a local relation — as no leaf scanning the table. */
   private def withOpSqlRewrite(s: SparkSession, d: String, metric: String,
-      needle: String = "list_id", sortCols: Seq[String] = Nil)
+      needle: Option[String] = Some("list_id"), sortCols: Seq[String] = Nil)
       (sql: String): DataFrame = {
     import graft.plans.AnnPushdown
     val ds = LifecycleQueries.ddlSession(s)
@@ -67,7 +70,8 @@ object OperatorSqlQueries {
       graft.ParquetCache.read(ds, srcPath).createOrReplaceTempView("graft_opsql_src")
       val df = ds.sql(sql)
       val optimized = df.queryExecution.optimizedPlan
-      require(optimized.toString.contains(needle),
+      require(needle.fold(!AnnPushdown.scansSource(optimized, srcPath))(
+          optimized.toString.contains(_)),
         "reference-dialect operator SQL did not rewrite onto the index")
       val frozen = org.apache.spark.sql.graftshim.Shims.ofRows(ds, optimized)
       // the inline-sort spelling projects NO dist column — sort by what
@@ -134,7 +138,7 @@ object OperatorSqlQueries {
 
     // --- `ORDER BY val <-> '[...]' LIMIT k` (vector.slt:1-40) through
     //     the top-k pushdown arm, exact mode -> full value oracle ---
-    "q_operator_sql_topk" -> ((s, d) => withOpSqlRewrite(s, d, "l2") {
+    "q_operator_sql_topk" -> ((s, d) => withOpSqlRewrite(s, d, "l2", needle = None) {
       s"""SELECT vec_id, embedding <-> '${qlit(s, d)}' AS dist
           FROM graft_opsql_src ORDER BY dist LIMIT 100"""
     }),
@@ -145,7 +149,7 @@ object OperatorSqlQueries {
     //     dropped after the pruned search. Exact mode -> the id SET is
     //     the flat top-k, so the driver's sorted compare holds without
     //     a dist column. ---
-    "q_operator_sql_topk_inline" -> ((s, d) => withOpSqlRewrite(s, d, "l2") {
+    "q_operator_sql_topk_inline" -> ((s, d) => withOpSqlRewrite(s, d, "l2", needle = None) {
       s"""SELECT vec_id FROM graft_opsql_src
           ORDER BY embedding <-> '${qlit(s, d)}' LIMIT 100"""
     }),
@@ -161,7 +165,7 @@ object OperatorSqlQueries {
 
     // --- the cos spelling `<=>` through the same arm (normalize-at-
     //     build artifact; the oracle replays the normalized dot) ---
-    "q_operator_sql_topk_cos" -> ((s, d) => withOpSqlRewrite(s, d, "cos") {
+    "q_operator_sql_topk_cos" -> ((s, d) => withOpSqlRewrite(s, d, "cos", needle = None) {
       s"""SELECT vec_id, embedding <=> '${qlit(s, d)}' AS dist
           FROM graft_opsql_src ORDER BY dist LIMIT 100"""
     }),
@@ -172,7 +176,7 @@ object OperatorSqlQueries {
     //     equi-join); exact at nprobe=nlist -> the q_knn_join_pushdown
     //     oracle verbatim ---
     "q_operator_sql_knn_join" -> ((s, d) => withOpSqlRewrite(s, d, "l2",
-        needle = "probe_lists", sortCols = Seq("qid", "rn")) {
+        needle = Some("probe_lists"), sortCols = Seq("qid", "rn")) {
       """SELECT qid, vec_id, dist, rn FROM (
            SELECT qid, vec_id, dist,
                   row_number() OVER (PARTITION BY qid

@@ -252,15 +252,9 @@ object Qps {
     val seqSample = 32
     val hostControl = hostControlSec()
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // the dialect rows parse reference operator spellings — the
-      // injected parser must be live on this session
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // Bench's session (the dialect rows parse reference operator
+    // spellings through its injected parser)
+    val spark = graft.Bench.session(cpus)
 
     // query workload: the first N stored embeddings (self-query shape,
     // like the reference CLI querying its own corpus sample)
@@ -345,8 +339,8 @@ object Qps {
                           WHERE vec_id < ${baseQs.length}) q))
               WHERE rn <= 10"""
           // assert the arms actually claim both spellings (untimed)
-          require(spark.sql(singleSql(baseQs.head._2)).queryExecution
-            .optimizedPlan.toString.contains("list_id"),
+          require(!AnnPushdown.scansSource(spark.sql(singleSql(baseQs.head._2))
+              .queryExecution.optimizedPlan, srcPath),
             "dialect scalar spelling did not rewrite onto the artifact")
           val fam = Fam("sql_dialect_ivf_l2", 10,
             batch = (s, _) => s.sql(batchSql),

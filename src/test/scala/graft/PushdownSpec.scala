@@ -10,6 +10,8 @@ import graft.queries.AnnQueries
 class PushdownSpec extends SparkSpec {
   import spark.implicits._
 
+  private val tablePath = s"$sf001/embeddings.parquet"
+
   private lazy val q: Array[Float] =
     spark.read.parquet(s"$sf001/embeddings.parquet")
       .filter(col("vec_id") === 0).select(col("embedding"))
@@ -44,9 +46,9 @@ class PushdownSpec extends SparkSpec {
     spark.conf.set("spark.graft.ann.enabled", "true")
     spark.conf.set("spark.graft.ann.nprobe", "16")
     val pushed = topkDf
-    val plan = pushed.queryExecution.executedPlan.toString
-    assert(plan.contains(dataDir), s"plan does not scan the index:\n$plan")
-    assert(plan.contains("list_id"), "plan lost the partition-pruning filter")
+    val plan = pushed.queryExecution.optimizedPlan
+    assert(!AnnPushdown.scansSource(plan, tablePath),
+      s"plan does not read the index:\n$plan")
     val got = pushed.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(got == baseline)
 
@@ -56,8 +58,7 @@ class PushdownSpec extends SparkSpec {
 
     // off: plan reads the base table again
     spark.conf.set("spark.graft.ann.enabled", "false")
-    val off = topkDf.queryExecution.executedPlan.toString
-    assert(!off.contains(dataDir))
+    assert(AnnPushdown.scansSource(topkDf.queryExecution.optimizedPlan, tablePath))
     }
   }
 
@@ -71,8 +72,8 @@ class PushdownSpec extends SparkSpec {
       val inline = emb
         .orderBy(graft.functions.l2sq(col("embedding"), typedLit(q)))
         .select(col("vec_id")).limit(10)
-      val plan = inline.queryExecution.executedPlan.toString
-      assert(plan.contains(dataDir) && plan.contains("list_id"),
+      val plan = inline.queryExecution.optimizedPlan
+      assert(!AnnPushdown.scansSource(plan, tablePath),
         s"inline-sort top-k did not rewrite:\n$plan")
       assert(inline.collect().map(_.getLong(0)).toSet === want)
       // filtered inline form: WHERE + inline ORDER BY routes through
@@ -94,7 +95,7 @@ class PushdownSpec extends SparkSpec {
       val wide = emb
         .orderBy(graft.functions.l2sq(col("embedding"), typedLit(q)))
         .select(col("vec_id"), col("label")).limit(10)
-      assert(!wide.queryExecution.executedPlan.toString.contains(dataDir),
+      assert(AnnPushdown.scansSource(wide.queryExecution.optimizedPlan, tablePath),
         "inline arm must bail when extra columns are projected")
       assert(wide.count() === 10)
     }
@@ -154,8 +155,9 @@ class PushdownSpec extends SparkSpec {
       spark.conf.set("spark.graft.ann.enabled", "true")
       spark.conf.set("spark.graft.ann.nprobe", "16")
       val pushed = cosDf
-      val plan = pushed.queryExecution.executedPlan.toString
-      assert(plan.contains(dataDir), s"plan does not scan the cos index:\n$plan")
+      val plan = pushed.queryExecution.optimizedPlan
+      assert(!AnnPushdown.scansSource(plan, tablePath),
+        s"plan does not read the cos index:\n$plan")
       // same ids; values differ only by the normalize-at-build float
       // rounding the index stores (the q_ivf_exact_cos contract)
       assert(pushed.collect().map(_.getLong(0)).toSeq == baseline)
@@ -1128,7 +1130,7 @@ class PushdownSpec extends SparkSpec {
         val df = spark.read.parquet(src)
           .select(col("vec_id"), dist.as("dist"))
           .orderBy(col("dist")).limit(10)
-        assert(df.queryExecution.optimizedPlan.toString.contains("list_id"),
+        assert(!AnnPushdown.scansSource(df.queryExecution.optimizedPlan, src),
           "spelling did not dispatch to its metric's index")
         df.collect().map(_.getLong(0)).toSeq
       }

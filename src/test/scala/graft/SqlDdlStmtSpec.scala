@@ -3,6 +3,7 @@ package graft
 import java.io.File
 import org.apache.spark.sql.functions.col
 import graft.index.{GraftSqlParser, IndexCatalog}
+import graft.plans.AnnPushdown.scansSource
 
 /** Parser-injected vector DDL statements (round 11): recognition,
   * delegation, the execute-once RunnableCommand contract, and EXPLAIN
@@ -198,13 +199,13 @@ class SqlDdlStmtSpec extends SparkSpec {
       val opt = spark.sql(s"""SELECT vec_id, l2sq_distance(embedding, $qLit)
           AS d FROM parquet.`$src` ORDER BY d LIMIT 5""")
         .queryExecution.optimizedPlan
-      assert(opt.toString.contains("list_id"),
+      assert(!scansSource(opt, src),
         "CREATE must have registered the pushdown entry")
       spark.sql(s"DROP VECTOR INDEX $name")
       val opt2 = spark.sql(s"""SELECT vec_id, l2sq_distance(embedding, $qLit)
           AS d FROM parquet.`$src` ORDER BY d LIMIT 5""")
         .queryExecution.optimizedPlan
-      assert(!opt2.toString.contains("list_id"),
+      assert(scansSource(opt2, src),
         "DROP must unregister the pushdown entry")
     } finally spark.conf.set("spark.graft.ann.enabled", prevE)
   }
@@ -271,19 +272,19 @@ class SqlDdlStmtSpec extends SparkSpec {
     spark.conf.set("spark.graft.ann.enabled", "true")
     try {
       spark.sql(s"DROP VECTOR INDEX $a")
-      assert(topkPlan().toString.contains("list_id"),
+      assert(!scansSource(topkPlan(), src),
         "dropping index A must leave index B's registration serving")
       // (3) a fresh JVM's IF NOT EXISTS must re-register: simulate the
       // empty driver-local registry, then IF NOT EXISTS restores it
       AnnPushdown.unregisterNamed(src, b)
-      assert(!topkPlan().toString.contains("list_id"))
+      assert(scansSource(topkPlan(), src))
       assert(spark.sql(s"""CREATE VECTOR INDEX IF NOT EXISTS $b ON '$src'
           USING vectors (vec_id, embedding vector_l2_ops)
           WITH (indexing = ivf, nlist = 4)""").head().getString(0) === "exists")
-      assert(topkPlan().toString.contains("list_id"),
+      assert(!scansSource(topkPlan(), src),
         "IF NOT EXISTS over a persisted index must register the planner entry")
       spark.sql(s"DROP VECTOR INDEX $b")
-      assert(!topkPlan().toString.contains("list_id"))
+      assert(scansSource(topkPlan(), src))
     } finally spark.conf.set("spark.graft.ann.enabled", prevE)
   }
 
@@ -348,11 +349,11 @@ class SqlDdlStmtSpec extends SparkSpec {
     spark.conf.set("spark.graft.ann.enabled", "true")
     try {
       spark.sql(s"DROP VECTOR INDEX $b")
-      assert(plan().toString.contains("list_id"),
+      assert(!scansSource(plan(), src),
         "dropping the shadowing index must lift the shadow off the survivor")
       assert(AnnPushdown.snapshot(src).exists(_.indexName == a))
       spark.sql(s"DROP VECTOR INDEX $a")
-      assert(!plan().toString.contains("list_id"))
+      assert(scansSource(plan(), src))
     } finally spark.conf.set("spark.graft.ann.enabled", prevE)
   }
 
@@ -424,10 +425,10 @@ class SqlDdlStmtSpec extends SparkSpec {
       val qLit = "array(" + q.map(f => s"CAST($f AS FLOAT)").mkString(",") + ")"
       val prevE = spark.conf.get("spark.graft.ann.enabled", "false")
       spark.conf.set("spark.graft.ann.enabled", "true")
-      try assert(spark.sql(s"""SELECT vec_id,
+      try assert(!scansSource(spark.sql(s"""SELECT vec_id,
             l2sq_distance(embedding, $qLit) AS d
             FROM parquet.`$src` ORDER BY d LIMIT 5""")
-          .queryExecution.optimizedPlan.toString.contains("list_id"),
+          .queryExecution.optimizedPlan, src),
         "a table-created index must accelerate queries over its files")
       finally spark.conf.set("spark.graft.ann.enabled", prevE)
       // vacuum replays from the recorded path alone
@@ -671,14 +672,14 @@ class SqlDdlStmtSpec extends SparkSpec {
     val prevE = spark.conf.get("spark.graft.ann.enabled", "false")
     spark.conf.set("spark.graft.ann.enabled", "true")
     try {
-      assert(plan().toString.contains("list_id"))
+      assert(!scansSource(plan(), src))
       // "restart": both names' claims and touched marks gone, sweep
       // fingerprint cleared — the fresh-JVM state for these indexes
       AnnPushdown.resetNamesForTest(src, Set(a, b))
       assert(l2Claims().isEmpty, "reset must clear the claims")
       // first rule pass sweeps the durable catalog back in — ZERO
       // re-CREATE, the declarative query rewrites again
-      assert(plan().toString.contains("list_id"),
+      assert(!scansSource(plan(), src),
         "a fresh driver must re-register persisted CREATE'd indexes")
       // newest-create-shadows preserved across the sweep: B's manifest
       // is younger, so B's claim holds the (l2, full) slot
@@ -688,13 +689,13 @@ class SqlDdlStmtSpec extends SparkSpec {
       // sweep, even after the fingerprint is cleared
       AnnPushdown.unregisterNamed(src, b)
       SqlDdl.resetSweepForTest()
-      assert(!plan().toString.contains("list_id"),
+      assert(scansSource(plan(), src),
         "a retired claim must stay retired through re-sweeps")
       // a real DROP deletes the manifest: another restart re-sweeps only
       // the survivor
       spark.sql(s"DROP VECTOR INDEX $b")
       AnnPushdown.resetNamesForTest(src, Set(a, b))
-      assert(plan().toString.contains("list_id"))
+      assert(!scansSource(plan(), src))
       assert(l2Claims().map(_.indexName) === List(a),
         s"only the surviving manifest may re-register, got ${l2Claims()}")
       spark.sql(s"DROP VECTOR INDEX $a")

@@ -88,9 +88,10 @@ object Bench {
     println(stdoutLine)
   }
 
-  /** The measuring session shared by Bench and `graft.tools.Qps`, so
-    * both tools time queries under one config: `cpus` local cores and
-    * shuffle partitions, UTC, the graft extensions, no UI. */
+  /** The measuring session shared by Bench and `graft.tools.Qps`,
+    * `PlanDump`, `PlanCensus` and `ProfQ`, so they time and plan queries
+    * under one config: `cpus` local cores and shuffle partitions, UTC,
+    * the graft extensions, no UI. */
   def session(cpus: String): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

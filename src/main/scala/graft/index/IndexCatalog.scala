@@ -616,10 +616,8 @@ object IndexCatalog {
     val futures = files.map(f => footerPool.submit(
       new java.util.concurrent.Callable[Long] {
         override def call(): Long = {
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromPath(new org.apache.hadoop.fs.Path(f.getAbsolutePath),
-              conf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+          val r = graft.ParquetCache.openReader(conf,
+            new org.apache.hadoop.fs.Path(f.getAbsolutePath))
           try r.getRecordCount finally r.close()
         }
       }))

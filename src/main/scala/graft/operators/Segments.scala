@@ -196,8 +196,6 @@ object Segments {
       (f: (Long, Long) => Unit): Unit = {
     import org.apache.parquet.column.impl.ColumnReadStoreImpl
     import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.parquet.schema.{MessageType, PrimitiveType, Type}
     import PrimitiveType.PrimitiveTypeName.{INT32, INT64}
     import scala.jdk.CollectionConverters._
@@ -207,8 +205,8 @@ object Segments {
     if (files.isEmpty) return
     val conf = new org.apache.hadoop.conf.Configuration()
     files.foreach { p =>
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(p.getAbsolutePath), conf))
+      val r = graft.ParquetCache.openReader(conf,
+        new org.apache.hadoop.fs.Path(p.getAbsolutePath))
       try {
         val meta = r.getFooter.getFileMetaData
         val fields = meta.getSchema.getFields.asScala

@@ -1,13 +1,18 @@
 package graft.plans
 
 import java.util.concurrent.ConcurrentHashMap
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.graftshim.Shims
+import graft.index.{IndexCatalog, SampleSidecar}
+import graft.operators.{Hnsw, KnnJoin, PartitionedIndex}
 import graft.functions.{CosDistance, L2sqDistance, NegDotDistance}
 import graft.functions.{F16CosDist, F16L2sq, F16NegDot, ToF16Bits}
 import graft.functions.{BVecHamming, BVecJaccard, BVecNegDot, Binarize}
@@ -37,7 +42,7 @@ import graft.operators.{IvfIndex, TypedAnn}
  * when nprobe = nlist and top-k approximate otherwise — exactly the
  * reference's contract.
  */
-object AnnPushdown {
+object AnnPushdown extends PredicateHelper {
 
   /** One registered index per (table, metric, predicate) — the opclass +
     * partial-index analog: a table can carry an l2, a cos AND a dot index
@@ -143,11 +148,7 @@ object AnnPushdown {
     * `InSet` (an IN list of more than 10 values after `OptimizeIn`)
     * needs to print its values. */
   private[plans] def conjunctStrings(cond: Expression): Seq[String] = {
-    def flatten(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => flatten(l) ++ flatten(r)
-      case x => Seq(x)
-    }
-    val conj = flatten(cond)
+    val conj = splitConjunctivePredicates(cond)
     val otherRefs = AttributeSet(
       conj.filterNot(_.isInstanceOf[IsNotNull]).flatMap(_.references))
     conj.filterNot {
@@ -175,7 +176,7 @@ object AnnPushdown {
 
   private[plans] def subFieldNames(spark: SparkSession,
       subIndexName: String): Set[String] = {
-    val dir = graft.index.IndexCatalog.dataDir(spark, subIndexName)
+    val dir = IndexCatalog.dataDir(spark, subIndexName)
     val entries = Option(new java.io.File(dir).listFiles())
       .getOrElse(Array.empty[java.io.File])
     val fp = entries.length.toString + ":" +
@@ -252,7 +253,7 @@ object AnnPushdown {
       case fs: HadoopFsRelation => fs.location.rootPaths.map(_.toString)
       case _ => Nil
     }
-    case imr: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
+    case imr: InMemoryRelation =>
       imr.cacheBuilder.cachedPlan.collect {
         case f: org.apache.spark.sql.execution.FileSourceScanExec =>
           f.relation.location.rootPaths.map(_.toString)
@@ -348,7 +349,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         // would hide the user's mistake (round-11 advice)
         if (args.nonEmpty) throw new IllegalArgumentException(
           "pg_vector_index_stat() takes no arguments")
-        graft.index.IndexCatalog.stats(SparkSession.active)
+        IndexCatalog.stats(SparkSession.active)
           .queryExecution.analyzed
       }))
     // PG's generate_series(start, stop [, step]) — the row generator
@@ -390,7 +391,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   }
 }
 
-case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
+case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
+    with PredicateHelper {
   import AnnPushdown._
 
   private def enabled: Boolean =
@@ -410,7 +412,7 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
   private[graft] def nprobeFor(idx: IndexedTable): Int = {
     val raw = spark.conf.get("spark.graft.ann.nprobe", "auto").trim
     raw.toIntOption.getOrElse {
-      val m = graft.index.IndexCatalog.load(spark, idx.indexName)
+      val m = IndexCatalog.load(spark, idx.indexName)
       val hint = m.flatMap(_.params.get("probe_hint")).flatMap(_.toIntOption)
         .orElse(m.filter(_.kind == "ivf_part")
           .flatMap(ivfPartSubHint(idx.indexName, _)))
@@ -427,12 +429,11 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     * missing/hint-less sub contributes nothing, and an empty result
     * falls back to the fixed floor like any uncalibrated artifact. */
   private def ivfPartSubHint(name: String,
-      m: graft.index.IndexCatalog.Manifest): Option[Int] = {
+      m: IndexCatalog.Manifest): Option[Int] = {
     val hints = for {
       (_, values) <- partParams(m).toSeq
       v <- values
-      sub <- graft.index.IndexCatalog.load(spark,
-        graft.operators.PartitionedIndex.subName(name, v))
+      sub <- IndexCatalog.load(spark, PartitionedIndex.subName(name, v))
       h <- sub.params.get("probe_hint").flatMap(_.toIntOption)
     } yield h
     hints.maxOption
@@ -471,16 +472,50 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     * lower bound (zero sample matches) — the caller treats it as
     * "pre-filter wins". */
   private def neededCandidates(k: Int, m: Long, n: Long): Long = {
-    val sLo = graft.index.SampleSidecar.wilsonLower(m, n)
-    if (m == 0 || sLo <= 0.0) Long.MaxValue
-    else math.ceil(2.0 * k / sLo).toLong
+    val sLo = SampleSidecar.wilsonLower(m, n)
+    if (m == 0) Long.MaxValue else candidatesFor(k, sLo)
   }
 
-  /** HNSW search-time tunables (the pgvector spelling wins only in
-    * compatibility mode — the GUC alias convention of
-    * [[graft.index.Gucs.alias]], compact_var.slt). `spark.graft.hnsw.exact`
-    * routes the rewrite to the provable flat scan of the artifact — the
-    * ef=∞ analog that exact-mode queries rely on. */
+  /** 2k over a selectivity lower bound; Long.MaxValue when the bound is
+    * not positive. */
+  private def candidatesFor(k: Int, selLo: Double): Long =
+    if (selLo <= 0.0) Long.MaxValue else math.ceil(2.0 * k / selLo).toLong
+
+  /** Probe escalation of the filtered IVF scans (round 10): widen `base`
+    * probed lists of `nlist` so the expected predicate survivors in the
+    * probed lists cover k, from a sample estimate (m matches of n sampled
+    * rows, `total` rows). Survivors are assumed list-uniform — the
+    * conservative Wilson bound absorbs the slack — and no credible bound
+    * escalates to every list, where the pruned scan + filter IS the
+    * exact filtered result: the IVF shapes degrade gracefully instead of
+    * bailing. */
+  private def escalatedProbes(k: Int, base: Long, nlist: Int)
+      (est: (Long, Long, Long)): Int = {
+    val (m, n, total) = est
+    val need = neededCandidates(k, m, n)
+    val fromNeed =
+      if (need == Long.MaxValue || total <= 0) nlist.toLong
+      else math.ceil(nlist.toDouble * need / total).toLong
+    math.min(math.max(base, fromNeed), nlist.toLong).toInt
+  }
+
+  /** One-shot candidate breadth of the filtered graph arms: k ×
+    * overfetch, widened to the `need` of a sampled (need, total) sizing.
+    * None refuses the rewrite (round 10): when no credible breadth can
+    * hold k survivors (need > cap, or >= the whole corpus), the untouched
+    * Filter+Sort+Limit plan is the pre-filter exact scan, the access path
+    * the reference's cost model would pick. */
+  private def candidateBreadth(k: Int, sized: Option[(Long, Long)]): Option[Int] = {
+    val baseKr = math.min(k.toLong * math.max(filteredOverfetch, 2),
+      Int.MaxValue.toLong)
+    sized match {
+      case Some((need, total)) =>
+        if (need > filteredMaxCandidates || need >= total) None
+        else Some(math.min(math.max(baseKr, need), Int.MaxValue.toLong).toInt)
+      case None => Some(baseKr.toInt)
+    }
+  }
+
   /** ef resolution (round 17, the nprobe=auto discipline applied to
     * beams): an EXPLICIT conf — either spelling, or the pgvector GUC
     * alias in compat mode — always wins; with the conf UNSET the
@@ -490,13 +525,19 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     * corpora serve exactly as before — only artifacts whose build
     * MEASURED a beam-recall shortfall (the 768-dim concentration
     * regime) widen by default. */
-  private def hnswEfSearch(m: graft.index.IndexCatalog.Manifest): Int =
+  private def hnswEfSearch(m: IndexCatalog.Manifest): Int =
     graft.index.Gucs.alias(spark, "spark.graft.hnsw.ef_search")
       .orElse(spark.conf.getOption("spark.graft.hnsw.efSearch")) match {
       case Some(v) if !v.trim.equalsIgnoreCase("auto") => v.trim.toInt
       case _ =>
         math.max(100, m.params.get("ef_hint").map(_.toInt).getOrElse(0))
     }
+
+  /** HNSW search-time tunables (the pgvector spelling wins only in
+    * compatibility mode — the GUC alias convention of
+    * [[graft.index.Gucs.alias]], compact_var.slt). `spark.graft.hnsw.exact`
+    * routes the rewrite to the provable flat scan of the artifact — the
+    * ef=∞ analog that exact-mode queries rely on. */
   private def hnswExact: Boolean =
     spark.conf.get("spark.graft.hnsw.exact", "false").toBoolean
 
@@ -518,10 +559,10 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
   private def probeConf(key: String): Int =
     spark.conf.get(key, "auto") match {
-      case "auto" => graft.operators.Hnsw.AutoProbe
+      case "auto" => Hnsw.AutoProbe
       // unparseable values resolve to AutoProbe instead of throwing from
       // inside the optimizer rule (drift bails, never errors)
-      case v => v.toIntOption.getOrElse(graft.operators.Hnsw.AutoProbe)
+      case v => v.toIntOption.getOrElse(Hnsw.AutoProbe)
     }
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
@@ -535,16 +576,10 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
           if gl.getTagValue(RewrittenTag).isEmpty =>
         // one arm dispatches both shapes: a Filter child is the filtered
         // ANN form (VBASE's flagship), a bare relation the plain top-k
-        val rewrittenOpt = child match {
+        tagged(child match {
           case Filter(cond, rel) => matchFilteredTopK(k, order, projList, cond, rel)
           case rel => matchAnnTopK(k, order, projList, rel)
-        }
-        rewrittenOpt match {
-          case Some(rewritten) =>
-            rewritten.setTagValue(RewrittenTag, true)
-            rewritten
-          case None => gl
-        }
+        }, gl)
       // INLINE-sort top-k (round 13): `SELECT id FROM t ORDER BY
       // val <-> '[...]' LIMIT k` — the reference's verbatim spelling
       // (vector.slt:1-40) projects NO dist column, so the analyzer
@@ -556,12 +591,7 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
           Project(outList,
             Sort(Seq(SortOrder(distExpr, Ascending, _, _)), true, inner, _))))
           if gl.getTagValue(RewrittenTag).isEmpty =>
-        matchInlineTopK(k, distExpr, outList, inner) match {
-          case Some(rewritten) =>
-            rewritten.setTagValue(RewrittenTag, true)
-            rewritten
-          case None => gl
-        }
+        tagged(matchInlineTopK(k, distExpr, outList, inner), gl)
       // sphere predicate (strategy-2 "FOR SEARCH") pushdown: EXACT —
       // triangle-inequality list pruning + the same filter on top
       case p @ Project(projList, f @ Filter(cond, rel))
@@ -581,12 +611,7 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       // on list_id. EXACT at any radius (sound lower-bound pruning).
       case p @ Project(projList, j: Join)
           if j.getTagValue(RewrittenTag).isEmpty =>
-        matchRangeJoin(projList, j) match {
-          case Some(rewritten) =>
-            rewritten.setTagValue(RewrittenTag, true)
-            rewritten
-          case None => p
-        }
+        tagged(matchRangeJoin(projList, j), p)
       // table-valued KNN JOIN: the brute-force per-query top-k spelling
       // (cross join + row_number() over (partition by qid order by dist)
       // <= k) rewrites onto the probed list join — approximate at
@@ -594,14 +619,118 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       // the scalar top-k pushdown.
       case f @ Filter(cond, w: Window)
           if f.getTagValue(RewrittenTag).isEmpty =>
-        matchKnnJoinWindow(cond, w) match {
-          case Some(rewritten) =>
-            rewritten.setTagValue(RewrittenTag, true)
-            rewritten
-          case None => f
-        }
+        tagged(matchKnnJoinWindow(cond, w), f)
     }
   }
+
+  /** A replacement, marked so the rule does not re-match it; `orig`
+    * when the arm declined. */
+  private def tagged(rewritten: Option[LogicalPlan],
+      orig: LogicalPlan): LogicalPlan = rewritten match {
+    case Some(p) =>
+      p.setTagValue(RewrittenTag, true)
+      p
+    case None => orig
+  }
+
+  /** A relation leaf the arms rewrite over: a file scan, or the cache
+    * manager's InMemoryRelation substitution for one (which
+    * [[AnnPushdown.pathsOf]] sees through). */
+  private def isScanLeaf(rel: LogicalPlan): Boolean =
+    rel.isInstanceOf[LogicalRelation] || rel.isInstanceOf[InMemoryRelation]
+
+  /** A plan's output attributes by name (a later duplicate wins). */
+  private def byName(plan: LogicalPlan): Map[String, Attribute] =
+    plan.output.map(a => a.name -> a).toMap
+
+  /** The replacement's (id, dist) output aliased back to the original
+    * exprIds, so parent operators resolve unchanged. */
+  private def reAlias(plan: LogicalPlan, newId: Expression,
+      newDist: Expression, id: NamedExpression,
+      dist: NamedExpression): LogicalPlan =
+    Project(Seq(
+      Alias(newId, id.name)(exprId = id.exprId),
+      Alias(newDist, dist.name)(exprId = dist.exprId)), plan)
+
+  /** [[reAlias]] over a search whose output is exactly (id, dist). */
+  private def searchOutput(searchDf: DataFrame, id: NamedExpression,
+      dist: NamedExpression): Option[LogicalPlan] = {
+    val newPlan = searchDf.queryExecution.analyzed
+    val Seq(newId, newDist) = newPlan.output
+    Some(reAlias(newPlan, newId, newDist, id, dist))
+  }
+
+  /** [[reAlias]] over a plan with `idCol` and "dist" output columns. */
+  private def namedOutput(newPlan: LogicalPlan, idCol: String,
+      id: NamedExpression, dist: NamedExpression): Option[LogicalPlan] = {
+    val cols = byName(newPlan)
+    Some(reAlias(newPlan, cols(idCol), cols("dist"), id, dist))
+  }
+
+  /** The projected id attribute, when the projection is exactly
+    * {id, dist}: the replacement produces only those two, and anything
+    * else would be silently dropped or left dangling for parents. */
+  private def exactIdDist(projList: Seq[NamedExpression], idCol: String,
+      dist: NamedExpression): Option[AttributeReference] =
+    projList.collectFirst {
+      case a: AttributeReference if a.name == idCol => a
+    }.filter(id => projList.forall(ne =>
+      ne.exprId == id.exprId || ne.exprId == dist.exprId))
+
+  /** `e` with every attribute replaced by the same-named output of
+    * `plan`; None when `plan` lacks one. */
+  private def remapByName(e: Expression, plan: LogicalPlan): Option[Expression] = {
+    val cols = byName(plan)
+    var ok = true
+    val out = e.transformUp {
+      case a: AttributeReference => cols.getOrElse(a.name, { ok = false; a })
+    }
+    if (ok) Some(out) else None
+  }
+
+  private def ivfModel(m: IndexCatalog.Manifest): IvfIndex.Model =
+    IvfIndex.Model(m.metric, m.centroids, m.floats.get("radii").orNull)
+
+  /** `spark.graft.ann.nprobe` for `idx`, clamped to [1, nlist]. */
+  private def clampedProbes(idx: IndexedTable, model: IvfIndex.Model): Int =
+    math.min(math.max(nprobeFor(idx), 1), math.max(model.nlist, 1))
+
+  /** The query a dense graph or IVF artifact scores against: cos
+    * artifacts are normalize-at-build, so they take the normalized query
+    * (and report 1 - dot, the cos-distance convention). */
+  private def normalizedFor(metric: String, q: Array[Float]): Array[Float] =
+    if (metric == "cos") IvfIndex.Kernels.normalize(q) else q
+
+  /** A typed query in the densified payload view its family's graphs
+    * and prune radii use: bvec 0/1, f16 rounded through binary16; svec
+    * unchanged. */
+  private def densify(family: String, q: Array[Float]): Array[Float] =
+    family match {
+      case "bvec" => q.map(x => if (x > 0f) 1f else 0f)
+      case "f16" => q.map(x =>
+        graft.types.Fp16.halfToFloat(graft.types.Fp16.floatToHalf(x)))
+      case _ => q
+    }
+
+  private val denseMetrics = Set("l2", "cos", "dot")
+
+  /** The typed sphere-range metric keys, each with the compact IVF
+    * artifact kind that serves it. */
+  private val typedRangeKinds = Map("bvec:hamming" -> "ivf_bvec",
+    "f16:l2" -> "ivf_f16", "svec:l2" -> "ivf_svec",
+    "bvec:dot" -> "ivf_bvec", "svec:dot" -> "ivf_svec",
+    "f16:dot" -> "ivf_f16")
+
+  /** The first sphere-range conjunct `dist(vec, q) < r` whose distance
+    * is one of [[distOf]]'s shapes under a metric key `keys` accepts:
+    * (conjunct, vec, query, r, key). */
+  private def rangeConjunct(conj: Seq[Expression], keys: String => Boolean)
+      : Option[(LessThan, AttributeReference, Literal, Double, String)] =
+    conj.iterator.flatMap {
+      case lt @ LessThan(d, Literal(r: Double, _)) =>
+        distOf(d).collect { case (v, q, m) if keys(m) => (lt, v, q, r, m) }
+      case _ => None
+    }.nextOption()
 
   /** Filter shape: dist(vecAttr, queryLit) < radiusLit over an indexed
     * relation, for l2 / cos / dot (the strategy-2 "FOR SEARCH" members
@@ -612,31 +741,19 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     * reapplied filter evaluates on those (the same normalized-replay
     * convention as the cos top-k pushdown). */
   private def matchRange(cond: Expression, rel: LogicalPlan): Option[LogicalPlan] = {
-    if (!rel.isInstanceOf[LogicalRelation] &&
-        !rel.isInstanceOf[org.apache.spark.sql.execution.columnar.InMemoryRelation])
-      return None
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case x => Seq(x)
-    }
-    val (vecAttr, qLit, r2, metric) = conjuncts(cond).collectFirst {
-      case LessThan(L2sqDistance(v: AttributeReference, q: Literal),
-          Literal(r: Double, _)) => (v, q, r, "l2")
-      case LessThan(CosDistance(v: AttributeReference, q: Literal),
-          Literal(r: Double, _)) => (v, q, r, "cos")
-      case LessThan(NegDotDistance(v: AttributeReference, q: Literal),
-          Literal(r: Double, _)) => (v, q, r, "dot")
-    }.getOrElse(return None)
+    if (!isScanLeaf(rel)) return None
+    val (_, vecAttr, qLit, r2, metric) =
+      rangeConjunct(splitConjunctivePredicates(cond), denseMetrics)
+        .getOrElse(return None)
     val idx = lookup(pathsOf(rel), metric).getOrElse(return None)
     if (vecAttr.name != idx.vecCol) return None
-    val manifest = graft.index.IndexCatalog.load(spark, idx.indexName)
+    val manifest = IndexCatalog.load(spark, idx.indexName)
       .getOrElse(return None)
     if (manifest.kind != "ivf" || manifest.metric != metric ||
         !manifest.floats.contains("radii"))
       return None
-    val model = IvfIndex.Model(manifest.metric, manifest.centroids,
-      manifest.floats.get("radii").orNull)
-    val dataDir = graft.index.IndexCatalog.dataDir(spark, idx.indexName)
+    val model = ivfModel(manifest)
+    val dataDir = IndexCatalog.dataDir(spark, idx.indexName)
     val radii = manifest.floats("radii")
     val q = floatsOf(qLit)
     val scan = metric match {
@@ -646,9 +763,9 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     }
     val newPlan = scan.queryExecution.analyzed
     // remap old relation attrs to the new scan's outputs by name
-    val byName = newPlan.output.map(a => a.name -> a).toMap
+    val cols = byName(newPlan)
     val remap = rel.output.flatMap { old =>
-      byName.get(old.name).map(n => Alias(n, old.name)(exprId = old.exprId))
+      cols.get(old.name).map(n => Alias(n, old.name)(exprId = old.exprId))
     }
     if (remap.length != rel.output.length) return None
     Some(Project(remap, newPlan))
@@ -678,54 +795,30 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     * in-plan (the normalized-replay convention of [[matchRange]]). */
   private def matchRangeJoin(projList: Seq[NamedExpression], j: Join)
       : Option[LogicalPlan] = {
-    import org.apache.spark.sql.{functions => F}
-    import org.apache.spark.sql.graftshim.Shims
     if (j.joinType != org.apache.spark.sql.catalyst.plans.Inner &&
         j.joinType != org.apache.spark.sql.catalyst.plans.Cross) return None
     val cond = j.condition.getOrElse(return None)
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case x => Seq(x)
-    }
-    val nonNull = conjuncts(cond).filterNot(_.isInstanceOf[IsNotNull])
+    val nonNull = splitConjunctivePredicates(cond)
+      .filterNot(_.isInstanceOf[IsNotNull])
     if (nonNull.length != 1) return None
     val (distExpr, a, b, r, metric) = nonNull.head match {
-      case LessThan(de @ L2sqDistance(x: AttributeReference,
-          y: AttributeReference), Literal(rr: Double, _)) => (de, x, y, rr, "l2")
-      case LessThan(de @ CosDistance(x: AttributeReference,
-          y: AttributeReference), Literal(rr: Double, _)) => (de, x, y, rr, "cos")
-      case LessThan(de @ NegDotDistance(x: AttributeReference,
-          y: AttributeReference), Literal(rr: Double, _)) => (de, x, y, rr, "dot")
+      case LessThan(de, Literal(rr: Double, _)) => joinDistPieces(de) match {
+        case Some((x, y, m)) if denseMetrics(m) => (de, x, y, rr, m)
+        case _ => return None
+      }
       case _ => return None
     }
     // corpus side preference: right (the `queries.join(corpus, …)`
     // spelling), then left
     val candidates = Seq((j.right, j.left), (j.left, j.right))
     for ((iSide, qSide) <- candidates) {
-      val sideOpt = stripJoinSide(iSide)
       val pieces = for {
-        (rel, extras0) <- sideOpt
-        vecAttr <- Seq(a, b).find(iSide.outputSet.contains)
-        qAttr <- Seq(a, b).find(x => x.exprId != vecAttr.exprId &&
-          qSide.outputSet.contains(x))
-        idx <- lookup(pathsOf(rel), metric)
-        if vecAttr.name == idx.vecCol
-        extras = joinExtras(extras0, idx.vecCol)
-        manifest <- graft.index.IndexCatalog.load(spark, idx.indexName)
-        if manifest.metric == metric &&
-          ((manifest.kind == "ivf" && manifest.floats.contains("radii")) ||
-            manifest.kind == "hnsw" || manifest.kind == "hnsw_part" ||
-            manifest.kind == "ivf_part")
-        // a corpus-side predicate (FILTERED range join) is admissible
-        // only on dense IVF artifacts, which store full source rows; it
-        // must not touch the vector column itself (cos artifacts store
-        // normalize-at-build vectors — a vec predicate would evaluate
-        // on different values) — or on a partitioned parent
-        // (hnsw_part / ivf_part), where partitionChoice later requires
-        // partition-column literals only
-        if extras.isEmpty || (manifest.kind == "ivf" &&
-          !extras.exists(_.references.exists(_.name == idx.vecCol))) ||
-          manifest.kind == "hnsw_part" || manifest.kind == "ivf_part"
+        (idx, manifest, qAttr, extras) <- joinCorpus(iSide, qSide, a, b,
+          metric) { m =>
+          m.metric == metric &&
+            ((m.kind == "ivf" && m.floats.contains("radii")) ||
+              m.kind == "hnsw" || m.kind == "hnsw_part" || m.kind == "ivf_part")
+        }
         // dist alias and corpus id are OPTIONAL in the projection
         // (round 8): an aggregate on top — the declarative
         // decontamination shape, `range join → groupBy(qid)` — prunes
@@ -762,40 +855,20 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
             // contract applies (qid keeps its own type); extras must be
             // partition-column literals, drift/dropped-sub bail via
             // partitionChoice. strict=true replays the spelling's `<`.
-            val distAlias = distAliasOpt.getOrElse(return None)
-            val idAttr = idAttrOpt.getOrElse(return None)
-            val (partCol, chosen, corpusFilter) =
-              ivfPartChoice(idx.indexName, manifest, extras, idx.vecCol)
-                .getOrElse(return None)
-            val qidAttr = projList.collectFirst {
-              case at: AttributeReference
-                  if at.exprId != idAttr.exprId &&
-                    qSide.outputSet.contains(at) => at
-            }.getOrElse(return None)
-            if (projList.length != 3) return None
-            val qNames = qSide.output.map(_.name)
-            if (qNames.distinct.length != qNames.length) return None
-            if (idx.idCol == "qid") return None
-            val qdf = Shims.ofRows(spark, qSide)
-            val out = graft.operators.PartitionedIndex.rangeJoinIvf(spark,
-              idx.indexName, manifest.source, partCol, idx.idCol,
-              idx.vecCol, qdf, qidAttr.name, qAttr.name, r, strict = true,
-              values = Some(chosen), corpusFilter = corpusFilter)
-            val newPlan = stripDpp(out.queryExecution.optimizedPlan)
-            val byName = newPlan.output.map(x => x.name -> x).toMap
-            val outProj = projList.map {
-              case at: AttributeReference if at.exprId == idAttr.exprId =>
-                Alias(byName(idx.idCol), idAttr.name)(exprId = idAttr.exprId)
-              case al: Alias if al.exprId == distAlias.exprId =>
-                Alias(byName("dist"), distAlias.name)(exprId = distAlias.exprId)
-              case ne => Alias(byName("qid"), ne.name)(exprId = ne.exprId)
+            return rangeJoinTail(projList, distAliasOpt, idAttrOpt, qSide,
+                idx.idCol, longQid = false) { qid =>
+              ivfPartChoice(idx.indexName, manifest, extras, idx.vecCol).map {
+                case (partCol, chosen, corpusFilter) =>
+                  val out = PartitionedIndex.rangeJoinIvf(spark,
+                    idx.indexName, manifest.source, partCol, idx.idCol,
+                    idx.vecCol, Shims.ofRows(spark, qSide), qid, qAttr.name,
+                    r, strict = true, values = Some(chosen),
+                    corpusFilter = corpusFilter)
+                  stripDpp(out.queryExecution.optimizedPlan)
+              }
             }
-            return Some(Project(outProj, newPlan))
           }
           if (manifest.kind == "hnsw" || manifest.kind == "hnsw_part") {
-            // the graph arm keeps the strict {qid, id, dist} contract
-            val distAlias = distAliasOpt.getOrElse(return None)
-            val idAttr = idAttrOpt.getOrElse(return None)
             // graph-kind dispatch — Hnsw.rangeJoin flat-scans the
             // resident payloads per query partition and emits only
             // (qid, id, dist), so the projection must be exactly
@@ -805,92 +878,29 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
             // the same sound routing bounds, so it stays exact too;
             // corpus-side extras must be partition-column literal
             // constraints and layout drift bails (partitionChoice).
-            val choice: Option[(String, Seq[String])] =
-              if (manifest.kind == "hnsw_part")
-                Some(partitionChoice(idx.indexName, manifest, extras).getOrElse(return None))
-              else None
-            val qidAttr = projList.collectFirst {
-              case at: AttributeReference
-                  if at.exprId != idAttr.exprId &&
-                    qSide.outputSet.contains(at) => at
-            }.getOrElse(return None)
-            if (projList.length != 3) return None
-            if (qidAttr.dataType !=
-              org.apache.spark.sql.types.LongType) return None
-            val qNames = qSide.output.map(_.name)
-            if (qNames.distinct.length != qNames.length) return None
-            if (idx.idCol == "qid") return None
-            val qdf0 = Shims.ofRows(spark, qSide)
-            val qdf = if (metric == "cos")
-              qdf0.withColumn(qAttr.name,
-                graft.functions.vectorNormalize(Shims.column(qAttr)))
-            else qdf0
-            val out = choice match {
-              case Some((partCol, chosen)) =>
-                graft.operators.PartitionedIndex.rangeJoinHnsw(spark,
-                  idx.indexName, manifest.source, partCol,
-                  idx.idCol, qdf, qidAttr.name, qAttr.name, r,
-                  values = Some(chosen))
-              case None =>
-                graft.operators.Hnsw.rangeJoin(spark,
-                  graft.index.IndexCatalog.dataDir(spark, idx.indexName),
-                  idx.idCol, qdf, qidAttr.name, qAttr.name, r)
+            return rangeJoinTail(projList, distAliasOpt, idAttrOpt, qSide,
+                idx.idCol, longQid = true) { qid =>
+              val out =
+                if (manifest.kind == "hnsw_part")
+                  partitionChoice(idx.indexName, manifest, extras).map {
+                    case (partCol, chosen) =>
+                      PartitionedIndex.rangeJoinHnsw(spark, idx.indexName,
+                        manifest.source, partCol, idx.idCol,
+                        graphQueries(qSide, qAttr, metric), qid, qAttr.name,
+                        r, values = Some(chosen))
+                  }
+                else Some(Hnsw.rangeJoin(spark,
+                  IndexCatalog.dataDir(spark, idx.indexName), idx.idCol,
+                  graphQueries(qSide, qAttr, metric), qid, qAttr.name, r))
+              out.map(_.queryExecution.optimizedPlan)
             }
-            val newPlan = out.queryExecution.optimizedPlan
-            val byName = newPlan.output.map(x => x.name -> x).toMap
-            val outProj = projList.map {
-              case at: AttributeReference if at.exprId == idAttr.exprId =>
-                Alias(byName(idx.idCol), idAttr.name)(exprId = idAttr.exprId)
-              case al: Alias if al.exprId == distAlias.exprId =>
-                Alias(byName("dist"), distAlias.name)(exprId = distAlias.exprId)
-              case ne => Alias(byName("qid"), ne.name)(exprId = ne.exprId)
-            }
-            return Some(Project(outProj, newPlan))
           }
-          val model = IvfIndex.Model(manifest.metric, manifest.centroids,
-            manifest.floats.get("radii").orNull)
-          val dataDir = graft.index.IndexCatalog.dataDir(spark, idx.indexName)
-          val qdf = Shims.ofRows(spark, qSide)
-          val qCol = Shims.column(qAttr)
-          val qv = if (metric == "cos") graft.functions.vectorNormalize(qCol)
-                   else qCol
-          val probed = qdf
-            .filter(qCol.isNotNull && graft.functions.vectorIsFinite(qCol))
-            .withColumn("__graft_qv", qv)
-            .withColumn("__graft_list", F.explode(
-              graft.operators.KnnJoin.rangeLists(F.col("__graft_qv"), model, r)))
-          val scanDf = graft.ParquetCache.read(spark, dataDir)
-          // FILTERED range join: the corpus predicate remaps by name
-          // onto the artifact scan (dense IVF rows are source-row
-          // copies — the matchFilteredTopK convention) and pushes into
-          // the pruned scan
-          val scanPlan0 = scanDf.queryExecution.analyzed
-          val scanByName = scanPlan0.output.map(x => x.name -> x).toMap
-          var remapOk = true
-          val remapped = extras.map(_.transformUp {
-            case at: AttributeReference => scanByName.get(at.name) match {
-              case Some(n) => n
-              case None => remapOk = false; at
-            }
-          })
-          if (!remapOk) return None
-          val scanF = if (remapped.isEmpty) scanDf
-            else Shims.ofRows(spark, Filter(remapped.reduce(And), scanPlan0))
-          // broadcast the probed query side when it provably fits
-          // (round 18, the KnnJoin.broadcastQueriesIfSmall rationale);
+          val model = ivfModel(manifest)
+          val dataDir = IndexCatalog.dataDir(spark, idx.indexName)
           // range fan-out is per-row, bounded by nlist
-          val joined = scanF.join(
-            graft.operators.KnnJoin.broadcastQueriesIfSmall(qdf, probed,
-              math.max(model.nlist, 1)),
-            scanDf("list_id") === probed("__graft_list"))
-          val distC = metric match {
-            case "l2" => graft.functions.l2sq(scanDf(idx.vecCol),
-              F.col("__graft_qv"))
-            case "dot" => graft.functions.negdot(scanDf(idx.vecCol),
-              F.col("__graft_qv"))
-            case "cos" => graft.functions.negdot(scanDf(idx.vecCol),
-              F.col("__graft_qv")) + F.lit(1.0)
-          }
+          val (scanDf, joined, distC) = denseIvfJoin(qSide, qAttr, metric,
+              idx.vecCol, dataDir, extras, math.max(model.nlist, 1))(
+            KnnJoin.rangeLists(_, model, r)).getOrElse(return None)
           val result = joined
             .select(qSide.output.map(Shims.column) ++ Seq(
               scanDf(idx.idCol).as("__graft_id"),
@@ -920,29 +930,94 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     None
   }
 
-  /** Table-valued KNN JOIN — the brute-force spelling
-    *
-    *   queries CROSS JOIN corpus
-    *     → project (qid…, corpus.id, dist(corpus.vec, queries.vec) AS d)
-    *     → row_number() OVER (PARTITION BY qid ORDER BY d[, id]) AS rn
-    *     → WHERE rn <= k
-    *
-    * over a corpus with a dense IVF registration rewrites onto the
-    * [[graft.operators.KnnJoin.join]] shape: per-row codegen probe-list
-    * selection (`spark.graft.ann.nprobe` lists, the scalar top-k
-    * pushdown's GUC), explode to (query, list_id), equi-join against the
-    * list-partitioned artifact, and the SAME window re-applied over the
-    * joined candidates. Approximate at nprobe < nlist, exact at
-    * nprobe = nlist — the reference's contract, identical to the scalar
-    * arm. Guards: the join below the window is condition-less
-    * (Inner/Cross with None), its corpus side strips to the registered
-    * relation through attribute-only Projects / IsNotNull-only Filters,
-    * the single window expression is row_number() partitioned by
-    * query-side columns and ordered by the dist alias (ascending, with
-    * an optional corpus-id tie-break — the replacement replays exactly
-    * the sort keys the user wrote), and the rank filter is the sole
-    * non-IsNotNull conjunct. Cos follows normalize-at-build, the
-    * normalized-replay convention. */
+  /** The tail of the range-join branches whose operator emits only
+    * (qid, id, dist): the projection must be exactly {qid, id, dist}
+    * with the dist alias and the corpus id present, the remaining
+    * attribute query-side (LongType when `longQid`: the operator casts
+    * it), the query-side names unique and the id column not named qid.
+    * `join` gets the qid column's name and returns the replacement plan,
+    * whose columns re-alias onto the projection's exprIds. */
+  private def rangeJoinTail(projList: Seq[NamedExpression],
+      distAliasOpt: Option[Alias], idAttrOpt: Option[AttributeReference],
+      qSide: LogicalPlan, idCol: String, longQid: Boolean)
+      (join: String => Option[LogicalPlan]): Option[LogicalPlan] = {
+    val distAlias = distAliasOpt.getOrElse(return None)
+    val idAttr = idAttrOpt.getOrElse(return None)
+    val qidAttr = projList.collectFirst {
+      case at: AttributeReference
+          if at.exprId != idAttr.exprId && qSide.outputSet.contains(at) => at
+    }.getOrElse(return None)
+    if (projList.length != 3) return None
+    if (longQid && qidAttr.dataType != org.apache.spark.sql.types.LongType)
+      return None
+    val qNames = qSide.output.map(_.name)
+    if (qNames.distinct.length != qNames.length) return None
+    if (idCol == "qid") return None
+    val newPlan = join(qidAttr.name).getOrElse(return None)
+    val cols = byName(newPlan)
+    Some(Project(projList.map {
+      case at: AttributeReference if at.exprId == idAttr.exprId =>
+        Alias(cols(idCol), idAttr.name)(exprId = idAttr.exprId)
+      case al: Alias if al.exprId == distAlias.exprId =>
+        Alias(cols("dist"), distAlias.name)(exprId = distAlias.exprId)
+      case ne => Alias(cols("qid"), ne.name)(exprId = ne.exprId)
+    }, newPlan))
+  }
+
+  /** The query side of a graph join: cos graphs are normalize-at-build,
+    * so the query column normalizes in-plan before the join. */
+  private def graphQueries(qSide: LogicalPlan, qAttr: AttributeReference,
+      metric: String): DataFrame = {
+    val qdf = Shims.ofRows(spark, qSide)
+    if (metric == "cos") qdf.withColumn(qAttr.name,
+      graft.functions.vectorNormalize(Shims.column(qAttr)))
+    else qdf
+  }
+
+  /** The dense-IVF join body shared by the range and KNN join arms. The
+    * query side (finite vectors only; cos normalized in-plan) explodes
+    * to one row per list `lists` selects from its vector; the corpus
+    * predicate remaps by name onto the artifact scan (dense IVF rows are
+    * source-row copies — the matchFilteredTopK convention) and pushes
+    * into it; the two join on list_id. Returns (artifact scan, joined
+    * rows, the metric's distance column); None when the artifact lacks
+    * a predicate column. */
+  private def denseIvfJoin(qSide: LogicalPlan, qAttr: AttributeReference,
+      metric: String, vecCol: String, dataDir: String,
+      extras: Seq[Expression], fanout: Int)(lists: Column => Column)
+      : Option[(DataFrame, DataFrame, Column)] = {
+    val qdf = Shims.ofRows(spark, qSide)
+    val qCol = Shims.column(qAttr)
+    val qv = if (metric == "cos") graft.functions.vectorNormalize(qCol)
+             else qCol
+    val probed = qdf
+      .filter(qCol.isNotNull && graft.functions.vectorIsFinite(qCol))
+      .withColumn("__graft_qv", qv)
+      .withColumn("__graft_list", F.explode(lists(F.col("__graft_qv"))))
+    val scanDf = graft.ParquetCache.read(spark, dataDir)
+    val scanPlan0 = scanDf.queryExecution.analyzed
+    val scanF =
+      if (extras.isEmpty) scanDf
+      else Shims.ofRows(spark, Filter(
+        remapByName(extras.reduce(And), scanPlan0).getOrElse(return None),
+        scanPlan0))
+    // broadcast the probed query side when it provably fits (round 18,
+    // at most `fanout` rows per query): the planner otherwise builds on
+    // the CORPUS scan and the distance kernels run at the query side's
+    // parallelism (measured: one 0.57 s task in q_operator_sql_knn_join
+    // on 32 cores)
+    val joined = scanF.join(
+      KnnJoin.broadcastQueriesIfSmall(qdf, probed, fanout),
+      scanDf("list_id") === probed("__graft_list"))
+    val qvCol = F.col("__graft_qv")
+    val distC = metric match {
+      case "l2" => graft.functions.l2sq(scanDf(vecCol), qvCol)
+      case "dot" => graft.functions.negdot(scanDf(vecCol), qvCol)
+      case "cos" => graft.functions.negdot(scanDf(vecCol), qvCol) + F.lit(1.0)
+    }
+    Some((scanDf, joined, distC))
+  }
+
   /** Strip a join side down to its relation through attribute-only
     * Projects and Filters, ACCUMULATING the non-IsNotNull filter
     * conjuncts — the corpus-side predicate of a FILTERED join. The
@@ -951,24 +1026,47 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     * scan (the matchFilteredTopK convention); graph and typed payloads
     * carry only id + vec/codes, so any extra conjunct bails there. */
   private def stripJoinSide(plan: LogicalPlan)
-      : Option[(LogicalPlan, Seq[Expression])] = {
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case x => Seq(x)
-    }
-    plan match {
-      case lr: LogicalRelation => Some((lr, Nil))
-      case imr: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
-        Some((imr, Nil))
-      case Project(pl, child) if pl.forall(_.isInstanceOf[AttributeReference]) =>
-        stripJoinSide(child)
-      case Filter(c, child) =>
-        stripJoinSide(child).map { case (rel, extras) =>
-          (rel, conjuncts(c) ++ extras)
-        }
-      case _ => None
-    }
+      : Option[(LogicalPlan, Seq[Expression])] = plan match {
+    case rel if isScanLeaf(rel) => Some((rel, Nil))
+    case Project(pl, child) if pl.forall(_.isInstanceOf[AttributeReference]) =>
+      stripJoinSide(child)
+    case Filter(c, child) =>
+      stripJoinSide(child).map { case (rel, extras) =>
+        (rel, splitConjunctivePredicates(c) ++ extras)
+      }
+    case _ => None
   }
+
+  /** The corpus side of a join arm: `iSide` strips to a relation
+    * registered under `metric` whose vector column is one of the
+    * distance's attributes `a`/`b`, the other being a query-side
+    * attribute, and whose manifest `kindOk` accepts. A corpus-side
+    * predicate (a FILTERED join) is admissible only on dense IVF
+    * artifacts, which store full source rows, and must not touch the
+    * vector column itself (cos artifacts store normalize-at-build
+    * vectors — a vec predicate would evaluate on different values) — or
+    * on a partitioned parent (hnsw_part / ivf_part), where
+    * partitionChoice later requires partition-column literals only.
+    * Returns (idx, manifest, qAttr, extras). */
+  private def joinCorpus(iSide: LogicalPlan, qSide: LogicalPlan,
+      a: AttributeReference, b: AttributeReference, metric: String)
+      (kindOk: IndexCatalog.Manifest => Boolean)
+      : Option[(IndexedTable, IndexCatalog.Manifest, AttributeReference,
+        Seq[Expression])] =
+    for {
+      (rel, extras0) <- stripJoinSide(iSide)
+      vecAttr <- Seq(a, b).find(iSide.outputSet.contains)
+      qAttr <- Seq(a, b).find(x => x.exprId != vecAttr.exprId &&
+        qSide.outputSet.contains(x))
+      idx <- lookup(pathsOf(rel), metric)
+      if vecAttr.name == idx.vecCol
+      extras = joinExtras(extras0, idx.vecCol)
+      manifest <- IndexCatalog.load(spark, idx.indexName)
+      if kindOk(manifest)
+      if extras.isEmpty || (manifest.kind == "ivf" &&
+        !extras.exists(_.references.exists(_.name == idx.vecCol))) ||
+        manifest.kind == "hnsw_part" || manifest.kind == "ivf_part"
+    } yield (idx, manifest, qAttr, extras)
 
   /** Corpus-side extras with the SAFE IsNotNull conjuncts dropped: the
     * optimizer infers `IsNotNull(vecCol)` from the join's distance
@@ -1033,21 +1131,39 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       case _ => Set("ivf", "hnsw", "hnsw_part", "ivf_part")
     }
 
+  /** Table-valued KNN JOIN — the brute-force spelling
+    *
+    *   queries CROSS JOIN corpus
+    *     → project (qid…, corpus.id, dist(corpus.vec, queries.vec) AS d)
+    *     → row_number() OVER (PARTITION BY qid ORDER BY d[, id]) AS rn
+    *     → WHERE rn <= k
+    *
+    * over a corpus with a dense IVF registration rewrites onto the
+    * [[graft.operators.KnnJoin.join]] shape: per-row codegen probe-list
+    * selection (`spark.graft.ann.nprobe` lists, the scalar top-k
+    * pushdown's GUC), explode to (query, list_id), equi-join against the
+    * list-partitioned artifact, and the SAME window re-applied over the
+    * joined candidates. Approximate at nprobe < nlist, exact at
+    * nprobe = nlist — the reference's contract, identical to the scalar
+    * arm. Guards: the join below the window is condition-less
+    * (Inner/Cross with None), its corpus side strips to the registered
+    * relation through attribute-only Projects / IsNotNull-only Filters,
+    * the single window expression is row_number() partitioned by
+    * query-side columns and ordered by the dist alias (ascending, with
+    * an optional corpus-id tie-break — the replacement replays exactly
+    * the sort keys the user wrote), and the rank filter is the sole
+    * non-IsNotNull conjunct. Cos follows normalize-at-build, the
+    * normalized-replay convention. */
   private def matchKnnJoinWindow(cond: Expression, w: Window)
       : Option[LogicalPlan] = {
-    import org.apache.spark.sql.{functions => F}
-    import org.apache.spark.sql.graftshim.Shims
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case x => Seq(x)
-    }
     // exactly one window expression: row_number() over (ps, os)
     val rnAlias = w.windowExpressions match {
       case Seq(al @ Alias(WindowExpression(_: RowNumber, _), _)) => al
       case _ => return None
     }
     // rank filter: the sole non-IsNotNull conjunct compares rn to k
-    val nonNull = conjuncts(cond).filterNot(_.isInstanceOf[IsNotNull])
+    val nonNull = splitConjunctivePredicates(cond)
+      .filterNot(_.isInstanceOf[IsNotNull])
     if (nonNull.length != 1) return None
     val kLimit = nonNull.head match {
       case LessThanOrEqual(at: AttributeReference, Literal(k: Int, _))
@@ -1108,27 +1224,13 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     if (w.orderSpec.length > 2) return None
     for ((iSide, qSide) <- Seq((j.right, j.left), (j.left, j.right))) {
       val pieces = for {
-        (rel, extras0) <- stripJoinSide(iSide)
-        vecAttr <- Seq(vA, qA).find(iSide.outputSet.contains)
-        qAttr <- Seq(vA, qA).find(x => x.exprId != vecAttr.exprId &&
-          qSide.outputSet.contains(x))
-        idx <- lookup(pathsOf(rel), metric)
-        if vecAttr.name == idx.vecCol
-        extras = joinExtras(extras0, idx.vecCol)
-        manifest <- graft.index.IndexCatalog.load(spark, idx.indexName)
         // dense artifacts bake the metric in; a typed artifact serves
         // every metric of its family (ranking/scoring are search-time)
-        if expectedJoinKinds(metric).contains(manifest.kind) &&
-          (metric.contains(':') || manifest.metric == metric)
-        // a corpus-side predicate (FILTERED KNN join) is admissible only
-        // on dense IVF artifacts (full source rows), never touching the
-        // vector column (the range-join arm's rule) — or on a
-        // partitioned parent (hnsw_part / ivf_part), where
-        // partitionChoice later requires every conjunct to be a
-        // partition-column literal constraint
-        if extras.isEmpty || (manifest.kind == "ivf" &&
-          !extras.exists(_.references.exists(_.name == idx.vecCol))) ||
-          manifest.kind == "hnsw_part" || manifest.kind == "ivf_part"
+        (idx, manifest, qAttr, extras) <- joinCorpus(iSide, qSide, vA, qA,
+          metric) { m =>
+          expectedJoinKinds(metric).contains(m.kind) &&
+            (metric.contains(':') || m.metric == metric)
+        }
         // the corpus-side id entry: the bare attr or an alias of it
         idEntry <- projList2.find {
           case at: AttributeReference =>
@@ -1184,19 +1286,7 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
             // (the pushdown-registration invariant), so typed rewrites
             // carry no normalized-replay caveat.
             val Array(family, met) = metric.split(':')
-            val qidAttr = w.partitionSpec match {
-              case Seq(at: AttributeReference) => at
-              case _ => return None
-            }
-            if (w.orderSpec.length != 2) return None
-            if (projList2.length != 2 + distEntries.length) return None
-            val qidSrc = projList2.collectFirst {
-              case at: AttributeReference if at.exprId == qidAttr.exprId => at
-            }.getOrElse(return None)
-            val qNames = qSide.output.map(_.name)
-            if (qNames.distinct.length != qNames.length) return None
-            if (idx.idCol == "qid") return None
-            val dataDir = graft.index.IndexCatalog.dataDir(spark, idx.indexName)
+            val dataDir = IndexCatalog.dataDir(spark, idx.indexName)
             if (manifest.kind == "hnsw") {
               // typed opclass under the hnsw AM, table-valued (round 9):
               // dispatch onto Hnsw.knnJoinMetric over the densified
@@ -1209,55 +1299,38 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
               // kernels equal the dense chains exactly on raw
               // vectors); knnJoinMetric casts qid to long, so the
               // graph branch's LongType guard applies.
-              if (qidAttr.dataType !=
-                org.apache.spark.sql.types.LongType) return None
-              import org.apache.spark.sql.{functions => F}
-              val qdf0 = Shims.ofRows(spark, qSide)
-              val qdf = family match {
-                case "bvec" => qdf0.withColumn(qAttr.name,
-                  F.transform(Shims.column(qAttr),
-                    x => F.when(x > F.lit(0f), F.lit(1f)).otherwise(F.lit(0f))))
-                case "f16" => qdf0.withColumn(qAttr.name,
-                  graft.functions.f16ToVector(
-                    graft.functions.toF16Bits(Shims.column(qAttr))))
-                case "svec" if met == "l2" || met == "dot" => qdf0
-                case _ => return None
+              return knnJoinTail(w, rnAlias, projList2, distEntries, idEntry,
+                  qSide, idx.idCol, longQid = true) { qid =>
+                val qdf0 = Shims.ofRows(spark, qSide)
+                val qdf = family match {
+                  case "bvec" => Some(qdf0.withColumn(qAttr.name,
+                    F.transform(Shims.column(qAttr),
+                      x => F.when(x > F.lit(0f), F.lit(1f)).otherwise(F.lit(0f)))))
+                  case "f16" => Some(qdf0.withColumn(qAttr.name,
+                    graft.functions.f16ToVector(
+                      graft.functions.toF16Bits(Shims.column(qAttr)))))
+                  case "svec" if met == "l2" || met == "dot" => Some(qdf0)
+                  case _ => None
+                }
+                val overrideMet = if (met == "hamming") "l2" else met
+                qdf.map { q =>
+                  Hnsw.knnJoinMetric(spark, dataDir, idx.idCol, q, qid,
+                    qAttr.name, k = kLimit, metric = overrideMet,
+                    efSearch = math.max(hnswEfSearch(manifest), kLimit),
+                    exact = hnswExact, probeGraphs = hnswJoinProbe)
+                    .queryExecution.optimizedPlan
+                }
               }
-              val overrideMet = if (met == "hamming") "l2" else met
-              val out = graft.operators.Hnsw.knnJoinMetric(spark, dataDir,
-                idx.idCol, qdf, qidSrc.name, qAttr.name, k = kLimit,
-                metric = overrideMet,
-                efSearch = math.max(hnswEfSearch(manifest), kLimit),
-                exact = hnswExact, probeGraphs = hnswJoinProbe)
-              val newPlan = out.queryExecution.optimizedPlan
-              val byName = newPlan.output.map(x => x.name -> x).toMap
-              val outProj = projList2.map { e =>
-                if (distIds.contains(e.exprId))
-                  Alias(byName("dist"), e.name)(exprId = e.exprId)
-                else if (e eq idEntry)
-                  Alias(byName(idx.idCol), idEntry.name)(exprId = idEntry.exprId)
-                else Alias(byName("qid"), e.name)(exprId = e.exprId)
-              } :+ Alias(byName("rn"), rnAlias.name)(exprId = rnAlias.exprId)
-              return Some(Project(outProj, newPlan))
             }
-            val model = IvfIndex.Model(manifest.metric, manifest.centroids,
-              manifest.floats.get("radii").orNull)
-            val probes = math.min(math.max(nprobeFor(idx), 1),
-              math.max(model.nlist, 1))
-            val qdf = Shims.ofRows(spark, qSide)
-            val out = graft.operators.KnnJoin.joinTyped(spark, qdf,
-              qidSrc.name, qAttr.name, dataDir, model, idx.idCol, family,
-              kLimit, probes, met)
-            val newPlan = out.queryExecution.optimizedPlan
-            val byName = newPlan.output.map(x => x.name -> x).toMap
-            val outProj = projList2.map { e =>
-              if (distIds.contains(e.exprId))
-                Alias(byName("dist"), e.name)(exprId = e.exprId)
-              else if (e eq idEntry)
-                Alias(byName(idx.idCol), idEntry.name)(exprId = idEntry.exprId)
-              else Alias(byName("qid"), e.name)(exprId = e.exprId)
-            } :+ Alias(byName("rn"), rnAlias.name)(exprId = rnAlias.exprId)
-            return Some(Project(outProj, newPlan))
+            return knnJoinTail(w, rnAlias, projList2, distEntries, idEntry,
+                qSide, idx.idCol, longQid = false) { qid =>
+              val model = ivfModel(manifest)
+              val probes = clampedProbes(idx, model)
+              val out = KnnJoin.joinTyped(spark, Shims.ofRows(spark, qSide),
+                qid, qAttr.name, dataDir, model, idx.idCol, family,
+                kLimit, probes, met)
+              Some(out.queryExecution.optimizedPlan)
+            }
           }
           if (manifest.kind == "ivf_part") {
             // IVF parent dispatch (round 9): the combined-model probed
@@ -1272,34 +1345,15 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
             val (partCol, chosen, corpusFilter) =
               ivfPartChoice(idx.indexName, manifest, extras, idx.vecCol)
                 .getOrElse(return None)
-            val qidAttr = w.partitionSpec match {
-              case Seq(at: AttributeReference) => at
-              case _ => return None
+            return knnJoinTail(w, rnAlias, projList2, distEntries, idEntry,
+                qSide, idx.idCol, longQid = false) { qid =>
+              val out = PartitionedIndex.knnJoinIvf(spark,
+                idx.indexName, manifest.source, partCol, idx.idCol,
+                idx.vecCol, Shims.ofRows(spark, qSide), qid, qAttr.name,
+                k = kLimit, nprobe = math.max(nprobeFor(idx), 1),
+                values = Some(chosen), corpusFilter = corpusFilter)
+              Some(stripDpp(out.queryExecution.optimizedPlan))
             }
-            if (w.orderSpec.length != 2) return None
-            if (projList2.length != 2 + distEntries.length) return None
-            val qidSrc = projList2.collectFirst {
-              case at: AttributeReference if at.exprId == qidAttr.exprId => at
-            }.getOrElse(return None)
-            val qNames = qSide.output.map(_.name)
-            if (qNames.distinct.length != qNames.length) return None
-            if (idx.idCol == "qid") return None
-            val qdf = Shims.ofRows(spark, qSide)
-            val out = graft.operators.PartitionedIndex.knnJoinIvf(spark,
-              idx.indexName, manifest.source, partCol, idx.idCol,
-              idx.vecCol, qdf, qidSrc.name, qAttr.name, k = kLimit,
-              nprobe = math.max(nprobeFor(idx), 1), values = Some(chosen),
-              corpusFilter = corpusFilter)
-            val newPlan = stripDpp(out.queryExecution.optimizedPlan)
-            val byName = newPlan.output.map(x => x.name -> x).toMap
-            val outProj = projList2.map { e =>
-              if (distIds.contains(e.exprId))
-                Alias(byName("dist"), e.name)(exprId = e.exprId)
-              else if (e eq idEntry)
-                Alias(byName(idx.idCol), idEntry.name)(exprId = idEntry.exprId)
-              else Alias(byName("qid"), e.name)(exprId = e.exprId)
-            } :+ Alias(byName("rn"), rnAlias.name)(exprId = rnAlias.exprId)
-            return Some(Project(outProj, newPlan))
           }
           if (manifest.kind == "hnsw" || manifest.kind == "hnsw_part") {
             // graph-kind dispatch: Hnsw.knnJoin walks each query
@@ -1318,56 +1372,29 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
               if (manifest.kind == "hnsw_part")
                 Some(partitionChoice(idx.indexName, manifest, extras).getOrElse(return None))
               else None
-            val qidAttr = w.partitionSpec match {
-              case Seq(at: AttributeReference) => at
-              case _ => return None
+            return knnJoinTail(w, rnAlias, projList2, distEntries, idEntry,
+                qSide, idx.idCol, longQid = true) { qid =>
+              val qdf = graphQueries(qSide, qAttr, metric)
+              val efSearch = math.max(hnswEfSearch(manifest), kLimit)
+              val out = choice match {
+                case Some((partCol, chosen)) =>
+                  PartitionedIndex.knnJoinHnsw(spark, idx.indexName,
+                    manifest.source, partCol, idx.idCol, qdf, qid,
+                    qAttr.name, k = kLimit, efSearch = efSearch,
+                    exact = hnswExact, probeGraphs = hnswJoinProbe,
+                    values = Some(chosen))
+                case None =>
+                  Hnsw.knnJoin(spark,
+                    IndexCatalog.dataDir(spark, idx.indexName), idx.idCol,
+                    qdf, qid, qAttr.name, k = kLimit, efSearch = efSearch,
+                    exact = hnswExact, probeGraphs = hnswJoinProbe)
+              }
+              Some(out.queryExecution.optimizedPlan)
             }
-            if (qidAttr.dataType !=
-              org.apache.spark.sql.types.LongType) return None
-            if (w.orderSpec.length != 2) return None
-            if (projList2.length != 2 + distEntries.length) return None
-            val qidSrc = projList2.collectFirst {
-              case at: AttributeReference if at.exprId == qidAttr.exprId => at
-            }.getOrElse(return None)
-            val qNames = qSide.output.map(_.name)
-            if (qNames.distinct.length != qNames.length) return None
-            if (idx.idCol == "qid") return None
-            val qdf0 = Shims.ofRows(spark, qSide)
-            val qdf = if (metric == "cos")
-              qdf0.withColumn(qAttr.name,
-                graft.functions.vectorNormalize(Shims.column(qAttr)))
-            else qdf0
-            val out = choice match {
-              case Some((partCol, chosen)) =>
-                graft.operators.PartitionedIndex.knnJoinHnsw(spark,
-                  idx.indexName, manifest.source, partCol,
-                  idx.idCol, qdf, qidSrc.name, qAttr.name, k = kLimit,
-                  efSearch = math.max(hnswEfSearch(manifest), kLimit),
-                  exact = hnswExact, probeGraphs = hnswJoinProbe,
-                  values = Some(chosen))
-              case None =>
-                graft.operators.Hnsw.knnJoin(spark,
-                  graft.index.IndexCatalog.dataDir(spark, idx.indexName),
-                  idx.idCol, qdf, qidSrc.name, qAttr.name, k = kLimit,
-                  efSearch = math.max(hnswEfSearch(manifest), kLimit), exact = hnswExact,
-                  probeGraphs = hnswJoinProbe)
-            }
-            val newPlan = out.queryExecution.optimizedPlan
-            val byName = newPlan.output.map(a => a.name -> a).toMap
-            val outProj = projList2.map { e =>
-              if (distIds.contains(e.exprId))
-                Alias(byName("dist"), e.name)(exprId = e.exprId)
-              else if (e eq idEntry)
-                Alias(byName(idx.idCol), idEntry.name)(exprId = idEntry.exprId)
-              else Alias(byName("qid"), e.name)(exprId = e.exprId)
-            } :+ Alias(byName("rn"), rnAlias.name)(exprId = rnAlias.exprId)
-            return Some(Project(outProj, newPlan))
           }
-          val model = IvfIndex.Model(manifest.metric, manifest.centroids,
-            manifest.floats.get("radii").orNull)
-          val dataDir = graft.index.IndexCatalog.dataDir(spark, idx.indexName)
-          val baseProbes = math.min(math.max(nprobeFor(idx), 1),
-            math.max(model.nlist, 1))
+          val model = ivfModel(manifest)
+          val dataDir = IndexCatalog.dataDir(spark, idx.indexName)
+          val baseProbes = clampedProbes(idx, model)
           // FILTERED join selectivity guard (round 10): a selective
           // corpus predicate inside fixed probe lists starves the
           // per-query window top-k the same way the scalar arm's fixed
@@ -1378,49 +1405,11 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
           // the sample by name; no estimate -> base behavior.
           val probes =
             if (extras.isEmpty || !filteredAdaptive) baseProbes
-            else graft.index.SampleSidecar.estimate(spark, dataDir,
-                extras.reduce(And)) match {
-              case Some((sm, sn, total)) =>
-                val need = neededCandidates(kLimit, sm, sn)
-                val fromNeed =
-                  if (need == Long.MaxValue || total <= 0) model.nlist.toLong
-                  else math.ceil(model.nlist.toDouble * need / total).toLong
-                math.min(math.max(baseProbes.toLong, fromNeed),
-                  model.nlist.toLong).toInt
-              case None => baseProbes
-            }
-          val qdf = Shims.ofRows(spark, qSide)
-          val qCol = Shims.column(qAttr)
-          val qv = if (metric == "cos") graft.functions.vectorNormalize(qCol)
-                   else qCol
-          val probed = qdf
-            .filter(qCol.isNotNull && graft.functions.vectorIsFinite(qCol))
-            .withColumn("__graft_qv", qv)
-            .withColumn("__graft_list", F.explode(
-              graft.operators.KnnJoin.probeLists(F.col("__graft_qv"), model,
-                probes)))
-          val scanDf = graft.ParquetCache.read(spark, dataDir)
-          // FILTERED KNN join: corpus predicate remaps onto the scan
-          val scanPlan0 = scanDf.queryExecution.analyzed
-          val scanByName = scanPlan0.output.map(x => x.name -> x).toMap
-          var remapOk = true
-          val remapped = extras.map(_.transformUp {
-            case at: AttributeReference => scanByName.get(at.name) match {
-              case Some(n) => n
-              case None => remapOk = false; at
-            }
-          })
-          if (!remapOk) return None
-          val scanF = if (remapped.isEmpty) scanDf
-            else Shims.ofRows(spark, Filter(remapped.reduce(And), scanPlan0))
-          // broadcast the probed query side when it provably fits
-          // (round 18): same mis-estimate as the operator form — the
-          // planner otherwise builds on the CORPUS scan and the distance
-          // kernels run at the query side's parallelism (measured: one
-          // 0.57 s task in q_operator_sql_knn_join on 32 cores)
-          val joined0 = scanF.join(
-            graft.operators.KnnJoin.broadcastQueriesIfSmall(qdf, probed, probes),
-            scanDf("list_id") === probed("__graft_list"))
+            else SampleSidecar.estimate(spark, dataDir, extras.reduce(And))
+              .fold(baseProbes)(escalatedProbes(kLimit, baseProbes, model.nlist))
+          val (scanDf, joined0, distC) = denseIvfJoin(qSide, qAttr, metric,
+              idx.vecCol, dataDir, extras, probes)(
+            KnnJoin.probeLists(_, model, probes)).getOrElse(return None)
           // self-exclusion replay (hard-negative mining): drop the
           // anchor's own corpus row BEFORE the window, exactly where
           // the user's filter sat — the subsequent rank is over
@@ -1432,14 +1421,6 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
               val anchor = if (a.exprId == idUnder.exprId) b else a
               joined0.filter(Shims.column(anchor) =!= scanDf(idx.idCol))
             case None => joined0
-          }
-          val distC = metric match {
-            case "l2" => graft.functions.l2sq(scanDf(idx.vecCol),
-              F.col("__graft_qv"))
-            case "dot" => graft.functions.negdot(scanDf(idx.vecCol),
-              F.col("__graft_qv"))
-            case "cos" => graft.functions.negdot(scanDf(idx.vecCol),
-              F.col("__graft_qv")) + F.lit(1.0)
           }
           // replay the projection with the original expressions (their
           // Alias exprIds survive), swapping dist and id for the scan's;
@@ -1465,15 +1446,15 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
           // map-side group limit before the qid shuffle. Re-entry on the
           // subtree bails: its join carries the list_id equality.
           val newPlan = out.queryExecution.optimizedPlan
-          val byName = newPlan.output.map(a => a.name -> a).toMap
-          val newId = byName.getOrElse("__graft_id", return None)
-          val newRn = byName.getOrElse("__graft_rn", return None)
+          val cols = byName(newPlan)
+          val newId = cols.getOrElse("__graft_id", return None)
+          val newRn = cols.getOrElse("__graft_rn", return None)
           // filter output = window output = projList2 outputs ++ rn
           var dj = -1
           val outProj = projList2.map { e =>
             if (distIds.contains(e.exprId)) {
               dj += 1
-              Alias(byName(s"__graft_dist$dj"), e.name)(exprId = e.exprId)
+              Alias(cols(s"__graft_dist$dj"), e.name)(exprId = e.exprId)
             }
             else if (e eq idEntry)
               Alias(newId, idEntry.name)(exprId = idEntry.exprId)
@@ -1484,6 +1465,45 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       }
     }
     None
+  }
+
+  /** The tail of the KNN-join branches whose operator emits only
+    * (qid, id, dist, rn): the window is partitioned by one query-side
+    * qid (LongType when `longQid`: the operator casts it) and ordered by
+    * (dist, id), the projection is exactly {qid, id, dist…}, the
+    * query-side names are unique and the id column is not named qid.
+    * `join` gets the qid column's name and returns the replacement plan;
+    * every dist alias re-aliases onto its one dist column, the id entry
+    * onto the id, the rest onto qid, and the rank onto rn. */
+  private def knnJoinTail(w: Window, rnAlias: Alias,
+      projList: Seq[NamedExpression], distEntries: Seq[Alias],
+      idEntry: NamedExpression, qSide: LogicalPlan, idCol: String,
+      longQid: Boolean)(join: String => Option[LogicalPlan])
+      : Option[LogicalPlan] = {
+    val qidAttr = w.partitionSpec match {
+      case Seq(at: AttributeReference) => at
+      case _ => return None
+    }
+    if (longQid && qidAttr.dataType != org.apache.spark.sql.types.LongType)
+      return None
+    if (w.orderSpec.length != 2) return None
+    if (projList.length != 2 + distEntries.length) return None
+    val qidSrc = projList.collectFirst {
+      case at: AttributeReference if at.exprId == qidAttr.exprId => at
+    }.getOrElse(return None)
+    val qNames = qSide.output.map(_.name)
+    if (qNames.distinct.length != qNames.length) return None
+    if (idCol == "qid") return None
+    val newPlan = join(qidSrc.name).getOrElse(return None)
+    val cols = byName(newPlan)
+    val distIds = distEntries.map(_.exprId).toSet
+    Some(Project(projList.map { e =>
+      if (distIds.contains(e.exprId))
+        Alias(cols("dist"), e.name)(exprId = e.exprId)
+      else if (e eq idEntry)
+        Alias(cols(idCol), idEntry.name)(exprId = idEntry.exprId)
+      else Alias(cols("qid"), e.name)(exprId = e.exprId)
+    } :+ Alias(cols("rn"), rnAlias.name)(exprId = rnAlias.exprId), newPlan))
   }
 
   /** Sphere-range for HNSW-kind registrations — the reference's
@@ -1504,23 +1524,11 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     * cos top-k pushdown). */
   private def matchRangeHnsw(projList: Seq[NamedExpression],
       cond: Expression, rel: LogicalPlan): Option[LogicalPlan] = {
-    if (!rel.isInstanceOf[LogicalRelation] &&
-        !rel.isInstanceOf[org.apache.spark.sql.execution.columnar.InMemoryRelation])
-      return None
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case x => Seq(x)
-    }
-    val nonNull = conjuncts(cond).filterNot(_.isInstanceOf[IsNotNull])
-    val rangeConj = nonNull.collectFirst {
-      case lt @ LessThan(L2sqDistance(v: AttributeReference, q: Literal),
-          Literal(r: Double, _)) => (lt, v, q, r, "l2")
-      case lt @ LessThan(CosDistance(v: AttributeReference, q: Literal),
-          Literal(r: Double, _)) => (lt, v, q, r, "cos")
-      case lt @ LessThan(NegDotDistance(v: AttributeReference, q: Literal),
-          Literal(r: Double, _)) => (lt, v, q, r, "dot")
-    }.getOrElse(return None)
-    val (rangePred, vecAttr, qLit, r, metric) = rangeConj
+    if (!isScanLeaf(rel)) return None
+    val nonNull = splitConjunctivePredicates(cond)
+      .filterNot(_.isInstanceOf[IsNotNull])
+    val (rangePred, vecAttr, qLit, r, metric) =
+      rangeConjunct(nonNull, denseMetrics).getOrElse(return None)
     // conjuncts BESIDE the range predicate: none for the single-artifact
     // kind (graph payloads carry only id + vec — nothing to re-evaluate);
     // the partitioned parent additionally absorbs partition-column
@@ -1528,25 +1536,18 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     val others = nonNull.filterNot(_ eq rangePred)
     val idx = lookup(pathsOf(rel), metric).getOrElse(return None)
     if (vecAttr.name != idx.vecCol) return None
-    val manifest = graft.index.IndexCatalog.load(spark, idx.indexName)
+    val manifest = IndexCatalog.load(spark, idx.indexName)
       .getOrElse(return None)
     if (manifest.metric != metric) return None
     val distAlias = projList.collectFirst {
       case a @ Alias(child, _) if rangePred.left.semanticEquals(child) => a
     }.getOrElse(return None)
-    val idAttr = projList.collectFirst {
-      case a: AttributeReference if a.name == idx.idCol => a
-    }.getOrElse(return None)
-    if (!projList.forall(ne =>
-        ne.exprId == idAttr.exprId || ne.exprId == distAlias.exprId))
-      return None
-    val q = floatsOf(qLit)
-    val qq = if (metric == "cos") IvfIndex.Kernels.normalize(q) else q
+    val idAttr = exactIdDist(projList, idx.idCol, distAlias).getOrElse(return None)
+    val qq = normalizedFor(metric, floatsOf(qLit))
     val df = manifest.kind match {
       case "hnsw" if others.isEmpty =>
-        graft.operators.Hnsw.rangeSearchFlat(spark,
-          graft.index.IndexCatalog.dataDir(spark, idx.indexName),
-          idx.idCol, qq, r)
+        Hnsw.rangeSearchFlat(spark,
+          IndexCatalog.dataDir(spark, idx.indexName), idx.idCol, qq, r)
       case "hnsw_part" =>
         // partitioned parent (partition.slt): per-partition flat scans
         // unioned — exact at any radius like the single-artifact form.
@@ -1557,18 +1558,23 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
         // longer matches the parent manifest.
         val (partCol, chosen) =
           partitionChoice(idx.indexName, manifest, others).getOrElse(return None)
-        graft.operators.PartitionedIndex.rangeHnsw(spark, idx.indexName,
+        PartitionedIndex.rangeHnsw(spark, idx.indexName,
           manifest.source, partCol, idx.idCol, qq, r,
           values = Some(chosen))
       case _ => return None
     }
-    val newPlan = df.queryExecution.analyzed
-    val byName = newPlan.output.map(a => a.name -> a).toMap
-    Some(Project(Seq(
-      Alias(byName(idx.idCol), idAttr.name)(exprId = idAttr.exprId),
-      Alias(byName("dist"), distAlias.name)(exprId = distAlias.exprId)),
-      newPlan))
+    namedOutput(df.queryExecution.analyzed, idx.idCol, idAttr, distAlias)
   }
+
+  /** The parent manifest's (partCol, registered values) — None (bail,
+    * never throw inside the rule) when a hand-edited manifest lost
+    * either param. */
+  private def partParams(manifest: IndexCatalog.Manifest)
+      : Option[(String, Seq[String])] =
+    for {
+      pc <- manifest.params.get("partCol")
+      vs <- manifest.params.get("values")
+    } yield (pc, vs.split(',').toSeq)
 
   /** Partition choice for an `hnsw_part` dispatch, shared by the range,
     * window-join, and range-join arms: every extra conjunct must be a
@@ -1580,33 +1586,13 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     * silently drops rows. Returns the chosen USER-space values (listing
     * unescapes Hive dir names; literals compare unescaped); None = bail,
     * including the provably-empty intersection (left to Spark). */
-  /** The parent manifest's (partCol, registered values) — None (bail,
-    * never throw inside the rule) when a hand-edited manifest lost
-    * either param. */
-  private def partParams(manifest: graft.index.IndexCatalog.Manifest)
-      : Option[(String, Seq[String])] =
-    for {
-      pc <- manifest.params.get("partCol")
-      vs <- manifest.params.get("values")
-    } yield (pc, vs.split(',').toSeq)
-
   private def partitionChoice(name: String,
-      manifest: graft.index.IndexCatalog.Manifest,
+      manifest: IndexCatalog.Manifest,
       extras: Seq[Expression]): Option[(String, Seq[String])] = {
     val (partCol, registered) = partParams(manifest).getOrElse(return None)
-    val valueSets = extras.map {
-      case EqualTo(a: AttributeReference, l: Literal)
-          if a.name == partCol => Option(Set(String.valueOf(l.value)))
-      case EqualTo(l: Literal, a: AttributeReference)
-          if a.name == partCol => Option(Set(String.valueOf(l.value)))
-      case In(a: AttributeReference, vs)
-          if a.name == partCol && vs.forall(_.isInstanceOf[Literal]) =>
-        Option(vs.map(v =>
-          String.valueOf(v.asInstanceOf[Literal].value)).toSet)
-      case _ => Option.empty[Set[String]]
-    }
+    val valueSets = extras.map(partValues(partCol))
     if (valueSets.exists(_.isEmpty)) return None
-    if (graft.operators.PartitionedIndex.partitionValues(spark,
+    if (PartitionedIndex.partitionValues(spark,
         manifest.source, partCol).toSet != registered.toSet) return None
     val chosen =
       if (valueSets.isEmpty) registered
@@ -1630,56 +1616,78 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       case _: DynamicPruningSubquery => Literal.TrueLiteral
     }
 
-  /** ivf_part extras split (round 9, FILTERED parent joins): partition-
-    * column literal constraints feed [[partitionChoice]] (index-level
-    * pruning); the REST remap by NAME onto the sub-artifact scans —
-    * ivf_part sub-artifacts store the partition's full source rows (the
-    * dense-IVF property), so a non-partition corpus predicate pushes
-    * into each sub scan like the dense FILTERED join. Bails when a
-    * leftover conjunct references the partition column in a non-literal
-    * shape (the artifact rows don't carry it — it lives in the dir
-    * name), touches the vector column (the dense arm's cos
-    * normalize-at-build rule), or names a column absent from the
-    * sub-artifact schema (checked against one sub's parquet footer —
-    * metadata-only, no job). */
-  private def ivfPartChoice(name: String,
-      manifest: graft.index.IndexCatalog.Manifest,
-      extras: Seq[Expression], vecCol: String)
-      : Option[(String, Seq[String],
-        Option[org.apache.spark.sql.Column])] = {
-    val (partCol0, _) = partParams(manifest).getOrElse(return None)
-    val isPartConj: Expression => Boolean = {
-      case EqualTo(a: AttributeReference, _: Literal) => a.name == partCol0
-      case EqualTo(_: Literal, a: AttributeReference) => a.name == partCol0
-      case In(a: AttributeReference, vs) =>
-        a.name == partCol0 && vs.forall(_.isInstanceOf[Literal])
-      case _ => false
+  /** The values a conjunct constrains `partCol` to, when it is a
+    * literal EqualTo / In — the shape index-level pruning absorbs; None
+    * for any other conjunct. */
+  private def partValues(partCol: String)(e: Expression): Option[Set[String]] =
+    e match {
+      case EqualTo(a: AttributeReference, l: Literal) if a.name == partCol =>
+        Some(Set(String.valueOf(l.value)))
+      case EqualTo(l: Literal, a: AttributeReference) if a.name == partCol =>
+        Some(Set(String.valueOf(l.value)))
+      case In(a: AttributeReference, vs)
+          if a.name == partCol && vs.forall(_.isInstanceOf[Literal]) =>
+        Some(vs.map(v => String.valueOf(v.asInstanceOf[Literal].value)).toSet)
+      case _ => None
     }
-    val (partConj, rest) = extras.partition(isPartConj)
+
+  private def isPartConj(partCol: String)(e: Expression): Boolean =
+    partValues(partCol)(e).isDefined
+
+  /** Partitioned-parent predicate split (round 9/10 — the Postgres
+    * shape: partition pruning first, remaining quals at the
+    * per-partition index scan): partition-column literal constraints
+    * feed [[partitionChoice]] (index-level pruning); the REST is
+    * returned for the caller to re-evaluate. Bails when a leftover
+    * conjunct references the partition column in a non-literal shape
+    * (the artifact rows don't carry it — it lives in the dir name) or
+    * touches the vector column (the dense arm's cos normalize-at-build
+    * rule). Returns (partCol, chosen values, rest). */
+  private def partSplit(name: String, manifest: IndexCatalog.Manifest,
+      extras: Seq[Expression], vecCol: String)
+      : Option[(String, Seq[String], Seq[Expression])] = {
+    val (partCol0, _) = partParams(manifest).getOrElse(return None)
+    val (partConj, rest) = extras.partition(isPartConj(partCol0))
     if (rest.exists(_.references.exists(r =>
         r.name == partCol0 || r.name == vecCol))) return None
     val (pc, chosen) =
       partitionChoice(name, manifest, partConj).getOrElse(return None)
-    val filterOpt =
-      if (rest.isEmpty) None
-      else {
-        // the leftover predicate remaps onto EVERY chosen sub scan: the
-        // guard must hold against the INTERSECTION of their schemas (a
-        // partition re-ensured after a source schema change can drift),
-        // and the footer lookups are cached per artifact generation
-        val schema = chosen.map(v => AnnPushdown.subFieldNames(spark,
-            graft.operators.PartitionedIndex.subName(name, v)))
-          .reduce(_ intersect _)
-        if (!rest.forall(_.references.forall(r => schema.contains(r.name))))
-          return None
-        val unresolved = rest.map(_.transform {
-          case a: AttributeReference =>
-            org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute(a.name)
-        })
-        Some(org.apache.spark.sql.graftshim.Shims.column(
-          unresolved.reduce(And)))
-      }
-    Some((pc, chosen, filterOpt))
+    Some((pc, chosen, rest))
+  }
+
+  /** The leftover predicate of an ivf_part dispatch as a name-resolved
+    * filter over the sub-artifact scans — ivf_part sub-artifacts store
+    * the partition's full source rows (the dense-IVF property), so a
+    * non-partition predicate pushes into each sub scan like the dense
+    * FILTERED join. It remaps onto EVERY chosen sub scan, so the guard
+    * holds against the INTERSECTION of their schemas (a partition
+    * re-ensured after a source schema change can drift); None when a
+    * column is missing. The footer lookups are cached per artifact
+    * generation — metadata-only, no job. */
+  private def subScanFilter(name: String, chosen: Seq[String],
+      rest: Seq[Expression]): Option[Column] = {
+    val schema = chosen.map(v => AnnPushdown.subFieldNames(spark,
+        PartitionedIndex.subName(name, v)))
+      .reduce(_ intersect _)
+    if (!rest.forall(_.references.forall(r => schema.contains(r.name))))
+      return None
+    Some(Shims.column(rest.map(_.transform {
+      case a: AttributeReference =>
+        org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute(a.name)
+    }).reduce(And)))
+  }
+
+  /** ivf_part extras split (round 9, FILTERED parent joins):
+    * [[partSplit]], with the rest as the [[subScanFilter]] corpus
+    * filter (None when there is no rest). */
+  private def ivfPartChoice(name: String,
+      manifest: IndexCatalog.Manifest,
+      extras: Seq[Expression], vecCol: String)
+      : Option[(String, Seq[String], Option[Column])] = {
+    val (pc, chosen, rest) =
+      partSplit(name, manifest, extras, vecCol).getOrElse(return None)
+    if (rest.isEmpty) Some((pc, chosen, None))
+    else subScanFilter(name, chosen, rest).map(f => (pc, chosen, Some(f)))
   }
 
   /** Dropped/drifted-sub-index staleness guard: a parent dispatch whose
@@ -1691,8 +1699,8 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     * The requires stay for direct operator-API calls. */
   private def subsExist(name: String, chosen: Seq[String],
       parentMetric: String): Boolean =
-    chosen.forall(v => graft.index.IndexCatalog.load(spark,
-        graft.operators.PartitionedIndex.subName(name, v))
+    chosen.forall(v => IndexCatalog.load(spark,
+        PartitionedIndex.subName(name, v))
       .exists(_.metric == parentMetric))
 
   /** Typed-family sphere range (the strategy-2 members of the bvector /
@@ -1712,43 +1720,20 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     * are never indexed). */
   private def matchTypedRange(projList: Seq[NamedExpression],
       cond: Expression, rel: LogicalPlan): Option[LogicalPlan] = {
-    import org.apache.spark.sql.{functions => F}
-    if (!rel.isInstanceOf[LogicalRelation] &&
-        !rel.isInstanceOf[org.apache.spark.sql.execution.columnar.InMemoryRelation])
-      return None
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case x => Seq(x)
-    }
-    val nonNull = conjuncts(cond).filterNot(_.isInstanceOf[IsNotNull])
+    if (!isScanLeaf(rel)) return None
+    val nonNull = splitConjunctivePredicates(cond)
+      .filterNot(_.isInstanceOf[IsNotNull])
     if (nonNull.length != 1) return None
-    val (vecAttr, qLit, r, metricKey) = nonNull.collectFirst {
-      case LessThan(BVecHamming(Binarize(v: AttributeReference), QueryLit(q)),
-          Literal(r: Double, _)) => (v, q, r, "bvec:hamming")
-      case LessThan(F16L2sq(ToF16Bits(v: AttributeReference), QueryLit(q)),
-          Literal(r: Double, _)) => (v, q, r, "f16:l2")
-      case LessThan(SVecL2sq(SVecFromDense(v: AttributeReference), QueryLit(q)),
-          Literal(r: Double, _)) => (v, q, r, "svec:l2")
-      case LessThan(BVecNegDot(Binarize(v: AttributeReference), QueryLit(q)),
-          Literal(r: Double, _)) => (v, q, r, "bvec:dot")
-      case LessThan(SVecNegDot(SVecFromDense(v: AttributeReference), QueryLit(q)),
-          Literal(r: Double, _)) => (v, q, r, "svec:dot")
-      case LessThan(F16NegDot(ToF16Bits(v: AttributeReference), QueryLit(q)),
-          Literal(r: Double, _)) => (v, q, r, "f16:dot")
-    }.getOrElse(return None)
+    val (rangePred, vecAttr, qLit, r, metricKey) =
+      rangeConjunct(nonNull, typedRangeKinds.contains).getOrElse(return None)
+    val family = metricKey.takeWhile(_ != ':')
     val idx = lookup(pathsOf(rel), metricKey).getOrElse(return None)
     if (vecAttr.name != idx.vecCol) return None
     val distAlias = projList.collectFirst {
-      case a @ Alias(child, _) if nonNull.head.asInstanceOf[LessThan]
-        .left.semanticEquals(child) => a
+      case a @ Alias(child, _) if rangePred.left.semanticEquals(child) => a
     }.getOrElse(return None)
-    val idAttr = projList.collectFirst {
-      case a: AttributeReference if a.name == idx.idCol => a
-    }.getOrElse(return None)
-    if (!projList.forall(ne =>
-        ne.exprId == idAttr.exprId || ne.exprId == distAlias.exprId))
-      return None
-    val manifest = graft.index.IndexCatalog.load(spark, idx.indexName)
+    val idAttr = exactIdDist(projList, idx.idCol, distAlias).getOrElse(return None)
+    val manifest = IndexCatalog.load(spark, idx.indexName)
       .getOrElse(return None)
     if (manifest.kind == "hnsw") {
       // typed sphere range under the hnsw AM (round 9): resident flat
@@ -1760,40 +1745,21 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       // registration-invariant rule); dot/cos graph ranges would need
       // override scoring inside rangeFlat.
       val qRaw = AnnPushdown.typedQueryFloats(qLit)
-      val qDens = metricKey match {
-        case "bvec:hamming" => qRaw.map(x => if (x > 0f) 1f else 0f)
-        case "f16:l2" => qRaw.map(x =>
-          graft.types.Fp16.halfToFloat(graft.types.Fp16.floatToHalf(x)))
-        case "svec:l2" => qRaw
-        case _ => return None
-      }
-      val df = graft.operators.Hnsw.rangeSearchFlat(spark,
-        graft.index.IndexCatalog.dataDir(spark, idx.indexName),
-        idx.idCol, qDens, r)
-      val newPlan = df.queryExecution.analyzed
-      val byName = newPlan.output.map(a => a.name -> a).toMap
-      return Some(Project(Seq(
-        Alias(byName(idx.idCol), idAttr.name)(exprId = idAttr.exprId),
-        Alias(byName("dist"), distAlias.name)(exprId = distAlias.exprId)),
-        newPlan))
+      if (metricKey.endsWith(":dot")) return None
+      val df = Hnsw.rangeSearchFlat(spark,
+        IndexCatalog.dataDir(spark, idx.indexName), idx.idCol,
+        densify(family, qRaw), r)
+      return namedOutput(df.queryExecution.analyzed, idx.idCol, idAttr,
+        distAlias)
     }
     if (!manifest.floats.contains("radii")) return None
-    val expectedKind = Map("bvec:hamming" -> "ivf_bvec",
-      "f16:l2" -> "ivf_f16", "svec:l2" -> "ivf_svec",
-      "bvec:dot" -> "ivf_bvec", "svec:dot" -> "ivf_svec",
-      "f16:dot" -> "ivf_f16")(metricKey)
-    if (manifest.kind != expectedKind) return None
+    if (manifest.kind != typedRangeKinds(metricKey)) return None
     val model = IvfIndex.Model("l2", manifest.centroids)
     val radii = manifest.floats("radii")
     val q = AnnPushdown.typedQueryFloats(qLit)
     // prune in the same densified space the radii were measured in
-    val qPrune = metricKey match {
-      case "bvec:hamming" | "bvec:dot" => q.map(x => if (x > 0f) 1f else 0f)
-      case "f16:l2" | "f16:dot" => q.map(x =>
-        graft.types.Fp16.halfToFloat(graft.types.Fp16.floatToHalf(x)))
-      case _ => q
-    }
-    val dataDir = graft.index.IndexCatalog.dataDir(spark, idx.indexName)
+    val qPrune = densify(family, q)
+    val dataDir = IndexCatalog.dataDir(spark, idx.indexName)
     // l2-family metrics prune by the triangle bound; dot by Cauchy-
     // Schwarz — both in the densified payload space the radii measure
     val scan =
@@ -1817,12 +1783,7 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     }
     val df = scan.select(F.col(idx.idCol), distCol.as("dist"))
       .filter(F.col("dist") < F.lit(r))
-    val newPlan = df.queryExecution.analyzed
-    val byName = newPlan.output.map(a => a.name -> a).toMap
-    Some(Project(Seq(
-      Alias(byName(idx.idCol), idAttr.name)(exprId = idAttr.exprId),
-      Alias(byName("dist"), distAlias.name)(exprId = distAlias.exprId)),
-      newPlan))
+    namedOutput(df.queryExecution.analyzed, idx.idCol, idAttr, distAlias)
   }
 
   /** Dist alias extraction: Alias(metricExpr(vecAttr, queryLit)) for any
@@ -1897,9 +1858,7 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       projList: Seq[NamedExpression], rel: LogicalPlan,
       cond: Option[Expression] = None)
       : Option[(IndexedTable, Alias, AttributeReference, Literal, String)] = {
-    if (!rel.isInstanceOf[LogicalRelation] &&
-        !rel.isInstanceOf[org.apache.spark.sql.execution.columnar.InMemoryRelation])
-      return None
+    if (!isScanLeaf(rel)) return None
     val (alias, vecAttr, qLit, metric) = findDistAlias(projList).getOrElse(return None)
     val all = lookupAll(pathsOf(rel), metric)
     val condConj = cond.map(conjunctStrings)
@@ -1912,12 +1871,7 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
           if attr.exprId == alias.exprId =>
       case _ => return None
     }
-    val idAttr = projList.collectFirst {
-      case a: AttributeReference if a.name == idx.idCol => a
-    }.getOrElse(return None)
-    if (!projList.forall(ne =>
-        ne.exprId == idAttr.exprId || ne.exprId == alias.exprId))
-      return None
+    val idAttr = exactIdDist(projList, idx.idCol, alias).getOrElse(return None)
     Some((idx, alias, idAttr, qLit, metric))
   }
 
@@ -1953,9 +1907,7 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       case Filter(c, r) => (Some(c), stripProj(r))
       case r => (None, r)
     }
-    if (!rel.isInstanceOf[LogicalRelation] &&
-        !rel.isInstanceOf[org.apache.spark.sql.execution.columnar.InMemoryRelation])
-      return None
+    if (!isScanLeaf(rel)) return None
     val (vecAttr, qLit, metric) = distOf(distExpr).getOrElse(return None)
     val idAttr = outList match {
       case Seq(a: AttributeReference) => a
@@ -1981,7 +1933,7 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
   private def rewriteTopK(k: Int, idx: IndexedTable, alias: Alias,
       idAttr: AttributeReference, qLit: Literal, metricKey: String)
       : Option[LogicalPlan] = {
-    val manifest = graft.index.IndexCatalog.load(spark, idx.indexName)
+    val manifest = IndexCatalog.load(spark, idx.indexName)
       .getOrElse(return None)
     // family-qualified keys ("f16:l2") name a TYPED opclass whose one
     // artifact serves every metric of the family (ranking and scoring
@@ -1992,26 +1944,21 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       case _ => ("dense", metricKey)
     }
     if (family == "dense" && manifest.metric != metric) return None
-    val dataDir = graft.index.IndexCatalog.dataDir(spark, idx.indexName)
+    val dataDir = IndexCatalog.dataDir(spark, idx.indexName)
     val q = AnnPushdown.typedQueryFloats(qLit)
     // the planner picks whatever index KIND the registration provides
     // (the reference's am dispatch, src/index/am.rs:105-133): IVF scans
     // prune by centroid lists, HNSW scans search the resident graphs,
     // typed families dispatch to their compact-payload pruned scans
-    val model = IvfIndex.Model(manifest.metric, manifest.centroids,
-      manifest.floats.get("radii").orNull)
-    val probes = math.min(math.max(nprobeFor(idx), 1),
-      math.max(model.nlist, 1))
+    val model = ivfModel(manifest)
+    val probes = clampedProbes(idx, model)
     val searchDf = (family, manifest.kind) match {
       case ("dense", "ivf") =>
         IvfIndex.search(spark, dataDir, model, idx.idCol, idx.vecCol,
           q, k, probes)
       case ("dense", "hnsw") =>
-        // cos graphs are normalize-at-build: hand them the normalized
-        // query (searchIndex reports 1 - dot, the cos-distance convention)
-        val qq = if (metric == "cos") IvfIndex.Kernels.normalize(q) else q
-        graft.operators.Hnsw.searchIndex(spark, dataDir, idx.idCol, qq, k,
-          efSearch = hnswEfSearch(manifest), exact = hnswExact,
+        Hnsw.searchIndex(spark, dataDir, idx.idCol, normalizedFor(metric, q),
+          k, efSearch = hnswEfSearch(manifest), exact = hnswExact,
           probeGraphs = hnswProbe)
       case ("dense", "hnsw_part" | "ivf_part") =>
         // partitioned parent (partition.slt): per-partition searches +
@@ -2022,22 +1969,18 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
         // unrewritten plan rather than erroring or silently dropping
         // rows. The IVF parent is exact at nprobe >= every sub's nlist
         // (per-sub clamp), the scalar IVF arm's contract per partition.
-        val (partCol, registered) = partParams(manifest).getOrElse(return None)
-        if (graft.operators.PartitionedIndex.partitionValues(spark,
-            manifest.source, partCol).toSet != registered.toSet) return None
-        if (!subsExist(idx.indexName, registered, manifest.metric)) return None
+        val (partCol, registered) =
+          partitionChoice(idx.indexName, manifest, Nil).getOrElse(return None)
         if (manifest.kind == "ivf_part")
-          graft.operators.PartitionedIndex.searchIvf(spark, idx.indexName,
+          PartitionedIndex.searchIvf(spark, idx.indexName,
             manifest.source, partCol, idx.idCol,
             idx.vecCol, q, k, nprobe = math.max(nprobeFor(idx), 1),
             values = Some(registered))
-        else {
-          val qq = if (metric == "cos") IvfIndex.Kernels.normalize(q) else q
-          graft.operators.PartitionedIndex.searchHnsw(spark, idx.indexName,
-            manifest.source, partCol, idx.idCol, qq, k,
+        else
+          PartitionedIndex.searchHnsw(spark, idx.indexName,
+            manifest.source, partCol, idx.idCol, normalizedFor(metric, q), k,
             efSearch = hnswEfSearch(manifest), exact = hnswExact,
             values = Some(registered), probeGraphs = hnswProbe)
-        }
       // typed opclasses under the hnsw AM (finalize.sql:719-803,
       // round 9): the registered graphs store the family's DENSIFIED
       // payload view (bvec: 0/1, f16: f16-rounded floats) built with
@@ -2054,45 +1997,22 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       // registration invariant; artifacts storing SPARSIFIED views
       // (the shared svecHnsw fixtures) must simply not be registered
       // under svec keys, like any other artifact/spelling mismatch.
-      case ("bvec", "hnsw") =>
-        val q01 = q.map(x => if (x > 0f) 1f else 0f)
-        metric match {
-          case "hamming" =>
-            graft.operators.Hnsw.searchIndex(spark, dataDir, idx.idCol,
-              q01, k, efSearch = hnswEfSearch(manifest), exact = hnswExact,
-              probeGraphs = hnswProbe)
-          case "jaccard" | "dot" =>
-            graft.operators.Hnsw.searchIndexMetric(spark, dataDir,
-              idx.idCol, q01, k, metric, efSearch = hnswEfSearch(manifest),
-              exact = hnswExact, probeGraphs = hnswProbe)
-          case _ => return None
+      case ("bvec" | "f16" | "svec", "hnsw") =>
+        val (walked, overrides) = family match {
+          case "bvec" => ("hamming", Set("jaccard", "dot"))
+          case "f16" => ("l2", Set("dot", "cos"))
+          case _ => ("l2", Set("dot"))
         }
-      case ("f16", "hnsw") =>
-        val q16 = q.map(x =>
-          graft.types.Fp16.halfToFloat(graft.types.Fp16.floatToHalf(x)))
-        metric match {
-          case "l2" =>
-            graft.operators.Hnsw.searchIndex(spark, dataDir, idx.idCol,
-              q16, k, efSearch = hnswEfSearch(manifest), exact = hnswExact,
-              probeGraphs = hnswProbe)
-          case "dot" | "cos" =>
-            graft.operators.Hnsw.searchIndexMetric(spark, dataDir,
-              idx.idCol, q16, k, metric, efSearch = hnswEfSearch(manifest),
-              exact = hnswExact, probeGraphs = hnswProbe)
-          case _ => return None
-        }
-      case ("svec", "hnsw") =>
-        metric match {
-          case "l2" =>
-            graft.operators.Hnsw.searchIndex(spark, dataDir, idx.idCol,
-              q, k, efSearch = hnswEfSearch(manifest), exact = hnswExact,
-              probeGraphs = hnswProbe)
-          case "dot" =>
-            graft.operators.Hnsw.searchIndexMetric(spark, dataDir,
-              idx.idCol, q, k, metric, efSearch = hnswEfSearch(manifest),
-              exact = hnswExact, probeGraphs = hnswProbe)
-          case _ => return None
-        }
+        val qd = densify(family, q)
+        if (metric == walked)
+          Hnsw.searchIndex(spark, dataDir, idx.idCol, qd, k,
+            efSearch = hnswEfSearch(manifest), exact = hnswExact,
+            probeGraphs = hnswProbe)
+        else if (overrides(metric))
+          Hnsw.searchIndexMetric(spark, dataDir, idx.idCol, qd, k, metric,
+            efSearch = hnswEfSearch(manifest), exact = hnswExact,
+            probeGraphs = hnswProbe)
+        else return None
       case ("f16", "ivf_f16") =>
         TypedAnn.searchF16(spark, dataDir, model, idx.idCol, q, k, probes,
           metric)
@@ -2106,12 +2026,8 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
           probes, metric)
       case _ => return None
     }
-    val newPlan = searchDf.queryExecution.analyzed
-    val Seq(newId, newDist) = newPlan.output
     // alias replacement output back to the original exprIds
-    Some(Project(Seq(
-      Alias(newId, idAttr.name)(exprId = idAttr.exprId),
-      Alias(newDist, alias.name)(exprId = alias.exprId)), newPlan))
+    searchOutput(searchDf, idAttr, alias)
   }
 
   /** Filtered ANN top-k: `Filter(pred) + Sort(dist) + Limit(k)` — the
@@ -2141,7 +2057,7 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
         rewriteTopK(k, idx, alias, idAttr, qLit, metric)
       else None
     }
-    val manifest = graft.index.IndexCatalog.load(spark, idx.indexName)
+    val manifest = IndexCatalog.load(spark, idx.indexName)
       .getOrElse(return None)
     if (manifest.metric != metric) return None
     // Partitioned parent (partition.slt): the predicate is absorbed by
@@ -2153,11 +2069,7 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     // (id, vec), so nothing else can be re-evaluated on the artifact.
     if (manifest.kind == "hnsw_part" || manifest.kind == "ivf_part") {
       val (partCol0, _) = partParams(manifest).getOrElse(return None)
-      def flat(e: Expression): Seq[Expression] = e match {
-        case And(l, r) => flat(l) ++ flat(r)
-        case x => Seq(x)
-      }
-      val conj = flat(cond).filterNot {
+      val conj = splitConjunctivePredicates(cond).filterNot {
         // the optimizer infers IsNotNull from the equality/IN itself
         case IsNotNull(a: AttributeReference) => a.name == partCol0
         case _ => false
@@ -2176,55 +2088,29 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       // against a sample-sized candidate fetch (hnsw_part — graph
       // payloads carry only id/vec). A leftover referencing the
       // partition column in a non-literal shape, or the vector column,
-      // bails (the ivfPartChoice rule).
-      val isPartConj: Expression => Boolean = {
-        case EqualTo(a: AttributeReference, _: Literal) => a.name == partCol0
-        case EqualTo(_: Literal, a: AttributeReference) => a.name == partCol0
-        case In(a: AttributeReference, vs) =>
-          a.name == partCol0 && vs.forall(_.isInstanceOf[Literal])
-        case _ => false
-      }
-      val (partConj, rest) = conj.partition(isPartConj)
-      if (rest.exists(_.references.exists(r =>
-          r.name == partCol0 || r.name == idx.vecCol))) return None
-      val (partCol, chosen) =
-        partitionChoice(idx.indexName, manifest, partConj).getOrElse(return None)
+      // bails (the partSplit rule).
+      val (partCol, chosen, rest) =
+        partSplit(idx.indexName, manifest, conj, idx.vecCol).getOrElse(return None)
       val q = floatsOf(qLit)
       if (rest.isEmpty) {
         // pure partition predicate: fully absorbed by sub-index pruning
         val searchDf =
           if (manifest.kind == "ivf_part")
-            graft.operators.PartitionedIndex.searchIvf(spark, idx.indexName,
+            PartitionedIndex.searchIvf(spark, idx.indexName,
               manifest.source, partCol, idx.idCol, idx.vecCol, q, k,
               nprobe = math.max(nprobeFor(idx), 1), values = Some(chosen))
-          else {
-            val qq = if (metric == "cos") IvfIndex.Kernels.normalize(q) else q
-            graft.operators.PartitionedIndex.searchHnsw(spark,
-              idx.indexName, manifest.source, partCol, idx.idCol, qq, k,
+          else
+            PartitionedIndex.searchHnsw(spark,
+              idx.indexName, manifest.source, partCol, idx.idCol,
+              normalizedFor(metric, q), k,
               efSearch = hnswEfSearch(manifest), exact = hnswExact,
               values = Some(chosen), probeGraphs = hnswProbe)
-          }
-        val newPlan = searchDf.queryExecution.analyzed
-        val Seq(newId, newDist) = newPlan.output
-        return Some(Project(Seq(
-          Alias(newId, idAttr.name)(exprId = idAttr.exprId),
-          Alias(newDist, alias.name)(exprId = alias.exprId)), newPlan))
+        return searchOutput(searchDf, idAttr, alias)
       }
       val restExpr = rest.reduce(And)
       if (manifest.kind == "ivf_part") {
-        // leftovers remap by NAME onto every chosen sub scan — guard
-        // against the INTERSECTION of their schemas (cached footers)
-        val schema = chosen.map(v => AnnPushdown.subFieldNames(spark,
-            graft.operators.PartitionedIndex.subName(idx.indexName, v)))
-          .reduce(_ intersect _)
-        if (!rest.forall(_.references.forall(r => schema.contains(r.name))))
-          return None
-        val filterCol = org.apache.spark.sql.graftshim.Shims.column(
-          rest.map(_.transform {
-            case a: AttributeReference =>
-              org.apache.spark.sql.catalyst.analysis
-                .UnresolvedAttribute(a.name)
-          }).reduce(And))
+        val filterCol =
+          subScanFilter(idx.indexName, chosen, rest).getOrElse(return None)
         // PER-SUB probe escalation from each sub's own sample (the
         // dense filtered-IVF formula applied per partition): a
         // predicate that is rare in one partition probes that sub
@@ -2232,34 +2118,19 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
         val baseProbes =
           math.max(nprobeFor(idx).toLong * math.max(filteredOverfetch, 1), 1L)
         val probesBySub = chosen.map { v =>
-          val subM = graft.index.IndexCatalog.load(spark,
-            graft.operators.PartitionedIndex.subName(idx.indexName, v))
-            .getOrElse(return None)
-          val nlist = subM.centroids.length
-          val probes = (if (filteredAdaptive)
-              graft.index.SampleSidecar.estimate(spark,
-                graft.index.IndexCatalog.dataDir(spark,
-                  graft.operators.PartitionedIndex.subName(idx.indexName, v)),
-                restExpr)
-            else None) match {
-            case Some((m, n, total)) =>
-              val need = neededCandidates(k, m, n)
-              val fromNeed =
-                if (need == Long.MaxValue || total <= 0) nlist.toLong
-                else math.ceil(nlist.toDouble * need / total).toLong
-              math.min(math.max(baseProbes, fromNeed), nlist.toLong)
-            case None => math.min(baseProbes, nlist.toLong)
-          }
-          v -> probes.toInt
+          val sub = PartitionedIndex.subName(idx.indexName, v)
+          val nlist = IndexCatalog.load(spark, sub)
+            .getOrElse(return None).centroids.length
+          val est =
+            if (filteredAdaptive) SampleSidecar.estimate(spark,
+              IndexCatalog.dataDir(spark, sub), restExpr)
+            else None
+          v -> est.fold(math.min(baseProbes, nlist.toLong).toInt)(
+            escalatedProbes(k, baseProbes, nlist))
         }
-        val searchDf = graft.operators.PartitionedIndex.searchIvfFiltered(
+        return searchOutput(PartitionedIndex.searchIvfFiltered(
           spark, idx.indexName, manifest.source, partCol, idx.idCol,
-          idx.vecCol, q, k, probesBySub, filterCol)
-        val newPlan = searchDf.queryExecution.analyzed
-        val Seq(newId, newDist) = newPlan.output
-        return Some(Project(Seq(
-          Alias(newId, idAttr.name)(exprId = idAttr.exprId),
-          Alias(newDist, alias.name)(exprId = alias.exprId)), newPlan))
+          idx.vecCol, q, k, probesBySub, filterCol), idAttr, alias)
       }
       // hnsw_part MIXED: the one-shot dense form lifted to the parent —
       // a candidate fetch over the CHOSEN partitions sized by their
@@ -2270,49 +2141,30 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       // hold k survivors (the pre-filter exact plan wins); a sub
       // without a sample refuses ADAPTIVITY (fixed breadth), never the
       // rewrite.
-      val baseKr = math.min(k.toLong * math.max(filteredOverfetch, 2),
-        Int.MaxValue.toLong)
       val perSub =
         if (filteredAdaptive)
-          Some(chosen.map(v => graft.index.SampleSidecar.estimate(spark,
-            graft.index.IndexCatalog.dataDir(spark,
-              graft.operators.PartitionedIndex.subName(idx.indexName, v)),
+          Some(chosen.map(v => SampleSidecar.estimate(spark,
+            IndexCatalog.dataDir(spark,
+              PartitionedIndex.subName(idx.indexName, v)),
             restExpr)))
         else None
-      val kr = perSub match {
+      val pooled = perSub match {
         case Some(ests) if ests.forall(_.isDefined) =>
           val ms = ests.flatten
           val totalAll = ms.map(_._3).sum
           val mLo = ms.map { case (m, n, t) =>
-            t * graft.index.SampleSidecar.wilsonLower(m, n) }.sum
+            t * SampleSidecar.wilsonLower(m, n) }.sum
           val selLo = if (totalAll > 0) mLo / totalAll else 0.0
-          val need =
-            if (selLo <= 0.0) Long.MaxValue
-            else math.ceil(2.0 * k / selLo).toLong
-          if (need > filteredMaxCandidates || need >= totalAll) return None
-          math.min(math.max(baseKr, need), Int.MaxValue.toLong).toInt
-        case _ => baseKr.toInt
+          Some((candidatesFor(k, selLo), totalAll))
+        case _ => None
       }
-      val qq = if (metric == "cos") IvfIndex.Kernels.normalize(q) else q
-      val cands = graft.operators.PartitionedIndex.searchHnsw(spark,
-        idx.indexName, manifest.source, partCol, idx.idCol, qq, kr,
+      val kr = candidateBreadth(k, pooled).getOrElse(return None)
+      val cands = PartitionedIndex.searchHnsw(spark,
+        idx.indexName, manifest.source, partCol, idx.idCol,
+        normalizedFor(metric, q), kr,
         efSearch = math.max(hnswEfSearch(manifest), kr), exact = hnswExact,
         values = Some(chosen), probeGraphs = hnswProbe)
-      val nf = Filter(cond, rel)
-      nf.setTagValue(RewrittenTag, true)
-      val filteredIds = org.apache.spark.sql.graftshim.Shims
-        .ofRows(spark, Project(Seq(rel.output.find(_.name == idx.idCol)
-          .getOrElse(return None)), nf))
-      val joined = filteredIds
-        .join(org.apache.spark.sql.functions.broadcast(cands), idx.idCol)
-        .orderBy(org.apache.spark.sql.functions.col("dist"),
-          org.apache.spark.sql.functions.col(idx.idCol))
-        .limit(k)
-      val newPlan = joined.queryExecution.optimizedPlan
-      val byName = newPlan.output.map(a => a.name -> a).toMap
-      return Some(Project(Seq(
-        Alias(byName(idx.idCol), idAttr.name)(exprId = idAttr.exprId),
-        Alias(byName("dist"), alias.name)(exprId = alias.exprId)), newPlan))
+      return candidateJoin(k, cond, rel, idx.idCol, cands, idAttr, alias)
     }
     // HNSW-kind registrations get the ONE-SHOT breadth form — the
     // `search.mode = basic` contract (a single k·overfetch candidate
@@ -2324,95 +2176,47 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     // set is a distance-prefix of the full ranking, so whenever it
     // contains >= k survivors the result IS the exact filtered top-k.
     if (manifest.kind == "hnsw") {
-      val baseKr = math.min(k.toLong * math.max(filteredOverfetch, 2),
-        Int.MaxValue.toLong)
       // selectivity guard (round 10): size the one-shot fetch to the
-      // sampled selectivity; when no credible breadth can hold k
-      // survivors (needed > cap, or >= the whole corpus), DON'T rewrite
-      // — the untouched Filter+Sort+Limit plan is the pre-filter exact
-      // scan, the access path the reference's cost model would pick.
-      val kr = (if (filteredAdaptive)
-          graft.index.SampleSidecar.estimate(spark,
-            graft.index.IndexCatalog.dataDir(spark, idx.indexName), cond)
-        else None) match {
-        case Some((m, n, total)) =>
-          val need = neededCandidates(k, m, n)
-          if (need > filteredMaxCandidates || need >= total) return None
-          math.min(math.max(baseKr, need), Int.MaxValue.toLong).toInt
-        case None => baseKr.toInt
-      }
-      val q = floatsOf(qLit)
-      val qq = if (metric == "cos") IvfIndex.Kernels.normalize(q) else q
-      val cands = graft.operators.Hnsw.searchIndex(spark,
-        graft.index.IndexCatalog.dataDir(spark, idx.indexName),
-        idx.idCol, qq, kr, efSearch = math.max(hnswEfSearch(manifest), kr),
-        exact = hnswExact)
-      val nf = Filter(cond, rel)
-      nf.setTagValue(RewrittenTag, true)
-      val filteredIds = org.apache.spark.sql.graftshim.Shims
-        .ofRows(spark, Project(Seq(rel.output.find(_.name == idx.idCol)
-          .getOrElse(return None)), nf))
-      val joined = filteredIds
-        .join(org.apache.spark.sql.functions.broadcast(cands), idx.idCol)
-        .orderBy(org.apache.spark.sql.functions.col("dist"),
-          org.apache.spark.sql.functions.col(idx.idCol))
-        .limit(k)
-      // optimizedPlan, not analyzed: the broadcast HINT must be folded
-      // into the join (EliminateResolvedHint already ran for the outer
-      // query — an unresolved hint left in the replacement subtree is a
-      // planner internal error). Re-entering this rule on the subtree is
-      // harmless: no arm matches the join shape.
-      val newPlan = joined.queryExecution.optimizedPlan
-      val byName = newPlan.output.map(a => a.name -> a).toMap
-      return Some(Project(Seq(
-        Alias(byName(idx.idCol), idAttr.name)(exprId = idAttr.exprId),
-        Alias(byName("dist"), alias.name)(exprId = alias.exprId)), newPlan))
+      // sampled selectivity (candidateBreadth refuses when no credible
+      // breadth can hold k survivors)
+      val est =
+        if (filteredAdaptive) SampleSidecar.estimate(spark,
+          IndexCatalog.dataDir(spark, idx.indexName), cond)
+        else None
+      val kr = candidateBreadth(k, est.map { case (m, n, total) =>
+        (neededCandidates(k, m, n), total) }).getOrElse(return None)
+      val cands = Hnsw.searchIndex(spark,
+        IndexCatalog.dataDir(spark, idx.indexName), idx.idCol,
+        normalizedFor(metric, floatsOf(qLit)), kr,
+        efSearch = math.max(hnswEfSearch(manifest), kr), exact = hnswExact)
+      return candidateJoin(k, cond, rel, idx.idCol, cands, idAttr, alias)
     }
     // filtered top-k pushes the predicate INTO a pruned scan — an IVF
     // shape (the predicate is evaluated on the scan's own rows).
     if (manifest.kind != "ivf") return None
-    val model = IvfIndex.Model(manifest.metric, manifest.centroids,
-      manifest.floats.get("radii").orNull)
+    val model = ivfModel(manifest)
     val baseProbes = math.max(nprobeFor(idx).toLong * math.max(filteredOverfetch, 1), 1L)
     // selectivity guard (round 10): widen the probed-list fraction so
-    // the expected survivor count in probed lists covers k (survivors
-    // assumed list-uniform — the conservative Wilson bound absorbs the
-    // slack). Zero sample matches escalate to nprobe = nlist, where the
-    // pruned scan + filter IS the exact filtered top-k: the IVF shape
-    // degrades gracefully instead of bailing.
-    val probes = ((if (filteredAdaptive)
-        graft.index.SampleSidecar.estimate(spark,
-          graft.index.IndexCatalog.dataDir(spark, idx.indexName), cond)
-      else None) match {
-      case Some((m, n, total)) =>
-        val need = neededCandidates(k, m, n)
-        val fromNeed =
-          if (need == Long.MaxValue || total <= 0) model.nlist.toLong
-          else math.ceil(model.nlist.toDouble * need / total).toLong
-        math.min(math.max(baseProbes, fromNeed), model.nlist.toLong)
-      case None => math.min(baseProbes, model.nlist.toLong)
-    }).toInt
+    // the expected survivor count in probed lists covers k
+    // (escalatedProbes)
+    val est =
+      if (filteredAdaptive) SampleSidecar.estimate(spark,
+        IndexCatalog.dataDir(spark, idx.indexName), cond)
+      else None
+    val probes = est.fold(math.min(baseProbes, model.nlist.toLong).toInt)(
+      escalatedProbes(k, baseProbes, model.nlist))
     val q = floatsOf(qLit)
-    val scanDf = IvfIndex.prunedScan(spark,
-      graft.index.IndexCatalog.dataDir(spark, idx.indexName), model, q, probes)
-    val scanPlan = scanDf.queryExecution.analyzed
-    val byName = scanPlan.output.map(a => a.name -> a).toMap
+    val scanPlan = IvfIndex.prunedScan(spark,
+      IndexCatalog.dataDir(spark, idx.indexName), model, q, probes)
+      .queryExecution.analyzed
     // remap the predicate's attributes onto the scan's outputs by name
-    var remapOk = true
-    val cond2 = cond.transformUp {
-      case a: AttributeReference =>
-        byName.get(a.name) match {
-          case Some(n) => n
-          case None => remapOk = false; a
-        }
-    }
-    if (!remapOk) return None
-    val vecNew = byName.getOrElse(idx.vecCol, return None)
-    val idNew = byName.getOrElse(idx.idCol, return None)
+    val cond2 = remapByName(cond, scanPlan).getOrElse(return None)
+    val cols = byName(scanPlan)
+    val vecNew = cols.getOrElse(idx.vecCol, return None)
+    val idNew = cols.getOrElse(idx.idCol, return None)
     // dist computed the way the INDEX computes it (cos: normalized at
     // build, scored by -dot + 1 on the normalized query)
-    val qq = if (metric == "cos") IvfIndex.Kernels.normalize(q) else q
-    val qLit2 = Literal.create(qq,
+    val qLit2 = Literal.create(normalizedFor(metric, q),
       org.apache.spark.sql.types.ArrayType(
         org.apache.spark.sql.types.FloatType, containsNull = false))
     val distExpr: Expression = metric match {
@@ -2422,10 +2226,29 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     }
     val nf = Filter(cond2, scanPlan)
     nf.setTagValue(RewrittenTag, true)
-    val proj = Project(Seq(
-      Alias(idNew, idAttr.name)(exprId = idAttr.exprId),
-      Alias(distExpr, alias.name)(exprId = alias.exprId)), nf)
     Some(GlobalLimit(Literal(k),
-      LocalLimit(Literal(k), Sort(order, global = true, proj))))
+      LocalLimit(Literal(k), Sort(order, global = true,
+        reAlias(nf, idNew, distExpr, idAttr, alias)))))
+  }
+
+  /** The tail of the one-shot filtered graph fetches: the candidates
+    * (broadcast) joined with the ids the predicate keeps over the base
+    * relation, in Spark's (dist, id) order, limited to k. */
+  private def candidateJoin(k: Int, cond: Expression, rel: LogicalPlan,
+      idCol: String, cands: DataFrame, idAttr: AttributeReference,
+      alias: Alias): Option[LogicalPlan] = {
+    val nf = Filter(cond, rel)
+    nf.setTagValue(RewrittenTag, true)
+    val filteredIds = Shims.ofRows(spark, Project(Seq(
+      rel.output.find(_.name == idCol).getOrElse(return None)), nf))
+    val joined = filteredIds.join(F.broadcast(cands), idCol)
+      .orderBy(F.col("dist"), F.col(idCol))
+      .limit(k)
+    // optimizedPlan, not analyzed: the broadcast HINT must be folded
+    // into the join (EliminateResolvedHint already ran for the outer
+    // query — an unresolved hint left in the replacement subtree is a
+    // planner internal error). Re-entering this rule on the subtree is
+    // harmless: no arm matches the join shape.
+    namedOutput(joined.queryExecution.optimizedPlan, idCol, idAttr, alias)
   }
 }

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Round-18 evidence tool: dumps every SparkEntry query's formatted plan
   * to <outDir>/<name>.txt (no execution) for offline pattern greps —
   * e.g. the InferFiltersFromGenerate expensive-clone census. */
@@ -10,15 +8,7 @@ object PlanCensus {
     val outDir = args(0)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Bench.session(cpus)
     graft.queries.AnnQueries.ensureAll(spark, sfDir)
     graft.queries.DocQueries.ensureAll(spark, sfDir)
     graft.queries.CoreQueries.ensureSegments(spark, sfDir)

@@ -1,10 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Writes `.explain("formatted")` output for named SparkEntry queries to
   * files (round-17 optimization evidence: plans/r17/<query>_<tag>.txt).
-  * Session conf mirrors Bench so the captured plans are the benched ones.
+  * The session is Bench's, so the captured plans are the benched ones.
   *
   *   SPARK_GRAFT_SF_DIR=... sbt "runMain graft.tools.PlanDump <outDir> <tag> <query>..."
   */
@@ -15,15 +13,7 @@ object PlanDump {
     val names = args.drop(2)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Bench.session(cpus)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     // tag suffix "_final": execute the query first and dump the
     // POST-AQE executed plan (shows runtime exchange reuse / coalescing)

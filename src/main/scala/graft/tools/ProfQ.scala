@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Warm per-query phase profiler (round-17 optimization): splits a
   * query's warm time into DF-construction (driver-side: ensure calls,
@@ -15,15 +14,7 @@ object ProfQ {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Bench.session(cpus)
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(s: SparkListenerJobStart): Unit = jobs.incrementAndGet()

@@ -1471,6 +1471,60 @@ class PushdownSpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       assert(ham.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
         == wantHam)
+      // hamming sphere range over the same registration: the resident
+      // flat scan of the shared graphs equals the unrewritten filter
+      def hamRange = spark.read.parquet(src)
+        .select(col("vec_id"),
+          graft.functions.bvecHamming(graft.functions.binarize(col("embedding")),
+            graft.functions.binarize(typedLit(q))).as("dist"))
+        .filter(col("dist") < lit(27.0))
+      def rangeRows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => (r.getLong(0), r.getDouble(1))).sorted.toSeq
+      val rangePlan = hamRange.queryExecution.optimizedPlan
+      assert(!AnnPushdown.scansSource(rangePlan, src),
+        s"bvec:hamming hnsw range did not rewrite:\n$rangePlan")
+      val gotRange = rangeRows(hamRange)
+      spark.conf.set("spark.graft.ann.enabled", "false")
+      val wantRange = rangeRows(hamRange)
+      spark.conf.set("spark.graft.ann.enabled", "true")
+      assert(wantRange.nonEmpty && gotRange == wantRange)
+      // hamming window join over the same registration: per-query
+      // `row_number() <= 10` equals the brute force. The queries come
+      // from a TEMP parquet, so only the corpus side reads `src`.
+      val qsrc = java.nio.file.Files.createTempDirectory("graft_bvq").toFile
+      try {
+        spark.read.parquet(src).filter(col("vec_id") % 100 === 0)
+          .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
+          .write.mode("overwrite").parquet(qsrc.getPath)
+        def hamJoin = {
+          val corpus = spark.read.parquet(src)
+          val queries = spark.read.parquet(qsrc.getPath)
+          queries.crossJoin(corpus)
+            .select(queries("qid"), corpus("vec_id"),
+              graft.functions.bvecHamming(
+                graft.functions.binarize(corpus("embedding")),
+                graft.functions.binarize(queries("qvec"))).as("dist"))
+            .withColumn("rn", row_number().over(
+              org.apache.spark.sql.expressions.Window.partitionBy(col("qid"))
+                .orderBy(col("dist"), col("vec_id"))))
+            .filter(col("rn") <= 10)
+        }
+        def joinRows(df: org.apache.spark.sql.DataFrame) = df.collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
+          .sorted.toSeq
+        val joinPlan = hamJoin.queryExecution.optimizedPlan
+        assert(!AnnPushdown.scansSource(joinPlan, src),
+          s"bvec:hamming hnsw window join did not rewrite:\n$joinPlan")
+        val gotJoin = joinRows(hamJoin)
+        spark.conf.set("spark.graft.ann.enabled", "false")
+        val wantJoin = joinRows(hamJoin)
+        spark.conf.set("spark.graft.ann.enabled", "true")
+        assert(wantJoin.nonEmpty && gotJoin == wantJoin)
+      } finally {
+        Option(qsrc.listFiles()).getOrElse(Array.empty[java.io.File])
+          .foreach(_.delete())
+        qsrc.delete()
+      }
       // jaccard override on the same shared graphs
       AnnPushdown.restore(src, prevReg)
       AnnPushdown.register(src, AnnPushdown.IndexedTable(

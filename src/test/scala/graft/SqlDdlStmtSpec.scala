@@ -9,7 +9,22 @@ import graft.plans.AnnPushdown.scansSource
   * delegation, the execute-once RunnableCommand contract, and EXPLAIN
   * building nothing. The session comes from SparkSpec, which wires
   * spark.sql.extensions=graft.plans.GraftExtensions. */
-class SqlDdlStmtSpec extends SparkSpec {
+class SqlDdlStmtSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
+
+  /** The tests CREATE their indexes (all named `stmtspec_*`) on the
+    * shared `graft_stmtspec_src` under the shared index root and DROP
+    * them at their end, so a test that fails mid-way leaves a manifest
+    * behind, which the restart sweep of a later JVM re-registers. Drop
+    * every such leftover, claim included, before the suite runs. */
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    Option(new File(IndexCatalog.root(spark)).listFiles())
+      .getOrElse(Array.empty[File]).map(_.getName)
+      .filter(_.startsWith("stmtspec_")).sorted.foreach { n =>
+        spark.sql(s"DROP VECTOR INDEX IF EXISTS $n")
+        IndexCatalog.drop(spark, n)
+      }
+  }
 
   private def tmpSrc(n: Int = 50): String = {
     val dir = new File(sys.props("java.io.tmpdir"), "graft_stmtspec_src")

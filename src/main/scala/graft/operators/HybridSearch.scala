@@ -29,15 +29,7 @@ object HybridSearch {
     val deltas = Segments.deltaDirs(segDir, s)
     if (deltas.isEmpty) return spark.emptyDataFrame
     val rows = deltas.map(graft.ParquetCache.read(spark, _)).reduce(_ unionByName _)
-    // round 17: cached LocalRelation tombstones (identical rows; skips
-    // the per-query tombstone read+groupBy job)
-    Segments.tombstoneMaxLocal(spark, segDir, idCol) match {
-      case Some(tombs) =>
-        rows.join(broadcast(tombs), Seq(idCol), "left_outer")
-          .filter(col("_tomb_ver").isNull || col("_tomb_ver") < col("_ver"))
-          .drop("_tomb_ver")
-      case None => rows
-    }
+    Segments.visible(rows, Segments.tombstoneMaxLocalAt(spark, segDir, idCol, s), idCol)
   }
 
   /** Exact-or-approximate top-k over sealed IVF artifact ∪ growing

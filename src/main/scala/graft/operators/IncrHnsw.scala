@@ -160,9 +160,7 @@ object IncrHnsw {
     val genOk = priorGen == st.gen || promotedGen == st.gen
     if (prior.isEmpty || !genOk) {
       // full (re)build: base graphs + a side graph per existing delta
-      if (dataDir.exists()) { def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete() }; rm(dataDir) }
+      if (dataDir.exists()) Segments.del(dataDir)
       // base + every existing delta in ONE job (round 16)
       val segsAll = (f"base-${st.gen}-00000" ->
           graft.ParquetCache.read(spark, s"$segDir/base-${st.gen}")) +:
@@ -252,146 +250,24 @@ object IncrHnsw {
     }
 
   /** Compact the segment store WITHOUT rebuilding graphs: snapshot the
-    * live tombstone versions into the index's `dead/` parquet (those ids
-    * stay resident in the graphs, filtered at search), then fold the
-    * data side. Side graphs are hereby "promoted" — they simply remain
-    * part of the sealed search set. */
+    * live tombstone versions into the artifact's `dead/` parquet (those
+    * ids stay resident in the graphs, filtered at search), then fold the
+    * data side ([[IncrMaint.promoteOnCompact]]). Side graphs are hereby
+    * "promoted" — they simply remain part of the sealed search set. */
   def promoteOnCompact(spark: SparkSession, name: String, segDir: String,
       idCol: String): Unit = synchronized {
-    import graft.index.IndexCatalog
-    val st = Segments.state(segDir)
-    val deadDir = new java.io.File(graftDir(spark, name), "dead")
-    Segments.tombstoneMax(spark, segDir, idCol).foreach { tombs =>
-      val prior = if (deadDir.isDirectory && binOrParquetNonEmpty(deadDir))
-        Some(graft.ParquetCache.read(spark, deadDir.getAbsolutePath)) else None
-      val all = prior.map(_.unionByName(tombs)).getOrElse(tombs)
-        .groupBy(col(idCol)).agg(max(col("_tomb_ver")).as("_tomb_ver"))
-      // write-then-swap: never read and overwrite the same dir in one job
-      val tmp = new java.io.File(deadDir.getParentFile, "dead.tmp")
-      all.write.mode("overwrite").parquet(tmp.getAbsolutePath)
-      def rm(f: java.io.File): Unit = { if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm); f.delete() }
-      if (deadDir.exists()) rm(deadDir)
-      if (!tmp.renameTo(deadDir))
-        throw new java.io.IOException(s"failed to publish $deadDir")
-    }
-    Segments.compact(spark, segDir, idCol)
-    val newSt = Segments.state(segDir)
-    val pm = IndexCatalog.load(spark, name).getOrElse(
-      throw new IllegalStateException(s"no index $name to promote"))
-    // promoted_gen records that this index's graphs (base + sides) cover
-    // the new generation without a rebuild
-    IndexCatalog.commit(spark, name, pm.copy(params =
-      pm.params ++ Map("promoted_gen" -> newSt.gen.toString,
-        "seq" -> newSt.seq.toString)))
+    IncrMaint.promoteOnCompact(spark, name, segDir, idCol,
+      new java.io.File(graftDir(spark, name), "dead"))
   }
 
-  private def binOrParquetNonEmpty(dir: java.io.File): Boolean =
-    Option(dir.listFiles()).getOrElse(Array.empty).exists(_.getName.endsWith(".parquet"))
-
-  /** The visibility snapshot of one (store, index): every tombstone —
-    * the store's live `tombs-<s>` dirs plus the promoted `dead/` parquet
-    * — folded max-per-id into id-sorted primitive arrays (the reference
-    * keeps the same map in memory, crates/index/src/delete.rs:10-75).
-    * Published arrays are never mutated; a newer snapshot copies. */
-  private[graft] final class Tombs(val ids: Array[Long], val vers: Array[Long]) {
-    /** A row of `id` from a graph carrying version `ver` is hidden. */
-    def hides(id: Long, ver: Long): Boolean = {
-      val i = java.util.Arrays.binarySearch(ids, id)
-      i >= 0 && vers(i) >= ver
-    }
-  }
-
-  /** [[Tombs]] with the committed store state they cover. `origin` holds
-    * the rest of what the fold read: the artifact dir, the store
-    * generation's identity and the dead/ fingerprint; `dirsRead` counts
-    * the `tombs-<s>` dirs the fold that built it read. */
-  private[graft] final class TombSnapshot(val gen: Long, val seq: Long,
-      val origin: String, val tombs: Tombs, val dirsRead: Int)
-
-  /** DRIVER-side snapshot cache, one entry per (store, index), pruned
-    * when the store's VERSION disappears (the tupleCache convention).
-    * Freshness is the committed (gen, seq), never mtime — seq strictly
-    * increases per commit, so rapid-fire delete/search sequences can't
-    * alias — plus the snapshot's origin: compaction bumps gen, promote
-    * rewrites dead/, REINDEX moves the artifact dir. */
-  private val tombCache =
-    new java.util.concurrent.ConcurrentHashMap[String, TombSnapshot]()
-
-  /** Fold tombstones max-per-id into `prior`: the dead/ parquet when
-    * `dead` is given, then every `tombs-<s>` dir with afterSeq < s <=
-    * st.seq, all read on the driver. The one fold for both cases: a
-    * snapshot whose origin is unchanged and whose seq advanced folds
-    * only the new dirs; anything else folds dead/ and every committed
-    * dir into an empty snapshot. */
-  private def fold(prior: Tombs, dead: Option[java.io.File], segDir: String,
-      idCol: String, st: Segments.State, afterSeq: Long,
-      origin: String): TombSnapshot = {
-    val m = new scala.collection.mutable.LongMap[Long]()
-    val add = (id: Long, v: Long) =>
-      if (v > m.getOrElse(id, Long.MinValue)) m.update(id, v)
-    dead.foreach(Segments.readIdVersions(_, idCol, "_tomb_ver")(add))
-    val dirsRead = Segments.tombstonesAfter(segDir, idCol, st, afterSeq)(add)
-    new TombSnapshot(st.gen, st.seq, origin, merge(prior, m), dirsRead)
-  }
-
-  /** `prior` with `m`'s versions merged in max-per-id, as new arrays. */
-  private def merge(prior: Tombs,
-      m: scala.collection.mutable.LongMap[Long]): Tombs = {
-    if (m.isEmpty) return prior
-    val ks = m.keys.toArray
-    java.util.Arrays.sort(ks)
-    val (a, av) = (prior.ids, prior.vers)
-    val ids = new Array[Long](a.length + ks.length)
-    val vers = new Array[Long](ids.length)
-    var i = 0; var j = 0; var n = 0
-    while (i < a.length || j < ks.length) {
-      if (j == ks.length || (i < a.length && a(i) < ks(j))) {
-        ids(n) = a(i); vers(n) = av(i); i += 1
-      } else if (i == a.length || ks(j) < a(i)) {
-        ids(n) = ks(j); vers(n) = m(ks(j)); j += 1
-      } else {
-        ids(n) = a(i); vers(n) = math.max(av(i), m(ks(j))); i += 1; j += 1
-      }
-      n += 1
-    }
-    new Tombs(java.util.Arrays.copyOf(ids, n), java.util.Arrays.copyOf(vers, n))
-  }
-
-  /** The snapshot a search of `name` over `segDir` checks: the cached
-    * one when the store has not committed since, else a fold. */
+  /** The visibility snapshot a search of `name` over `segDir` checks: the
+    * store's tombstones plus the artifact's promoted `dead/` parquet
+    * ([[Segments.tombstoneSnapshot]], one entry per (store, index dir)). */
   private[graft] def tombstoneSnapshot(spark: SparkSession, name: String,
-      segDir: String, idCol: String): TombSnapshot = {
-    locally {
-      val it = tombCache.keys()
-      while (it.hasMoreElements) {
-        val key = it.nextElement()
-        val sd = key.substring(0, key.indexOf('|'))
-        if (!new java.io.File(sd, "VERSION").isFile) tombCache.remove(key)
-      }
-    }
-    val dataDir = new java.io.File(graftDir(spark, name))
-    val deadDir = new java.io.File(dataDir, "dead")
-    val st = Segments.state(segDir)
-    val origin = s"${dataDir.getPath}|${Segments.generationId(segDir, st)}|" +
-      IncrMaint.deadFp(deadDir)
-    val key = s"$segDir|${graft.index.IndexCatalog.dir(spark, name)}"
-    val cur = tombCache.get(key)
-    val sameOrigin = cur != null && cur.gen == st.gen && cur.origin == origin
-    if (sameOrigin && cur.seq == st.seq) return cur
-    // fold OUTSIDE the map lock (round-17 advice): compute() would pin
-    // the CHM bin lock for the whole read, blocking concurrent searches
-    // of this store AND unrelated keys hashing to the same bin. A racing
-    // duplicate fold is harmless: put() publishes whichever finishes
-    // last, and the next search folds forward from it.
-    val snap =
-      if (sameOrigin && cur.seq < st.seq)
-        fold(cur.tombs, None, segDir, idCol, st, cur.seq, origin)
-      else fold(new Tombs(Array.emptyLongArray, Array.emptyLongArray),
-        Some(deadDir), segDir, idCol, st, Long.MinValue, origin)
-    tombCache.put(key, snap)
-    snap
-  }
+      segDir: String, idCol: String): Segments.TombSnapshot =
+    Segments.tombstoneSnapshot(segDir, idCol, Segments.state(segDir),
+      Some(graft.index.IndexCatalog.dir(spark, name)),
+      Some(new java.io.File(graftDir(spark, name), "dead")))
 
   /** Search every resident graph (base + promoted + fresh sides), then
     * version-filter: a row from a graph carrying version v is hidden by

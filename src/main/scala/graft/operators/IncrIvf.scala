@@ -250,7 +250,7 @@ object IncrIvf {
     val probes = model.rankLists(rankQ).take(nprobe)
     val scan = graft.ParquetCache.read(spark, dataDir)
       .filter(col("list_id").isin(probes.map(Integer.valueOf).toSeq: _*))
-    val visible = IncrMaint.visible(scan,
+    val visible = Segments.visible(scan,
       IncrMaint.tombstones(spark, name, segDir, idCol), idCol)
     visible.select(col(idCol), distCol.as("dist"))
       .orderBy(col("dist"), col(idCol)).limit(k)

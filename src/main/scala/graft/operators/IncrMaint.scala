@@ -9,28 +9,24 @@ import graft.index.IndexCatalog
  * [[Segments]] store (the reference's optimizer contract,
  * crates/index/src/optimizing/mod.rs:58-104: appends touch only new
  * segments; deletes are tombstone versions; compaction promotes without
- * rebuilding). Used by [[IncrIvf]] and [[IncrQuant]] — [[IncrHnsw]]
- * predates it and keeps its graph-file-specific variant.
+ * rebuilding). Used by [[IncrIvf]], [[IncrQuant]] and [[IncrSparse]];
+ * [[IncrHnsw]] shares its promote, vacuum and delete_threshold policy.
  *
- * Visibility rule (crates/index/src/delete.rs:45-51 analog): a row
- * written at version `_ver` is visible unless a tombstone for its id
- * exists at `_tomb_ver >= _ver`. Live tombstones come from the store;
- * compaction snapshots them into the index's `dead/` parquet BEFORE
- * [[Segments.compact]] deletes them (promote-on-compact), so visibility
- * survives the store folding its history.
+ * Visibility follows [[Segments.visible]]. Live tombstones come from the
+ * store; compaction snapshots them into the index's `dead/` parquet
+ * BEFORE [[Segments.compact]] deletes them (promote-on-compact), so
+ * visibility survives the store folding its history.
  */
 object IncrMaint {
 
   def deadDir(spark: SparkSession, name: String): java.io.File =
     new java.io.File(IndexCatalog.dir(spark, name), "dead")
 
-  private def deadFrame(spark: SparkSession, name: String): Option[DataFrame] = {
-    val dd = deadDir(spark, name)
-    if (dd.isDirectory && Option(dd.listFiles()).getOrElse(Array.empty)
-        .exists(_.getName.endsWith(".parquet")))
+  /** The promoted-dead parquet under `dd`, if it holds any file. */
+  private def deadFrame(spark: SparkSession, dd: java.io.File): Option[DataFrame] =
+    if (Option(dd.listFiles()).getOrElse(Array.empty).exists(_.getName.endsWith(".parquet")))
       Some(graft.ParquetCache.read(spark, dd.getAbsolutePath))
     else None
-  }
 
   /** (seq, dir) of committed deltas with seq > afterSeq — the shared
     * shape of every incremental family's "what is new" question
@@ -42,64 +38,12 @@ object IncrMaint {
       (new java.io.File(dd).getName.stripPrefix("delta-").toLong, dd)
     }.filter(_._1 > afterSeq)
 
-  /** Promoted-dead ∪ live tombstones, max version per id.
-    *
-    * Round-17 optimization: the merged set is driver-cached as
-    * LocalRelation rows keyed on the committed (gen, seq) plus a dead/
-    * content fingerprint — the IncrHnsw round-16 tombstone-map
-    * convention extended to the IncrMaint families (IncrIvf, IncrQuant,
-    * IncrSparse searches each paid a parquet read + union + groupBy job
-    * per query for an immutable-per-commit set). Every Segments commit
-    * bumps seq and every promote rewrites dead/, so freshness is exact;
-    * the downstream broadcast join is unchanged — identical rows, and
-    * memory equals what that join already broadcast per query. */
-  private val tombCache = new graft.LruCache[
-    String, (String, Option[(Array[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType)])](1024)
-
-  /** Content fingerprint of a promoted-dead dir: file count plus a hash
-    * of each file's name, length and mtime. */
-  private[operators] def deadFp(dd: java.io.File): String = {
-    val fs = Option(dd.listFiles()).getOrElse(Array.empty)
-    var h = 0L
-    fs.foreach(f => h += f.getName.hashCode.toLong * 1000003L +
-      f.length() * 31L + f.lastModified())
-    s"${fs.length}:$h"
-  }
-
+  /** Promoted-dead ∪ live tombstones, max version per id: the index's
+    * [[Segments.tombstoneSnapshot]] as a frame. */
   def tombstones(spark: SparkSession, name: String, segDir: String,
-      idCol: String): Option[DataFrame] = {
-    val st = Segments.state(segDir)
-    val key = IndexCatalog.dir(spark, name) + "|" + segDir + "|" + idCol
-    val fp = s"${st.gen}:${st.seq}:${deadFp(deadDir(spark, name))}"
-    val cached = tombCache.get(key)
-    val v = if (cached != null && cached._1 == fp) cached._2
-    else {
-      val dead = deadFrame(spark, name)
-      val live = Segments.tombstoneMaxAt(spark, segDir, idCol, st)
-      val merged = (dead, live) match {
-        case (Some(a), Some(b)) => Some(a.unionByName(b)
-          .groupBy(col(idCol)).agg(max(col("_tomb_ver")).as("_tomb_ver")))
-        case (a, b) => a.orElse(b)
-      }
-      val computed = merged.map(df => (df.collect(), df.schema))
-      tombCache.put(key, (fp, computed))
-      computed
-    }
-    v.map { case (rows, schema) =>
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema) }
-  }
-
-  /** Version-filter a scan carrying `_ver` against the broadcast
-    * tombstones (rows are data, not graph candidates — filtering BEFORE
-    * top-k needs no over-fetch). */
-  def visible(scan: DataFrame, tombs: Option[DataFrame], idCol: String): DataFrame =
-    tombs match {
-      case Some(t) => scan.join(broadcast(t), Seq(idCol), "left_outer")
-        .filter(col("_tomb_ver").isNull || col("_tomb_ver") < col("_ver"))
-        .drop("_tomb_ver")
-      case None => scan
-    }
+      idCol: String): Option[DataFrame] =
+    Segments.tombstoneSnapshot(segDir, idCol, Segments.state(segDir),
+      Some(IndexCatalog.dir(spark, name)), Some(deadDir(spark, name))).frame(spark)
 
   /** Reference `delete_threshold` analog (crates/base/src/index.rs:243-263
     * — the background optimizer compacts a segment once its deleted
@@ -244,17 +188,22 @@ object IncrMaint {
     * tombstones into `dead/` (write-then-rename publish), fold the data
     * side, record the promoted generation on the manifest. */
   def promoteOnCompact(spark: SparkSession, name: String, segDir: String,
-      idCol: String): Unit = synchronized {
-    val dd = deadDir(spark, name)
+      idCol: String): Unit =
+    promoteOnCompact(spark, name, segDir, idCol, deadDir(spark, name))
+
+  /** [[promoteOnCompact]] with the promoted-dead parquet at `dd` (IncrHnsw
+    * keeps it under the artifact dir, the other families under the index
+    * dir). */
+  def promoteOnCompact(spark: SparkSession, name: String, segDir: String,
+      idCol: String, dd: java.io.File): Unit = synchronized {
     Segments.tombstoneMax(spark, segDir, idCol).foreach { tombs =>
-      val all = deadFrame(spark, name)
+      val all = deadFrame(spark, dd)
         .map(_.unionByName(tombs)).getOrElse(tombs)
         .groupBy(col(idCol)).agg(max(col("_tomb_ver")).as("_tomb_ver"))
+      // write-then-swap: never read and overwrite the same dir in one job
       val tmp = new java.io.File(dd.getParentFile, "dead.tmp")
       all.write.mode("overwrite").parquet(tmp.getAbsolutePath)
-      def rm(f: java.io.File): Unit = { if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm); f.delete() }
-      if (dd.exists()) rm(dd)
+      if (dd.exists()) Segments.del(dd)
       if (!tmp.renameTo(dd))
         throw new java.io.IOException(s"failed to publish $dd")
     }
@@ -262,6 +211,8 @@ object IncrMaint {
     val newSt = Segments.state(segDir)
     val pm = IndexCatalog.load(spark, name).getOrElse(
       throw new IllegalStateException(s"no index $name to promote"))
+    // promoted_gen records that the artifact covers the new generation
+    // without a rebuild
     IndexCatalog.commit(spark, name, pm.copy(params =
       pm.params ++ Map("promoted_gen" -> newSt.gen.toString,
         "seq" -> newSt.seq.toString)))

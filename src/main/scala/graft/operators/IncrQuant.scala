@@ -128,7 +128,7 @@ object IncrQuant {
       s"index $name is ${pm.kind}, not ${kind(quant)}")
     val scan = graft.ParquetCache.read(spark, IndexCatalog.dataDir(spark, name))
     val tombs = IncrMaint.tombstones(spark, name, segDir, idCol)
-    val vis = IncrMaint.visible(scan, tombs, idCol)
+    val vis = Segments.visible(scan, tombs, idCol)
     Rerank.twoStage(vis, idCol, "vec", q, k, window) {
       vis.select(col(idCol),
         quant.load(pm).score(col("codes"), q).as("approx_dist"))

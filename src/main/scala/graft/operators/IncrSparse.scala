@@ -119,7 +119,7 @@ object IncrSparse {
     val buckets = queryTerms.map(_._1 % SparseSearch.TokenBuckets).distinct
     val postings = graft.ParquetCache.read(spark, dataDir)
       .filter(col("bucket").isin(buckets.map(Integer.valueOf): _*))
-    val vis = IncrMaint.visible(postings,
+    val vis = Segments.visible(postings,
       IncrMaint.tombstones(spark, name, segDir, idCol), idCol)
     SparseSearch.search(vis, idCol, queryTerms, k)
   }

@@ -2,8 +2,13 @@ package graft.operators
 
 import java.io.File
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /**
  * Incremental table maintenance — the Spark shape of the reference's
@@ -151,9 +156,9 @@ object Segments {
   def tombstoneMax(spark: SparkSession, dir: String, idCol: String): Option[DataFrame] =
     tombstoneMaxAt(spark, dir, idCol, state(dir))
 
-  /** [[tombstoneMax]] pinned to an explicitly captured state — callers
-    * that must observe one consistent snapshot across several reads
-    * (REINDEX folds) pass the state they captured. */
+  /** [[tombstoneMax]] pinned to an explicitly captured state. The Spark
+    * form of [[tombstoneSnapshot]]: promote's input, and the reference
+    * the specs compare the snapshot against. */
   def tombstoneMaxAt(spark: SparkSession, dir: String, idCol: String,
       s: State): Option[DataFrame] = {
     val tombDirs = listDirs(dir, "tombs-", s)
@@ -166,64 +171,66 @@ object Segments {
     * parquet files, which carry the writing job's unique id. A store
     * deleted and re-initialised at the same path reuses (gen, seq)
     * numbers but never these names. */
-  private[graft] def generationId(dir: String, s: State): Int =
+  private def generationId(dir: String, s: State): Int =
     Option(new File(dir, s"base-${s.gen}").list()).getOrElse(Array.empty[String])
       .sorted.mkString(",").hashCode
 
-  /** Driver-side read of the tombstones committed after `afterSeq`: every
-    * (id, _ver) pair of the `tombs-<s>` dirs with afterSeq < s <= st.seq,
-    * passed to `f`, with no Spark job. Committed tombs dirs are immutable
-    * (a later commit only adds dirs; compaction bumps the gen and removes
-    * them all), so a reader that has folded everything up to some seq
-    * needs only the dirs after it. An id may arrive once per dir it was
-    * tombstoned in; callers keep the max version. Returns the number of
-    * dirs read. */
-  def tombstonesAfter(dir: String, idCol: String, st: State, afterSeq: Long)
-      (f: (Long, Long) => Unit): Int = {
-    val dirs = listDirs(dir, "tombs-", st)
-      .filter(new File(_).getName.stripPrefix("tombs-").toLong > afterSeq)
-    dirs.foreach(d => readIdVersions(new File(d), idCol, "_ver")(f))
-    dirs.length
-  }
+  /** The integral Spark types a tombstone id or version may have, narrow
+    * to wide — a union of files of two of them widens as `unionByName`
+    * would. */
+  private val Integral: Seq[DataType] = Seq(ByteType, ShortType, IntegerType, LongType)
+
+  private def wider(a: StructField, b: StructField): StructField =
+    if (Integral.indexOf(b.dataType) > Integral.indexOf(a.dataType)) b else a
 
   /** Read the (id, version) columns of every parquet file under `dir` on
     * the driver through parquet-hadoop (the footer-read precedent of
-    * [[graft.index.IndexCatalog.footerRows]]). INT32 and INT64 columns
-    * read as long, as `cast("long")` would; any other physical type
+    * [[graft.index.IndexCatalog.footerRows]]), passing each pair to `f`
+    * as longs, as `cast("long")` would. Both columns must be byte, short,
+    * int or long in the Spark schema the footer stores; anything else
     * throws, naming the file and the column. A row whose id or version is
-    * null hides nothing and is skipped. */
+    * null hides nothing and is skipped. Returns the id's field as Spark
+    * reads it (the widest over the files), or None when there is no
+    * file. */
   private[graft] def readIdVersions(dir: File, idCol: String, verCol: String)
-      (f: (Long, Long) => Unit): Unit = {
+      (f: (Long, Long) => Unit): Option[StructField] = {
+    import org.apache.hadoop.fs.Path
     import org.apache.parquet.column.impl.ColumnReadStoreImpl
     import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
-    import org.apache.parquet.schema.{MessageType, PrimitiveType, Type}
-    import PrimitiveType.PrimitiveTypeName.{INT32, INT64}
+    import org.apache.parquet.schema.MessageType
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT32
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
     import scala.jdk.CollectionConverters._
     val files = Option(dir.listFiles()).getOrElse(Array.empty)
       .filter(p => p.isFile && p.getName.endsWith(".parquet") &&
         !p.getName.startsWith(".") && !p.getName.startsWith("_"))
-    if (files.isEmpty) return
     val conf = new org.apache.hadoop.conf.Configuration()
-    files.foreach { p =>
-      val r = graft.ParquetCache.openReader(conf,
-        new org.apache.hadoop.fs.Path(p.getAbsolutePath))
+    files.map { p =>
+      val path = new Path(p.getAbsolutePath)
+      val r = graft.ParquetCache.openReader(conf, path)
       try {
-        val meta = r.getFooter.getFileMetaData
-        val fields = meta.getSchema.getFields.asScala
+        val schema = ParquetFileFormat.readSchemaFromFooter(
+          new org.apache.parquet.hadoop.Footer(path, r.getFooter),
+          new ParquetToSparkSchemaConverter(
+            org.apache.spark.sql.internal.SQLConf.get))
         // Spark resolves column names case-insensitively by default
-        def column(name: String): Type = {
-          val t = fields.find(_.getName == name)
-            .orElse(fields.find(_.getName.equalsIgnoreCase(name)))
+        def column(name: String): StructField = {
+          val c = schema.find(_.name == name)
+            .orElse(schema.find(_.name.equalsIgnoreCase(name)))
             .getOrElse(throw new IllegalArgumentException(
               s"$p: no column '$name' in tombstone file"))
-          if (!t.isPrimitive || t.isRepetition(Type.Repetition.REPEATED) ||
-              !Set(INT32, INT64).contains(t.asPrimitiveType.getPrimitiveTypeName))
+          if (!Integral.contains(c.dataType))
             throw new IllegalArgumentException(
-              s"$p: column '${t.getName}' is '$t'; tombstone id and version " +
-                "columns must be INT32 or INT64")
-          t
+              s"$p: column '${c.name}' is ${c.dataType.simpleString}; " +
+                "tombstone id and version columns must be byte, short, int or long")
+          c
         }
-        val proj = new MessageType(meta.getSchema.getName, column(idCol), column(verCol))
+        val (idF, verF) = (column(idCol), column(verCol))
+        val meta = r.getFooter.getFileMetaData
+        val file = meta.getSchema
+        val proj = new MessageType(file.getName,
+          file.getType(file.getFieldIndex(idF.name)),
+          file.getType(file.getFieldIndex(verF.name)))
         r.setRequestedSchema(proj)
         val Seq(idDesc, verDesc) = proj.getColumns.asScala.toSeq
         val idInt = idDesc.getPrimitiveType.getPrimitiveTypeName == INT32
@@ -245,42 +252,169 @@ object Segments {
           }
           pages = r.readNextRowGroup()
         }
+        idF
       } finally r.close()
+    }.reduceOption(wider _)
+  }
+
+  /** Every tombstone a visibility check consults — the store's live
+    * `tombs-<s>` dirs, plus an index's promoted `dead/` parquet — folded
+    * max-per-id into id-sorted primitive arrays (the reference keeps the
+    * same map in memory, crates/index/src/delete.rs:10-75). Published
+    * arrays are never mutated; a newer snapshot copies. */
+  private[graft] final class Tombs(val ids: Array[Long], val vers: Array[Long]) {
+    /** A row of `id` carrying version `ver` is hidden. */
+    def hides(id: Long, ver: Long): Boolean = {
+      val i = java.util.Arrays.binarySearch(ids, id)
+      i >= 0 && vers(i) >= ver
     }
   }
 
-  /** Round-17 optimization: the SEARCH-path form of [[tombstoneMaxAt]] —
-    * a driver-cached LocalRelation of the (id, max _tomb_ver) rows,
-    * keyed on the committed (gen, seq) exactly like IncrHnsw's round-16
-    * tombstone map (never mtime: every commit bumps seq, so rapid
-    * delete→search sees each one; tombs-* dirs are immutable once their
-    * seq is committed). Repeat queries skip the per-query parquet read +
-    * groupBy job; the broadcast join downstream is unchanged, so results
-    * are bit-identical. Memory = the same rows the broadcast join
-    * already shipped per query. Maintenance folds keep calling
-    * [[tombstoneMaxAt]] with their pinned state. */
-  private val tombLocalCache = new graft.LruCache[
-    String, (String, Option[(Array[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType)])](1024)
+  private val NoTombs = new Tombs(Array.emptyLongArray, Array.emptyLongArray)
 
+  /** [[Tombs]] with the committed store state they cover. `origin` holds
+    * the rest of what the fold read: the dead/ dir, the store
+    * generation's identity, the dead/ fingerprint and the id column;
+    * `dirsRead` counts the `tombs-<s>` dirs the fold that built it read;
+    * `idField` is the id as the folded files store it (None when no file
+    * was read). */
+  private[graft] final class TombSnapshot(val gen: Long, val seq: Long,
+      val origin: String, val tombs: Tombs, val dirsRead: Int,
+      val idField: Option[StructField]) {
+    /** The (id, _tomb_ver) rows as a LocalRelation, built on first use. */
+    private lazy val relation: Option[LocalRelation] = idField.map { f =>
+      val id: Long => Any = f.dataType match {
+        case ByteType => _.toByte
+        case ShortType => _.toShort
+        case IntegerType => _.toInt
+        case _ => identity
+      }
+      val schema = StructType(Seq(f.copy(nullable = true),
+        StructField("_tomb_ver", LongType)))
+      LocalRelation(DataTypeUtils.toAttributes(schema),
+        tombs.ids.indices.map(i => InternalRow(id(tombs.ids(i)), tombs.vers(i))))
+    }
+
+    /** The tombstones as a frame — what [[tombstoneMaxAt]] computes, with
+      * fresh attribute ids per call; None when no tombstone file was read. */
+    def frame(spark: SparkSession): Option[DataFrame] =
+      relation.map(r => org.apache.spark.sql.graftshim.Shims.ofRows(spark, r.newInstance()))
+  }
+
+  /** Content fingerprint of a promoted-dead dir: file count plus a hash
+    * of each file's name, length and mtime. */
+  private def deadFp(dd: File): String = {
+    val fs = Option(dd.listFiles()).getOrElse(Array.empty)
+    var h = 0L
+    fs.foreach(f => h += f.getName.hashCode.toLong * 1000003L +
+      f.length() * 31L + f.lastModified())
+    s"${fs.length}:$h"
+  }
+
+  /** DRIVER-side snapshot cache, one entry per (store, owner) — the owner
+    * is an index dir, or none for the bare store — pruned when the
+    * store's VERSION disappears. Freshness is the committed (gen, seq),
+    * never mtime — seq strictly increases per commit, so rapid-fire
+    * delete/search sequences can't alias — plus the snapshot's origin:
+    * compaction bumps gen, a re-initialised store changes the
+    * generation's identity, promote rewrites dead/, REINDEX moves
+    * IncrHnsw's dead/ with its artifact dir. */
+  private val snapshots = new ConcurrentHashMap[String, TombSnapshot]()
+
+  /** Fold tombstones max-per-id: onto `prior` the `tombs-<s>` dirs with
+    * prior.seq < s <= st.seq; with no prior, `dead` (when given) and
+    * every committed dir. All read on the driver, with no Spark job. */
+  private def fold(prior: Option[TombSnapshot], dead: Option[File],
+      segDir: String, idCol: String, st: State, origin: String): TombSnapshot = {
+    val m = new scala.collection.mutable.LongMap[Long]()
+    val add = (id: Long, v: Long) =>
+      if (v > m.getOrElse(id, Long.MinValue)) m.update(id, v)
+    val after = prior.fold(Long.MinValue)(_.seq)
+    val dirs = tombDirs(segDir, st)
+      .filter(new File(_).getName.stripPrefix("tombs-").toLong > after)
+    val fields = (if (prior.isEmpty) dead.flatMap(readIdVersions(_, idCol, "_tomb_ver")(add))
+      else prior.flatMap(_.idField)) ++
+      dirs.flatMap(d => readIdVersions(new File(d), idCol, "_ver")(add))
+    new TombSnapshot(st.gen, st.seq, origin,
+      merge(prior.fold(NoTombs)(_.tombs), m), dirs.length, fields.reduceOption(wider _))
+  }
+
+  /** `prior` with `m`'s versions merged in max-per-id, as new arrays. */
+  private def merge(prior: Tombs, m: scala.collection.mutable.LongMap[Long]): Tombs = {
+    if (m.isEmpty) return prior
+    val ks = m.keys.toArray
+    java.util.Arrays.sort(ks)
+    val (a, av) = (prior.ids, prior.vers)
+    val ids = new Array[Long](a.length + ks.length)
+    val vers = new Array[Long](ids.length)
+    var i = 0; var j = 0; var n = 0
+    while (i < a.length || j < ks.length) {
+      if (j == ks.length || (i < a.length && a(i) < ks(j))) {
+        ids(n) = a(i); vers(n) = av(i); i += 1
+      } else if (i == a.length || ks(j) < a(i)) {
+        ids(n) = ks(j); vers(n) = m(ks(j)); j += 1
+      } else {
+        ids(n) = a(i); vers(n) = math.max(av(i), m(ks(j))); i += 1; j += 1
+      }
+      n += 1
+    }
+    new Tombs(java.util.Arrays.copyOf(ids, n), java.util.Arrays.copyOf(vers, n))
+  }
+
+  /** The tombstone snapshot of store `segDir` at exactly `st`, as seen by
+    * `owner` (an index dir, whose promoted-dead parquet is `dead`; None
+    * for the bare store): the cached one when it is at `st`; else a
+    * fold — forward from the cached one when only the store's seq
+    * advanced, from scratch otherwise. A request older than the cached
+    * snapshot (a pinned read) folds from scratch and leaves the newer
+    * entry in place. */
+  private[graft] def tombstoneSnapshot(segDir: String, idCol: String, st: State,
+      owner: Option[String], dead: Option[File]): TombSnapshot = {
+    locally {
+      val it = snapshots.keys()
+      while (it.hasMoreElements) {
+        val key = it.nextElement()
+        if (!versionFile(key.substring(0, key.indexOf('|'))).isFile)
+          snapshots.remove(key)
+      }
+    }
+    val origin = s"${dead.fold("")(_.getPath)}|${generationId(segDir, st)}|" +
+      s"${dead.fold("")(deadFp)}|$idCol"
+    val key = s"${new File(segDir).getAbsolutePath}|${owner.getOrElse("")}"
+    val cur = snapshots.get(key)
+    val sameOrigin = cur != null && cur.gen == st.gen && cur.origin == origin
+    if (sameOrigin && cur.seq == st.seq) return cur
+    if (sameOrigin && cur.seq > st.seq)
+      return fold(None, dead, segDir, idCol, st, origin)
+    // fold OUTSIDE the map lock: compute() would pin the CHM bin lock for
+    // the whole read, blocking concurrent searches of this store AND
+    // unrelated keys hashing to the same bin. A racing duplicate fold is
+    // harmless: put() publishes whichever finishes last, and the next
+    // request folds forward from it.
+    val snap = fold(Option(cur).filter(_ => sameOrigin), dead, segDir, idCol, st, origin)
+    snapshots.put(key, snap)
+    snap
+  }
+
+  /** [[tombstoneMaxAt]] served from the bare store's snapshot. */
   def tombstoneMaxLocalAt(spark: SparkSession, dir: String, idCol: String,
-      s: State): Option[DataFrame] = {
-    val key = new File(dir).getAbsolutePath + "|" + idCol
-    val fp = s"${s.gen}:${s.seq}"
-    val cached = tombLocalCache.get(key)
-    val v = if (cached != null && cached._1 == fp) cached._2
-    else {
-      val computed = tombstoneMaxAt(spark, dir, idCol, s)
-        .map(df => (df.collect(), df.schema))
-      tombLocalCache.put(key, (fp, computed))
-      computed
-    }
-    v.map { case (rows, schema) =>
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema) }
-  }
+      s: State): Option[DataFrame] =
+    tombstoneSnapshot(dir, idCol, s, None, None).frame(spark)
 
   def tombstoneMaxLocal(spark: SparkSession, dir: String, idCol: String): Option[DataFrame] =
     tombstoneMaxLocalAt(spark, dir, idCol, state(dir))
+
+  /** The visibility rule (crates/index/src/delete.rs:45-51 analog): a row
+    * written at version `_ver` stays unless a tombstone of its id has
+    * `_tomb_ver >= _ver`. Filters rows, not graph candidates, so it runs
+    * before any top-k with no over-fetch. */
+  def visible(rows: DataFrame, tombs: Option[DataFrame], idCol: String): DataFrame =
+    tombs match {
+      case Some(t) => rows.join(broadcast(t), Seq(idCol), "left_outer")
+        .filter(col("_tomb_ver").isNull || col("_tomb_ver") < col("_ver"))
+        .drop("_tomb_ver")
+      case None => rows
+    }
 
   /** Snapshot read: base ∪ committed deltas, minus rows hidden by a
     * tombstone of the same id at version >= the row's version. */
@@ -295,15 +429,7 @@ object Segments {
     require(s.gen >= 0, s"no committed generation under $dir")
     val parts = s"$dir/base-${s.gen}" +: deltaDirs(dir, s)
     val rows = parts.map(graft.ParquetCache.read(spark, _)).reduce(_ unionByName _)
-    // round 17: the cached LocalRelation form — pinned to the SAME
-    // captured state, so folds still see one consistent snapshot
-    tombstoneMaxLocalAt(spark, dir, idCol, s) match {
-      case None => rows
-      case Some(tombs) =>
-        rows.join(broadcast(tombs), Seq(idCol), "left_outer")
-          .filter(col("_tomb_ver").isNull || col("_tomb_ver") < col("_ver"))
-          .drop("_tomb_ver")
-    }
+    visible(rows, tombstoneMaxLocalAt(spark, dir, idCol, s), idCol)
   }
 
   /** Reference `sealing_secs` analog (crates/base/src/index.rs:248-264:
@@ -364,7 +490,7 @@ object Segments {
       .foreach(del)
   }
 
-  private def del(f: File): Unit = {
+  private[operators] def del(f: File): Unit = {
     if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(del)
     f.delete()
   }

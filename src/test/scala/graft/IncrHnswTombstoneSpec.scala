@@ -13,8 +13,10 @@ import graft.operators.{IncrHnsw, Segments}
   * seeded mix of writes and maintenance it must equal the Spark reference
   * (live tombstones ∪ promoted dead/, max version per id), must have read
   * exactly the dirs the step added (or every dir after a generation,
-  * dead/ or artifact-dir change), and `search(exact = true)` must equal
-  * brute force over the visible rows. */
+  * dead/ or artifact-dir change), the bare store's snapshot frame must
+  * equal [[Segments.tombstoneMax]], and `search(exact = true)` must equal
+  * brute force over the rows that reference leaves visible. A read pinned
+  * to an older state keeps that state after the cache moved past it. */
 class IncrHnswTombstoneSpec extends SparkSpec {
   private val Dims = 8
   private val K = 10
@@ -33,13 +35,33 @@ class IncrHnswTombstoneSpec extends SparkSpec {
       .getOrElse(Nil)
   }
 
+  /** Exact top-K over the store's visible rows, with visibility computed
+    * here from the Spark reference [[Segments.tombstoneMax]]. */
   private def bruteForce(segDir: String, q: Array[Float]): Seq[(Long, Double)] = {
     import spark.implicits._
-    Segments.read(spark, segDir, "id")
+    val st = Segments.state(segDir)
+    val rows = (s"$segDir/base-${st.gen}" +: Segments.deltaDirs(segDir, st))
+      .map(spark.read.parquet(_)).reduce(_ unionByName _)
+    val visible = Segments.tombstoneMaxAt(spark, segDir, "id", st).fold(rows) { t =>
+      rows.join(t, Seq("id"), "left_outer")
+        .filter(col("_tomb_ver").isNull || col("_tomb_ver") < col("_ver"))
+    }
+    visible
       .select(col("id").cast("long").as("id"),
         graft.functions.l2sq(col("embedding"), typedLit(q)).as("dist"))
       .orderBy(col("dist"), col("id")).limit(K)
       .as[(Long, Double)].collect().toSeq
+  }
+
+  /** The bare store's driver snapshot frame against the Spark reference:
+    * same schema, same rows. */
+  private def assertBareFrame(segDir: String, step: String): Unit = {
+    def rows(df: DataFrame) = df.collect().map(r => (r.get(0), r.get(1))).toSeq
+      .sortBy(_._1.asInstanceOf[Number].longValue)
+    val local = Segments.tombstoneMaxLocal(spark, segDir, "id")
+    val planned = Segments.tombstoneMax(spark, segDir, "id")
+    assert(local.map(_.schema) == planned.map(_.schema), s"$step: bare frame schema")
+    assert(local.map(rows) == planned.map(rows), s"$step: bare frame rows")
   }
 
   private def exactSearch(name: String, segDir: String,
@@ -138,6 +160,7 @@ class IncrHnswTombstoneSpec extends SparkSpec {
         case _ =>
           assert(snap.dirsRead == dirs.size, s"$step: a full fold reads every committed dir")
       }
+      assertBareFrame(segDir, step)
       prior = snap
     }
     try {
@@ -151,6 +174,18 @@ class IncrHnswTombstoneSpec extends SparkSpec {
           s"$step: exact search differs from brute force over the visible rows")
       }
       assert(prior.tombs.ids.nonEmpty)
+      if (intIds)
+        assert(Segments.tombstoneMaxLocal(spark, segDir, "id").get.schema("id").dataType ==
+          org.apache.spark.sql.types.IntegerType)
+      // a pinned read keeps its state after the cache moved past it
+      def ids(df: DataFrame): Set[Long] =
+        df.select(col("id").cast("long")).as[Long].collect().toSet
+      val pinned = Segments.state(segDir)
+      val victim = ids(Segments.readAt(spark, segDir, "id", pinned)).min
+      Segments.delete(spark, segDir, idFrame(Seq(victim)), "id")
+      assert(!ids(Segments.read(spark, segDir, "id")).contains(victim))
+      assert(ids(Segments.readAt(spark, segDir, "id", pinned)).contains(victim),
+        "readAt(st) must not serve the newer cached snapshot")
     } finally IndexCatalog.drop(spark, name)
   }
 

@@ -11,6 +11,10 @@ import graft.operators.Segments
   * self-join like independent reads). */
 class MetadataCacheSpec extends SparkSpec {
 
+  private def rmTree(f: java.io.File): Unit = {
+    Option(f.listFiles()).getOrElse(Array.empty).foreach(rmTree); f.delete()
+  }
+
   private def freshDir(tag: String): String = {
     val d = Files.createTempDirectory(s"graft_mdc_$tag").toFile
     d.deleteOnExit(); d.getAbsolutePath
@@ -65,6 +69,16 @@ class MetadataCacheSpec extends SparkSpec {
     val visible = Segments.read(spark, segDir, "vec_id")
       .select(col("vec_id")).collect().map(_.getLong(0)).toSet
     assert(visible == (0L until 20L).toSet -- Set(3L, 5L, 7L))
+    // a store re-initialised at the same path reaches the same committed
+    // (gen, seq) with other tombstones: none of the old ones may show
+    rmTree(new java.io.File(segDir))
+    Segments.init(spark, segDir,
+      spark.range(20).select(col("id").as("vec_id"), col("id").as("x")), "vec_id")
+    Segments.delete(spark, segDir, Seq(1L).toDF("vec_id"), "vec_id")
+    Segments.delete(spark, segDir, Seq(9L).toDF("vec_id"), "vec_id")
+    val reinit = Segments.read(spark, segDir, "vec_id")
+      .select(col("vec_id")).collect().map(_.getLong(0)).toSet
+    assert(reinit == (0L until 20L).toSet -- Set(1L, 9L))
   }
 
   test("IncrMaint.tombstones: dead-dir change invalidates the merged cache") {
@@ -92,6 +106,15 @@ class MetadataCacheSpec extends SparkSpec {
     val t2 = IncrMaint.tombstones(s, name, segDir, "vec_id").get
       .collect().map(_.getLong(0)).toSet
     assert(t2 == Set(2L, 4L))
+    // the store re-initialised at the same path reaches the same (gen,
+    // seq) beside the same dead/ set: only its own tombstones are live
+    rmTree(new java.io.File(segDir))
+    Segments.init(s, segDir,
+      s.range(10).select(col("id").as("vec_id"), col("id").as("x")), "vec_id")
+    Segments.delete(s, segDir, Seq(6L).toDF("vec_id"), "vec_id")
+    val t3 = IncrMaint.tombstones(s, name, segDir, "vec_id").get
+      .collect().map(_.getLong(0)).toSet
+    assert(t3 == Set(4L, 6L))
   }
 
   test("ParquetCache: vanished path is never served from cache (read-through)") {
@@ -100,27 +123,10 @@ class MetadataCacheSpec extends SparkSpec {
     assert(ParquetCache.read(spark, dir).count() == 4)
     // delete the whole tree: the next read must NOT serve the cached
     // relation (non-local/vanished roots bypass the cache entirely)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(rm); f.delete()
-    }
-    rm(new java.io.File(dir))
+    rmTree(new java.io.File(dir))
     intercept[Exception] { ParquetCache.read(spark, dir).count() }
     // recreate with different content: served fresh, not the old listing
     spark.range(7).write.mode("overwrite").parquet(dir)
     assert(ParquetCache.read(spark, dir).count() == 7)
-  }
-
-  test("LruCache: over-cap insertion evicts eldest only; recent access survives") {
-    val c = new LruCache[Int, String](4)
-    (1 to 4).foreach(i => c.put(i, s"v$i"))
-    c.get(1) // refresh 1 - the eldest is now 2
-    c.put(5, "v5")
-    assert(c.size() == 4)
-    assert(c.get(2) == null, "eldest unaccessed entry evicted")
-    assert(c.get(1) == "v1", "recently-accessed entry survives over-cap insert")
-    assert(c.get(5) == "v5")
-    // a burst past the cap keeps the hot entry alive when re-touched
-    (10 to 12).foreach { i => c.put(i, s"v$i"); c.get(1) }
-    assert(c.get(1) == "v1")
   }
 }

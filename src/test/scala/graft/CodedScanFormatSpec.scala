@@ -4,11 +4,13 @@ import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.index.IndexCatalog
+import graft.functions.svecFromDense
 import graft.operators._
 
 /** Format and result lock for the flat, IVF and incremental coded
   * scans — the [[CodedFlat]] / [[CodedIvf]] / [[IncrQuant]] counterpart
-  * of [[CodedHnswFormatSpec]].
+  * of [[CodedHnswFormatSpec]] — and for the typed (bvec / f16 / svec)
+  * IVF artifacts of [[TypedAnn]] and [[IncrIvf]].
   *
   * Per kind it locks the manifest (kind, params, float keys), the
   * SHA-256 of the persisted (id, codes) rows in id order, and the SHA-256
@@ -17,7 +19,13 @@ import graft.operators._
   * The locked values were produced by the per-codec Sq8/Pq/Rabitq,
   * IvfSq/IvfPq and IncrQuant implementations that preceded the shared
   * codec over this same fixture, so artifacts already on disk stay
-  * readable and their manifests reusable without a rebuild. */
+  * readable and their manifests reusable without a rebuild.
+  *
+  * The typed kinds lock the (id, payload, list_id[, _ver]) rows, and
+  * their "window" and "exact" digests are nprobe 1 and nprobe = nlist:
+  * the single-query search, the batch search and the KNN join under
+  * every metric of the family (the incremental kinds: their one search)
+  * — the exact digest also carries the l2 and dot range scans' rows. */
 class CodedScanFormatSpec extends SparkSpec {
   import spark.implicits._
 
@@ -76,6 +84,7 @@ class CodedScanFormatSpec extends SparkSpec {
     case i: Int => out.writeInt(i)
     case f: Float => out.writeInt(java.lang.Float.floatToRawIntBits(f))
     case d: Double => out.writeLong(java.lang.Double.doubleToRawLongBits(d))
+    case s: Short => out.writeShort(s)
     case b: Array[Byte] => out.writeInt(b.length); out.write(b)
     case s: scala.collection.Seq[_] => out.writeInt(s.length); s.foreach(put(out, _))
     case r: Row => (0 until r.length).foreach(i => put(out, r.get(i)))
@@ -83,41 +92,133 @@ class CodedScanFormatSpec extends SparkSpec {
 
   /** One artifact kind: its build (-> data dir), the columns of its
     * code digest (sorted by the non-code ones; Nil = the rabitq4 block
-    * layout), and its search at window 1 or in exact mode. */
+    * layout), and the result frames of its searches at window 1 or in
+    * exact mode, digested in order. */
   private case class Case(kind: String, build: () => String,
-      codeCols: Seq[String], search: (String, Array[Float], Boolean) => DataFrame)
+      codeCols: Seq[String], topk: (String, Boolean) => Seq[DataFrame])
+
+  /** Per-query (id, dist) searches over the 3 fixed queries. */
+  private def perQuery(search: (String, Array[Float], Boolean) => DataFrame)
+      : (String, Boolean) => Seq[DataFrame] = (dir, exact) =>
+    queries.map { q =>
+      val df = search(dir, q, exact)
+      df.select(df.columns.take(2).zip(Seq("long", "double"))
+        .map { case (c, t) => col(c).cast(t) }: _*)
+    }
 
   private def name(kind: String) = s"codedscanspec_$kind"
   private def flat(quant: Quant[Codec]): Case = {
     def ensure() = CodedFlat.ensure(spark, name(quant.name), src, srcPath,
       "id", "vec", quant)
     Case(quant.name, () => ensure()._2, Seq("id", quant.codeCol),
-      (dir, q, exact) => CodedFlat.search(ParquetCache.read(spark, dir), "id",
-        "vec", q, K, ensure()._1, window = Some(if (exact) 0 else 1)))
+      perQuery { (dir, q, exact) => CodedFlat.search(ParquetCache.read(spark, dir), "id",
+        "vec", q, K, ensure()._1, window = Some(if (exact) 0 else 1)) })
   }
   private def ivf(quant: ListQuant[ListCodec]): Case = {
     def ensure() = CodedIvf.ensure(spark, name("ivf" + quant.name), src,
       srcPath, "id", "vec", nlist = 4, quant)
     Case("ivf" + quant.name, () => ensure()._2, Seq("id", "list_id", "codes"),
-      (dir, q, exact) => CodedIvf.search(spark, dir, ensure()._1, "id", "vec",
-        q, K, nprobe = if (exact) 4 else 2, window = Some(if (exact) 0 else 1)))
+      perQuery { (dir, q, exact) => CodedIvf.search(spark, dir, ensure()._1,
+        "id", "vec", q, K, nprobe = if (exact) 4 else 2,
+        window = Some(if (exact) 0 else 1)) })
   }
   private def incr(quant: Quant[Codec]): Case = {
     val kind = s"${quant.name}_incr"
     Case(kind, () => IncrQuant.ensure(spark, name(kind), segDir, "id", "vec", quant),
-      Seq("id", "_ver", "codes"), (_, q, exact) => IncrQuant.search(spark,
-        name(kind), segDir, "id", q, K, quant, window = if (exact) 0 else 1))
+      Seq("id", "_ver", "codes"), perQuery { (_, q, exact) => IncrQuant.search(
+        spark, name(kind), segDir, "id", q, K, quant,
+        window = if (exact) 0 else 1) })
+  }
+
+  /** The typed IVF artifacts at nlist 4: bvec and f16 over the dense
+    * source, svec over svec_from_dense(vec). */
+  private val TypedNlist = 4
+  private val typedQueries: Seq[(Long, Array[Float])] =
+    queries.zipWithIndex.map { case (q, i) => (i.toLong, q) }
+  private def typedSrc(family: String): DataFrame =
+    if (family == "svec") src.select(col("id"), svecFromDense(col("vec")).as("sv"))
+    else src
+  private def typedEnsure(family: String): (IvfIndex.Model, String) = {
+    val n = name(s"ivf_$family")
+    family match {
+      case "bvec" => TypedAnn.ensureBvec(spark, n, src, srcPath, "id", "vec", TypedNlist)
+      case "f16" => TypedAnn.ensureF16(spark, n, src, srcPath, "id", "vec", TypedNlist)
+      case "svec" => TypedAnn.ensureSvec(spark, n, typedSrc("svec"), srcPath,
+        "id", "sv", TypedNlist)
+    }
+  }
+  private def typedSearch(family: String, dir: String, m: IvfIndex.Model,
+      q: Array[Float], nprobe: Int, metric: String): DataFrame = family match {
+    case "bvec" => TypedAnn.searchBvec(spark, dir, m, "id", q, K, nprobe, metric)
+    case "f16" => TypedAnn.searchF16(spark, dir, m, "id", q, K, nprobe, metric)
+    case "svec" => TypedAnn.searchSvec(spark, dir, m, "id", "sv", q, K, nprobe, metric)
+  }
+  private def typedBatch(family: String, dir: String, m: IvfIndex.Model,
+      nprobe: Int, metric: String): DataFrame = family match {
+    case "bvec" => TypedAnn.batchSearchBvec(spark, dir, m, "id", typedQueries, K,
+      nprobe, metric)
+    case "f16" => TypedAnn.batchSearchF16(spark, dir, m, "id", typedQueries, K,
+      nprobe, metric)
+    case "svec" => TypedAnn.batchSearchSvec(spark, dir, m, "id", "sv",
+      typedQueries, K, nprobe, metric)
+  }
+  /** The l2-family and dot range scans' rows (id, list_id) in id order,
+    * pruned in the densified query space. */
+  private def typedRanges(family: String, dir: String,
+      m: IvfIndex.Model): Seq[DataFrame] = {
+    val (r2, rDot) = if (family == "bvec") (4.0, -5.0) else (20.0, -40.0)
+    val model = IvfIndex.Model("l2", m.centroids)
+    queries.flatMap { q =>
+      val qd = family match {
+        case "bvec" => q.map(x => if (x > 0f) 1f else 0f)
+        case "f16" => q.map(x =>
+          graft.types.Fp16.halfToFloat(graft.types.Fp16.floatToHalf(x)))
+        case _ => q
+      }
+      Seq(TypedAnn.rangeScanL2(spark, dir, model, m.radii, qd, r2),
+        TypedAnn.rangeScanDot(spark, dir, model, m.radii, qd, rDot))
+        .map(_.select(col("id"), col("list_id")).orderBy(col("id")))
+    }
+  }
+  private def typed(family: String, payload: String,
+      metrics: Seq[String]): Case = {
+    val qdf = typedQueries.toDF("qid", "qv")
+    Case(s"ivf_$family", () => typedEnsure(family)._2,
+      Seq("id", payload, "list_id"), { (dir, exact) =>
+        val m = typedEnsure(family)._1
+        val nprobe = if (exact) TypedNlist else 1
+        metrics.flatMap(met => queries.map(q =>
+          typedSearch(family, dir, m, q, nprobe, met))) ++
+        metrics.map(met => typedBatch(family, dir, m, nprobe, met)) ++
+        metrics.map(met => KnnJoin.joinTyped(spark, qdf, "qid", "qv", dir, m,
+          "id", family, K, nprobe, met).orderBy(col("qid"), col("rn"))) ++
+        (if (exact) typedRanges(family, dir, m) else Nil)
+      })
+  }
+  private def typedIncr(family: String, payload: String, metric: String): Case = {
+    val kind = s"ivf_${family}_incr"
+    Case(kind, () => IncrIvf.ensure(spark, name(kind), segDir, "id", "vec",
+        metric, nlist = TypedNlist),
+      Seq("id", "_ver", payload, "list_id"), { (_, exact) =>
+        queries.map(q => IncrIvf.search(spark, name(kind), segDir, "id", q, K,
+          nprobe = if (exact) TypedNlist else 1))
+      })
   }
   private lazy val cases: Map[String, Case] = (Seq(
     flat(Sq8Quant), flat(PqQuant(m = 4)), flat(PqQuant(m = 4, packed = true)),
     flat(RabitqQuant),
     Case("rabitq4", () => Rabitq4.ensure(spark, name("rabitq4"), src, srcPath,
-        "id", "vec")._2, Nil, { (dir, q, exact) =>
+        "id", "vec")._2, Nil, perQuery { (dir, q, exact) =>
       val (model, _) = Rabitq4.ensure(spark, name("rabitq4"), src, srcPath, "id", "vec")
       Rabitq4.search(spark, dir, "id", "vec", q, K, model, window = if (exact) 0 else 1)
     }),
     ivf(Sq8Quant), ivf(PqQuant(m = 4)),
-    incr(Sq8Quant), incr(PqQuant()), incr(RabitqQuant)
+    incr(Sq8Quant), incr(PqQuant()), incr(RabitqQuant),
+    typed("bvec", "bv", Seq("hamming", "jaccard", "dot")),
+    typed("f16", "bits", Seq("l2", "dot", "cos")),
+    typed("svec", "sv", Seq("l2", "dot", "cos")),
+    typedIncr("bvec", "bv", "hamming"), typedIncr("f16", "bits", "f16"),
+    typedIncr("svec", "sv", "svec")
   ).map(c => c.kind -> c)).toMap
 
   // exact mode is codec-independent: one digest for the source table,
@@ -167,7 +268,44 @@ class CodedScanFormatSpec extends SparkSpec {
     ("rabitq_incr", Map("dims" -> "16", "gen" -> "0", "seq" -> "2"),
       Seq("centroid", "rot"),
       "ad0d2e2086346fa6b4d3bf6dd5e82965f4b681709be6a09f06c9786dfa3b9fa2",
-      "826ee1433617209e9ea4326ebd7244e51f2863d11f5fc3a77512a9cf22a0e4ff", IncrExact))
+      "826ee1433617209e9ea4326ebd7244e51f2863d11f5fc3a77512a9cf22a0e4ff", IncrExact),
+    ("ivf_bvec", Map("nlist" -> "4", "probe_cal" -> "cal3", "probe_hint" -> "1",
+        "stats" -> "radii1", "type" -> "bvector"),
+      Seq("radii"),
+      "d5a6f12a618fc6c8c1f265b9a3820f1aa720eaa7cf8e967c35d1ad5d948b5508",
+      "6dfa57b2c3010ca1c6784fe7f519572e5eceeab55de7502033ac7c2af912226c",
+      "4155d0b47e4af71dce091ca5f148b34288b2d5b47fc7a3af5490fd76b6f68a30"),
+    ("ivf_f16", Map("nlist" -> "4", "probe_cal" -> "cal3", "probe_hint" -> "1",
+        "stats" -> "radii1", "type" -> "vecf16"),
+      Seq("radii"),
+      "e2412d7d61ced74483feaf3a97fe4c347aa6b4aa954bedd9bbb28737c2f95f9d",
+      "6317f3075ebc22c7f98bb68b136317ad5d0f2323bcb3a89d122c4ab49810085d",
+      "fdd3c0849935d9df9bb43fac8fb81c2c812dfbfed84b14a61ba5624f8cdcc15f"),
+    ("ivf_svec", Map("nlist" -> "4", "probe_cal" -> "cal3", "probe_hint" -> "1",
+        "stats" -> "radii1", "type" -> "svector"),
+      Seq("radii"),
+      "4a6d931bdf474b125e22f68e350018069dd35e1e34fc3154a2200c5de5e4b145",
+      "dcc4bd73f5eb11a8eac30c74b9daff3cb8a0a76ceb0c3bb5dcf4f1350c2e8fc4",
+      "673151dbff779e6c5f72e86276b558bb96ecb5dfe98cbfebb1a283b728072e70"),
+    ("ivf_bvec_incr", Map("gen" -> "0", "nlist" -> "4", "probe_cal" -> "cal3",
+        "probe_hint" -> "1", "seq" -> "2"),
+      Nil,
+      "a8f44368b6170190bf05ed523a0441e3bbde69a4b907429e97fb7f2bc8609ccd",
+      "d8fb4543ed3fb2c92138d5f2471b13a7b298f32a6d8b77222004ec8cbb101275",
+      "d8fb4543ed3fb2c92138d5f2471b13a7b298f32a6d8b77222004ec8cbb101275"),
+    ("ivf_f16_incr", Map("gen" -> "0", "nlist" -> "4", "probe_cal" -> "cal3",
+        "probe_hint" -> "1", "seq" -> "2"),
+      Nil,
+      "47013672cea1d39a98f42e6ef8757d13fb762c6690f2b553703877d1c70f02c9",
+      "607fd0c543c58be2b6603e941cf64a5be0318d36910268e9538bf268b7b775c7",
+      "607fd0c543c58be2b6603e941cf64a5be0318d36910268e9538bf268b7b775c7"),
+    // svec_from_dense keeps every entry of this (zero-free) fixture, so
+    // its l2 top-k is the dense exact one over the same store
+    ("ivf_svec_incr", Map("gen" -> "0", "nlist" -> "4", "probe_cal" -> "cal3",
+        "probe_hint" -> "1", "seq" -> "2"),
+      Nil,
+      "fdd340e29e2c1b08a5a3c9c4709f3e3622d2d3210379e25fab9cb5a3663e8b80",
+      IncrExact, IncrExact))
 
   for ((kind, params, floatKeys, codesSha, windowSha, exactSha) <- locked)
     test(s"$kind: manifest, codes and top-k are bit-identical to the locked format") {
@@ -182,16 +320,15 @@ class CodedScanFormatSpec extends SparkSpec {
         val coded =
           if (c.codeCols.nonEmpty)
             spark.read.parquet(dir).select(c.codeCols.map(col): _*)
-              .orderBy(c.codeCols.filterNot(Set("codes", "code", "list_id"))
-                .map(col): _*)
+              .orderBy(c.codeCols.filterNot(
+                Set("codes", "code", "list_id", "bv", "bits", "sv")).map(col): _*)
           else spark.read.parquet(s"$dir/blocks")
             .select(col("ids"), col("packed"), col("norms"), col("cosvs"))
             .orderBy(col("ids").getItem(0))
         val codeRows = coded.collect()
         assert(sha(out => codeRows.foreach(put(out, _))) == codesSha, "codes")
         def topk(exact: Boolean) = sha { out =>
-          queries.foreach(q => c.search(dir, q, exact).as[(Long, Double)]
-            .collect().foreach { case (id, d) => put(out, id); put(out, d) })
+          c.topk(dir, exact).foreach(_.collect().foreach(put(out, _)))
         }
         assert(topk(exact = false) == windowSha, "window-1 top-k")
         assert(topk(exact = true) == exactSha, "exact top-k")

@@ -200,7 +200,11 @@ object IndexCatalog {
 
   /** Build-once: reuse a committed artifact for the same source, else run
     * the (expensive) build job. Queries call this; benches call it ahead
-    * of timing — the search path never trains.
+    * of timing — the search path never trains. A committed manifest is
+    * reused only when its kind is `kind` (the kind `build` commits) and
+    * its source, content fingerprint and `requires` params match — two
+    * builds under one name with equal `requires` (pq then pq4, sq8 then
+    * rabitq) never serve each other's artifact.
     *
     * Concurrency contract (hooks.rs:60-106 analog): racing ensure+ensure
     * on one name dedups to ONE build — the loser blocks on the per-index
@@ -208,7 +212,7 @@ object IndexCatalog {
     * manifest; drop-during-ensure waits for the build and then removes it
     * cleanly (or, if the drop wins the lock first, the ensure rebuilds).
     * Either interleaving leaves a consistent catalog, never a torn one. */
-  def ensure(spark: SparkSession, name: String, source: String,
+  def ensure(spark: SparkSession, name: String, source: String, kind: String,
       requires: Map[String, String] = Map.empty)
       (build: String => Manifest): Manifest = {
     // Lock-free fresh fast path (round-17 optimization): when the
@@ -227,7 +231,7 @@ object IndexCatalog {
     // stamps the older fp, which compares stale next ensure — erring
     // toward rebuild, the documented contract).
     val fp = fingerprint(source)
-    def fresh(m: Manifest): Boolean = m.source == source &&
+    def fresh(m: Manifest): Boolean = m.kind == kind && m.source == source &&
       m.sourceFp == fp &&
       requires.forall { case (k, v) => m.params.get(k).contains(v) }
     load(spark, name) match {
@@ -237,7 +241,10 @@ object IndexCatalog {
         load(spark, name) match {
           case Some(m) if fresh(m) => m
           case _ =>
-            commit(spark, name, build(dataDir(spark, name)).copy(sourceFp = fp))
+            val built = build(dataDir(spark, name))
+            require(built.kind == kind,
+              s"index $name: the build committed kind ${built.kind}, not $kind")
+            commit(spark, name, built.copy(sourceFp = fp))
         }
       }
     }
@@ -649,8 +656,8 @@ object IndexCatalog {
     // sweep, no cache entry, no sidecar write (a polled mutating store
     // must not pay a tmp+rename per stat call)
     val countable: Option[File] = kind match {
-      case "ivf" | "ivfpq" | "ivfsq8" | "sq8" | "pq" | "rabitq" |
-          "ivf_bvec" | "ivf_f16" | "ivf_svec" => Some(dataDir)
+      case "ivf" | "ivfpq" | "ivfsq8" | "sq8" | "pq" | "rabitq" => Some(dataDir)
+      case k if graft.operators.Payload.kinds(k) => Some(dataDir)
       case "rabitq4" => Some(new File(dataDir, "rows"))
       case "hnsw" => Some(dataDir)
       case _ => None

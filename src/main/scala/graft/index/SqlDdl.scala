@@ -112,7 +112,7 @@ object SqlDdl {
       val base = TableSnapshotResolver.readSource(spark, source)
       if (where.isEmpty) base else base.filter(where)
     }
-    import graft.operators.{Hnsw, IvfIndex, TypedAnn}
+    import graft.operators.{Hnsw, IvfIndex, Payload, TypedAnn}
     (family, indexing) match {
       case ("dense", "hnsw") =>
         val (m, efc) = IndexOptions.hnsw(rest)
@@ -134,70 +134,28 @@ object SqlDdl {
       // The SOURCE COLUMN may already be stored in the family's OWN
       // type (a `bvector(n)`/`svector(n)` table column from the
       // reference's CREATE TABLE spelling — the round-13 type mapping)
-      // or be a dense array the build converts: columnIsStruct
-      // dispatches on the stored schema (one metadata read, no job).
-      // bvecToDense of a stored bvector yields exact 0/1 floats, whose
-      // binarize inside the build is the identity — value-equal to the
+      // or be a dense array the build encodes (Payload.isStored reads
+      // the stored schema; no job). A stored bvector densifies to exact
+      // 0/1 floats, whose binarize is the identity — value-equal to the
       // dense-source path by construction.
-      case ("bvec", "ivf") =>
+      case (Payload(p), "ivf") =>
         val nlist = IndexOptions.ivf(rest)
-        val struct = columnIsStruct(spark, source, vecCol)
-        def bdf =
-          if (struct) df.select(col(idCol),
-            graft.functions.bvecToDense(col(vecCol)).as("bv01"))
-          else df
-        val c = if (struct) "bv01" else vecCol
-        if (rebuild) TypedAnn.reindexBvec(spark, name, bdf, source,
-          idCol, c, nlist)
-        else TypedAnn.ensureBvec(spark, name, bdf, source, idCol, c, nlist)
-      case ("f16", "ivf") =>
-        val nlist = IndexOptions.ivf(rest)
-        if (rebuild) TypedAnn.reindexF16(spark, name, df, source,
-          idCol, vecCol, nlist)
-        else TypedAnn.ensureF16(spark, name, df, source, idCol, vecCol, nlist)
-      case ("svec", "ivf") =>
-        // pushdown-registered svec artifacts store their CSR column as
-        // "sv" = svec_from_dense(col), the value-identity convention; a
-        // column ALREADY stored as the svector struct IS that value
-        val nlist = IndexOptions.ivf(rest)
-        def sdf = df.select(col(idCol),
-          (if (columnIsStruct(spark, source, vecCol)) col(vecCol)
-           else graft.functions.svecFromDense(col(vecCol))).as("sv"))
-        if (rebuild) TypedAnn.reindexSvec(spark, name, sdf, source,
-          idCol, "sv", nlist)
-        else TypedAnn.ensureSvec(spark, name, sdf, source, idCol, "sv", nlist)
+        if (rebuild) TypedAnn.reindex(spark, p, name, df, source, idCol,
+          vecCol, nlist)
+        else TypedAnn.ensure(spark, p, name, df, source, idCol, vecCol, nlist)
       // typed opclasses under the hnsw AM: graphs over the family's
       // DENSIFIED view (l2 on the view IS the family metric or its
       // search-time override) — the declarative-closure conventions
-      case ("bvec", "hnsw") =>
+      case (Payload(p), "hnsw") =>
         val (m, efc) = IndexOptions.hnsw(rest)
-        def bdf = df.select(col(idCol),
-          (if (columnIsStruct(spark, source, vecCol))
-            graft.functions.bvecToDense(col(vecCol))
-          else graft.functions.bvecToDense(
-            graft.functions.binarize(col(vecCol)))).as("bv01"))
-        if (rebuild) Hnsw.reindex(spark, name, bdf, source, idCol, "bv01",
+        def vdf = {
+          val d = df
+          d.select(col(idCol),
+            p.view(p.encode(col(vecCol), p.isStored(d, vecCol))).as(p.viewCol))
+        }
+        if (rebuild) Hnsw.reindex(spark, name, vdf, source, idCol, p.viewCol,
           "l2", parts, m, efc)
-        else Hnsw.ensure(spark, name, bdf, source, idCol, "bv01",
-          "l2", parts, m, efc)
-      case ("f16", "hnsw") =>
-        val (m, efc) = IndexOptions.hnsw(rest)
-        def fdf = df.select(col(idCol), graft.functions.f16ToVector(
-          graft.functions.toF16Bits(col(vecCol))).as("v16"))
-        if (rebuild) Hnsw.reindex(spark, name, fdf, source, idCol, "v16",
-          "l2", parts, m, efc)
-        else Hnsw.ensure(spark, name, fdf, source, idCol, "v16",
-          "l2", parts, m, efc)
-      case ("svec", "hnsw") =>
-        val (m, efc) = IndexOptions.hnsw(rest)
-        def vdf = df.select(col(idCol),
-          (if (columnIsStruct(spark, source, vecCol))
-            graft.functions.svecToDense(col(vecCol))
-          else graft.functions.svecToDense(
-            graft.functions.svecFromDense(col(vecCol)))).as("dv"))
-        if (rebuild) Hnsw.reindex(spark, name, vdf, source, idCol, "dv",
-          "l2", parts, m, efc)
-        else Hnsw.ensure(spark, name, vdf, source, idCol, "dv",
+        else Hnsw.ensure(spark, name, vdf, source, idCol, p.viewCol,
           "l2", parts, m, efc)
       case other =>
         throw new IllegalArgumentException(
@@ -268,7 +226,7 @@ object SqlDdl {
       val build = (_: String) => IndexCatalog.Manifest("flat", source,
         metric, Map("indexing" -> "flat", "family" -> family))
       if (rebuild) IndexCatalog.reindex(spark, name)(build)
-      else IndexCatalog.ensure(spark, name, source,
+      else IndexCatalog.ensure(spark, name, source, "flat",
         requires = Map("indexing" -> "flat"))(build)
       return
     }
@@ -505,8 +463,8 @@ object SqlDdl {
   /** Manifest kinds with declarative rewrite arms (plans/AnnPushdown):
     * everything else serves through the query APIs and the exact plan. */
   private[index] def registrableKind(kind: String): Boolean =
-    Set("hnsw", "ivf", "hnsw_part", "ivf_part",
-      "ivf_bvec", "ivf_f16", "ivf_svec").contains(kind)
+    Set("hnsw", "ivf", "hnsw_part", "ivf_part").contains(kind) ||
+      graft.operators.Payload.kinds(kind)
 
   private[index] def pushdownEntry(name: String, idCol: String,
       vecCol: String, am: String, opclassName: String)

@@ -23,7 +23,7 @@ object CodedFlat {
   def ensure[C <: Codec](spark: SparkSession, name: String,
       df: => DataFrame, source: String, idCol: String, vecCol: String,
       quant: Quant[C]): (C, String) = {
-    val mf = IndexCatalog.ensure(spark, name, source,
+    val mf = IndexCatalog.ensure(spark, name, source, quant.name,
         requires = quant.requires)(
       buildInto(df, source, idCol, vecCol, quant))
     (quant.load(mf), IndexCatalog.dataDir(spark, name))

@@ -240,7 +240,7 @@ object CodedHnsw {
       df: => DataFrame, source: String, idCol: String, vecCol: String,
       parts: Int, quant: Quant[C], m: Int = 12, efConstruction: Int = 300)
       : (C, String) = {
-    val mf = IndexCatalog.ensure(spark, name, source,
+    val mf = IndexCatalog.ensure(spark, name, source, "hnsw_" + quant.name,
         requires = requires(quant, m, efConstruction, parts))(
       buildInto(spark, df, source, idCol, vecCol, parts, quant, m,
         efConstruction))

@@ -81,7 +81,7 @@ object CodedIvf {
   def ensure(spark: SparkSession, name: String, df: => DataFrame,
       source: String, idCol: String, vecCol: String, nlist: Int,
       quant: ListQuant[ListCodec], seed: Long = 42L): (Model, String) = {
-    val mf = IndexCatalog.ensure(spark, name, source,
+    val mf = IndexCatalog.ensure(spark, name, source, kind(quant),
         requires = requires(quant, nlist))(
       buildInto(df, source, idCol, vecCol, nlist, quant, seed))
     (load(mf, quant), IndexCatalog.dataDir(spark, name))

@@ -332,7 +332,7 @@ object Dedup {
       "shingle" -> shingleK.toString, "bands" -> bands.toString,
       "rows" -> rowsPerBand.toString,
       "minhash" -> (bands * rowsPerBand).toString, "jacc" -> minJacc.toString)
-    IndexCatalog.ensure(spark, name, source, requires = params) { dataDir =>
+    IndexCatalog.ensure(spark, name, source, "dedup_cc", requires = params) { dataDir =>
       val sh = docs.select(col(idCol).as("doc_id"),
         shingleHashes(col(textCol), shingleK).as("shh"))
       val sig = sh.select(col("doc_id"),

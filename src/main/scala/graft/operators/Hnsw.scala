@@ -1120,7 +1120,7 @@ object Hnsw {
       "sample" -> graft.index.SampleSidecar.Gen,
       "ef_cal" -> EfCalGen) ++
       (if (parts > 1) Map("routing" -> RoutingGen) else Map.empty)
-    IndexCatalog.ensure(spark, name, source, requires = reqs)(
+    IndexCatalog.ensure(spark, name, source, "hnsw", requires = reqs)(
       buildFlatArtifact(spark, df, source, idCol, vecCol, metric, parts,
         m, efConstruction))
     IndexCatalog.dataDir(spark, name)

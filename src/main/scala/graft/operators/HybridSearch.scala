@@ -41,9 +41,8 @@ object HybridSearch {
     val tombs = Segments.tombstoneMaxLocal(spark, segDir, idCol)
 
     // sealed side: pruned scan, delete-filter, then top-k
-    val probes = model.rankLists(q).take(nprobe)
-    val sealedScan0 = graft.ParquetCache.read(spark, ivfPath)
-      .filter(col("list_id").isin(probes.map(Integer.valueOf).toSeq: _*))
+    val sealedScan0 = IvfIndex.listScan(spark, ivfPath,
+      model.rankLists(q).take(nprobe))
     val sealedScan = tombs match {
       // sealed rows carry version 0: ANY tombstone on the id hides them
       case Some(t) => sealedScan0.join(broadcast(t.select(col(idCol))),

@@ -42,54 +42,46 @@ import graft.index.IndexCatalog
 object IncrIvf {
 
   /** How a family turns segment rows (idCol, fCol) into artifact rows:
-    * `prep` emits the ranking column `rankCol` (dense f32, the k-means /
-    * assignment space) plus the stored payload columns. */
+    * `prep` keeps the indexable rows and emits the ranking column
+    * `rankCol` (dense f32, the k-means / assignment space) plus the
+    * stored payload column; `score` gives a query's ranking image and
+    * its exact distance column. */
   private case class Family(
       kind: String, metric: String,
-      prep: (DataFrame, String) => DataFrame,
-      rankCol: String, payload: Seq[String], useDot: Boolean)
+      prep: (DataFrame, String, String) => DataFrame,
+      rankCol: String, payload: String, useDot: Boolean,
+      score: Array[Float] => (Array[Float], Column))
 
   private def dense(metric: String) = Family(
     "ivf_incr", metric,
-    prep = (df, fCol) => {
+    prep = (df, _, fCol) => {
       val v = if (metric == "cos") vectorNormalize(col(fCol)) else col(fCol)
-      df.withColumn("rv", v)
+      df.filter(col(fCol).isNotNull && vectorIsFinite(col(fCol)))
+        .withColumn("rv", v)
     },
-    rankCol = "rv", payload = Seq("rv"), useDot = metric != "l2")
+    rankCol = "rv", payload = "rv", useDot = metric != "l2",
+    score = q => metric match {
+      case "l2" => (q, l2sq(col("rv"), typedLit(q)))
+      case "dot" => (q, negdot(col("rv"), typedLit(q)))
+      case "cos" =>
+        val qn = IvfIndex.Kernels.normalize(q)
+        (qn, negdot(col("rv"), typedLit(qn)) + lit(1.0))
+    })
 
-  /** bvector Hamming: payload is the packed bvector, ranking space the
-    * densified 0/1 view (hamming == l2sq there — TypedAnn's convention). */
-  private val bvec = Family(
-    "ivf_bvec_incr", "hamming",
-    prep = (df, fCol) => df
-      .withColumn("bv", binarize(col(fCol)))
-      .withColumn("d01", bvecToDense(col("bv"))),
-    rankCol = "d01", payload = Seq("bv"), useDot = false)
-
-  /** vecf16 L2: payload is the f16 half-word array, ranking space the
-    * f16-rounded f32 view (TypedAnn.ensureF16's convention). */
-  private val f16 = Family(
-    "ivf_f16_incr", "l2",
-    prep = (df, fCol) => df
-      .withColumn("bits", toF16Bits(col(fCol)))
-      .withColumn("rf", f16ToVector(col("bits"))),
-    rankCol = "rf", payload = Seq("bits"), useDot = false)
-
-  /** svector L2: payload is the CSR struct, ranking space the densified
-    * view (restored zeros are exact identities — TypedAnn.ensureSvec's
-    * convention). The segment column is the dense (already-sparsified)
-    * vector; sparsification policy belongs to the ingest pipeline. */
-  private val svec = Family(
-    "ivf_svec_incr", "l2",
-    prep = (df, fCol) => df
-      .withColumn("sv", svecFromDense(col(fCol)))
-      .withColumn("dv", svecToDense(col("sv"))),
-    rankCol = "dv", payload = Seq("sv"), useDot = false)
+  /** A typed family: the [[Payload]]'s encoding and view over the
+    * segment's dense column (sparsification policy belongs to the
+    * ingest pipeline), its build metric and exact kernel; kind = the
+    * payload's kind + `_incr`. */
+  private def typed(p: Payload) = Family(
+    p.kind + "_incr", p.buildMetric, prep = p.prepare,
+    rankCol = p.viewCol, payload = p.payloadCol, useDot = false,
+    score = q => (p.densify(q), p.score(p.buildMetric, col(p.payloadCol),
+      p.queryForm(typedLit(q)))))
 
   private def famFor(metric: String): Family = metric match {
-    case "hamming" => bvec
-    case "f16" => f16
-    case "svec" => svec
+    case "hamming" => typed(BvecPayload)
+    case "f16" => typed(F16Payload)
+    case "svec" => typed(SvecPayload)
     case m => dense(m)
   }
 
@@ -104,13 +96,11 @@ object IncrIvf {
       fCol: String, model: IvfIndex.Model): Unit = {
     if (segs.isEmpty) return
     segs.map { case (ver, dd) =>
-      val rows = graft.ParquetCache.read(spark, dd)
-      fam.prep(rows.filter(col(fCol).isNotNull &&
-          graft.functions.vectorIsFinite(col(fCol))), fCol)
+      fam.prep(graft.ParquetCache.read(spark, dd), idCol, fCol)
         .withColumn("list_id",
           IvfIndex.nearestCentroid(col(fam.rankCol), model))
-        .select((col(idCol) +: fam.payload.map(col) :+ col("list_id")
-          :+ lit(ver).as("_ver")): _*)
+        .select(col(idCol), col(fam.payload), col("list_id"),
+          lit(ver).as("_ver"))
     }.reduce(_ unionAll _)
       .repartition(col("list_id"))
       .write.mode("append").partitionBy("list_id").parquet(dataDir)
@@ -142,8 +132,7 @@ object IncrIvf {
     if (prior.isEmpty || !genOk) {
       IndexCatalog.drop(spark, name)
       val base = graft.ParquetCache.read(spark, s"$segDir/base-${st.gen}")
-      val trained = IvfIndex.train(fam.prep(base.filter(col(fCol).isNotNull &&
-        graft.functions.vectorIsFinite(col(fCol))), fCol),
+      val trained = IvfIndex.train(fam.prep(base, idCol, fCol),
         fam.rankCol, "l2", nlist, seed = seed)
       // carry the assignment metric on the model so base and later delta
       // assigns use the SAME rule (nearestCentroid keys useDot off it)
@@ -152,15 +141,14 @@ object IncrIvf {
       // and the calibration below read it — a second full prep/assign
       // pass over the base segment would roughly double the dominant
       // rebuild cost (round-12 review; the TypedAnn cached-frame shape)
-      val baseAssigned = fam.prep(base.filter(col(fCol).isNotNull &&
-          graft.functions.vectorIsFinite(col(fCol))), fCol)
+      val baseAssigned = fam.prep(base, idCol, fCol)
         .withColumn("list_id",
           IvfIndex.nearestCentroid(col(fam.rankCol), model))
         .cache()
       try {
       baseAssigned
-        .select((col(idCol) +: fam.payload.map(col) :+ col("list_id")
-          :+ lit(0L).as("_ver")): _*)
+        .select(col(idCol), col(fam.payload), col("list_id"),
+          lit(0L).as("_ver"))
         .repartition(col("list_id"))
         .write.mode("overwrite").partitionBy("list_id").parquet(dataDir)
       writeSegments(spark, fam, dataDir,
@@ -173,17 +161,9 @@ object IncrIvf {
       // exactly the space the probes are chosen in. Deltas are unseen by
       // the statistic, like they are by the centroids; exactness at
       // nprobe = nlist never depends on either.
-      val calFrame = baseAssigned
-        .select(col(fam.rankCol).as("v"), col("list_id").as("pid"))
-      val mcode = fam.metric match {
-        case "dot" => 1
-        case "cos" => 2
-        case _ => 0 // l2 / hamming / f16-l2 / svec-l2 score densified l2
-      }
-      val hint = math.min(math.max(ProbeCal.hint(spark, calFrame, mcode,
-        q => model.rankLists(q).zipWithIndex
-          .map { case (l, i) => l -> (i + 1) }.toMap), 1),
-        math.max(nlist, 1))
+      val hint = IvfIndex.probeHint(spark, baseAssigned
+          .select(col(fam.rankCol).as("v"), col("list_id").as("pid")),
+        fam.metric, nlist, model.rankLists)
       IndexCatalog.commit(spark, name, IndexCatalog.Manifest(
         fam.kind, segDir, fam.metric,
         Map("gen" -> st.gen.toString, "seq" -> st.seq.toString,
@@ -221,35 +201,12 @@ object IncrIvf {
       idCol: String, q: Array[Float], k: Int, nprobe: Int): DataFrame = {
     val pm = IndexCatalog.load(spark, name).getOrElse(
       throw new IllegalStateException(s"no committed index $name"))
-    val fam = pm.kind match {
-      case "ivf_bvec_incr" => bvec
-      case "ivf_f16_incr" => f16
-      case "ivf_svec_incr" => svec
-      case _ => dense(pm.metric)
-    }
-    val dataDir = IndexCatalog.dataDir(spark, name)
-    val (rankQ, distCol): (Array[Float], Column) = fam.kind match {
-      case "ivf_bvec_incr" =>
-        val q01 = q.map(x => if (x > 0f) 1f else 0f)
-        (q01, bvecHamming(col("bv"), binarize(typedLit(q))).cast("double"))
-      case "ivf_f16_incr" =>
-        val qr = q.map(x => graft.types.Fp16.halfToFloat(
-          graft.types.Fp16.floatToHalf(x)))
-        (qr, f16L2sq(col("bits"), toF16Bits(typedLit(q))))
-      case "ivf_svec_incr" =>
-        (q, svecL2sq(col("sv"), svecFromDense(typedLit(q))))
-      case _ => pm.metric match {
-        case "l2" => (q, l2sq(col("rv"), typedLit(q)))
-        case "dot" => (q, negdot(col("rv"), typedLit(q)))
-        case "cos" =>
-          val qn = IvfIndex.Kernels.normalize(q)
-          (qn, negdot(col("rv"), typedLit(qn)) + lit(1.0))
-      }
-    }
+    val fam = Payload.all.find(_.kind + "_incr" == pm.kind).map(typed)
+      .getOrElse(dense(pm.metric))
+    val (rankQ, distCol) = fam.score(q)
     val model = IvfIndex.Model(if (fam.useDot) "dot" else "l2", pm.centroids)
-    val probes = model.rankLists(rankQ).take(nprobe)
-    val scan = graft.ParquetCache.read(spark, dataDir)
-      .filter(col("list_id").isin(probes.map(Integer.valueOf).toSeq: _*))
+    val scan = IvfIndex.listScan(spark, IndexCatalog.dataDir(spark, name),
+      model.rankLists(rankQ).take(nprobe))
     val visible = Segments.visible(scan,
       IncrMaint.tombstones(spark, name, segDir, idCol), idCol)
     visible.select(col(idCol), distCol.as("dist"))

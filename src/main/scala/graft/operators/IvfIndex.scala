@@ -198,7 +198,7 @@ object IvfIndex {
     // default-built artifacts stay untouched, and an explicit value
     // forces the retrain it asks for (default-over-explicit is the
     // documented asymmetric no-op — a perf hint, not a semantic key)
-    val m = IndexCatalog.ensure(spark, name, source,
+    val m = IndexCatalog.ensure(spark, name, source, "ivf",
       requires = Map("sample" -> graft.index.SampleSidecar.Gen,
         "probe_cal" -> CalGen) ++
         (if (maxIter != 10) Map("kmeans_iters" -> maxIter.toString)
@@ -240,17 +240,8 @@ object IvfIndex {
       // so the parquet reader never treats it as a data file
       graft.index.SampleSidecar.write(spark, df, "", dataDir)
       // per-list max l2² radius to the centroid (range-pruning stats)
-      val flat = typedLit(model.centroids.flatten)
-      val maxima = graft.ParquetCache.read(spark, dataDir)
-        .select(col("list_id"), Shims.column(CentroidDist(
-          Shims.expression(col(vecCol)), Shims.expression(flat),
-          Shims.expression(col("list_id")))).as("cd"))
-        .groupBy(col("list_id")).agg(max(col("cd")).as("r2"))
-        .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
-      // round the stored radius UP so float truncation can never shrink
-      // a list's bound below a boundary point
-      val radii = Array.tabulate(model.centroids.length)(i =>
-        java.lang.Math.nextUp(maxima.getOrElse(i, 0.0).toFloat))
+      val radii = listRadii(graft.ParquetCache.read(spark, dataDir), vecCol,
+        model)
       // probe calibration (round 11; cos first, generalized to the full
       // dense family): on weakly-clustered corpora a fixed default
       // nprobe silently under-probes — cos worst (no sound radii lower
@@ -262,9 +253,11 @@ object IvfIndex {
       // resolves max(10, hint), explicit values never consult it. On
       // genuinely clustered corpora the hint stays at/below the default
       // and nothing changes.
+      val full = Model(metric, model.centroids, radii)
       val calParams = Map(
-        "probe_hint" -> calibrateProbes(spark, dataDir, vecCol,
-          Model(metric, model.centroids, radii)).toString,
+        "probe_hint" -> probeHint(spark, graft.ParquetCache.read(spark, dataDir)
+          .select(col(vecCol).as("v"), col("list_id").as("pid")), metric,
+          full.nlist, full.rankLists).toString,
         "probe_cal" -> CalGen)
       Manifest("ivf", source, metric,
         Map("nlist" -> nlist.toString,
@@ -286,38 +279,51 @@ object IvfIndex {
     * queries (round-12 de-bias); applies to every dense IVF metric. */
   val CalGen = "cal3"
 
-  /** Probe depth the artifact actually needs under its SEARCH metric:
-    * on a deterministic
-    * 64-query holdout drawn from the artifact itself (lowest xxhash64
-    * of the stored vector — corpus-size-independent like the
-    * SampleSidecar), compute for each query the prefix of the
-    * SEARCH-time [[Model.rankLists]] order covering ≥95% of its true
-    * top-100 rows (the recall convention's k), and return the 90th
-    * percentile across queries, clamped to [1, nlist]. On a clustered
-    * corpus the top-100 lives in a couple of lists → the hint stays at
-    * or below the default; on a weakly-clustered one it honestly
-    * approaches nlist — "this geometry does not support coarse
-    * pruning, probe everything", the routable=no analog.
-    *
-    * Cost: ONE extra pass over the artifact at ensure time with 64
-    * distance evaluations per row. Scale shape: per-partition bounded
-    * heaps (64 queries × top-100) — no N-row shuffle; the partial
-    * top-k merges over #partitions × 6400 tiny rows. */
-  private def calibrateProbes(spark: SparkSession, path: String,
-      vecCol: String, model: Model): Int = {
-    if (model.nlist <= 1) return math.max(model.nlist, 1)
-    val mcode = model.metric match {
-      case "l2" => 0
-      case "dot" => 1
-      case _ => 2
-    }
-    val frame = graft.ParquetCache.read(spark, path)
-      .select(col(vecCol).as("v"), col("list_id").as("pid"))
-    val h = ProbeCal.hint(spark, frame, mcode,
-      q => model.rankLists(q).zipWithIndex
-        .map { case (l, i) => l -> (i + 1) }.toMap)
-    math.min(math.max(h, 1), math.max(model.nlist, 1))
+  /** Per-list max l2² distance of `frame`'s (`vecCol`, list_id) rows to
+    * their list's centroid — the range-pruning stats. Each radius is
+    * rounded UP so float truncation can never shrink a list's bound
+    * below a boundary point; a list with no rows gets 0. */
+  private[operators] def listRadii(frame: DataFrame, vecCol: String,
+      model: Model): Array[Float] = {
+    val flat = typedLit(model.centroids.flatten)
+    val maxima = frame
+      .select(col("list_id"), Shims.column(CentroidDist(
+        Shims.expression(col(vecCol)), Shims.expression(flat),
+        Shims.expression(col("list_id")))).as("cd"))
+      .groupBy(col("list_id")).agg(max(col("cd")).as("r2"))
+      .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
+    Array.tabulate(model.centroids.length)(i =>
+      java.lang.Math.nextUp(maxima.getOrElse(i, 0.0).toFloat))
   }
+
+  /** Probe depth the artifact actually needs under its SEARCH metric
+    * ([[ProbeCal]]'s statistic): on a deterministic 64-query holdout
+    * drawn from `frame` (v = the stored vector in the ranking space,
+    * pid = its list), for each query the prefix of the SEARCH-time
+    * list order `rank` covering ≥95% of its true top-100 rows (the
+    * recall convention's k), 90th percentile across queries, clamped
+    * to [1, nlist]. On a clustered corpus the top-100 lives in a couple
+    * of lists → the hint stays at or below the default; on a
+    * weakly-clustered one it honestly approaches nlist — "this geometry
+    * does not support coarse pruning, probe everything", the
+    * routable=no analog. Typed artifacts measure in their densified
+    * view under the canonical metric (hamming ≡ l2sq on 0/1 payloads).
+    *
+    * Cost: ONE extra pass over `frame` at build time with 64 distance
+    * evaluations per row, in per-partition bounded heaps. */
+  private[operators] def probeHint(spark: SparkSession, frame: DataFrame,
+      metric: String, nlist: Int, rank: Array[Float] => Array[Int]): Int =
+    if (nlist <= 1) math.max(nlist, 1)
+    else {
+      val mcode = metric match {
+        case "dot" => 1
+        case "cos" => 2
+        case _ => 0 // l2 / hamming / jaccard score densified l2
+      }
+      val h = ProbeCal.hint(spark, frame, mcode,
+        q => rank(q).zipWithIndex.map { case (l, i) => l -> (i + 1) }.toMap)
+      math.min(math.max(h, 1), nlist)
+    }
 
   /** DDL-option-spelling ensure (reference pgvector compatibility,
     * src/index/compatibility.rs:7-60): pgvector's `lists` ≡ native
@@ -347,8 +353,7 @@ object IvfIndex {
         math.sqrt(radii(i).toDouble)
       lb <= rq + 1e-9
     }
-    graft.ParquetCache.read(spark, path)
-      .filter(col("list_id").isin(probes.map(Integer.valueOf): _*))
+    listScan(spark, path, probes)
   }
 
   def rangeSearch(spark: SparkSession, path: String, model: Model,
@@ -371,8 +376,7 @@ object IvfIndex {
       1.0 - Kernels.dot(model.centroids(i), qn) -
         math.sqrt(radii(i).toDouble) <= r + 1e-6
     }
-    graft.ParquetCache.read(spark, path)
-      .filter(col("list_id").isin(probes.map(Integer.valueOf): _*))
+    listScan(spark, path, probes)
   }
 
   /** Dot-range pruned scan (strategy-2 dot opclass member): for x in a
@@ -387,8 +391,7 @@ object IvfIndex {
       -(Kernels.dot(model.centroids(i), q) +
         math.sqrt(radii(i).toDouble) * qNorm) <= r + 1e-9
     }
-    graft.ParquetCache.read(spark, path)
-      .filter(col("list_id").isin(probes.map(Integer.valueOf): _*))
+    listScan(spark, path, probes)
   }
 
   /** Batched many-query search (batch-inference shape): ONE pruned scan
@@ -410,8 +413,7 @@ object IvfIndex {
     }
     val qdf = rows.toDF("qid", "qv", "probes")
     val allProbes = rows.flatMap(_._3).distinct
-    val scan = graft.ParquetCache.read(spark, path)
-      .filter(col("list_id").isin(allProbes.map(Integer.valueOf): _*))
+    val scan = listScan(spark, path, allProbes)
     val joined = scan.join(broadcast(qdf),
       array_contains(col("probes"), col("list_id")))
     val distCol = model.metric match {
@@ -431,10 +433,15 @@ object IvfIndex {
     * predicate before TakeOrdered). */
   def prunedScan(spark: SparkSession, path: String, model: Model,
       q: Array[Float], nprobe: Int): DataFrame = {
-    val probes = model.rankLists(q).take(nprobe)
-    graft.ParquetCache.read(spark, path)
-      .filter(col("list_id").isin(probes.map(Integer.valueOf).toSeq: _*))
+    listScan(spark, path, model.rankLists(q).take(nprobe))
   }
+
+  /** The artifact at `path` pruned to the partitions of `lists` — the
+    * one list scan every IVF-family search, range and join reads. */
+  def listScan(spark: SparkSession, path: String,
+      lists: scala.collection.Seq[Int]): DataFrame =
+    graft.ParquetCache.read(spark, path)
+      .filter(col("list_id").isin(lists.map(Integer.valueOf).toSeq: _*))
 
   /** Search: rank centroids, then scan only the nprobe closest lists —
     * on the driver, over the lists resident in [[Hnsw.GraphCache]]

@@ -192,6 +192,12 @@ object KnnJoin {
     exprDet && planDet && plan.stats.sizeInBytes <= maxBytes
   }
 
+  /** The distinct lists a probed query side hits — one collect job; the
+    * set is bounded by nlist, the boundedness class of every other
+    * probe decision. */
+  private def probedLists(probed: DataFrame): Array[Int] =
+    probed.select(col("list_id")).distinct().collect().map(_.getInt(0))
+
   /** Distributed vector RANGE join: every (query row, corpus row) pair
     * with dist <= r, both sides tables — the all-pairs-within-radius
     * primitive behind embedding-level dedup and decontamination.
@@ -212,15 +218,11 @@ object KnnJoin {
          else col(qvecCol)).as("qv"))
     val probed = qv0
       .withColumn("list_id", explode(rangeLists(col("qv"), model, r)))
-    val scan0 = graft.ParquetCache.read(spark, path)
-    val scan =
-      if (model.radii == null || !staticPruneWorthwhile(queries)) scan0
-      else {
-        val lists = probed.select(col("list_id")).distinct()
-          .collect().map(_.getInt(0))
-        if (lists.length >= model.nlist) scan0
-        else scan0.filter(col("list_id").isin(lists.map(Integer.valueOf).toSeq: _*))
-      }
+    val lists =
+      if (model.radii == null || !staticPruneWorthwhile(queries)) None
+      else Some(probedLists(probed)).filter(_.length < model.nlist)
+    val scan = lists.fold(graft.ParquetCache.read(spark, path))(
+      IvfIndex.listScan(spark, path, _))
     val distCol = model.metric match {
       case "l2" => l2sq(col(vecCol), col("qv"))
       case "dot" => negdot(col(vecCol), col("qv"))
@@ -234,98 +236,48 @@ object KnnJoin {
   }
 
   /** Typed-family KNN join — [[join]] generalized over the compact
-    * typed artifacts (the TypedAnn matrix): the query side is a table
-    * of DENSE f32 vectors (bvec queries densify to 0/1 for probe
-    * ranking and binarize for scoring; svec queries must be
-    * pre-sparsified dense images, the ingest |x|>0.15 contract; f16
-    * queries rank from their f16-rounded view — each the corresponding
-    * batchSearch* convention per row). Probe ranking maps
-    * hamming/jaccard → the densified-space L2 bounds and cos → the raw
-    * unnormalized-centroid ranking with radii ignored
-    * (TypedAnn.rankLists, asserted formula-identical in KnnJoinSpec);
-    * scoring is the family's exact payload kernel on the stored compact
-    * column. Exact at nprobe = nlist like [[join]]. */
+    * typed artifacts (the [[TypedAnn]] matrix): the query side is a
+    * table of DENSE f32 vectors; each row ranks probes from its
+    * [[Payload.densifyCol]] image (svec queries must be pre-sparsified
+    * dense images, the ingest |x|>0.15 contract) and scores in the
+    * payload's pair form — each the [[TypedAnn.batchSearch]] convention
+    * per row. Probe ranking maps hamming/jaccard → the densified-space
+    * L2 bounds and cos → the raw unnormalized-centroid ranking with
+    * radii ignored (TypedAnn.rankLists, asserted formula-identical in
+    * KnnJoinSpec). `metric` defaults to the payload's build metric.
+    * Exact at nprobe = nlist like [[join]]. */
   def joinTyped(spark: SparkSession, queries: DataFrame, qidCol: String,
       qvecCol: String, path: String, model: IvfIndex.Model, idCol: String,
-      family: String, k: Int, nprobe: Int, metric: String = null,
-      svCol: String = "sv"): DataFrame = {
+      p: Payload, k: Int, nprobe: Int, metric: String = null): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val met = Option(metric).getOrElse(family match {
-      case "bvec" => "hamming"
-      case "svec" => "l2"
-      case "f16" => "l2"
-      case f => throw new IllegalArgumentException(s"unknown family $f")
-    })
+    val met = Option(metric).getOrElse(p.buildMetric)
     val np = math.min(nprobe, model.nlist)
     val qv0 = queries
       .filter(col(qvecCol).isNotNull && vectorIsFinite(col(qvecCol)))
       .select(col(qidCol).as("qid"), col(qvecCol).as("qv"))
-    // per-row probe input: the densified view each family RANKS in
-    val probeInput = family match {
-      case "bvec" => transform(col("qv"),
-        x => when(x > lit(0f), lit(1f)).otherwise(lit(0f)))
-      case "f16" => f16ToVector(toF16Bits(col("qv")))
-      case _ => col("qv")
-    }
     val rankMetric = met match {
       case "hamming" | "jaccard" => "l2"
       case "cos" => "cosraw"
       case m => m
     }
-    val probed = qv0.withColumn("list_id",
-      explode(probeListsMetric(probeInput, model, np, rankMetric)))
-    val scan0 = graft.ParquetCache.read(spark, path)
+    val probed = qv0.withColumn("list_id", explode(probeListsMetric(
+      p.densifyCol(col("qv")).getOrElse(col("qv")), model, np, rankMetric)))
     val scan =
-      if (np >= model.nlist || !staticPruneWorthwhile(queries)) scan0
-      else {
-        val lists = probed.select(col("list_id")).distinct()
-          .collect().map(_.getInt(0))
-        scan0.filter(col("list_id").isin(lists.map(Integer.valueOf).toSeq: _*))
-      }
-    // Convert the query vector into the family's SCORING form ONCE per
-    // probed query row (round 18): spelled inside the dist kernel it
-    // re-ran per JOINED PAIR — binarize / CSR construction / f16
-    // rounding on every corpus row. Identical values (deterministic
-    // expressions), so scores are bit-identical.
-    val (payloadCol, qScore, distOf) = (family, met) match {
-      case ("bvec", "hamming") =>
-        ("bv", binarize(col("qv")), (q: Column) => bvecHamming(col("bv"), q))
-      case ("bvec", "jaccard") =>
-        ("bv", binarize(col("qv")), (q: Column) => bvecJaccard(col("bv"), q))
-      case ("bvec", "dot") =>
-        ("bv", binarize(col("qv")), (q: Column) => bvecNegdot(col("bv"), q))
-      case ("svec", "l2") =>
-        (svCol, svecFromDense(col("qv")), (q: Column) => svecL2sq(col(svCol), q))
-      case ("svec", "dot") =>
-        (svCol, svecFromDense(col("qv")), (q: Column) => svecNegdot(col(svCol), q))
-      case ("svec", "cos") =>
-        (svCol, svecFromDense(col("qv")), (q: Column) => svecCosdist(col(svCol), q))
-      // f16 scores over the EXACT f16-value f32 views, decoded once per
-      // corpus ROW scan-side and once per query row (round 18): the
-      // bit-bit kernels re-decoded both halves per joined PAIR.
-      // DenseKernels accumulates in double, index order, with the same
-      // shape as F16Kernels (cosdist's 3-accumulator pass mirrors it by
-      // construction), so on the same f32 values the doubles are
-      // bit-identical and the exact-twin oracles replay unchanged.
-      case ("f16", "l2") =>
-        ("__graft_pv", f16ToVector(toF16Bits(col("qv"))),
-          (q: Column) => graft.functions.l2sq(col("__graft_pv"), q))
-      case ("f16", "dot") =>
-        ("__graft_pv", f16ToVector(toF16Bits(col("qv"))),
-          (q: Column) => graft.functions.negdot(col("__graft_pv"), q))
-      case ("f16", "cos") =>
-        ("__graft_pv", f16ToVector(toF16Bits(col("qv"))),
-          (q: Column) => graft.functions.cosdist(col("__graft_pv"), q))
-      case (f, m) => throw new IllegalArgumentException(s"unknown $f metric $m")
-    }
-    val probedScored = probed.withColumn("__graft_qs", qScore)
-    val scanProj =
-      if (family == "f16") f16ToVector(col("bits")).as("__graft_pv")
-      else col(payloadCol)
+      if (np >= model.nlist || !staticPruneWorthwhile(queries))
+        graft.ParquetCache.read(spark, path)
+      else IvfIndex.listScan(spark, path, probedLists(probed))
+    // the query's scoring form ONCE per probed query row (round 18):
+    // spelled inside the dist kernel it re-ran per JOINED PAIR.
+    // Identical values (deterministic expressions), so scores are
+    // bit-identical.
+    val probedScored = probed.withColumn("__graft_qs", p.pairQuery(col("qv")))
+    val (scanProj, rowCol) = p.pairRow.fold((col(p.payloadCol), p.payloadCol))(
+      r => (r.as("__graft_pv"), "__graft_pv"))
     val w = Window.partitionBy(col("qid")).orderBy(col("dist"), col(idCol))
     scan.select(col("list_id"), col(idCol), scanProj)
       .join(broadcastQueriesIfSmall(qv0, probedScored, np), "list_id")
-      .select(col("qid"), col(idCol), distOf(col("__graft_qs")).as("dist"))
+      .select(col("qid"), col(idCol),
+        p.pairScore(met, col(rowCol), col("__graft_qs")).as("dist"))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= k)
   }
@@ -368,17 +320,12 @@ object KnnJoin {
          else col(qvecCol)).as("qv"))
     val probed = qv0
       .withColumn("list_id", explode(probeLists(col("qv"), model, np)))
-    // partition pruning for selective query sets: the distinct probed-list
-    // set is bounded by nlist (the same boundedness class as every other
-    // probe decision); skip the extra job when every list is probed anyway
-    val scan0 = graft.ParquetCache.read(spark, path)
+    // partition pruning for selective query sets; no extra job when every
+    // list is probed anyway
     val scan =
-      if (np >= model.nlist || !staticPruneWorthwhile(queries)) scan0
-      else {
-        val lists = probed.select(col("list_id")).distinct()
-          .collect().map(_.getInt(0))
-        scan0.filter(col("list_id").isin(lists.map(Integer.valueOf).toSeq: _*))
-      }
+      if (np >= model.nlist || !staticPruneWorthwhile(queries))
+        graft.ParquetCache.read(spark, path)
+      else IvfIndex.listScan(spark, path, probedLists(probed))
     val joined = scan.select(col("list_id"), col(idCol), col(vecCol))
       .join(broadcastQueriesIfSmall(qv0, probed, np), "list_id")
     val distCol = model.metric match {

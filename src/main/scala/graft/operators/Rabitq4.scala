@@ -168,7 +168,7 @@ object Rabitq4 {
     * and the 32-vector interleaved `blocks/`. */
   def ensure(spark: SparkSession, name: String, df: => DataFrame,
       source: String, idCol: String, vecCol: String): (Rabitq.Model, String) = {
-    val mf = IndexCatalog.ensure(spark, name, source,
+    val mf = IndexCatalog.ensure(spark, name, source, "rabitq4",
         requires = Map("format" -> "rq4block1")) { dataDir =>
       val nn = df.filter(col(vecCol).isNotNull &&
         graft.functions.vectorIsFinite(col(vecCol)))

@@ -34,7 +34,7 @@ object SparseSearch {
   def ensure(spark: org.apache.spark.sql.SparkSession, name: String,
       docs: => DataFrame, source: String, idCol: String, svecCol: String): String = {
     import graft.index.IndexCatalog
-    IndexCatalog.ensure(spark, name, source)(
+    IndexCatalog.ensure(spark, name, source, "sparse")(
       buildInto(docs, source, idCol, svecCol))
     IndexCatalog.dataDir(spark, name)
   }
@@ -91,7 +91,7 @@ object SparseSearch {
       topM: Int): String = {
     import graft.index.IndexCatalog
     import org.apache.spark.sql.expressions.Window
-    IndexCatalog.ensure(spark, name, source,
+    IndexCatalog.ensure(spark, name, source, "sparse_pruned",
         requires = Map("top_m" -> topM.toString,
           "adaptive" -> "mass1")) { dataDir =>
       val w = Window.partitionBy(col("token"))

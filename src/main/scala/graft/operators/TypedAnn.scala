@@ -2,160 +2,85 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions._
 import graft.index.IndexCatalog
 import graft.index.IndexCatalog.Manifest
 
 /**
  * ANN indexes over the NON-f32 vector types — the Spark analog of the
- * reference's opclass matrix (src/sql/finalize.sql:719-803: bvector
- * Hamming/Jaccard, vecf16 everything; per-type dispatch
- * crates/indexing/src/sealed.rs:16-110).
+ * reference's opclass matrix (src/sql/finalize.sql:719-803; per-type
+ * dispatch crates/indexing/src/sealed.rs:16-110), one implementation
+ * over the [[Payload]] family (bvector, vecf16, svector).
  *
- * Both reuse the IVF architecture ([[IvfIndex]]): centroids live in f32
- * (the list-RANKING space is always dense f32 — binarized 0/1 vectors for
- * bvector, f16-rounded values for vecf16), but the PAYLOAD column keeps
- * its compact storage encoding (packed u64 words / f16 half-words). At
- * 100 TB that is the difference between scanning the 1-bit/16-bit
- * encoding and scanning a 32-bit densified copy — the probed-partition
- * scan reads 1/32 (bvector) or 1/2 (vecf16) of the bytes a dense index
- * would.
+ * It reuses the IVF architecture ([[IvfIndex]]): centroids live in f32
+ * (the list-RANKING space is always the payload's densified view), but
+ * the PAYLOAD column keeps its compact storage encoding. At 100 TB that
+ * is the difference between scanning the 1-bit/16-bit/CSR encoding and
+ * scanning a 32-bit densified copy — the probed-partition scan reads
+ * 1/32 (bvector) or 1/2 (vecf16) of the bytes a dense index would.
  *
- * Hamming quantization note: for 0/1 vectors, l2sq(a,b) == hamming(a,b)
- * exactly, so k-means in densified space IS Hamming-space quantization;
- * list ranking by f32 l2 to the centroid is the same ordering the
- * reference's bvector IVF uses.
+ * One artifact serves every metric of its family: the layout is
+ * metric-free, only list RANKING ([[rankLists]]) and row SCORING
+ * ([[Payload.score]]) differ, and both are search-time choices.
  */
 object TypedAnn {
 
-  /** Per-list max l2² radius to the centroid in the family's densified
-    * ranking space (the range-pruning stat, mirroring IvfIndex.ensure's).
-    * Bumping `StatsVersion` in `requires` rebuilds pre-stats artifacts. */
+  /** Per-list max l2² radius to the centroid in the densified view (the
+    * range-pruning stat, mirroring IvfIndex.ensure's). Bumping
+    * `StatsVersion` in `requires` rebuilds pre-stats artifacts. */
   private[operators] val StatsVersion = "radii1"
 
-  private def listRadii(assigned: DataFrame, vecCol: String,
-      model: IvfIndex.Model): Array[Float] = {
-    import org.apache.spark.sql.graftshim.Shims
-    val flat = typedLit(model.centroids.flatten)
-    val maxima = assigned
-      .select(col("list_id"), Shims.column(IvfIndex.CentroidDist(
-        Shims.expression(col(vecCol)), Shims.expression(flat),
-        Shims.expression(col("list_id")))).as("cd"))
-      .groupBy(col("list_id")).agg(max(col("cd")).as("r2"))
-      .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
-    Array.tabulate(model.centroids.length)(i =>
-      java.lang.Math.nextUp(maxima.getOrElse(i, 0.0).toFloat))
-  }
-
-  /** Pruned scan for an exact within-radius search over a typed artifact:
-    * triangle-inequality list pruning in the densified ranking space
-    * (hamming IS l2sq on 0/1 vectors; f16/svec kernels equal dense l2sq
-    * on the rounded/densified views the radii were measured in), the
-    * same bound as IvfIndex.rangeScan. The exact payload-kernel filter
-    * goes on top at the call site. */
-  def rangeScanL2(spark: SparkSession, path: String, model: IvfIndex.Model,
-      radii: Array[Float], qDense: Array[Float], r2: Double): DataFrame = {
-    val rq = math.sqrt(r2)
-    val probes = model.centroids.indices.filter { i =>
-      math.sqrt(IvfIndex.Kernels.l2sq(model.centroids(i), qDense)) -
-        math.sqrt(radii(i).toDouble) <= rq + 1e-9
-    }
-    graft.ParquetCache.read(spark, path)
-      .filter(col("list_id").isin(probes.map(Integer.valueOf).toSeq: _*))
-  }
-
-  /** Dot-range pruned scan over a typed artifact: for x in a list with
-    * ||x − c|| ≤ R_c in the densified payload space, x·q ≤ c·q +
-    * R_c·||q|| (Cauchy-Schwarz, same bound as IvfIndex.rangeScanDot), so
-    * a list whose minimum reachable negdot exceeds r cannot contribute.
-    * `qDense` must be the query's image in the payload space (binarized
-    * 0/1 for bvector, densified for svector). */
-  def rangeScanDot(spark: SparkSession, path: String, model: IvfIndex.Model,
-      radii: Array[Float], qDense: Array[Float], r: Double): DataFrame = {
-    val qNorm = math.sqrt(IvfIndex.Kernels.dot(qDense, qDense))
-    val probes = model.centroids.indices.filter { i =>
-      -(IvfIndex.Kernels.dot(model.centroids(i), qDense) +
-        math.sqrt(radii(i).toDouble) * qNorm) <= r + 1e-9
-    }
-    graft.ParquetCache.read(spark, path)
-      .filter(col("list_id").isin(probes.map(Integer.valueOf).toSeq: _*))
-  }
-
-  /** CREATE INDEX: bvector Hamming IVF. `fCol` is the dense f32 source
-    * column; rows are binarized (bit i = x_i > 0), k-means runs on the
-    * densified 0/1 view, and the artifact stores only (id, packed bvector,
-    * list_id) partitioned by list_id. */
-  def ensureBvec(spark: SparkSession, name: String, df: => DataFrame,
-      source: String, idCol: String, fCol: String, nlist: Int,
-      seed: Long = 42L): (IvfIndex.Model, String) = {
-    val m = IndexCatalog.ensure(spark, name, source,
-        requires = Map("type" -> "bvector", "nlist" -> nlist.toString,
+  /** CREATE INDEX: `srcCol` is a dense f32 column or one already stored
+    * as the payload type; k-means runs on the densified view and the
+    * artifact stores only (id, payload, list_id), partitioned by list. */
+  def ensure(spark: SparkSession, p: Payload, name: String,
+      df: => DataFrame, source: String, idCol: String, srcCol: String,
+      nlist: Int, seed: Long = 42L): (IvfIndex.Model, String) =
+    served(spark, name, IndexCatalog.ensure(spark, name, source, p.kind,
+        requires = Map("type" -> p.typeParam, "nlist" -> nlist.toString,
           "stats" -> StatsVersion, "probe_cal" -> IvfIndex.CalGen))(
-      buildBvecArtifact(spark, df, source, idCol, fCol, nlist, seed))
+      buildInto(spark, p, df, source, idCol, srcCol, nlist, seed)))
+
+  /** REINDEX the artifact (fresh generation + atomic pointer swap —
+    * readers keep serving; the typed-family vacuum path). */
+  def reindex(spark: SparkSession, p: Payload, name: String,
+      df: => DataFrame, source: String, idCol: String, srcCol: String,
+      nlist: Int, seed: Long = 42L): (IvfIndex.Model, String) =
+    served(spark, name, IndexCatalog.reindex(spark, name)(
+      buildInto(spark, p, df, source, idCol, srcCol, nlist, seed)))
+
+  private def served(spark: SparkSession, name: String,
+      m: Manifest): (IvfIndex.Model, String) =
     (IvfIndex.Model("l2", m.centroids, m.floats.get("radii").orNull),
       IndexCatalog.dataDir(spark, name))
-  }
 
-  /** REINDEX the bvector artifact (fresh generation + atomic pointer
-    * swap — readers keep serving; the typed-family vacuum path). */
-  def reindexBvec(spark: SparkSession, name: String, df: => DataFrame,
-      source: String, idCol: String, fCol: String, nlist: Int,
-      seed: Long = 42L): (IvfIndex.Model, String) = {
-    val m = IndexCatalog.reindex(spark, name)(
-      buildBvecArtifact(spark, df, source, idCol, fCol, nlist, seed))
-    (IvfIndex.Model("l2", m.centroids, m.floats.get("radii").orNull),
-      IndexCatalog.dataDir(spark, name))
-  }
-
-
-  /** Build-time probe calibration for the typed IVF families (round 12
-    * — the dense cal3 statistic applied symmetrically): the hint is
-    * measured in the DENSIFIED payload space under the artifact's
-    * canonical metric ranking (hamming ≡ l2sq on 0/1 payloads; one hint
-    * per artifact — list ranking under the other search-time metrics of
-    * the family shares the same fleet geometry). nprobe=auto resolves
+  /** The build job: train on the view, assign, write, then the radii
+    * and the probe hint over the cached assignment. The hint is
+    * measured in the view under the artifact's canonical metric (one
+    * hint per artifact — the other search-time metrics of the family
+    * share the same fleet geometry); nprobe=auto resolves
     * max(10, hint) through the same per-artifact path as dense IVF. */
-  private def calParams(spark: SparkSession,
-      assigned: org.apache.spark.sql.DataFrame, denseCol: String,
-      metric: String, model: IvfIndex.Model,
-      radii: Array[Float]): Map[String, String] = {
-    val full = IvfIndex.Model(model.metric, model.centroids, radii)
-    val mcode = metric match {
-      case "dot" => 1
-      case "cos" => 2
-      case _ => 0 // l2 / hamming / jaccard score densified l2
-    }
-    val h = ProbeCal.hint(spark,
-      assigned.select(col(denseCol).as("v"), col("list_id").as("pid")),
-      mcode,
-      q => rankLists(full, q, metric).zipWithIndex
-        .map { case (l, i) => l -> (i + 1) }.toMap)
-    Map("probe_cal" -> IvfIndex.CalGen,
-      "probe_hint" ->
-        math.min(math.max(h, 1), math.max(model.nlist, 1)).toString)
-  }
-
-  private def buildBvecArtifact(spark: SparkSession, df: => DataFrame,
-      source: String, idCol: String, fCol: String, nlist: Int,
+  private def buildInto(spark: SparkSession, p: Payload, df: => DataFrame,
+      source: String, idCol: String, srcCol: String, nlist: Int,
       seed: Long): String => Manifest = { dataDir =>
-    val base = df.filter(col(fCol).isNotNull &&
-        graft.functions.vectorIsFinite(col(fCol)))
-      .select(col(idCol), binarize(col(fCol)).as("bv"))
-    val densified = base.withColumn("d01", bvecToDense(col("bv")))
-    val model = IvfIndex.train(densified, "d01", "l2", nlist, seed = seed)
-    val assigned = densified
-      .withColumn("list_id", IvfIndex.nearestCentroid(col("d01"), model))
+    val prepared = p.prepare(df, idCol, srcCol)
+    val model = IvfIndex.train(prepared, p.viewCol, "l2", nlist, seed = seed)
+    val assigned = prepared
+      .withColumn("list_id", IvfIndex.nearestCentroid(col(p.viewCol), model))
       .cache()
     assigned
-      .select(col(idCol), col("bv"), col("list_id"))
+      .select(col(idCol), col(p.payloadCol), col("list_id"))
       .repartition(col("list_id"))
       .write.mode("overwrite").partitionBy("list_id").parquet(dataDir)
-    val radii = listRadii(assigned, "d01", model)
-    val cal = calParams(spark, assigned, "d01", "hamming", model, radii)
+    val radii = IvfIndex.listRadii(assigned, p.viewCol, model)
+    val full = IvfIndex.Model(model.metric, model.centroids, radii)
+    val hint = IvfIndex.probeHint(spark,
+      assigned.select(col(p.viewCol).as("v"), col("list_id").as("pid")),
+      p.buildMetric, model.nlist, rankLists(full, _, p.buildMetric))
     assigned.unpersist()
-    Manifest("ivf_bvec", source, "hamming",
-      Map("nlist" -> nlist.toString, "type" -> "bvector",
-        "stats" -> StatsVersion) ++ cal,
+    Manifest(p.kind, source, p.buildMetric,
+      Map("nlist" -> nlist.toString, "type" -> p.typeParam,
+        "stats" -> StatsVersion, "probe_cal" -> IvfIndex.CalGen,
+        "probe_hint" -> hint.toString),
       centroids = model.centroids, floats = Map("radii" -> radii))
   }
 
@@ -213,294 +138,50 @@ object TypedAnn {
     }
   }
 
-  private def prunedByMetric(spark: SparkSession, path: String,
-      model: IvfIndex.Model, q: Array[Float], metric: String,
-      nprobe: Int): DataFrame = {
-    val probes = rankLists(model, q, metric).take(nprobe)
-    graft.ParquetCache.read(spark, path)
-      .filter(col("list_id").isin(probes.map(Integer.valueOf).toSeq: _*))
-  }
-
-  /** Search: rank lists in the densified 0/1 space by the search metric,
-    * read only the nprobe pruned partitions, score the exact packed-word
-    * kernel — hamming `<->`, jaccard `<~>`, or dot `<#>` (the reference's
-    * bvector_hamming/jaccard/dot opclasses, finalize.sql:735-741,
-    * 795-803). Exact at nprobe = nlist. Returns (idCol, dist) ascending. */
-  def searchBvec(spark: SparkSession, path: String, model: IvfIndex.Model,
-      idCol: String, q: Array[Float], k: Int, nprobe: Int,
-      metric: String = "hamming"): DataFrame = {
-    val q01 = q.map(x => if (x > 0f) 1f else 0f)
-    val scan = prunedByMetric(spark, path, model, q01, metric, nprobe)
-    val qb = binarize(typedLit(q))
-    val distCol = metric match {
-      case "hamming" => bvecHamming(col("bv"), qb)
-      case "jaccard" => bvecJaccard(col("bv"), qb)
-      case "dot" => bvecNegdot(col("bv"), qb)
-      case m => throw new IllegalArgumentException(s"unknown bvector metric: $m")
-    }
-    scan.select(col(idCol), distCol.as("dist"))
+  /** Search: rank lists by the search metric from the query's densified
+    * image, read only the nprobe pruned partitions, score the exact
+    * payload kernel. Exact at nprobe = nlist. Returns (idCol, dist)
+    * ascending. */
+  def search(spark: SparkSession, p: Payload, path: String,
+      model: IvfIndex.Model, idCol: String, q: Array[Float], k: Int,
+      nprobe: Int, metric: String): DataFrame = {
+    val scan = IvfIndex.listScan(spark, path,
+      rankLists(model, p.densify(q), metric).take(nprobe))
+    scan.select(col(idCol),
+        p.score(metric, col(p.payloadCol), p.queryForm(typedLit(q))).as("dist"))
       .orderBy(col("dist"), col(idCol)).limit(k)
   }
 
-  /** Batched many-query bvector search (the typed sibling of
+  /** Batched many-query search (the typed sibling of
     * IvfIndex.batchSearch): probe lists resolve on the driver per query
-    * in the densified 0/1 space, ONE pruned scan reads the union of all
-    * probed partitions, each packed row scores only against the queries
+    * in the densified view, ONE pruned scan reads the union of all
+    * probed partitions, each row scores only against the queries
     * probing its list (broadcast array_contains join), and per-query
     * top-k comes from a window. Exact at nprobe = nlist. Returns
     * (qid, idCol, dist, rn<=k) ordered by (qid, rn). */
-  def batchSearchBvec(spark: SparkSession, path: String,
+  def batchSearch(spark: SparkSession, p: Payload, path: String,
       model: IvfIndex.Model, idCol: String,
       queries: Seq[(Long, Array[Float])], k: Int, nprobe: Int,
-      metric: String = "hamming"): DataFrame = {
+      metric: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
     val rows = queries.map { case (qid, qv) =>
-      val q01 = qv.map(x => if (x > 0f) 1f else 0f)
-      (qid, qv, rankLists(model, q01, metric).take(nprobe))
+      (qid, qv, rankLists(model, p.densify(qv), metric).take(nprobe))
     }
-    // binarize ONCE per query row (round 18): the projected LocalRelation
-    // folds at plan time; spelled inside the dist kernel it re-ran per
-    // joined pair. Identical values, bit-identical scores.
+    // the query's scoring form ONCE per query row (round 18): the
+    // projected LocalRelation folds at plan time; spelled inside the
+    // dist kernel it re-ran per joined pair. Identical values,
+    // bit-identical scores.
     val qdf = rows.toDF("qid", "qf", "probes")
-      .withColumn("__qs", binarize(col("qf")))
-    val allProbes = rows.flatMap(_._3).distinct
-    val scan = graft.ParquetCache.read(spark, path)
-      .filter(col("list_id").isin(allProbes.map(Integer.valueOf).toSeq: _*))
+      .withColumn("__qs", p.pairQuery(col("qf")))
+    val scan0 = IvfIndex.listScan(spark, path, rows.flatMap(_._3).distinct)
+    val (scan, rowCol) = p.pairRow.fold((scan0, p.payloadCol))(r =>
+      (scan0.withColumn("__pv", r), "__pv"))
     val joined = scan.join(broadcast(qdf),
       array_contains(col("probes"), col("list_id")))
-    val qb = col("__qs")
-    val distCol = metric match {
-      case "hamming" => bvecHamming(col("bv"), qb)
-      case "jaccard" => bvecJaccard(col("bv"), qb)
-      case "dot" => bvecNegdot(col("bv"), qb)
-      case m => throw new IllegalArgumentException(s"unknown bvector metric: $m")
-    }
     val w = Window.partitionBy(col("qid")).orderBy(col("dist"), col(idCol))
-    joined.select(col("qid"), col(idCol), distCol.as("dist"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .orderBy(col("qid"), col("rn"))
-  }
-
-  /** Batched many-query svector search (same shape as
-    * [[batchSearchBvec]]): probe lists resolve on the driver in the
-    * densified space, one pruned scan reads the union of probed
-    * partitions, CSR rows score only against the queries probing their
-    * list, per-query top-k from a window. `queries` carry the DENSE
-    * image of each (already-sparsified) query vector. */
-  def batchSearchSvec(spark: SparkSession, path: String,
-      model: IvfIndex.Model, idCol: String, svCol: String,
-      queries: Seq[(Long, Array[Float])], k: Int, nprobe: Int,
-      metric: String = "l2"): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val rows = queries.map { case (qid, qv) =>
-      (qid, qv, rankLists(model, qv, metric).take(nprobe))
-    }
-    // CSR-convert ONCE per query row (round 18, the batchSearchBvec note)
-    val qdf = rows.toDF("qid", "qf", "probes")
-      .withColumn("__qs", svecFromDense(col("qf")))
-    val allProbes = rows.flatMap(_._3).distinct
-    val scan = graft.ParquetCache.read(spark, path)
-      .filter(col("list_id").isin(allProbes.map(Integer.valueOf).toSeq: _*))
-    val joined = scan.join(broadcast(qdf),
-      array_contains(col("probes"), col("list_id")))
-    val qsv = col("__qs")
-    val distCol = metric match {
-      case "l2" => svecL2sq(col(svCol), qsv)
-      case "dot" => svecNegdot(col(svCol), qsv)
-      case "cos" => svecCosdist(col(svCol), qsv)
-      case m => throw new IllegalArgumentException(s"unknown svector metric: $m")
-    }
-    val w = Window.partitionBy(col("qid")).orderBy(col("dist"), col(idCol))
-    joined.select(col("qid"), col(idCol), distCol.as("dist"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .orderBy(col("qid"), col("rn"))
-  }
-
-  /** CREATE INDEX: vecf16 L2 IVF. `fCol` is the dense f32 source column;
-    * values are rounded to binary16, k-means runs on the f16-rounded f32
-    * view, and the artifact stores only (id, f16 bits, list_id). */
-  def ensureF16(spark: SparkSession, name: String, df: => DataFrame,
-      source: String, idCol: String, fCol: String, nlist: Int,
-      seed: Long = 42L): (IvfIndex.Model, String) = {
-    val m = IndexCatalog.ensure(spark, name, source,
-        requires = Map("type" -> "vecf16", "nlist" -> nlist.toString,
-          "stats" -> StatsVersion, "probe_cal" -> IvfIndex.CalGen))(
-      buildF16Artifact(spark, df, source, idCol, fCol, nlist, seed))
-    (IvfIndex.Model("l2", m.centroids, m.floats.get("radii").orNull),
-      IndexCatalog.dataDir(spark, name))
-  }
-
-  /** REINDEX the vecf16 artifact (the typed-family vacuum path). */
-  def reindexF16(spark: SparkSession, name: String, df: => DataFrame,
-      source: String, idCol: String, fCol: String, nlist: Int,
-      seed: Long = 42L): (IvfIndex.Model, String) = {
-    val m = IndexCatalog.reindex(spark, name)(
-      buildF16Artifact(spark, df, source, idCol, fCol, nlist, seed))
-    (IvfIndex.Model("l2", m.centroids, m.floats.get("radii").orNull),
-      IndexCatalog.dataDir(spark, name))
-  }
-
-  private def buildF16Artifact(spark: SparkSession, df: => DataFrame,
-      source: String, idCol: String, fCol: String, nlist: Int,
-      seed: Long): String => Manifest = { dataDir =>
-    val base = df.filter(col(fCol).isNotNull &&
-        graft.functions.vectorIsFinite(col(fCol)))
-      .select(col(idCol), toF16Bits(col(fCol)).as("bits"))
-    val rounded = base.withColumn("rf", f16ToVector(col("bits")))
-    val model = IvfIndex.train(rounded, "rf", "l2", nlist, seed = seed)
-    val assigned = rounded
-      .withColumn("list_id", IvfIndex.nearestCentroid(col("rf"), model))
-      .cache()
-    assigned
-      .select(col(idCol), col("bits"), col("list_id"))
-      .repartition(col("list_id"))
-      .write.mode("overwrite").partitionBy("list_id").parquet(dataDir)
-    val radii = listRadii(assigned, "rf", model)
-    val cal = calParams(spark, assigned, "rf", "l2", model, radii)
-    assigned.unpersist()
-    Manifest("ivf_f16", source, "l2",
-      Map("nlist" -> nlist.toString, "type" -> "vecf16",
-        "stats" -> StatsVersion) ++ cal,
-      centroids = model.centroids, floats = Map("radii" -> radii))
-  }
-
-  /** CREATE INDEX: svector IVF (the reference's svector_l2/dot/cos_ops,
-    * finalize.sql:731-735, 775-789). K-means runs on the densified view
-    * (build-time only, sample-capped); the artifact stores (id, CSR
-    * svector, list_id) partitioned by list — probed partitions scan the
-    * COMPACT sparse payload, never a densified copy. */
-  def ensureSvec(spark: SparkSession, name: String, df: => DataFrame,
-      source: String, idCol: String, svCol: String, nlist: Int,
-      seed: Long = 42L): (IvfIndex.Model, String) = {
-    val m = IndexCatalog.ensure(spark, name, source,
-        requires = Map("type" -> "svector", "nlist" -> nlist.toString,
-          "stats" -> StatsVersion, "probe_cal" -> IvfIndex.CalGen))(
-      buildSvecArtifact(spark, df, source, idCol, svCol, nlist, seed))
-    (IvfIndex.Model("l2", m.centroids, m.floats.get("radii").orNull),
-      IndexCatalog.dataDir(spark, name))
-  }
-
-  /** REINDEX the svector artifact (the typed-family vacuum path). */
-  def reindexSvec(spark: SparkSession, name: String, df: => DataFrame,
-      source: String, idCol: String, svCol: String, nlist: Int,
-      seed: Long = 42L): (IvfIndex.Model, String) = {
-    val m = IndexCatalog.reindex(spark, name)(
-      buildSvecArtifact(spark, df, source, idCol, svCol, nlist, seed))
-    (IvfIndex.Model("l2", m.centroids, m.floats.get("radii").orNull),
-      IndexCatalog.dataDir(spark, name))
-  }
-
-  private def buildSvecArtifact(spark: SparkSession, df: => DataFrame,
-      source: String, idCol: String, svCol: String, nlist: Int,
-      seed: Long): String => Manifest = { dataDir =>
-    // CSR structs have no direct finiteness predicate: filter on the
-    // densified view (restored zeros are finite, so dv is non-finite
-    // iff some stored val is)
-    val densified = df.filter(col(svCol).isNotNull)
-      .withColumn("dv", svecToDense(col(svCol)))
-      .filter(graft.functions.vectorIsFinite(col("dv")))
-    val model = IvfIndex.train(densified, "dv", "l2", nlist, seed = seed)
-    val assigned = densified
-      .withColumn("list_id", IvfIndex.nearestCentroid(col("dv"), model))
-      .cache()
-    assigned
-      .select(col(idCol), col(svCol), col("list_id"))
-      .repartition(col("list_id"))
-      .write.mode("overwrite").partitionBy("list_id").parquet(dataDir)
-    val radii = listRadii(assigned, "dv", model)
-    val cal = calParams(spark, assigned, "dv", "l2", model, radii)
-    assigned.unpersist()
-    Manifest("ivf_svec", source, "l2",
-      Map("nlist" -> nlist.toString, "type" -> "svector",
-        "stats" -> StatsVersion) ++ cal,
-      centroids = model.centroids, floats = Map("radii" -> radii))
-  }
-
-  /** Search: rank lists by the search metric from the DENSE query view
-    * (centroids are dense), scan the nprobe pruned partitions, score the
-    * exact sparse CSR-merge kernel — l2 `<->`, dot `<#>`, or cos `<=>`.
-    * `qDense` is the densified query (sparse values at their positions,
-    * zeros elsewhere); the scan-side comparison converts it back to CSR
-    * once as a literal. Exact at nprobe = nlist. */
-  def searchSvec(spark: SparkSession, path: String, model: IvfIndex.Model,
-      idCol: String, svCol: String, qDense: Array[Float], k: Int,
-      nprobe: Int, metric: String = "dot"): DataFrame = {
-    val scan = prunedByMetric(spark, path, model, qDense, metric, nprobe)
-    val qsv = svecFromDense(typedLit(qDense))
-    val distCol = metric match {
-      case "l2" => svecL2sq(col(svCol), qsv)
-      case "dot" => svecNegdot(col(svCol), qsv)
-      case "cos" => svecCosdist(col(svCol), qsv)
-      case m => throw new IllegalArgumentException(s"unknown svector metric: $m")
-    }
-    scan.select(col(idCol), distCol.as("dist"))
-      .orderBy(col("dist"), col(idCol)).limit(k)
-  }
-
-  /** Search: rank lists by the search metric from the f16-rounded query,
-    * scan the nprobe pruned partitions, score the f16 kernel — l2 `<->`,
-    * dot `<#>`, or cos `<=>` (the reference's vecf16_l2/dot/cos opclasses,
-    * finalize.sql:723-729, 765-770; each decodes per element and
-    * accumulates in double, the scalar vecf16 kernel contract).
-    * Exact at nprobe = nlist. */
-  def searchF16(spark: SparkSession, path: String, model: IvfIndex.Model,
-      idCol: String, q: Array[Float], k: Int, nprobe: Int,
-      metric: String = "l2"): DataFrame = {
-    val qr = q.map(x => graft.types.Fp16.halfToFloat(graft.types.Fp16.floatToHalf(x)))
-    val scan = prunedByMetric(spark, path, model, qr, metric, nprobe)
-    val qb = toF16Bits(typedLit(q))
-    val distCol = metric match {
-      case "l2" => f16L2sq(col("bits"), qb)
-      case "dot" => f16NegDot(col("bits"), qb)
-      case "cos" => f16Cosdist(col("bits"), qb)
-      case m => throw new IllegalArgumentException(s"unknown vecf16 metric: $m")
-    }
-    scan.select(col(idCol), distCol.as("dist"))
-      .orderBy(col("dist"), col(idCol)).limit(k)
-  }
-
-  /** Batched many-query vecf16 search (same shape as the bvec/svec
-    * batch paths): probe lists resolve per query from the f16-rounded
-    * view, one pruned scan, half-word rows score only against the
-    * queries probing their list, per-query top-k from a window. */
-  def batchSearchF16(spark: SparkSession, path: String,
-      model: IvfIndex.Model, idCol: String,
-      queries: Seq[(Long, Array[Float])], k: Int, nprobe: Int,
-      metric: String = "l2"): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val rows = queries.map { case (qid, qv) =>
-      val qr = qv.map(x =>
-        graft.types.Fp16.halfToFloat(graft.types.Fp16.floatToHalf(x)))
-      (qid, qv, rankLists(model, qr, metric).take(nprobe))
-    }
-    // Decode to the exact f16-value f32 views once per side (round 18):
-    // the query form folds into the broadcast LocalRelation at plan
-    // time, the corpus bits decode once per scanned ROW, and the dense
-    // kernels accumulate the same doubles the bit-bit kernels did (the
-    // KnnJoin.joinTyped f16 note) — bit-identical scores, no per-PAIR
-    // half-decode.
-    val qdf = rows.toDF("qid", "qf", "probes")
-      .withColumn("__qs", graft.functions.f16ToVector(toF16Bits(col("qf"))))
-    val allProbes = rows.flatMap(_._3).distinct
-    val scan = graft.ParquetCache.read(spark, path)
-      .filter(col("list_id").isin(allProbes.map(Integer.valueOf).toSeq: _*))
-      .withColumn("__pv", graft.functions.f16ToVector(col("bits")))
-    val joined = scan.join(broadcast(qdf),
-      array_contains(col("probes"), col("list_id")))
-    val qb = col("__qs")
-    val distCol = metric match {
-      case "l2" => graft.functions.l2sq(col("__pv"), qb)
-      case "dot" => graft.functions.negdot(col("__pv"), qb)
-      case "cos" => graft.functions.cosdist(col("__pv"), qb)
-      case m => throw new IllegalArgumentException(s"unknown vecf16 metric: $m")
-    }
-    val w = Window.partitionBy(col("qid")).orderBy(col("dist"), col(idCol))
-    joined.select(col("qid"), col(idCol), distCol.as("dist"))
+    joined.select(col("qid"), col(idCol),
+        p.pairScore(metric, col(rowCol), col("__qs")).as("dist"))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= k)
       .orderBy(col("qid"), col("rn"))

@@ -17,7 +17,7 @@ import graft.functions.{CosDistance, L2sqDistance, NegDotDistance}
 import graft.functions.{F16CosDist, F16L2sq, F16NegDot, ToF16Bits}
 import graft.functions.{BVecHamming, BVecJaccard, BVecNegDot, Binarize}
 import graft.functions.{SVecCosDist, SVecFromDense, SVecL2sq, SVecNegDot}
-import graft.operators.{IvfIndex, TypedAnn}
+import graft.operators.{IvfIndex, Payload, TypedAnn}
 
 /**
  * Catalyst rewrite of `ORDER BY l2sq(vec, q) LIMIT k` over an indexed
@@ -701,25 +701,22 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
   private def normalizedFor(metric: String, q: Array[Float]): Array[Float] =
     if (metric == "cos") IvfIndex.Kernels.normalize(q) else q
 
-  /** A typed query in the densified payload view its family's graphs
-    * and prune radii use: bvec 0/1, f16 rounded through binary16; svec
-    * unchanged. */
-  private def densify(family: String, q: Array[Float]): Array[Float] =
-    family match {
-      case "bvec" => q.map(x => if (x > 0f) 1f else 0f)
-      case "f16" => q.map(x =>
-        graft.types.Fp16.halfToFloat(graft.types.Fp16.floatToHalf(x)))
-      case _ => q
-    }
-
   private val denseMetrics = Set("l2", "cos", "dot")
 
-  /** The typed sphere-range metric keys, each with the compact IVF
-    * artifact kind that serves it. */
-  private val typedRangeKinds = Map("bvec:hamming" -> "ivf_bvec",
-    "f16:l2" -> "ivf_f16", "svec:l2" -> "ivf_svec",
-    "bvec:dot" -> "ivf_bvec", "svec:dot" -> "ivf_svec",
-    "f16:dot" -> "ivf_f16")
+  /** A family-qualified metric key ("bvec:dot") as its payload and
+    * metric; None for the dense keys. */
+  private def typedKey(metricKey: String): Option[(Payload, String)] =
+    metricKey.split(':') match {
+      case Array(Payload(p), m) => Some((p, m))
+      case _ => None
+    }
+
+  /** The typed sphere-range keys: each payload's l2-family build metric
+    * and dot, the metrics whose list bounds the radii support. */
+  private def typedRangeKey(metricKey: String): Boolean =
+    typedKey(metricKey).exists { case (p, m) =>
+      m == p.buildMetric || m == "dot"
+    }
 
   /** The first sphere-range conjunct `dist(vec, q) < r` whose distance
     * is one of [[distOf]]'s shapes under a metric key `keys` accepts:
@@ -1124,12 +1121,8 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
     * ivf or hnsw (the kind dispatch); typed keys name their compact
     * artifact kind. */
   private def expectedJoinKinds(metricKey: String): Set[String] =
-    metricKey.split(':') match {
-      case Array("bvec", _) => Set("ivf_bvec", "hnsw")
-      case Array("svec", _) => Set("ivf_svec", "hnsw")
-      case Array("f16", _) => Set("ivf_f16", "hnsw")
-      case _ => Set("ivf", "hnsw", "hnsw_part", "ivf_part")
-    }
+    typedKey(metricKey).fold(Set("ivf", "hnsw", "hnsw_part", "ivf_part"))(
+      pm => Set(pm._1.kind, "hnsw"))
 
   /** Table-valued KNN JOIN — the brute-force spelling
     *
@@ -1285,14 +1278,14 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
             // stored compact payload equals wrapper(col) by construction
             // (the pushdown-registration invariant), so typed rewrites
             // carry no normalized-replay caveat.
-            val Array(family, met) = metric.split(':')
+            val (p, met) = typedKey(metric).getOrElse(return None)
             val dataDir = IndexCatalog.dataDir(spark, idx.indexName)
             if (manifest.kind == "hnsw") {
               // typed opclass under the hnsw AM, table-valued (round 9):
               // dispatch onto Hnsw.knnJoinMetric over the densified
               // shared graphs — the query column densifies IN-PLAN the
-              // way the family's prune view does (bvec 0/1, f16
-              // rounded); hamming walks the build metric (l2sq on 0/1
+              // way the family's prune view does (Payload.densifyCol);
+              // the build metric walks the graphs' l2 (l2sq on 0/1
               // payloads IS hamming), the rest are distWith overrides.
               // svec l2/dot dispatch against RAW-vector graphs (the
               // scalar arm's registration-invariant rule — the CSR
@@ -1302,17 +1295,10 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
               return knnJoinTail(w, rnAlias, projList2, distEntries, idEntry,
                   qSide, idx.idCol, longQid = true) { qid =>
                 val qdf0 = Shims.ofRows(spark, qSide)
-                val qdf = family match {
-                  case "bvec" => Some(qdf0.withColumn(qAttr.name,
-                    F.transform(Shims.column(qAttr),
-                      x => F.when(x > F.lit(0f), F.lit(1f)).otherwise(F.lit(0f)))))
-                  case "f16" => Some(qdf0.withColumn(qAttr.name,
-                    graft.functions.f16ToVector(
-                      graft.functions.toF16Bits(Shims.column(qAttr)))))
-                  case "svec" if met == "l2" || met == "dot" => Some(qdf0)
-                  case _ => None
-                }
-                val overrideMet = if (met == "hamming") "l2" else met
+                val qdf = Option.when(met == p.buildMetric ||
+                    p.hnswOverrides(met))(p.densifyCol(Shims.column(qAttr))
+                  .fold(qdf0)(qdf0.withColumn(qAttr.name, _)))
+                val overrideMet = if (met == p.buildMetric) "l2" else met
                 qdf.map { q =>
                   Hnsw.knnJoinMetric(spark, dataDir, idx.idCol, q, qid,
                     qAttr.name, k = kLimit, metric = overrideMet,
@@ -1327,7 +1313,7 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
               val model = ivfModel(manifest)
               val probes = clampedProbes(idx, model)
               val out = KnnJoin.joinTyped(spark, Shims.ofRows(spark, qSide),
-                qid, qAttr.name, dataDir, model, idx.idCol, family,
+                qid, qAttr.name, dataDir, model, idx.idCol, p,
                 kLimit, probes, met)
               Some(out.queryExecution.optimizedPlan)
             }
@@ -1725,8 +1711,8 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
       .filterNot(_.isInstanceOf[IsNotNull])
     if (nonNull.length != 1) return None
     val (rangePred, vecAttr, qLit, r, metricKey) =
-      rangeConjunct(nonNull, typedRangeKinds.contains).getOrElse(return None)
-    val family = metricKey.takeWhile(_ != ':')
+      rangeConjunct(nonNull, typedRangeKey).getOrElse(return None)
+    val (p, met) = typedKey(metricKey).get
     val idx = lookup(pathsOf(rel), metricKey).getOrElse(return None)
     if (vecAttr.name != idx.vecCol) return None
     val distAlias = projList.collectFirst {
@@ -1744,43 +1730,27 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
       // svec-l2 kernel value (svec against RAW-vector graphs, the
       // registration-invariant rule); dot/cos graph ranges would need
       // override scoring inside rangeFlat.
-      val qRaw = AnnPushdown.typedQueryFloats(qLit)
-      if (metricKey.endsWith(":dot")) return None
+      if (met == "dot") return None
       val df = Hnsw.rangeSearchFlat(spark,
         IndexCatalog.dataDir(spark, idx.indexName), idx.idCol,
-        densify(family, qRaw), r)
+        p.densify(AnnPushdown.typedQueryFloats(qLit)), r)
       return namedOutput(df.queryExecution.analyzed, idx.idCol, idAttr,
         distAlias)
     }
     if (!manifest.floats.contains("radii")) return None
-    if (manifest.kind != typedRangeKinds(metricKey)) return None
+    if (manifest.kind != p.kind) return None
     val model = IvfIndex.Model("l2", manifest.centroids)
     val radii = manifest.floats("radii")
     val q = AnnPushdown.typedQueryFloats(qLit)
-    // prune in the same densified space the radii were measured in
-    val qPrune = densify(family, q)
+    // prune in the same densified space the radii were measured in:
+    // l2-family metrics by the triangle bound, dot by Cauchy-Schwarz
+    val qPrune = p.densify(q)
     val dataDir = IndexCatalog.dataDir(spark, idx.indexName)
-    // l2-family metrics prune by the triangle bound; dot by Cauchy-
-    // Schwarz — both in the densified payload space the radii measure
     val scan =
-      if (metricKey.endsWith(":dot"))
-        TypedAnn.rangeScanDot(spark, dataDir, model, radii, qPrune, r)
-      else TypedAnn.rangeScanL2(spark, dataDir, model, radii, qPrune, r)
-    val qCol = F.typedLit(q)
-    val distCol = metricKey match {
-      case "bvec:hamming" =>
-        graft.functions.bvecHamming(F.col("bv"), graft.functions.binarize(qCol))
-      case "bvec:dot" =>
-        graft.functions.bvecNegdot(F.col("bv"), graft.functions.binarize(qCol))
-      case "f16:l2" =>
-        graft.functions.f16L2sq(F.col("bits"), graft.functions.toF16Bits(qCol))
-      case "f16:dot" =>
-        graft.functions.f16NegDot(F.col("bits"), graft.functions.toF16Bits(qCol))
-      case "svec:l2" =>
-        graft.functions.svecL2sq(F.col("sv"), graft.functions.svecFromDense(qCol))
-      case "svec:dot" =>
-        graft.functions.svecNegdot(F.col("sv"), graft.functions.svecFromDense(qCol))
-    }
+      if (met == "dot")
+        IvfIndex.rangeScanDot(spark, dataDir, model, radii, qPrune, r)
+      else IvfIndex.rangeScan(spark, dataDir, model, radii, qPrune, r)
+    val distCol = p.score(met, F.col(p.payloadCol), p.queryForm(F.typedLit(q)))
     val df = scan.select(F.col(idx.idCol), distCol.as("dist"))
       .filter(F.col("dist") < F.lit(r))
     namedOutput(df.queryExecution.analyzed, idx.idCol, idAttr, distAlias)
@@ -1984,12 +1954,12 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
       // typed opclasses under the hnsw AM (finalize.sql:719-803,
       // round 9): the registered graphs store the family's DENSIFIED
       // payload view (bvec: 0/1, f16: f16-rounded floats) built with
-      // l2, so hamming (= l2sq on 0/1) and f16 l2 walk the build
-      // metric, and jaccard/dot/cos are searchIndexMetric overrides
-      // scoring the stored payloads directly. Queries densify exactly
-      // like the typed-IVF prune views. Routed under the same auto
-      // default; exact mode flat-scans (the typed exact twins'
-      // contract). svec l2/dot dispatch too: the CSR merge kernels
+      // l2, so the payload's build metric walks the graphs (hamming =
+      // l2sq on 0/1) and its hnswOverrides are searchIndexMetric
+      // overrides scoring the stored payloads directly. Queries
+      // densify exactly like the typed-IVF prune views. Routed under
+      // the same auto default; exact mode flat-scans (the typed exact
+      // twins' contract). svec l2/dot dispatch too: the CSR merge kernels
       // over svec_from_dense(col) equal the dense chains EXACTLY on
       // raw vectors (zero terms are exact identities — the
       // q_range_pushdown_svec oracle convention), so a registration
@@ -1997,33 +1967,20 @@ case class AnnRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
       // registration invariant; artifacts storing SPARSIFIED views
       // (the shared svecHnsw fixtures) must simply not be registered
       // under svec keys, like any other artifact/spelling mismatch.
-      case ("bvec" | "f16" | "svec", "hnsw") =>
-        val (walked, overrides) = family match {
-          case "bvec" => ("hamming", Set("jaccard", "dot"))
-          case "f16" => ("l2", Set("dot", "cos"))
-          case _ => ("l2", Set("dot"))
-        }
-        val qd = densify(family, q)
-        if (metric == walked)
+      case (Payload(p), "hnsw") =>
+        val qd = p.densify(q)
+        if (metric == p.buildMetric)
           Hnsw.searchIndex(spark, dataDir, idx.idCol, qd, k,
             efSearch = hnswEfSearch(manifest), exact = hnswExact,
             probeGraphs = hnswProbe)
-        else if (overrides(metric))
+        else if (p.hnswOverrides(metric))
           Hnsw.searchIndexMetric(spark, dataDir, idx.idCol, qd, k, metric,
             efSearch = hnswEfSearch(manifest), exact = hnswExact,
             probeGraphs = hnswProbe)
         else return None
-      case ("f16", "ivf_f16") =>
-        TypedAnn.searchF16(spark, dataDir, model, idx.idCol, q, k, probes,
+      case (Payload(p), kind) if kind == p.kind =>
+        TypedAnn.search(spark, p, dataDir, model, idx.idCol, q, k, probes,
           metric)
-      case ("bvec", "ivf_bvec") =>
-        TypedAnn.searchBvec(spark, dataDir, model, idx.idCol, q, k, probes,
-          metric)
-      case ("svec", "ivf_svec") =>
-        // convention: svec artifacts registered for pushdown store their
-        // CSR payload under "sv" (ensureSvec svCol)
-        TypedAnn.searchSvec(spark, dataDir, model, idx.idCol, "sv", q, k,
-          probes, metric)
       case _ => return None
     }
     // alias replacement output back to the original exprIds

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions._
-import graft.operators.{Codec, CodedFlat, CodedHnsw, CodedIvf, Hnsw, IncrHnsw, IncrQuant, IvfIndex, KnnJoin, MaxSimJoin, PqCodec, PqQuant, Quant, Rabitq, Rabitq4, RabitqCodec, RabitqQuant, SparseSearch, Sq8Codec, Sq8Quant, TypedAnn}
+import graft.operators.{BvecPayload, Codec, CodedFlat, CodedHnsw, CodedIvf, F16Payload, Hnsw, IncrHnsw, IncrQuant, IvfIndex, KnnJoin, MaxSimJoin, PqCodec, PqQuant, Quant, Rabitq, Rabitq4, RabitqCodec, RabitqQuant, SparseSearch, Sq8Codec, Sq8Quant, SvecPayload, TypedAnn}
 
 /**
  * ANN search paths (SURVEY §2.6): IVF (partition-pruned index table),
@@ -84,7 +84,8 @@ object AnnQueries {
   /** bvector Hamming IVF over binarized embeddings (opclass matrix row:
     * bvector_l2/hamming, finalize.sql:719-803). */
   def bvecAnn(s: SparkSession, d: String): (IvfIndex.Model, String) =
-    TypedAnn.ensureBvec(s, s"bvecann_${san(d)}", t(s, d, "embeddings"), d,
+    TypedAnn.ensure(s, BvecPayload, s"bvecann_${san(d)}",
+      t(s, d, "embeddings"), d,
       "vec_id", "embedding", nlist = 16)
 
   /** vecf16 L2 IVF. The indexed vectors are small-int-valued (f16
@@ -99,13 +100,13 @@ object AnnQueries {
         (col("c_custkey") % 13).cast("float")).as("v4"))
 
   def f16Ann(s: SparkSession, d: String): (IvfIndex.Model, String) =
-    TypedAnn.ensureF16(s, s"f16ann_${san(d)}", f16Source(s, d), d,
+    TypedAnn.ensure(s, F16Payload, s"f16ann_${san(d)}", f16Source(s, d), d,
       "c_custkey", "v4", nlist = 16)
 
   /** svector IVF over the sparsified embeddings (opclass rows
     * svector_l2/dot/cos_ops) — one artifact serves all three metrics. */
   def svecAnn(s: SparkSession, d: String): (IvfIndex.Model, String) =
-    TypedAnn.ensureSvec(s, s"svecann_${san(d)}", sparseDocs(s, d), d,
+    TypedAnn.ensure(s, SvecPayload, s"svecann_${san(d)}", sparseDocs(s, d), d,
       "vec_id", "sv", nlist = 16)
 
   /** svector IVF over UN-sparsified embeddings (sv = svec_from_dense of
@@ -114,7 +115,7 @@ object AnnQueries {
     * `svec_from_dense(embedding)` exactly for the rewritten filter to be
     * value-identical. */
   def svecRange(s: SparkSession, d: String): (IvfIndex.Model, String) =
-    TypedAnn.ensureSvec(s, s"svecrange_${san(d)}",
+    TypedAnn.ensure(s, SvecPayload, s"svecrange_${san(d)}",
       t(s, d, "embeddings").select(col("vec_id"),
         svecFromDense(col("embedding")).as("sv")),
       d, "vec_id", "sv", nlist = 16)
@@ -149,7 +150,7 @@ object AnnQueries {
     * l2 over the densified sparsified vectors IS svector l2 term-for-term
     * in index order (restored zeros contribute exact +0.0), so the exact
     * twin shares the q_svec_ann_exact oracle. The compact-CSR-payload
-    * scale path for svector stays [[graft.operators.TypedAnn.ensureSvec]]. */
+    * scale path for svector stays [[TypedAnn]] over [[SvecPayload]]. */
   def svecHnsw(s: SparkSession, d: String, parts: Int): String =
     Hnsw.ensure(s, s"hnswsv_p${parts}_${san(d)}",
       sparseDocs(s, d).select(col("vec_id"), svecToDense(col("sv")).as("dv")),
@@ -272,7 +273,7 @@ object AnnQueries {
     * owns sparsification — IncrIvf's svec-family convention): base =
     * sparsified embeddings, same mirror/delete construction as
     * [[ensureVecSegments]] so visible-set oracles replay identically. */
-  def ensureSvecSegments(s: SparkSession, d: String): String = {
+  def ensureSparseSegments(s: SparkSession, d: String): String = {
     import graft.operators.Segments
     val segDir = sys.props("java.io.tmpdir") + "/graft_svecsegments_" + san(d)
     Segments.synchronized {
@@ -320,7 +321,7 @@ object AnnQueries {
         "vec_id", "embedding", quant)
     }
     graft.operators.IncrSparse.ensure(s, s"sparseincr_${san(d)}",
-      ensureSvecSegments(s, d), "vec_id", "embedding")
+      ensureSparseSegments(s, d), "vec_id", "embedding")
   }
 
   /** The incremental coded index of `quant` over the vec segment store:
@@ -1303,7 +1304,7 @@ object AnnQueries {
     "q_bvec_knn_join_exact" -> ((s, d) => {
       val (m, path) = bvecAnn(s, d)
       KnnJoin.joinTyped(s, t(s, d, "embeddings").filter(col("vec_id") % 100 === 0),
-        "vec_id", "embedding", path, m, "vec_id", "bvec",
+        "vec_id", "embedding", path, m, "vec_id", BvecPayload,
         k = 10, nprobe = m.nlist)
     }),
     // the declarative TYPED window-join spelling: the dual-wrapped
@@ -1391,34 +1392,34 @@ object AnnQueries {
     "q_bvec_knn_join" -> ((s, d) => {
       val (m, path) = bvecAnn(s, d)
       KnnJoin.joinTyped(s, t(s, d, "embeddings").filter(col("vec_id") % 100 === 0),
-        "vec_id", "embedding", path, m, "vec_id", "bvec",
+        "vec_id", "embedding", path, m, "vec_id", BvecPayload,
         k = 10, nprobe = nprobeConf(s))
     }),
     "q_svec_knn_join_exact" -> ((s, d) => {
       val (m, path) = svecAnn(s, d)
       val qs = t(s, d, "embeddings").filter(col("vec_id") % 100 === 0)
         .select(col("vec_id"), sparsify(col("embedding")).as("qd"))
-      KnnJoin.joinTyped(s, qs, "vec_id", "qd", path, m, "vec_id", "svec",
+      KnnJoin.joinTyped(s, qs, "vec_id", "qd", path, m, "vec_id", SvecPayload,
         k = 10, nprobe = m.nlist)
     }),
     "q_svec_knn_join" -> ((s, d) => {
       val (m, path) = svecAnn(s, d)
       val qs = t(s, d, "embeddings").filter(col("vec_id") % 100 === 0)
         .select(col("vec_id"), sparsify(col("embedding")).as("qd"))
-      KnnJoin.joinTyped(s, qs, "vec_id", "qd", path, m, "vec_id", "svec",
+      KnnJoin.joinTyped(s, qs, "vec_id", "qd", path, m, "vec_id", SvecPayload,
         k = 10, nprobe = nprobeConf(s))
     }),
     "q_vecf16_knn_join_exact" -> ((s, d) => {
       val (m, path) = f16Ann(s, d)
       val qs = f16Source(s, d).filter(col("c_custkey") % 50 === 0)
       KnnJoin.joinTyped(s, qs, "c_custkey", "v4", path, m, "c_custkey",
-        "f16", k = 10, nprobe = m.nlist)
+        F16Payload, k = 10, nprobe = m.nlist)
     }),
     "q_vecf16_knn_join" -> ((s, d) => {
       val (m, path) = f16Ann(s, d)
       val qs = f16Source(s, d).filter(col("c_custkey") % 50 === 0)
       KnnJoin.joinTyped(s, qs, "c_custkey", "v4", path, m, "c_custkey",
-        "f16", k = 10, nprobe = nprobeConf(s))
+        F16Payload, k = 10, nprobe = nprobeConf(s))
     }),
 
     // hard-negative mining: nearest non-self corpus rows per anchor —
@@ -1866,14 +1867,14 @@ object AnnQueries {
     // bvector Hamming IVF: packed-word payload scan, 0/1-space centroids
     "q_bvec_ann_topk" -> ((s, d) => {
       val (m, path) = bvecAnn(s, d)
-      TypedAnn.searchBvec(s, path, m, "vec_id", qvec(s, d), k = 100,
-        nprobe = nprobeConf(s))
+      TypedAnn.search(s, BvecPayload, path, m, "vec_id", qvec(s, d), k = 100,
+        nprobe = nprobeConf(s), metric = "hamming")
     }),
     // exact mode: probe every list -> brute-force Hamming oracle
     "q_bvec_ann_exact" -> ((s, d) => {
       val (m, path) = bvecAnn(s, d)
-      TypedAnn.searchBvec(s, path, m, "vec_id", qvec(s, d), k = 100,
-        nprobe = m.nlist)
+      TypedAnn.search(s, BvecPayload, path, m, "vec_id", qvec(s, d), k = 100,
+        nprobe = m.nlist, metric = "hamming")
     }),
 
     // batched typed search: one pruned scan answers the whole query
@@ -1881,27 +1882,29 @@ object AnnQueries {
     // q_ivf_batch). Approximate (rows-only; exact twin below).
     "q_bvec_batch" -> ((s, d) => {
       val (m, path) = bvecAnn(s, d)
-      TypedAnn.batchSearchBvec(s, path, m, "vec_id", batchQueries(s, d),
-        k = 20, nprobe = nprobeConf(s))
+      TypedAnn.batchSearch(s, BvecPayload, path, m, "vec_id",
+        batchQueries(s, d),
+        k = 20, nprobe = nprobeConf(s), metric = "hamming")
     }),
     // exact mode: probe every list -> per-query flat hamming top-k oracle
     "q_bvec_batch_exact" -> ((s, d) => {
       val (m, path) = bvecAnn(s, d)
-      TypedAnn.batchSearchBvec(s, path, m, "vec_id", batchQueries(s, d),
-        k = 20, nprobe = m.nlist)
+      TypedAnn.batchSearch(s, BvecPayload, path, m, "vec_id",
+        batchQueries(s, d),
+        k = 20, nprobe = m.nlist, metric = "hamming")
     }),
 
     // svector batch: the CSR sibling; queries sparsified by the same
     // |x| > 0.15 rule as the artifact's documents
     "q_svec_batch" -> ((s, d) => {
       val (m, path) = svecAnn(s, d)
-      TypedAnn.batchSearchSvec(s, path, m, "vec_id", "sv",
-        batchQueriesSparse(s, d), k = 20, nprobe = nprobeConf(s))
+      TypedAnn.batchSearch(s, SvecPayload, path, m, "vec_id",
+        batchQueriesSparse(s, d), k = 20, nprobe = nprobeConf(s), metric = "l2")
     }),
     "q_svec_batch_exact" -> ((s, d) => {
       val (m, path) = svecAnn(s, d)
-      TypedAnn.batchSearchSvec(s, path, m, "vec_id", "sv",
-        batchQueriesSparse(s, d), k = 20, nprobe = m.nlist)
+      TypedAnn.batchSearch(s, SvecPayload, path, m, "vec_id",
+        batchQueriesSparse(s, d), k = 20, nprobe = m.nlist, metric = "l2")
     }),
 
     // vecf16 batch over the small-int f16-exact source (the
@@ -1909,33 +1912,33 @@ object AnnQueries {
     // values, so the exact twin replays in plain double arithmetic)
     "q_vecf16_batch" -> ((s, d) => {
       val (m, path) = f16Ann(s, d)
-      TypedAnn.batchSearchF16(s, path, m, "c_custkey", f16BatchQueries,
-        k = 20, nprobe = nprobeConf(s))
+      TypedAnn.batchSearch(s, F16Payload, path, m, "c_custkey", f16BatchQueries,
+        k = 20, nprobe = nprobeConf(s), metric = "l2")
     }),
     "q_vecf16_batch_exact" -> ((s, d) => {
       val (m, path) = f16Ann(s, d)
-      TypedAnn.batchSearchF16(s, path, m, "c_custkey", f16BatchQueries,
-        k = 20, nprobe = m.nlist)
+      TypedAnn.batchSearch(s, F16Payload, path, m, "c_custkey", f16BatchQueries,
+        k = 20, nprobe = m.nlist, metric = "l2")
     }),
 
     // bvector Jaccard opclass (bvector_jaccard_ops): same artifact, the
     // packed-word Jaccard kernel scores the pruned scan
     "q_bvec_jaccard_ann_topk" -> ((s, d) => {
       val (m, path) = bvecAnn(s, d)
-      TypedAnn.searchBvec(s, path, m, "vec_id", qvec(s, d), k = 100,
+      TypedAnn.search(s, BvecPayload, path, m, "vec_id", qvec(s, d), k = 100,
         nprobe = nprobeConf(s), metric = "jaccard")
     }),
     // exact mode: probe every list -> brute-force Jaccard oracle
     "q_bvec_jaccard_ann_exact" -> ((s, d) => {
       val (m, path) = bvecAnn(s, d)
-      TypedAnn.searchBvec(s, path, m, "vec_id", qvec(s, d), k = 100,
+      TypedAnn.search(s, BvecPayload, path, m, "vec_id", qvec(s, d), k = 100,
         nprobe = m.nlist, metric = "jaccard")
     }),
     // bvector dot opclass (bvector_dot_ops): -popcount(and), dot-ranked
     // list pruning; exact mode -> brute-force oracle
     "q_bvec_dot_ann_exact" -> ((s, d) => {
       val (m, path) = bvecAnn(s, d)
-      TypedAnn.searchBvec(s, path, m, "vec_id", qvec(s, d), k = 100,
+      TypedAnn.search(s, BvecPayload, path, m, "vec_id", qvec(s, d), k = 100,
         nprobe = m.nlist, metric = "dot")
     }),
 
@@ -2009,35 +2012,35 @@ object AnnQueries {
     // vecf16 L2 IVF: f16 half-word payload scan, f16-rounded centroids
     "q_vecf16_ann_topk" -> ((s, d) => {
       val (m, path) = f16Ann(s, d)
-      TypedAnn.searchF16(s, path, m, "c_custkey",
-        Array(12f, 50f, 3f, 7f), k = 100, nprobe = nprobeConf(s))
+      TypedAnn.search(s, F16Payload, path, m, "c_custkey",
+        Array(12f, 50f, 3f, 7f), k = 100, nprobe = nprobeConf(s), metric = "l2")
     }),
     // exact mode: probe every list -> double-arithmetic oracle (values
     // exactly representable in f16)
     "q_vecf16_ann_exact" -> ((s, d) => {
       val (m, path) = f16Ann(s, d)
-      TypedAnn.searchF16(s, path, m, "c_custkey",
-        Array(12f, 50f, 3f, 7f), k = 100, nprobe = m.nlist)
+      TypedAnn.search(s, F16Payload, path, m, "c_custkey",
+        Array(12f, 50f, 3f, 7f), k = 100, nprobe = m.nlist, metric = "l2")
     }),
     // vecf16 cos opclass (vecf16_cos_ops): direct f16 cos kernel (one
     // pass, double accumulators — replayable on f16-exact values)
     "q_vecf16_ann_cos_topk" -> ((s, d) => {
       val (m, path) = f16Ann(s, d)
-      TypedAnn.searchF16(s, path, m, "c_custkey",
+      TypedAnn.search(s, F16Payload, path, m, "c_custkey",
         Array(12f, 50f, 3f, 7f), k = 100, nprobe = nprobeConf(s),
         metric = "cos")
     }),
     // exact mode: probe every list -> double-arithmetic cos oracle
     "q_vecf16_ann_cos_exact" -> ((s, d) => {
       val (m, path) = f16Ann(s, d)
-      TypedAnn.searchF16(s, path, m, "c_custkey",
+      TypedAnn.search(s, F16Payload, path, m, "c_custkey",
         Array(12f, 50f, 3f, 7f), k = 100, nprobe = m.nlist,
         metric = "cos")
     }),
     // vecf16 dot opclass (vecf16_dot_ops) exact twin
     "q_vecf16_ann_dot_exact" -> ((s, d) => {
       val (m, path) = f16Ann(s, d)
-      TypedAnn.searchF16(s, path, m, "c_custkey",
+      TypedAnn.search(s, F16Payload, path, m, "c_custkey",
         Array(12f, 50f, 3f, 7f), k = 100, nprobe = m.nlist,
         metric = "dot")
     }),
@@ -2200,7 +2203,7 @@ object AnnQueries {
     // per-doc fold. Posting-join search is EXACT, so this carries its
     // own visible-set oracle directly.
     "q_sparseincr_topk" -> ((s, d) => {
-      val segDir = ensureSvecSegments(s, d)
+      val segDir = ensureSparseSegments(s, d)
       val name = s"sparseincr_${san(d)}"
       graft.operators.IncrSparse.ensure(s, name, segDir, "vec_id", "embedding")
       val terms = sparseQTerms(s, d)
@@ -2210,23 +2213,23 @@ object AnnQueries {
     // svector IVF: compact CSR payload scan, dense centroids
     "q_svec_ann_topk" -> ((s, d) => {
       val (m, path) = svecAnn(s, d)
-      TypedAnn.searchSvec(s, path, m, "vec_id", "sv", qvecSparse(s, d),
+      TypedAnn.search(s, SvecPayload, path, m, "vec_id", qvecSparse(s, d),
         k = 100, nprobe = nprobeConf(s), metric = "dot")
     }),
     // exact twins: probe every list -> the q_svec_dist lambda-chain oracles
     "q_svec_ann_exact" -> ((s, d) => {
       val (m, path) = svecAnn(s, d)
-      TypedAnn.searchSvec(s, path, m, "vec_id", "sv", qvecSparse(s, d),
+      TypedAnn.search(s, SvecPayload, path, m, "vec_id", qvecSparse(s, d),
         k = 100, nprobe = m.nlist, metric = "l2")
     }),
     "q_svec_ann_cos_exact" -> ((s, d) => {
       val (m, path) = svecAnn(s, d)
-      TypedAnn.searchSvec(s, path, m, "vec_id", "sv", qvecSparse(s, d),
+      TypedAnn.search(s, SvecPayload, path, m, "vec_id", qvecSparse(s, d),
         k = 100, nprobe = m.nlist, metric = "cos")
     }),
     "q_svec_ann_dot_exact" -> ((s, d) => {
       val (m, path) = svecAnn(s, d)
-      TypedAnn.searchSvec(s, path, m, "vec_id", "sv", qvecSparse(s, d),
+      TypedAnn.search(s, SvecPayload, path, m, "vec_id", qvecSparse(s, d),
         k = 100, nprobe = m.nlist, metric = "dot")
     }),
 

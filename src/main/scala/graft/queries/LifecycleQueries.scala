@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.functions._
 import graft.index.IndexCatalog
-import graft.operators.{CodedFlat, Hnsw, IncrHnsw, IvfIndex, PartitionedIndex, Segments, Sq8Quant}
+import graft.operators.{CodedFlat, Hnsw, IncrHnsw, IvfIndex, PartitionedIndex, Segments, Sq8Quant, SvecPayload}
 
 /**
  * Lifecycle + surface queries: result-set (and therefore driver-oracle)
@@ -1228,7 +1228,7 @@ object LifecycleQueries {
       val mSv = IndexCatalog.load(s, svName).get
       require(mSv.kind == "ivf_svec", s"svec statement built ${mSv.kind}")
       val svRef = s"pgt_svref_${san(d)}"
-      graft.operators.TypedAnn.ensureSvec(s, svRef,
+      graft.operators.TypedAnn.ensure(s, SvecPayload, svRef,
         graft.ParquetCache.read(s, srcDir).select(col("vec_id"), col("sv")),
         srcDir, "vec_id", "sv", nlist = 2)
       val mSvRef = IndexCatalog.load(s, svRef).get
@@ -1252,8 +1252,8 @@ object LifecycleQueries {
       // the exact svec search over the statement-built artifact
       val model = graft.operators.IvfIndex.Model("l2", mSv.centroids,
         mSv.floats.get("radii").orNull)
-      graft.operators.TypedAnn.searchSvec(s,
-        IndexCatalog.dataDir(s, svName), model, "vec_id", "sv",
+      graft.operators.TypedAnn.search(s, SvecPayload,
+        IndexCatalog.dataDir(s, svName), model, "vec_id",
         qvec(s, d), k = 8, nprobe = 2, metric = "dot")
     }),
 

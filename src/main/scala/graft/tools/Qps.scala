@@ -40,7 +40,8 @@ object Qps {
     v.map(x => if (math.abs(x.toDouble) > 0.15) x else 0.0f)
 
   def families(d: String): Seq[Fam] = {
-    import graft.operators.{Hnsw, IvfIndex, TypedAnn}
+    import graft.operators.{BvecPayload, F16Payload, Hnsw, IvfIndex,
+      SvecPayload, TypedAnn}
     import graft.queries.AnnQueries
     // partitioned-parent fixture for the parent-join family: 4 hash
     // partitions x parts=2 sub-indexes (routing sidecars everywhere)
@@ -172,22 +173,23 @@ object Qps {
       Fam("bvec_hamming_ivf", 10,
         batch = (s, qs) => {
           val (m, path) = AnnQueries.bvecAnn(s, d)
-          TypedAnn.batchSearchBvec(s, path, m, "vec_id", qs,
-            k = 10, nprobe = Nprobe)
+          TypedAnn.batchSearch(s, BvecPayload, path, m, "vec_id", qs,
+            k = 10, nprobe = Nprobe, metric = "hamming")
         },
         single = (s, q) => {
           val (m, path) = AnnQueries.bvecAnn(s, d)
-          TypedAnn.searchBvec(s, path, m, "vec_id", q, k = 10, nprobe = Nprobe)
+          TypedAnn.search(s, BvecPayload, path, m, "vec_id", q, k = 10,
+            nprobe = Nprobe, metric = "hamming")
         }),
       Fam("svec_l2_ivf", 10,
         batch = (s, qs) => {
           val (m, path) = AnnQueries.svecAnn(s, d)
-          TypedAnn.batchSearchSvec(s, path, m, "vec_id", "sv", qs,
-            k = 10, nprobe = Nprobe)
+          TypedAnn.batchSearch(s, SvecPayload, path, m, "vec_id", qs,
+            k = 10, nprobe = Nprobe, metric = "l2")
         },
         single = (s, q) => {
           val (m, path) = AnnQueries.svecAnn(s, d)
-          TypedAnn.searchSvec(s, path, m, "vec_id", "sv", q,
+          TypedAnn.search(s, SvecPayload, path, m, "vec_id", q,
             k = 10, nprobe = Nprobe, metric = "l2")
         },
         // the svec batch contract: queries pre-sparsified by the ingest rule
@@ -195,12 +197,13 @@ object Qps {
       Fam("vecf16_l2_ivf", 10,
         batch = (s, qs) => {
           val (m, path) = AnnQueries.f16Ann(s, d)
-          TypedAnn.batchSearchF16(s, path, m, "c_custkey", qs,
-            k = 10, nprobe = Nprobe)
+          TypedAnn.batchSearch(s, F16Payload, path, m, "c_custkey", qs,
+            k = 10, nprobe = Nprobe, metric = "l2")
         },
         single = (s, q) => {
           val (m, path) = AnnQueries.f16Ann(s, d)
-          TypedAnn.searchF16(s, path, m, "c_custkey", q, k = 10, nprobe = Nprobe)
+          TypedAnn.search(s, F16Payload, path, m, "c_custkey", q, k = 10,
+            nprobe = Nprobe, metric = "l2")
         },
         // f16-exact small ints in the artifact's 4-dim feature space
         // (c_nationkey, %100, %7, %13) — qid-derived so the batch varies

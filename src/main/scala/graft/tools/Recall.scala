@@ -372,10 +372,13 @@ object Recall {
       println(s"[recall] $tag bvec_*_ivf_auto resolved nprobe = " +
         s"$bRes (hint $bHint)")
       val bh = scoreRow("bvec_hamming_ivf_auto",
-        dists(graft.operators.TypedAnn.searchBvec(spark, bPath, bm,
-          "vec_id", q0, k = 100, nprobe = bRes)), "q_bvec_ann_exact")
+        dists(graft.operators.TypedAnn.search(spark,
+          graft.operators.BvecPayload, bPath, bm,
+          "vec_id", q0, k = 100, nprobe = bRes, metric = "hamming")),
+        "q_bvec_ann_exact")
       val bj = scoreRow("bvec_jaccard_ivf_auto",
-        dists(graft.operators.TypedAnn.searchBvec(spark, bPath, bm,
+        dists(graft.operators.TypedAnn.search(spark,
+          graft.operators.BvecPayload, bPath, bm,
           "vec_id", q0, k = 100, nprobe = bRes, metric = "jaccard")),
         "q_bvec_jaccard_ann_exact")
       Seq(hj, sj, pj, mx, csq, cpq, crq, bh, bj) ++ ivfAuto

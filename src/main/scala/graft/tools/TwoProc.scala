@@ -71,7 +71,7 @@ object TwoProc {
     var failures = 0
     for (i <- 1 to iters) {
       try {
-        IndexCatalog.ensure(spark, name, source,
+        IndexCatalog.ensure(spark, name, source, "flat",
           requires = Map("tag" -> s"$tag-$i")) { dataDir =>
           spark.range(50).toDF("id")
             .write.mode("overwrite").parquet(dataDir)
@@ -162,7 +162,7 @@ object TwoProc {
       val myFailures = ddlStorm(spark, name, source, "parent", 12)
       await(child, log, "ddl child")
       val t = wall {
-        IndexCatalog.ensure(spark, name, source,
+        IndexCatalog.ensure(spark, name, source, "flat",
           requires = Map("tag" -> "final")) { dataDir =>
           spark.range(50).toDF("id")
             .write.mode("overwrite").parquet(dataDir)

@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.functions._
-import graft.operators.{CodedFlat, Hnsw, IvfIndex, PqQuant, RabitqQuant, Sq8Quant}
+import graft.operators.{BvecPayload, CodedFlat, F16Payload, Hnsw, IvfIndex, PqQuant,
+  RabitqQuant, Sq8Quant, SvecPayload}
 
 /** Recall@k harness vs the brute-force flat oracle — the Spark analog of
   * the reference CLI's precision measurement (crates/cli/src/main.rs:20-33). */
@@ -122,36 +123,40 @@ class AnnSpec extends SparkSpec {
     // bvector: brute-force Hamming oracle on binarized embeddings
     val bvName = "annspec_bvec"
     graft.index.IndexCatalog.drop(spark, bvName)
-    val (bm, bPath) = TypedAnn.ensureBvec(spark, bvName, emb.toDF(), src,
-      "vec_id", "embedding", nlist = 16)
+    val (bm, bPath) = TypedAnn.ensure(spark, BvecPayload, bvName, emb.toDF(),
+      src, "vec_id", "embedding", nlist = 16)
     val bTrue = emb.select($"vec_id",
         bvecHamming(binarize($"embedding"), binarize(typedLit(q))).as("d"))
       .orderBy($"d", $"vec_id").limit(50).as[(Long, Double)].collect()
     // integer Hamming distances tie heavily: recall counts any hit within
     // the true kth distance (tie-aware recall)
     val bKth = bTrue.map(_._2).max
-    val bGot = TypedAnn.searchBvec(spark, bPath, bm, "vec_id", q, 50, nprobe = 8)
+    val bGot = TypedAnn.search(spark, BvecPayload, bPath, bm, "vec_id", q, 50,
+      nprobe = 8, metric = "hamming")
       .as[(Long, Double)].collect()
     assert(bGot.length == 50)
     assert(bGot.count(_._2 <= bKth) / 50.0 >= 0.9)
-    val bExact = TypedAnn.searchBvec(spark, bPath, bm, "vec_id", q, 50, nprobe = 16)
+    val bExact = TypedAnn.search(spark, BvecPayload, bPath, bm, "vec_id", q,
+      50, nprobe = 16, metric = "hamming")
       .as[(Long, Double)].collect()
     assert(bExact.map(_._1).toSet == bTrue.map(_._1).toSet)
     graft.index.IndexCatalog.drop(spark, bvName)
     // vecf16: brute-force f16 l2 oracle on the rounded embeddings
     val fName = "annspec_f16"
     graft.index.IndexCatalog.drop(spark, fName)
-    val (fm, fPath) = TypedAnn.ensureF16(spark, fName, emb.toDF(), src,
+    val (fm, fPath) = TypedAnn.ensure(spark, F16Payload, fName, emb.toDF(), src,
       "vec_id", "embedding", nlist = 16)
     val fTrue = emb.select($"vec_id",
         f16L2sq(toF16Bits($"embedding"), toF16Bits(typedLit(q))).as("d"))
       .orderBy($"d", $"vec_id").limit(50).as[(Long, Double)]
       .collect().map(_._1).toSet
-    val fGot = TypedAnn.searchF16(spark, fPath, fm, "vec_id", q, 50, nprobe = 10)
+    val fGot = TypedAnn.search(spark, F16Payload, fPath, fm, "vec_id", q, 50,
+      nprobe = 10, metric = "l2")
       .as[(Long, Double)].collect()
     assert(fGot.length == 50)
     assert(recall(fGot.map(_._1), fTrue) >= 0.9)
-    val fExact = TypedAnn.searchF16(spark, fPath, fm, "vec_id", q, 50, nprobe = 16)
+    val fExact = TypedAnn.search(spark, F16Payload, fPath, fm, "vec_id", q, 50,
+      nprobe = 16, metric = "l2")
       .as[(Long, Double)].collect()
     assert(fExact.map(_._1).toSet == fTrue)
     graft.index.IndexCatalog.drop(spark, fName)
@@ -163,8 +168,8 @@ class AnnSpec extends SparkSpec {
     // one artifact per type family serves every metric of that family
     val bvName = "annspec_bvec_m"
     graft.index.IndexCatalog.drop(spark, bvName)
-    val (bm, bPath) = TypedAnn.ensureBvec(spark, bvName, emb.toDF(), src,
-      "vec_id", "embedding", nlist = 16)
+    val (bm, bPath) = TypedAnn.ensure(spark, BvecPayload, bvName, emb.toDF(),
+      src, "vec_id", "embedding", nlist = 16)
     for (metric <- Seq("jaccard", "dot")) {
       val d = metric match {
         case "jaccard" => bvecJaccard(binarize($"embedding"), binarize(typedLit(q)))
@@ -174,14 +179,14 @@ class AnnSpec extends SparkSpec {
         .orderBy($"d", $"vec_id").limit(50).as[(Long, Double)].collect()
       val kth = bTrue.map(_._2).max
       // exact mode = brute force
-      val exact = TypedAnn.searchBvec(spark, bPath, bm, "vec_id", q, 50,
-        nprobe = 16, metric = metric).as[(Long, Double)].collect()
+      val exact = TypedAnn.search(spark, BvecPayload, bPath, bm, "vec_id", q,
+        50, nprobe = 16, metric = metric).as[(Long, Double)].collect()
       assert(exact.map(_._1).toSet == bTrue.map(_._1).toSet, s"bvec $metric exact")
       // pruned probe: tie-aware recall (integer-ish distances tie
       // heavily). Jaccard pruning through Hamming-space clustering is
       // intrinsically weaker on near-random bits — hence the wider probe
       // and softer bar than the Hamming test.
-      val got = TypedAnn.searchBvec(spark, bPath, bm, "vec_id", q, 50,
+      val got = TypedAnn.search(spark, BvecPayload, bPath, bm, "vec_id", q, 50,
         nprobe = 10, metric = metric).as[(Long, Double)].collect()
       assert(got.length == 50)
       // measured on this fixture: jaccard >=0.8, dot 0.78 — random bits
@@ -193,7 +198,7 @@ class AnnSpec extends SparkSpec {
 
     val fName = "annspec_f16_m"
     graft.index.IndexCatalog.drop(spark, fName)
-    val (fm, fPath) = TypedAnn.ensureF16(spark, fName, emb.toDF(), src,
+    val (fm, fPath) = TypedAnn.ensure(spark, F16Payload, fName, emb.toDF(), src,
       "vec_id", "embedding", nlist = 16)
     for (metric <- Seq("cos", "dot")) {
       val d = metric match {
@@ -203,10 +208,10 @@ class AnnSpec extends SparkSpec {
       val fTrue = emb.select($"vec_id", d.as("d"))
         .orderBy($"d", $"vec_id").limit(50).as[(Long, Double)]
         .collect().map(_._1).toSet
-      val exact = TypedAnn.searchF16(spark, fPath, fm, "vec_id", q, 50,
+      val exact = TypedAnn.search(spark, F16Payload, fPath, fm, "vec_id", q, 50,
         nprobe = 16, metric = metric).as[(Long, Double)].collect()
       assert(exact.map(_._1).toSet == fTrue, s"f16 $metric exact")
-      val got = TypedAnn.searchF16(spark, fPath, fm, "vec_id", q, 50,
+      val got = TypedAnn.search(spark, F16Payload, fPath, fm, "vec_id", q, 50,
         nprobe = 10, metric = metric).as[(Long, Double)].collect()
       assert(got.length == 50)
       assert(recall(got.map(_._1), fTrue) >= 0.85, s"f16 $metric recall")
@@ -429,7 +434,7 @@ class AnnSpec extends SparkSpec {
     val sv = emb.select($"vec_id",
       svecFromDense(transform($"embedding",
         x => when(abs(x) > lit(0.15), x).otherwise(lit(0.0f)))).as("sv"))
-    val (m, path) = TypedAnn.ensureSvec(spark, name, sv,
+    val (m, path) = TypedAnn.ensure(spark, SvecPayload, name, sv,
       s"$sf001/embeddings.parquet", "vec_id", "sv", nlist = 16)
     val qs = q.map(x => if (math.abs(x.toDouble) > 0.15) x else 0.0f)
     val qsv = svecFromDense(typedLit(qs))
@@ -442,10 +447,10 @@ class AnnSpec extends SparkSpec {
       val want = sv.select($"vec_id", d.as("d"))
         .orderBy($"d", $"vec_id").limit(50).as[(Long, Double)]
         .collect().map(_._1).toSet
-      val exact = TypedAnn.searchSvec(spark, path, m, "vec_id", "sv", qs, 50,
+      val exact = TypedAnn.search(spark, SvecPayload, path, m, "vec_id", qs, 50,
         nprobe = 16, metric = metric).as[(Long, Double)].collect()
       assert(exact.map(_._1).toSet == want, s"svec $metric exact")
-      val got = TypedAnn.searchSvec(spark, path, m, "vec_id", "sv", qs, 50,
+      val got = TypedAnn.search(spark, SvecPayload, path, m, "vec_id", qs, 50,
         nprobe = 8, metric = metric).as[(Long, Double)].collect()
       assert(got.length == 50)
       assert(recall(got.map(_._1), want) >= 0.7, s"svec $metric recall")

@@ -149,7 +149,7 @@ class AutoCompactionSpec extends SparkSpec {
     // first build commits the manifest (the stat view lists only
     // committed indexes, so the in-build observation needs a prior)
     graft.index.IndexCatalog.ensure(spark, name,
-      sf0001 + "/embeddings.parquet") { dataDir =>
+      sf0001 + "/embeddings.parquet", "flat") { dataDir =>
       spark.range(1).select(col("id").as("vec_id"))
         .write.mode("overwrite").parquet(dataDir)
       graft.index.IndexCatalog.Manifest("flat",
@@ -158,7 +158,7 @@ class AutoCompactionSpec extends SparkSpec {
     assert(!indexing(), "after a completed build the lease is gone")
     // a REbuild (requires drift) observes its own build-kind lease
     graft.index.IndexCatalog.ensure(spark, name,
-      sf0001 + "/embeddings.parquet",
+      sf0001 + "/embeddings.parquet", "flat",
       requires = Map("fmt" -> "2")) { dataDir =>
       assert(indexing(), "an in-flight ensure must read idx_indexing = t")
       graft.index.IndexCatalog.Manifest("flat",

@@ -118,7 +118,7 @@ class CastF16Spec extends SparkSpec {
   }
 
   test("dense kernels over decoded f16 views == bit-bit f16 kernels, exactly") {
-    // round 18: joinTyped/batchSearchF16 decode each side once and score
+    // round 18: the f16 join and batch search decode each side once and score
     // with DenseKernels; the doubles must be bit-identical to the
     // F16Kernels bit-bit forms on every input (incl. subnormal-rounding
     // and large values)

@@ -13,7 +13,7 @@ class CatalogSpec extends SparkSpec {
     val name = "catalog_spec_ivf"
     IndexCatalog.drop(spark, name)
     var builds = 0
-    def ensure() = IndexCatalog.ensure(spark, name, "srcA") { dataDir =>
+    def ensure() = IndexCatalog.ensure(spark, name, "srcA", "ivf") { dataDir =>
       builds += 1
       val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
       val model = IvfIndex.train(emb, "embedding", "l2", 4)
@@ -73,7 +73,7 @@ class CatalogSpec extends SparkSpec {
     assert(IndexCatalog.load(spark, name).get.params("nprobe") == "2")
 
     // source change triggers rebuild
-    IndexCatalog.ensure(spark, name, "srcB") { dataDir =>
+    IndexCatalog.ensure(spark, name, "srcB", "ivf") { dataDir =>
       builds += 1
       IndexCatalog.Manifest("ivf", "srcB", "l2", Map.empty)
     }
@@ -91,7 +91,7 @@ class CatalogSpec extends SparkSpec {
     IndexCatalog.drop(spark, name)
     val builds = new java.util.concurrent.atomic.AtomicInteger(0)
     val started = new java.util.concurrent.CountDownLatch(2)
-    def slowEnsure() = IndexCatalog.ensure(spark, name, "raceSrc") { dataDir =>
+    def slowEnsure() = IndexCatalog.ensure(spark, name, "raceSrc", "ivf") { dataDir =>
       builds.incrementAndGet()
       Thread.sleep(300) // hold the build long enough for the race
       new java.io.File(dataDir).mkdirs()

@@ -135,71 +135,45 @@ class CodedScanFormatSpec extends SparkSpec {
   private val TypedNlist = 4
   private val typedQueries: Seq[(Long, Array[Float])] =
     queries.zipWithIndex.map { case (q, i) => (i.toLong, q) }
-  private def typedSrc(family: String): DataFrame =
-    if (family == "svec") src.select(col("id"), svecFromDense(col("vec")).as("sv"))
-    else src
-  private def typedEnsure(family: String): (IvfIndex.Model, String) = {
-    val n = name(s"ivf_$family")
-    family match {
-      case "bvec" => TypedAnn.ensureBvec(spark, n, src, srcPath, "id", "vec", TypedNlist)
-      case "f16" => TypedAnn.ensureF16(spark, n, src, srcPath, "id", "vec", TypedNlist)
-      case "svec" => TypedAnn.ensureSvec(spark, n, typedSrc("svec"), srcPath,
-        "id", "sv", TypedNlist)
-    }
-  }
-  private def typedSearch(family: String, dir: String, m: IvfIndex.Model,
-      q: Array[Float], nprobe: Int, metric: String): DataFrame = family match {
-    case "bvec" => TypedAnn.searchBvec(spark, dir, m, "id", q, K, nprobe, metric)
-    case "f16" => TypedAnn.searchF16(spark, dir, m, "id", q, K, nprobe, metric)
-    case "svec" => TypedAnn.searchSvec(spark, dir, m, "id", "sv", q, K, nprobe, metric)
-  }
-  private def typedBatch(family: String, dir: String, m: IvfIndex.Model,
-      nprobe: Int, metric: String): DataFrame = family match {
-    case "bvec" => TypedAnn.batchSearchBvec(spark, dir, m, "id", typedQueries, K,
-      nprobe, metric)
-    case "f16" => TypedAnn.batchSearchF16(spark, dir, m, "id", typedQueries, K,
-      nprobe, metric)
-    case "svec" => TypedAnn.batchSearchSvec(spark, dir, m, "id", "sv",
-      typedQueries, K, nprobe, metric)
-  }
+  private def typedEnsure(p: Payload): (IvfIndex.Model, String) =
+    if (p == SvecPayload) TypedAnn.ensure(spark, p, name(p.kind),
+      src.select(col("id"), svecFromDense(col("vec")).as("sv")), srcPath,
+      "id", "sv", TypedNlist)
+    else TypedAnn.ensure(spark, p, name(p.kind), src, srcPath, "id", "vec",
+      TypedNlist)
   /** The l2-family and dot range scans' rows (id, list_id) in id order,
     * pruned in the densified query space. */
-  private def typedRanges(family: String, dir: String,
+  private def typedRanges(p: Payload, dir: String,
       m: IvfIndex.Model): Seq[DataFrame] = {
-    val (r2, rDot) = if (family == "bvec") (4.0, -5.0) else (20.0, -40.0)
+    val (r2, rDot) = if (p == BvecPayload) (4.0, -5.0) else (20.0, -40.0)
     val model = IvfIndex.Model("l2", m.centroids)
     queries.flatMap { q =>
-      val qd = family match {
-        case "bvec" => q.map(x => if (x > 0f) 1f else 0f)
-        case "f16" => q.map(x =>
-          graft.types.Fp16.halfToFloat(graft.types.Fp16.floatToHalf(x)))
-        case _ => q
-      }
-      Seq(TypedAnn.rangeScanL2(spark, dir, model, m.radii, qd, r2),
-        TypedAnn.rangeScanDot(spark, dir, model, m.radii, qd, rDot))
+      val qd = p.densify(q)
+      Seq(IvfIndex.rangeScan(spark, dir, model, m.radii, qd, r2),
+        IvfIndex.rangeScanDot(spark, dir, model, m.radii, qd, rDot))
         .map(_.select(col("id"), col("list_id")).orderBy(col("id")))
     }
   }
-  private def typed(family: String, payload: String,
-      metrics: Seq[String]): Case = {
+  private def typed(p: Payload, metrics: Seq[String]): Case = {
     val qdf = typedQueries.toDF("qid", "qv")
-    Case(s"ivf_$family", () => typedEnsure(family)._2,
-      Seq("id", payload, "list_id"), { (dir, exact) =>
-        val m = typedEnsure(family)._1
+    Case(p.kind, () => typedEnsure(p)._2,
+      Seq("id", p.payloadCol, "list_id"), { (dir, exact) =>
+        val m = typedEnsure(p)._1
         val nprobe = if (exact) TypedNlist else 1
         metrics.flatMap(met => queries.map(q =>
-          typedSearch(family, dir, m, q, nprobe, met))) ++
-        metrics.map(met => typedBatch(family, dir, m, nprobe, met)) ++
+          TypedAnn.search(spark, p, dir, m, "id", q, K, nprobe, met))) ++
+        metrics.map(met => TypedAnn.batchSearch(spark, p, dir, m, "id",
+          typedQueries, K, nprobe, met)) ++
         metrics.map(met => KnnJoin.joinTyped(spark, qdf, "qid", "qv", dir, m,
-          "id", family, K, nprobe, met).orderBy(col("qid"), col("rn"))) ++
-        (if (exact) typedRanges(family, dir, m) else Nil)
+          "id", p, K, nprobe, met).orderBy(col("qid"), col("rn"))) ++
+        (if (exact) typedRanges(p, dir, m) else Nil)
       })
   }
-  private def typedIncr(family: String, payload: String, metric: String): Case = {
-    val kind = s"ivf_${family}_incr"
+  private def typedIncr(p: Payload, metric: String): Case = {
+    val kind = p.kind + "_incr"
     Case(kind, () => IncrIvf.ensure(spark, name(kind), segDir, "id", "vec",
         metric, nlist = TypedNlist),
-      Seq("id", "_ver", payload, "list_id"), { (_, exact) =>
+      Seq("id", "_ver", p.payloadCol, "list_id"), { (_, exact) =>
         queries.map(q => IncrIvf.search(spark, name(kind), segDir, "id", q, K,
           nprobe = if (exact) TypedNlist else 1))
       })
@@ -214,11 +188,11 @@ class CodedScanFormatSpec extends SparkSpec {
     }),
     ivf(Sq8Quant), ivf(PqQuant(m = 4)),
     incr(Sq8Quant), incr(PqQuant()), incr(RabitqQuant),
-    typed("bvec", "bv", Seq("hamming", "jaccard", "dot")),
-    typed("f16", "bits", Seq("l2", "dot", "cos")),
-    typed("svec", "sv", Seq("l2", "dot", "cos")),
-    typedIncr("bvec", "bv", "hamming"), typedIncr("f16", "bits", "f16"),
-    typedIncr("svec", "sv", "svec")
+    typed(BvecPayload, Seq("hamming", "jaccard", "dot")),
+    typed(F16Payload, Seq("l2", "dot", "cos")),
+    typed(SvecPayload, Seq("l2", "dot", "cos")),
+    typedIncr(BvecPayload, "hamming"), typedIncr(F16Payload, "f16"),
+    typedIncr(SvecPayload, "svec")
   ).map(c => c.kind -> c)).toMap
 
   // exact mode is codec-independent: one digest for the source table,
@@ -354,6 +328,17 @@ class CodedScanFormatSpec extends SparkSpec {
       assert(IndexCatalog.load(spark, n).get.params("m") == "4")
       val (c4k8, _) = ensure(4, 8)
       assert(c4k8.model.ks == 8, "stale ks=16 codebook served")
+      // same name and requires, another kind: each builds its own
+      // artifact — never the other kind's codes served as its own
+      def ensureQ[C <: Codec](q: Quant[C]) =
+        CodedFlat.ensure(spark, n, src, srcPath, "id", "vec", q)
+      ensureQ(PqQuant(4, 16))
+      val (p4, _) = ensureQ(PqQuant(4, 16, packed = true))
+      assert(IndexCatalog.load(spark, n).get.kind == "pq4", "pq codes served as pq4")
+      assert(p4.packed)
+      ensureQ(Sq8Quant)
+      ensureQ(RabitqQuant) // loaded sq8's manifest as rabitq's: key not found
+      assert(IndexCatalog.load(spark, n).get.kind == "rabitq")
     } finally IndexCatalog.drop(spark, n)
   }
 }

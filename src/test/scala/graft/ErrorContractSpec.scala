@@ -33,6 +33,19 @@ class ErrorContractSpec extends SparkSpec {
       TypedAnn.rankLists(m, wrongDims, "l2")
     }
     assert(e3.getMessage.contains("dimension of a vector"))
+    // typed range scans prune in the densified view: a shorter or a
+    // longer query against the bvector artifact errors the same way
+    val (bm, bPath) = AnnQueries.bvecAnn(spark, sf0001)
+    for (q <- Seq(wrongDims, Array.fill(bm.centroids(0).length + 3)(1f))) {
+      val e4 = intercept[IllegalArgumentException] {
+        IvfIndex.rangeScan(spark, bPath, bm, bm.radii, q, 4.0).collect()
+      }
+      assert(e4.getMessage.contains("dimension of a vector"))
+      val e5 = intercept[IllegalArgumentException] {
+        IvfIndex.rangeScanDot(spark, bPath, bm, bm.radii, q, -4.0).collect()
+      }
+      assert(e5.getMessage.contains("dimension of a vector"))
+    }
   }
 
   test("HNSW search with wrong query dims errors (error.slt)") {

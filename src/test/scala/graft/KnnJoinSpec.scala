@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Hnsw, IvfIndex, KnnJoin, KnnJoinKernels}
+import graft.operators.{BvecPayload, F16Payload, Hnsw, IvfIndex, KnnJoin,
+  KnnJoinKernels, SvecPayload}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 
 class KnnJoinSpec extends SparkSpec {
@@ -267,7 +268,7 @@ class KnnJoinSpec extends SparkSpec {
       val (m, path) = graft.queries.AnnQueries.bvecAnn(spark, sf0001)
       val qs = emb.filter(col("vec_id") % 25 === 0)
       val got = KnnJoin.joinTyped(spark, qs, "vec_id", "embedding", path, m,
-        "vec_id", "bvec", k = 5, nprobe = m.nlist)
+        "vec_id", BvecPayload, k = 5, nprobe = m.nlist)
         .select("qid", "vec_id", "rn").as[(Long, Long, Int)].collect().toSet
       val want = qs.select(col("vec_id").as("qid"), col("embedding").as("qv"))
         .crossJoin(emb.select(col("vec_id").as("cid"), col("embedding").as("cv")))
@@ -283,7 +284,7 @@ class KnnJoinSpec extends SparkSpec {
       val qs = emb.filter(col("vec_id") % 25 === 0)
         .select(col("vec_id"), spar(col("embedding")).as("qd"))
       val got = KnnJoin.joinTyped(spark, qs, "vec_id", "qd", path, m,
-        "vec_id", "svec", k = 5, nprobe = m.nlist)
+        "vec_id", SvecPayload, k = 5, nprobe = m.nlist)
         .select("qid", "vec_id", "rn").as[(Long, Long, Int)].collect().toSet
       val want = qs.select(col("vec_id").as("qid"), col("qd").as("qv"))
         .crossJoin(emb.select(col("vec_id").as("cid"),
@@ -303,7 +304,7 @@ class KnnJoinSpec extends SparkSpec {
           (col("c_custkey") % 13).cast("float")).as("v4"))
       val qs = cust.filter(col("c_custkey") % 25 === 0)
       val got = KnnJoin.joinTyped(spark, qs, "c_custkey", "v4", path, m,
-        "c_custkey", "f16", k = 5, nprobe = m.nlist)
+        "c_custkey", F16Payload, k = 5, nprobe = m.nlist)
         .select("qid", "c_custkey", "rn").as[(Long, Long, Int)].collect().toSet
       val want = qs.select(col("c_custkey").as("qid"), col("v4").as("qv"))
         .crossJoin(cust.select(col("c_custkey").as("cid"), col("v4").as("cv")))

@@ -380,15 +380,15 @@ class PushdownSpec extends SparkSpec {
 
   test("typed opclasses route through the planner: f16 l2, bvec hamming, svec dot") {
     import graft.functions._
-    import graft.operators.TypedAnn
+    import graft.operators.{BvecPayload, F16Payload, SvecPayload, TypedAnn}
     val src = s"$sf001/embeddings.parquet"
     val san = sf001.replaceAll("[^a-zA-Z0-9]", "_")
     val emb = spark.read.parquet(src)
-    val (mF16, dirF16) = TypedAnn.ensureF16(spark, s"pdf16_$san", emb, src,
-      "vec_id", "embedding", nlist = 8)
-    val (mBv, dirBv) = TypedAnn.ensureBvec(spark, s"pdbv_$san", emb, src,
-      "vec_id", "embedding", nlist = 8)
-    val (mSv, dirSv) = TypedAnn.ensureSvec(spark, s"pdsv_$san",
+    val (mF16, dirF16) = TypedAnn.ensure(spark, F16Payload, s"pdf16_$san", emb,
+      src, "vec_id", "embedding", nlist = 8)
+    val (mBv, dirBv) = TypedAnn.ensure(spark, BvecPayload, s"pdbv_$san", emb,
+      src, "vec_id", "embedding", nlist = 8)
+    val (mSv, dirSv) = TypedAnn.ensure(spark, SvecPayload, s"pdsv_$san",
       emb.select(col("vec_id"), svecFromDense(col("embedding")).as("sv")),
       src, "vec_id", "sv", nlist = 8)
     AnnPushdown.install(spark)
@@ -411,7 +411,8 @@ class PushdownSpec extends SparkSpec {
       val plan = f16Df.queryExecution.optimizedPlan.toString
       assert(plan.contains("list_id"), s"f16 top-k did not rewrite:\n$plan")
       assert(pairs(f16Df) == pairs(
-        TypedAnn.searchF16(spark, dirF16, mF16, "vec_id", q, 10, 8)))
+        TypedAnn.search(spark, F16Payload, dirF16, mF16, "vec_id", q, 10, 8,
+          metric = "l2")))
       // bvec hamming
       def bvDf = spark.read.parquet(src).select(col("vec_id"),
           bvecHamming(binarize(col("embedding")),
@@ -420,7 +421,8 @@ class PushdownSpec extends SparkSpec {
       assert(bvDf.queryExecution.optimizedPlan.toString.contains("list_id"),
         "bvec top-k did not rewrite")
       assert(pairs(bvDf) == pairs(
-        TypedAnn.searchBvec(spark, dirBv, mBv, "vec_id", q, 10, 8)))
+        TypedAnn.search(spark, BvecPayload, dirBv, mBv, "vec_id", q, 10, 8,
+          metric = "hamming")))
       // svec dot
       def svDf = spark.read.parquet(src).select(col("vec_id"),
           svecNegdot(svecFromDense(col("embedding")),
@@ -429,7 +431,7 @@ class PushdownSpec extends SparkSpec {
       assert(svDf.queryExecution.optimizedPlan.toString.contains("list_id"),
         "svec top-k did not rewrite")
       assert(pairs(svDf) == pairs(
-        TypedAnn.searchSvec(spark, dirSv, mSv, "vec_id", "sv", q, 10, 8,
+        TypedAnn.search(spark, SvecPayload, dirSv, mSv, "vec_id", q, 10, 8,
           metric = "dot")))
       // a dense registration must NOT satisfy the typed spelling
       spark.conf.set("spark.graft.ann.enabled", "false")
@@ -445,15 +447,15 @@ class PushdownSpec extends SparkSpec {
 
   test("typed sphere-range pushdown prunes lists, stays exact: f16/bvec/svec") {
     import graft.functions._
-    import graft.operators.TypedAnn
+    import graft.operators.{BvecPayload, F16Payload, SvecPayload, TypedAnn}
     val src = s"$sf001/embeddings.parquet"
     val san = sf001.replaceAll("[^a-zA-Z0-9]", "_")
     val emb = spark.read.parquet(src)
-    TypedAnn.ensureF16(spark, s"pdf16_$san", emb, src,
+    TypedAnn.ensure(spark, F16Payload, s"pdf16_$san", emb, src,
       "vec_id", "embedding", nlist = 8)
-    TypedAnn.ensureBvec(spark, s"pdbv_$san", emb, src,
+    TypedAnn.ensure(spark, BvecPayload, s"pdbv_$san", emb, src,
       "vec_id", "embedding", nlist = 8)
-    TypedAnn.ensureSvec(spark, s"pdsv_$san",
+    TypedAnn.ensure(spark, SvecPayload, s"pdsv_$san",
       emb.select(col("vec_id"), svecFromDense(col("embedding")).as("sv")),
       src, "vec_id", "sv", nlist = 8)
     AnnPushdown.install(spark)
@@ -504,11 +506,11 @@ class PushdownSpec extends SparkSpec {
   }
 
   test("typed PARTIAL index absorbs an exactly-matching filter; broader filters stay") {
-    import graft.operators.TypedAnn
+    import graft.operators.{BvecPayload, F16Payload, SvecPayload, TypedAnn}
     val src = s"$sf001/embeddings.parquet"
     val san = sf001.replaceAll("[^a-zA-Z0-9]", "_")
     val emb = spark.read.parquet(src)
-    TypedAnn.ensureBvec(spark, s"pdbvpart_$san",
+    TypedAnn.ensure(spark, BvecPayload, s"pdbvpart_$san",
       emb.filter(col("vec_id") % 7 === 0), src, "vec_id", "embedding", nlist = 8)
     AnnPushdown.install(spark)
     val prevReg = AnnPushdown.snapshot(src)
@@ -950,14 +952,14 @@ class PushdownSpec extends SparkSpec {
 
   test("typed KNN window-join pushdown: f16 and svec spellings rewrite, stay exact") {
     import graft.functions._
-    import graft.operators.TypedAnn
+    import graft.operators.{BvecPayload, F16Payload, SvecPayload, TypedAnn}
     import org.apache.spark.sql.expressions.{Window => W}
     val src = s"$sf001/embeddings.parquet"
     val san = sf001.replaceAll("[^a-zA-Z0-9]", "_")
     val emb = spark.read.parquet(src)
-    TypedAnn.ensureF16(spark, s"pdf16_$san", emb, src,
+    TypedAnn.ensure(spark, F16Payload, s"pdf16_$san", emb, src,
       "vec_id", "embedding", nlist = 8)
-    TypedAnn.ensureSvec(spark, s"pdsv_$san",
+    TypedAnn.ensure(spark, SvecPayload, s"pdsv_$san",
       emb.select(col("vec_id"), svecFromDense(col("embedding")).as("sv")),
       src, "vec_id", "sv", nlist = 8)
     AnnPushdown.install(spark)

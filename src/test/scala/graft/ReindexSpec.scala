@@ -132,12 +132,12 @@ class ReindexSpec extends SparkSpec {
         java.nio.file.Paths.get(dataDir, "part-0"), "x")
       IndexCatalog.Manifest("ivf", src, "l2", Map("nlist" -> "4"))
     }
-    IndexCatalog.ensure(spark, name, "raceSrc")(mkManifest("raceSrc"))
+    IndexCatalog.ensure(spark, name, "raceSrc", "ivf")(mkManifest("raceSrc"))
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
     val rF = Future { IndexCatalog.reindex(spark, name)(mkManifest("raceSrc")) }
-    val eF = Future { IndexCatalog.ensure(spark, name, "raceSrc")(mkManifest("raceSrc")) }
+    val eF = Future { IndexCatalog.ensure(spark, name, "raceSrc", "ivf")(mkManifest("raceSrc")) }
     Await.result(Future.sequence(Seq(rF, eF)), 60.seconds)
     val m = IndexCatalog.load(spark, name).get
     // whichever order the lock granted: exactly one committed manifest,

@@ -74,7 +74,7 @@ class ResidentIvfSpec extends SparkSpec {
 
   private def ensureIvf(name: String, source: String, metric: String,
       df: => DataFrame): (IvfIndex.Model, String) = {
-    val m = IndexCatalog.ensure(spark, name, source)(artifact(df, source, metric))
+    val m = IndexCatalog.ensure(spark, name, source, "ivf")(artifact(df, source, metric))
     (IvfIndex.Model(m.metric, m.centroids), IndexCatalog.dataDir(spark, name))
   }
 

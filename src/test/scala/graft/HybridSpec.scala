@@ -10,6 +10,73 @@ import graft.operators.{HybridSearch, IvfIndex, Segments}
 class HybridSpec extends SparkSpec {
   import spark.implicits._
 
+  /** The bytes a published graph file must hold: `rows` inserted in id
+    * order into one graph, written raw or through `codec`. */
+  private def rebuiltBytes(rows: Seq[(Long, Array[Float])], metric: String,
+      m: Int, efConstruction: Int,
+      codec: Option[graft.operators.Codec] = None): Array[Byte] = {
+    import graft.operators.{CodedHnsw, Hnsw}
+    val g = new Hnsw.Graph(metric, m, efConstruction)
+    rows.sortBy(_._1).foreach { case (id, v) => g.insert(id, v) }
+    val buf = new java.io.ByteArrayOutputStream()
+    val os = new java.io.DataOutputStream(buf)
+    codec match {
+      case Some(c) => CodedHnsw.CodedGraph.write(os, c.encode(g.snapshot))
+      case None => Hnsw.FlatGraph.write(os, g.snapshot)
+    }
+    os.close()
+    buf.toByteArray
+  }
+
+  /** The graph-file lock over one artifact dir: every published
+    * graph file equals [[rebuiltBytes]] over its own rows (looked up in
+    * `vecs` by the ids the file stores), the files together hold exactly
+    * `ids`, and a `routing.bin` (required iff `routed`) carries, per
+    * pid, nextUp(nextUp(max √l2sq)) of that file's rows to its centroid.
+    * Returns the published file names, sorted. */
+  private def assertGraphFiles(dir: String, vecs: Map[Long, Array[Float]],
+      ids: Set[Long], metric: String, m: Int, efConstruction: Int,
+      codec: Option[graft.operators.Codec] = None,
+      routed: Boolean = false): Seq[String] = {
+    import graft.operators.{CodedHnsw, Hnsw, IvfIndex}
+    // graph files end in -<ordinal>.bin; the sidecars (routing.bin,
+    // _sample.bin) do not
+    val pidOf = ".*-(\\d+)\\.bin".r
+    val names = Option(new java.io.File(dir).listFiles()).get.map(_.getName)
+      .filter(pidOf.matches).sorted.toSeq
+    val rowsOf = names.map { n =>
+      val path = java.nio.file.Paths.get(dir, n)
+      val bytes = java.nio.file.Files.readAllBytes(path)
+      val in = new java.io.DataInputStream(
+        new java.io.ByteArrayInputStream(bytes))
+      val fileIds =
+        if (codec.isDefined) CodedHnsw.CodedGraph.read(in).ids
+        else Hnsw.FlatGraph.read(in).ids
+      val rows = fileIds.toSeq.map(id => id -> vecs(id))
+      assert(java.util.Arrays.equals(bytes,
+          rebuiltBytes(rows, metric, m, efConstruction, codec)),
+        s"$dir/$n diverges from the id-sorted rebuild of its own rows")
+      n -> rows
+    }.toMap
+    assert(rowsOf.values.flatten.map(_._1).toSeq.sorted == ids.toSeq.sorted,
+      s"the graph files of $dir do not hold exactly the indexed rows")
+    val dirPath = new org.apache.hadoop.fs.Path(dir)
+    val routing = Hnsw.Routing.readFull(
+      dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration), dirPath)
+    assert(routing.isDefined == routed, s"routing.bin presence in $dir")
+    routing.foreach { case (_, ents, _) =>
+      assert(ents.keySet == names.map { case pidOf(p) => p.toInt }.toSet)
+      names.foreach { case n @ pidOf(p) =>
+        val (rad, c) = ents(p.toInt)
+        val far = rowsOf(n).map { case (_, v) =>
+          math.sqrt(IvfIndex.Kernels.l2sq(v, c)) }.max
+        assert(rad == java.lang.Math.nextUp(java.lang.Math.nextUp(far)),
+          s"routing radius of $n")
+      }
+    }
+    names
+  }
+
   test("hybrid search across append/delete/seal/reindex") {
     val segDir = Files.createTempDirectory("graft_hybrid_seg").toString
     val ivfDir = Files.createTempDirectory("graft_hybrid_ivf").toString
@@ -182,19 +249,101 @@ class HybridSpec extends SparkSpec {
             lit(nChunks.toLong)) === c.toLong)
           .select(col("vec_id").cast("long"), col("embedding"))
           .as[(Long, Array[Float])].collect().sortBy(_._1)
-        val g = new graft.operators.Hnsw.Graph("l2", 12, 300)
-        chunkRows.foreach { case (id, v) => g.insert(id, v) }
-        val buf = new java.io.ByteArrayOutputStream()
-        val os = new java.io.DataOutputStream(buf)
-        graft.operators.Hnsw.FlatGraph.write(os, g.snapshot)
-        os.close()
-        assert(java.util.Arrays.equals(published, buf.toByteArray),
+        assert(java.util.Arrays.equals(published,
+            rebuiltBytes(chunkRows, "l2", 12, 300)),
           s"parallel chunk $f diverges from the serial reference build")
       }
     } finally {
       spark.conf.unset("spark.graft.segments.maxGrowingRows")
       graft.index.IndexCatalog.drop(spark, name)
     }
+  }
+
+  test("graph-file lock: every build path publishes the id-sorted rebuild " +
+      "of each file's own rows") {
+    import graft.index.IndexCatalog
+    import graft.operators.{CodedHnsw, Hnsw, IncrHnsw, Sq8Quant}
+    val (m, efc) = (8, 48)
+    val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
+      .select(col("vec_id"), col("embedding"))
+    // the source rows arrive OUT of id order, so a build that inserts in
+    // arrival order cannot match the id-sorted rebuild
+    val src = Files.createTempDirectory("graft_lock_src").toString + "/t"
+    emb.repartition(1).sortWithinPartitions(xxhash64(col("vec_id")))
+      .write.parquet(src)
+    val scrambled = spark.read.parquet(src)
+    def vecsOf(df: org.apache.spark.sql.DataFrame): Map[Long, Array[Float]] =
+      df.select(col("vec_id").cast("long"), col("embedding"))
+        .as[(Long, Array[Float])].collect().toMap
+    val raw = vecsOf(emb)
+    val cos = vecsOf(emb.select(col("vec_id"),
+      graft.functions.vectorNormalize(col("embedding")).as("embedding")))
+    val all = raw.keySet
+
+    // dense hnsw (plain, cos view, spatial fleet) and coded SQ8 fleets
+    val dense = Seq(("l2", 1, raw), ("cos", 1, cos), ("l2", 2, raw))
+    dense.foreach { case (metric, parts, vecs) =>
+      val name = s"hybridspec_lock_${metric}_$parts"
+      IndexCatalog.drop(spark, name)
+      try {
+        val dir = Hnsw.ensure(spark, name, scrambled, src, "vec_id",
+          "embedding", metric, parts, m, efc)
+        val names = assertGraphFiles(dir, vecs, all, metric, m, efc,
+          routed = parts > 1)
+        if (parts == 1) assert(names == Seq("graph-00000.bin"))
+      } finally IndexCatalog.drop(spark, name)
+    }
+    Seq(1, 2).foreach { parts =>
+      val name = s"hybridspec_lock_sq8_$parts"
+      IndexCatalog.drop(spark, name)
+      try {
+        val (codec, dir) = CodedHnsw.ensure(spark, name, scrambled, src,
+          "vec_id", "embedding", parts, Sq8Quant, m, efc)
+        val names = assertGraphFiles(dir, raw, all, "l2", m, efc,
+          Some(codec), routed = parts > 1)
+        if (parts == 1) assert(names == Seq("sqgraph-00000.bin"))
+      } finally IndexCatalog.drop(spark, name)
+    }
+
+    // incremental: base, one side, a chunked side, a fresh full build
+    // of base + sides in one job, and the REINDEX rebase file
+    val segDir = Files.createTempDirectory("graft_lock_seg").toString
+    val name = "hybridspec_lock_incr"
+    val full = "hybridspec_lock_incr_full"
+    Seq(name, full).foreach(IndexCatalog.drop(spark, _))
+    def ids(lo: Int, hi: Int): Set[Long] = (lo.toLong until hi).toSet
+    try {
+      Segments.init(spark, segDir, scrambled.filter(col("vec_id") < 100),
+        "vec_id")
+      def ensure(n: String): String = IncrHnsw.ensure(spark, n, segDir,
+        "vec_id", "embedding", m = m, efConstruction = efc)
+      assert(assertGraphFiles(ensure(name), raw, ids(0, 100), "l2", m, efc)
+        == Seq("base-0-00000.bin"))
+      Segments.append(spark, segDir, scrambled.filter(
+        col("vec_id") >= 100 && col("vec_id") < 150), "vec_id")
+      assert(assertGraphFiles(ensure(name), raw, ids(0, 150), "l2", m, efc)
+        == Seq("base-0-00000.bin", "side-1.bin"))
+      Segments.append(spark, segDir, scrambled.filter(
+        col("vec_id") >= 150 && col("vec_id") < 450), "vec_id")
+      spark.conf.set("spark.graft.segments.maxGrowingRows", "50")
+      try {
+        val sides = assertGraphFiles(ensure(name), raw, ids(0, 450), "l2",
+          m, efc).filter(_.startsWith("side-2-"))
+        assert(sides == (0 until 6).map(c => f"side-2-$c%05d.bin"))
+        val fleet = assertGraphFiles(ensure(full), raw, ids(0, 450), "l2",
+          m, efc)
+        assert(fleet.count(_.startsWith("base-0-00000-")) == 2 &&
+          fleet.contains("side-1.bin") && fleet.count(_.startsWith("side-2-")) == 6,
+          s"unexpected full-build file set: $fleet")
+      } finally spark.conf.unset("spark.graft.segments.maxGrowingRows")
+      Segments.delete(spark, segDir, Seq(3L, 120L, 200L).toDF("vec_id"),
+        "vec_id")
+      val rebased = IncrHnsw.reindex(spark, name, segDir, "vec_id",
+        "embedding", m = m, efConstruction = efc)
+      val seq = Segments.state(segDir).seq
+      assert(assertGraphFiles(rebased, raw, ids(0, 450) -- Set(3L, 120L, 200L),
+        "l2", m, efc) == Seq(s"rebase-$seq-00000.bin"))
+    } finally Seq(name, full).foreach(IndexCatalog.drop(spark, _))
   }
 
   test("tombstone snapshot cache invalidates on every commit (rapid delete/search)") {
@@ -234,7 +383,7 @@ class HybridSpec extends SparkSpec {
     // sequence => the published file must match a reference build done
     // here, byte for byte — any divergence means the executor path
     // changed the graph, not just where it was computed.
-    import graft.operators.{Hnsw, IncrHnsw}
+    import graft.operators.IncrHnsw
     val segDir = Files.createTempDirectory("graft_incr_bytes").toString
     val name = "hybridspec_incr_bytes"
     graft.index.IndexCatalog.drop(spark, name)
@@ -250,15 +399,10 @@ class HybridSpec extends SparkSpec {
     val deltaRows = spark.read.parquet(s"$segDir/delta-1")
       .select(col("vec_id").cast("long"), col("embedding"))
       .as[(Long, Array[Float])].collect().sortBy(_._1)
-    val g = new Hnsw.Graph("l2", 12, 300)
-    deltaRows.foreach { case (id, v) => g.insert(id, v) }
-    val buf = new java.io.ByteArrayOutputStream()
-    val os = new java.io.DataOutputStream(buf)
-    Hnsw.FlatGraph.write(os, g.snapshot)
-    os.close()
-    assert(java.util.Arrays.equals(published, buf.toByteArray),
+    val ref = rebuiltBytes(deltaRows, "l2", 12, 300)
+    assert(java.util.Arrays.equals(published, ref),
       s"executor-built side graph diverges from the reference build " +
-        s"(${published.length} vs ${buf.toByteArray.length} bytes)")
+        s"(${published.length} vs ${ref.length} bytes)")
     graft.index.IndexCatalog.drop(spark, name)
   }
 

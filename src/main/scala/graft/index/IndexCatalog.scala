@@ -124,9 +124,6 @@ object IndexCatalog {
     Option(artifactDir.getParentFile)
       .map(p => new File(p, "MANIFEST.bin")).flatMap(loadFile)
 
-  /** Commit a manifest AFTER the data artifact is fully written — the
-    * crash-recovery rule (lib.rs:128-211): a dir without a committed
-    * manifest is garbage and gets rebuilt. */
   /** Params owned by [[reindex]] that must survive every OTHER commit:
     * a rebuilt manifest that dropped `data_dir` would flip the artifact
     * path back to data/ while the files live in data-rN/, and a dropped
@@ -134,6 +131,9 @@ object IndexCatalog {
     * dir (deleting the artifact it just committed). */
   private val ReindexOwned = Seq("data_dir", "reindex_gen")
 
+  /** Commit a manifest AFTER the data artifact is fully written — the
+    * crash-recovery rule (lib.rs:128-211): a dir without a committed
+    * manifest is garbage and gets rebuilt. */
   def commit(spark: SparkSession, name: String, m0: Manifest): Manifest = {
     val prior = ReindexOwned.filterNot(m0.params.contains)
       .flatMap(k => load(spark, name).flatMap(_.params.get(k)).map(k -> _))
@@ -144,7 +144,11 @@ object IndexCatalog {
     val tmp = new File(f.getParentFile, "MANIFEST.tmp")
     val out = new ObjectOutputStream(new FileOutputStream(tmp))
     try { out.writeObject(m) } finally out.close()
-    tmp.renameTo(f)
+    if (!tmp.renameTo(f)) {
+      tmp.delete()
+      throw new java.io.IOException(
+        s"index $name: failed to publish manifest $f")
+    }
     cache.put(f.getAbsolutePath, Cached(f.lastModified(), f.length(), m))
     m
   }
@@ -368,20 +372,7 @@ object IndexCatalog {
     * Unknown keys and invalid values are rejected (index_edit.slt), so an
     * alter can never corrupt structural build metadata. */
   def alter(spark: SparkSession, name: String, key: String,
-      value: String): Manifest = withIndexLock(spark, name, "alter") {
-    val m = load(spark, name).getOrElse(
-      throw new IllegalArgumentException(s"no such index: $name"))
-    val validate = Alterable.getOrElse(key,
-      throw new IllegalArgumentException(s"option not found: $key"))
-    if (!validate(value))
-      throw new IllegalArgumentException(s"invalid index option value: $key = $value")
-    val committed = commit(spark, name, m.copy(params = m.params + (key -> value)))
-    // AFTER the commit (the manifest — the source of truth — mutates
-    // first; a crash between the two leaves only the already-accepted
-    // manifest-vs-sidecar gap, never a sidecar ahead of the manifest)
-    if (key == "probe_hint") propagateHint(spark, name, m, Some(value.toInt))
-    committed
-  }
+      value: String): Manifest = alterAll(spark, name, Map(key -> value))
 
   /** Keep what SEARCHES read in step with a probe_hint alter/reset:
     * graph fleets serve the hint from their routing.bin (round-12
@@ -447,10 +438,14 @@ object IndexCatalog {
         throw new IllegalArgumentException(
           s"invalid index option value: $key = $value")
     }
-    val committed = commit(spark, name, m.copy(params = m.params ++ kvs))
-    // the statement ALTER ... SET goes through here — it must reach the
-    // sidecar/subs exactly like the single-key path (round-12 review:
-    // only alter()/resetAll() were synced at first)
+    // every key already holding its value (an idempotent re-CREATE's
+    // recipe) leaves MANIFEST.bin as it is
+    val committed =
+      if (kvs.forall { case (k, v) => m.params.get(k).contains(v) }) m
+      else commit(spark, name, m.copy(params = m.params ++ kvs))
+    // AFTER the commit (the manifest — the source of truth — mutates
+    // first; a crash between the two leaves only the already-accepted
+    // manifest-vs-sidecar gap, never a sidecar ahead of the manifest)
     kvs.get("probe_hint").foreach(v =>
       propagateHint(spark, name, m, Some(v.toInt)))
     committed

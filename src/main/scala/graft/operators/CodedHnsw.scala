@@ -264,14 +264,13 @@ object CodedHnsw {
       df: => DataFrame, source: String, idCol: String, vecCol: String,
       parts: Int, quant: Quant[Codec], m: Int, efConstruction: Int)(dataDir: String)
       : IndexCatalog.Manifest = {
-    import spark.implicits._
     val nonNull = df.filter(col(vecCol).isNotNull &&
       graft.functions.vectorIsFinite(col(vecCol)))
     val codec = quant.train(nonNull, vecCol)
-    val rows0 = nonNull.select(col(idCol).cast("long"), col(vecCol))
-      .as[(Long, Array[Float])]
-    val (nFiles, routingParams) = Hnsw.buildGraphFiles(spark, rows0,
-      parts, dataDir, m, efConstruction, codec)
+    val (nFiles, routingParams) = Hnsw.buildFleet(spark,
+      nonNull.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec")),
+      parts, dataDir, layout(quant).prefix, "l2", m, efConstruction,
+      Some(codec))
     manifest(codec, source, parts, m, efConstruction, nFiles, routingParams)
   }
 

@@ -74,7 +74,7 @@ object Hnsw {
     * generation-keyed manifest addition). */
   private[graft] val RoutingGen = "centroid5"
 
-  /** Split threshold for [[buildGraphFiles]]'s balanced partitioning:
+  /** Split threshold for [[balancedPids]]' balanced partitioning:
     * a cell splits when it exceeds this multiple of the mean cell
     * size. 1.5 keeps every near-balanced layout (the driver fixtures
     * measure ≤1.23× at parts=4) building exactly as before while
@@ -1051,10 +1051,11 @@ object Hnsw {
     }
   }
 
-  /** Exact-by-pid RDD partitioner for the spatial build: cluster i's
-    * rows land in partition i, so graph-<pid>.bin IS cluster pid and the
-    * routing sidecar keys align. (repartition(parts, col) hashes — it
-    * can collide two clusters into one graph and strand empty files.) */
+  /** Exact-by-pid RDD partitioner for [[buildGraphFiles]]: pid i's rows
+    * land in partition i, so file i holds exactly pid i (a spatial cell,
+    * whose routing sidecar keys then align, or an IncrHnsw segment
+    * chunk). (repartition(parts, col) hashes — it can collide two pids
+    * into one graph and strand empty files.) */
   private[graft] class PidPartitioner(n: Int) extends org.apache.spark.Partitioner {
     def numPartitions: Int = n
     def getPartition(key: Any): Int = key.asInstanceOf[Int]
@@ -1078,32 +1079,14 @@ object Hnsw {
     c
   }
 
-  /** Distributed top-k with per-call graph build — spec/testing path only;
-    * production queries go through [[ensure]] + [[searchIndex]]. */
-  def topk(df: DataFrame, idCol: String, vecCol: String, metric: String,
-      q: Array[Float], k: Int, m: Int = 12, efConstruction: Int = 300,
-      efSearch: Int = 100): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val bq = spark.sparkContext.broadcast(q)
-    val rows = df.select(col(idCol).cast("long"), col(vecCol))
-      .as[(Long, Array[Float])]
-    val hits = rows.mapPartitions { it =>
-      val g = new Graph(metric, m, efConstruction)
-      it.foreach { case (id, v) => g.insert(id, v) }
-      g.search(bq.value, k, efSearch).iterator.map { case (d, id) => (id, d) }
-    }.toDF(idCol, "dist")
-    hits.orderBy(col("dist"), col(idCol)).limit(k)
-  }
-
-  /** One-time CREATE INDEX job: build one graph per hash partition and
-    * persist each as a columnar binary file (`graph-<pid>.bin`, written
-    * through the Hadoop FS API so the same code targets local disk or
-    * HDFS/S3) — the sealed-segment analog
-    * (crates/index/src/segment/sealed.rs). Searches load graphs via the
-    * executor-local [[GraphCache]], never rebuild. `parts <= 1` builds a
-    * single graph over id-sorted rows (deterministic; used by the
-    * exact-mode query). */
+  /** One-time CREATE INDEX job: build one graph (`parts <= 1`) or one
+    * graph per spatial cell ([[buildFleet]]) and persist each as a
+    * columnar binary file (`graph-<pid>.bin`, written through the Hadoop
+    * FS API so the same code targets local disk or HDFS/S3) — the
+    * sealed-segment analog (crates/index/src/segment/sealed.rs).
+    * Searches load graphs via the executor-local [[GraphCache]], never
+    * rebuild. Every graph inserts its rows in id order, so its bytes are
+    * deterministic. */
   def ensure(spark: org.apache.spark.sql.SparkSession, name: String,
       df: => DataFrame, source: String, idCol: String, vecCol: String,
       metric: String, parts: Int, m: Int = 12, efConstruction: Int = 300): String = {
@@ -1139,9 +1122,6 @@ object Hnsw {
     IndexCatalog.dataDir(spark, name)
   }
 
-  /** The graph-artifact build job shared by [[ensure]] and [[reindex]]:
-    * write per-partition FlatGraph files under `dataDir`, return the
-    * manifest describing them. */
   /** Beam-breadth calibration generation (round 17): the 768-dim smoke
     * measured routed recall@10 collapse to 0.50 at the fixed ef=100
     * default on near-uniform high-dimensional clouds (distance
@@ -1226,165 +1206,39 @@ object Hnsw {
     if (idx >= 0) ladder(idx) else ladder.last
   }
 
+  /** The graph-artifact build job shared by [[ensure]] and [[reindex]]:
+    * the [[buildFleet]] graph files under `dataDir`, the selectivity
+    * sample and the calibrated ef hint; returns the manifest describing
+    * them. */
   private def buildFlatArtifact(spark: org.apache.spark.sql.SparkSession,
       df: => DataFrame, source: String, idCol: String, vecCol: String,
       metric: String, parts: Int, m: Int, efConstruction: Int)
       : String => graft.index.IndexCatalog.Manifest = { dataDir =>
-      import graft.index.IndexCatalog
-      import spark.implicits._
       // cosine follows the IVF rewrite: normalize at build, search by dot.
       // NULL AND non-finite vectors are excluded (null.slt contract): a
       // NaN node would stall the greedy descent — every dist comparison
       // against NaN is false, so a walk entering it can never leave.
-      val nonNull = df.filter(col(vecCol).isNotNull &&
-        graft.functions.vectorIsFinite(col(vecCol)))
-      val prepped =
-        if (metric == "cos")
-          nonNull.withColumn(vecCol, graft.functions.vectorNormalize(col(vecCol)))
-        else nonNull
-      val rows0 = prepped.select(col(idCol).cast("long"), col(vecCol))
-        .as[(Long, Array[Float])]
-      val dirPath = new org.apache.hadoop.fs.Path(dataDir)
-      val fs = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(dirPath)) fs.delete(dirPath, true)
-      fs.mkdirs(dirPath)
-      val hconf = confEntries(spark)
-      /** Build one FlatGraph from this partition's rows and publish it
-        * as graph-<pid>.bin; returns (pid, nRows, covering L2 radius to
-        * `centroidOf(pid)` — 0.0 when no centroid, i.e. the hash path). */
-      def writeGraphTask(it: Iterator[(Long, Array[Float])],
-          centroidOf: Int => Array[Float]): Iterator[(Int, Long, Double)] = {
-        // sorted insertion: deterministic graphs AND deterministic
-        // artifact bytes per (data, params) — matters for the GraphCache
-        // identity key and for spec reproducibility
-        val rows = it.toArray.sortBy(_._1)
-        if (rows.isEmpty) Iterator.empty
-        else {
-          val g = new Graph(metric, m, efConstruction)
-          rows.foreach { case (id, v) => g.insert(id, v) }
-          val tc = org.apache.spark.TaskContext.get()
-          val pid = tc.partitionId()
-          val c = centroidOf(pid)
-          var rad = 0.0
-          if (c != null) {
-            var i = 0
-            while (i < rows.length) {
-              val d = math.sqrt(IvfIndex.Kernels.l2sq(rows(i)._2, c))
-              if (d > rad) rad = d
-              i += 1
-            }
-            // round UP: float noise must never shrink a bound below a
-            // boundary row (the IVF radii convention)
-            rad = java.lang.Math.nextUp(java.lang.Math.nextUp(rad))
-          }
-          // tmp is unique PER ATTEMPT: retried/speculative tasks must
-          // never interleave writes into a shared file
-          val attempt = tc.taskAttemptId()
-          val p = new org.apache.hadoop.fs.Path(f"$dataDir/graph-$pid%05d.bin")
-          val tmp = new org.apache.hadoop.fs.Path(
-            f"$dataDir/.graph-$pid%05d-$attempt.tmp")
-          val pfs = p.getFileSystem(mkConf(hconf))
-          val out = new java.io.DataOutputStream(
-            new java.io.BufferedOutputStream(pfs.create(tmp, true), 1 << 20))
-          try FlatGraph.write(out, g.snapshot) finally out.close()
-          // write-then-rename: readers never see partials. A failed
-          // rename is only tolerable when a rival attempt already
-          // published the file.
-          if (!pfs.rename(tmp, p)) {
-            if (!pfs.exists(p))
-              throw new java.io.IOException(s"failed to publish $p")
-            pfs.delete(tmp, false)
-          }
-          Iterator.single((pid, rows.length.toLong, rad))
-        }
-      }
+      val vec =
+        if (metric == "cos") graft.functions.vectorNormalize(col(vecCol))
+        else col(vecCol)
+      val rows = df.filter(col(vecCol).isNotNull &&
+          graft.functions.vectorIsFinite(col(vecCol)))
+        .select(col(idCol).cast("long").as("id"), vec.as("vec"))
+      val (nFiles, routing) = buildFleet(spark, rows, parts, dataDir,
+        "graph", metric, m, efConstruction, None)
       // selectivity sample for the filtered pushdown arm's cost gate —
       // over the RAW source frame (the population the unrewritten
       // pre-filter plan would scan), not the null-filtered build rows
       graft.index.SampleSidecar.write(spark, df, idCol, dataDir)
-      val baseParams = Map("m" -> m.toString,
-        "ef_construction" -> efConstruction.toString,
-        "parts" -> parts.toString, "format" -> "flatbin2",
-        "sample" -> graft.index.SampleSidecar.Gen)
-      if (parts <= 1) {
-        val rows = rows0.coalesce(1).sortWithinPartitions(col(idCol))
-        val nFiles = rows.mapPartitions(writeGraphTask(_, _ => null))
-          .collect().length
-        val efHint = calibrateEf(spark, dataDir,
-          prepped.select(col(vecCol).as("v")))
-        IndexCatalog.Manifest("hnsw", source, metric,
-          baseParams + ("files" -> nFiles.toString) +
-            ("ef_cal" -> EfCalGen) + ("ef_hint" -> efHint.toString))
-      } else {
-        // SPATIAL partitioning (round 8): k-means the prepped vectors
-        // into `parts` clusters and build one graph per CLUSTER, so the
-        // per-graph routing stats (centroid + covering radius) carry
-        // real pruning power — hash-partitioned graphs are each a
-        // uniform sample of the corpus, whose radii bound nothing.
-        // Assignment is L2 in the STORED space (cos rows are already
-        // normalize-at-build here), matching the L2-radius bounds the
-        // joins evaluate. Every-graph searches (searchIndex et al.) are
-        // partitioning-agnostic: the per-graph top-k union covers the
-        // same row set either way.
-        val model = IvfIndex.train(prepped, vecCol, "l2", parts)
-        // balanced split of oversized cells (round 15 — see balancedPids)
-        def assigned = rows0.toDF
-          .withColumn("cl", IvfIndex.nearestCentroid(col(vecCol), model))
-        val (pidCol, centroids) =
-          balancedPids(assigned, vecCol, parts, model)
-        val bcent = spark.sparkContext.broadcast(centroids)
-        val stats = assigned
-          .select(pidCol.as("pid"), col(idCol), col(vecCol))
-          .as[(Int, Long, Array[Float])]
-          .rdd.map { case (c, id, v) => (c, (id, v)) }
-          .partitionBy(new PidPartitioner(centroids.length))
-          .map(_._2)
-          .mapPartitions(writeGraphTask(_, pid => bcent.value(pid)))
-          .collect()
-        val ents = stats.sortBy(_._1).map { case (pid, _, rad) =>
-          (pid, rad, bcent.value(pid)) }.toSeq
-        val routable =
-          if (Routing.separable(ents.map(e => (e._2, e._3)).toArray)) "yes"
-          else "no"
-        // probeGraphs calibration (round 12, the IVF cal3 convention):
-        // only separable fleets measure — the guarded AUTO default
-        // never routes a non-separated partitioning, so the extra
-        // corpus pass would buy nothing there
-        val hint = if (routable == "no") 0
-          else calibrateGraphProbes(spark,
-            assigned.select(col(vecCol).as("v"), pidCol.as("pid")),
-            metric, ents)
-        Routing.write(fs, dirPath, metric, ents,
-          if (centroids.nonEmpty) centroids(0).length else 0,
-          hint)
-        val efHint = calibrateEf(spark, dataDir,
-          prepped.select(col(vecCol).as("v")))
-        IndexCatalog.Manifest("hnsw", source, metric,
-          baseParams ++ Map("files" -> stats.length.toString,
-            "routing" -> RoutingGen, "routable" -> routable,
-            // advisory (round 16): the cell count the data wanted —
-            // larger than `parts` means the build was misconfigured
-            // toward wide cells (see RoutingGen's centroid5 note)
-            "suggest_parts" -> stats.length.toString,
-            "ef_cal" -> EfCalGen, "ef_hint" -> efHint.toString) ++
-            (if (hint > 0) Map("probe_hint" -> hint.toString)
-             else Map.empty))
-      }
+      val efHint = calibrateEf(spark, dataDir, rows.select(col("vec").as("v")))
+      graft.index.IndexCatalog.Manifest("hnsw", source, metric,
+        Map("m" -> m.toString, "ef_construction" -> efConstruction.toString,
+          "parts" -> parts.toString, "format" -> "flatbin2",
+          "sample" -> graft.index.SampleSidecar.Gen,
+          "files" -> nFiles.toString, "ef_cal" -> EfCalGen,
+          "ef_hint" -> efHint.toString) ++ routing)
   }
 
-  /** Shared graph-file build for the CODED graph families (round 9):
-    * parts<=1 publishes one id-sorted graph; parts>1 runs the SPATIAL
-    * build — k-means assignment through the exact [[PidPartitioner]],
-    * one graph per cluster, id-sorted insertion, and a `routing.bin`
-    * sidecar (l2 centroid + nextUp-rounded covering radius per pid) —
-    * the dense [[buildFlatArtifact]] convention lifted so coded
-    * searches route too ([[Routing.align]]'s pid regex accepts any
-    * `*graph-` file prefix). `encode` turns each partition's snapshot
-    * into the family's on-disk form; rows must already be
-    * null/non-finite filtered; the build metric is l2 (every coded
-    * family's). Returns the published file count plus the routing
-    * manifest params (generation + separability flag at parts>1, empty
-    * otherwise) for the caller's manifest. */
   /** BALANCED spatial assignment (round 15, routing=centroid4): k-means
     * cell sizes are unbounded — a center that captures several natural
     * clusters makes its insertion task the fleet build's wall (one
@@ -1436,59 +1290,91 @@ object Hnsw {
     }
   }
 
+  /** The one graph-file build of every HNSW kind (dense, coded and
+    * incremental): each task inserts its rows, sorted by id, into one
+    * [[Graph]] under `metric` and publishes it as `names(pid)` in
+    * `dataDir` ([[GraphFileWriter]]). `rows` carries `id` (long) and
+    * `vec`, plus an int `pid` in [0, names.length) when more than one
+    * file is written: those rows shuffle through the exact
+    * [[PidPartitioner]]; a single file coalesces to one task, no
+    * shuffle. With `centroids`, each file's covering L2 radius to
+    * `centroids(pid)` is measured; with a `codec`, files hold its coded
+    * graphs instead of the raw [[FlatGraph]]. Returns (pid, radius, 0.0
+    * without centroids) per published file. */
   private[graft] def buildGraphFiles(spark: org.apache.spark.sql.SparkSession,
-      rows0: org.apache.spark.sql.Dataset[(Long, Array[Float])],
-      parts: Int, dataDir: String, m: Int, efConstruction: Int,
-      codec: Codec): (Int, Map[String, String]) = {
+      rows: DataFrame, dataDir: String, names: Array[String],
+      metric: String, m: Int, efConstruction: Int,
+      centroids: Option[Array[Array[Float]]] = None,
+      codec: Option[Codec] = None): Array[(Int, Double)] = {
     import spark.implicits._
+    val sc = spark.sparkContext
+    val writer = new GraphFileWriter(dataDir, names, metric, m,
+      efConstruction, confEntries(spark), centroids.map(sc.broadcast(_)),
+      codec.map(sc.broadcast(_)))
+    if (names.length == 1)
+      rows.select(col("id"), col("vec")).as[(Long, Array[Float])]
+        .coalesce(1).mapPartitions(writer.run _).collect()
+    else
+      rows.select(col("pid"), col("id"), col("vec"))
+        .as[(Int, Long, Array[Float])]
+        .rdd.map { case (p, id, v) => (p, (id, v)) }
+        .partitionBy(new PidPartitioner(names.length))
+        .map(_._2).mapPartitions(writer.run _).collect()
+  }
+
+  /** The graph files of a dense or coded HNSW artifact, written into a
+    * fresh `dataDir` as `<prefix>-<pid>.bin` by [[buildGraphFiles]].
+    * `parts <= 1` publishes one graph. `parts > 1` runs the SPATIAL
+    * build (round 8): k-means the rows into `parts` cells, split the
+    * oversized ones ([[balancedPids]]), build one graph per cell, and
+    * write the `routing.bin` sidecar — per pid the l2 centroid and the
+    * nextUp-rounded covering radius, the per-partition lower bounds
+    * searches prune graphs by, plus the calibrated probe hint. Hash
+    * partitions would each be a uniform sample of the corpus, whose
+    * radii bound nothing. Assignment is L2 in the STORED space (cos rows
+    * arrive normalized), matching the L2-radius bounds the joins
+    * evaluate; every-graph searches are partitioning-agnostic. `rows` =
+    * (id long, vec), already null/non-finite filtered. Returns the file
+    * count and the routing manifest params (empty at parts <= 1). */
+  private[graft] def buildFleet(spark: org.apache.spark.sql.SparkSession,
+      rows: DataFrame, parts: Int, dataDir: String, prefix: String,
+      metric: String, m: Int, efConstruction: Int,
+      codec: Option[Codec]): (Int, Map[String, String]) = {
     val dirPath = new org.apache.hadoop.fs.Path(dataDir)
     val fs = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(dirPath)) fs.delete(dirPath, true)
     fs.mkdirs(dirPath)
-    val hconf = confEntries(spark)
-    val df = rows0.toDF("id", "vec")
-    val bCodec = spark.sparkContext.broadcast(codec)
-    if (parts <= 1) {
-      val writer = new GraphFileWriter(dataDir, m, efConstruction, hconf,
-        null, bCodec)
-      (df.as[(Long, Array[Float])].coalesce(1)
-        .mapPartitions(writer.run _).collect().length, Map.empty)
-    } else {
-      val model = IvfIndex.train(df, "vec", "l2", parts)
-      def assigned = df
-        .withColumn("cl", IvfIndex.nearestCentroid(col("vec"), model))
-      val (pidCol, centroids) = balancedPids(assigned, "vec", parts, model)
-      val bcent = spark.sparkContext.broadcast(centroids)
-      val writer = new GraphFileWriter(dataDir, m, efConstruction, hconf,
-        bcent, bCodec)
-      val stats = assigned
-        .select(pidCol.as("pid"), col("id"), col("vec"))
-        .as[(Int, Long, Array[Float])]
-        .rdd.map { case (c, id, v) => (c, (id, v)) }
-        .partitionBy(new PidPartitioner(centroids.length))
-        .map(_._2)
-        .mapPartitions(writer.run _)
-        .collect()
-      val ents = stats.sortBy(_._1).map { case (pid, _, rad) =>
-        (pid, rad, bcent.value(pid)) }.toSeq
-      val routable =
-        if (Routing.separable(ents.map(e => (e._2, e._3)).toArray)) "yes"
-        else "no"
-      // coded fleets calibrate like the dense one — the coded searches
-      // route on the RAW query through the same sidecar
-      val hint = if (routable == "no") 0
-        else calibrateGraphProbes(spark,
-          assigned.select(col("vec").as("v"), pidCol.as("pid")),
-          "l2", ents)
-      Routing.write(fs, dirPath, "l2", ents,
-        if (centroids.nonEmpty) centroids(0).length else 0,
-        hint)
-      (stats.length,
-        Map("routing" -> RoutingGen, "routable" -> routable,
-          "suggest_parts" -> stats.length.toString) ++
-          (if (hint > 0) Map("probe_hint" -> hint.toString)
-           else Map.empty))
-    }
+    def name(pid: Int): String = f"$prefix-$pid%05d.bin"
+    if (parts <= 1)
+      return (buildGraphFiles(spark, rows, dataDir, Array(name(0)), metric,
+        m, efConstruction, codec = codec).length, Map.empty)
+    val model = IvfIndex.train(rows, "vec", "l2", parts)
+    def assigned = rows
+      .withColumn("cl", IvfIndex.nearestCentroid(col("vec"), model))
+    val (pidCol, centroids) = balancedPids(assigned, "vec", parts, model)
+    val stats = buildGraphFiles(spark, assigned.withColumn("pid", pidCol),
+      dataDir, centroids.indices.map(name).toArray, metric, m,
+      efConstruction, Some(centroids), codec)
+    val ents = stats.sortBy(_._1).map { case (pid, rad) =>
+      (pid, rad, centroids(pid)) }.toSeq
+    val routable = Routing.separable(ents.map(e => (e._2, e._3)).toArray)
+    // probeGraphs calibration (round 12, the IVF cal3 convention): only
+    // separable fleets measure — the guarded AUTO default never routes a
+    // non-separated partitioning, so the extra corpus pass would buy
+    // nothing there. Coded searches route the RAW query through the
+    // same sidecar, so coded fleets calibrate alike.
+    val hint = if (!routable) 0
+      else calibrateGraphProbes(spark,
+        assigned.select(col("vec").as("v"), pidCol.as("pid")), metric, ents)
+    Routing.write(fs, dirPath, metric, ents,
+      if (centroids.nonEmpty) centroids(0).length else 0, hint)
+    (stats.length,
+      Map("routing" -> RoutingGen, "routable" -> (if (routable) "yes" else "no"),
+        // advisory (round 16): the cell count the data wanted — larger
+        // than `parts` means the build was misconfigured toward wide
+        // cells (see RoutingGen's centroid5 note)
+        "suggest_parts" -> stats.length.toString) ++
+        (if (hint > 0) Map("probe_hint" -> hint.toString) else Map.empty))
   }
 
   /** Graph-fleet probe calibration ([[ProbeCal]], round 12): on the
@@ -2114,53 +2000,57 @@ object Hnsw {
   }
 }
 
-/** Top-level serializable task for [[Hnsw.buildGraphFiles]]: a lambda
-  * or local def here would be lifted as an Hnsw$ instance method and
-  * capture the non-serializable singleton (measured — the closure
-  * cleaner cannot null indylambda captures). Fields are all
-  * serializable; `bcent` is null on the single/hash path. */
-private[graft] class GraphFileWriter(dataDir: String, m: Int,
-    efConstruction: Int, hconf: Seq[(String, String)],
-    bcent: org.apache.spark.broadcast.Broadcast[Array[Array[Float]]],
-    codec: org.apache.spark.broadcast.Broadcast[Codec])
+/** The per-partition task of [[Hnsw.buildGraphFiles]]: builds one graph
+  * from the partition's rows and publishes it as `names(partitionId)`.
+  * Its fields are everything a task reads, all serializable;
+  * `centroids` and `codec` are broadcast when present. */
+private[graft] class GraphFileWriter(dataDir: String, names: Array[String],
+    metric: String, m: Int, efConstruction: Int,
+    hconf: Seq[(String, String)],
+    centroids: Option[org.apache.spark.broadcast.Broadcast[Array[Array[Float]]]],
+    codec: Option[org.apache.spark.broadcast.Broadcast[Codec]])
     extends Serializable {
-  def run(it: Iterator[(Long, Array[Float])])
-      : Iterator[(Int, Long, Double)] = {
+  def run(it: Iterator[(Long, Array[Float])]): Iterator[(Int, Double)] = {
+    // sorted insertion: deterministic graphs AND deterministic artifact
+    // bytes per (data, params) — the GraphCache identity key and the
+    // HybridSpec graph-file lock rely on it
     val rows = it.toArray.sortBy(_._1)
     if (rows.isEmpty) Iterator.empty
     else {
-      val g = new Hnsw.Graph("l2", m, efConstruction)
+      val g = new Hnsw.Graph(metric, m, efConstruction)
       rows.foreach { case (id, v) => g.insert(id, v) }
       val tc = org.apache.spark.TaskContext.get()
       val pid = tc.partitionId()
-      val c = if (bcent == null) null else bcent.value(pid)
-      var rad = 0.0
-      if (c != null) {
-        var i = 0
-        while (i < rows.length) {
-          val d = math.sqrt(IvfIndex.Kernels.l2sq(rows(i)._2, c))
-          if (d > rad) rad = d
-          i += 1
+      // round UP: float noise must never shrink a bound below a
+      // boundary row (the IVF radii convention)
+      val rad = centroids.fold(0.0) { bc =>
+        val c = bc.value(pid)
+        val far = rows.foldLeft(0.0) { (r, row) =>
+          val d = math.sqrt(IvfIndex.Kernels.l2sq(row._2, c))
+          if (d > r) d else r
         }
-        rad = java.lang.Math.nextUp(java.lang.Math.nextUp(rad))
+        java.lang.Math.nextUp(java.lang.Math.nextUp(far))
       }
-      val attempt = tc.taskAttemptId()
-      val filePrefix = CodedHnsw.layout(codec.value.quant).prefix
-      val p = new org.apache.hadoop.fs.Path(
-        f"$dataDir/$filePrefix-$pid%05d.bin")
+      // tmp is unique PER ATTEMPT: retried/speculative tasks must never
+      // interleave writes into a shared file
+      val p = new org.apache.hadoop.fs.Path(s"$dataDir/${names(pid)}")
       val tmp = new org.apache.hadoop.fs.Path(
-        f"$dataDir/.$filePrefix-$pid%05d-$attempt.tmp")
-      val pfs = p.getFileSystem(Hnsw.mkConf(hconf))
+        s"$dataDir/.${names(pid)}-${tc.taskAttemptId()}.tmp")
+      val fs = p.getFileSystem(Hnsw.mkConf(hconf))
       val out = new java.io.DataOutputStream(
-        new java.io.BufferedOutputStream(pfs.create(tmp, true), 1 << 20))
-      try CodedHnsw.CodedGraph.write(out, codec.value.encode(g.snapshot))
-      finally out.close()
-      if (!pfs.rename(tmp, p)) {
-        if (!pfs.exists(p))
+        new java.io.BufferedOutputStream(fs.create(tmp, true), 1 << 20))
+      try codec match {
+        case Some(c) => CodedHnsw.CodedGraph.write(out, c.value.encode(g.snapshot))
+        case None => Hnsw.FlatGraph.write(out, g.snapshot)
+      } finally out.close()
+      // write-then-rename: readers never see partials. A failed rename
+      // is only tolerable when a rival attempt already published the file.
+      if (!fs.rename(tmp, p)) {
+        if (!fs.exists(p))
           throw new java.io.IOException(s"failed to publish $p")
-        pfs.delete(tmp, false)
+        fs.delete(tmp, false)
       }
-      Iterator.single((pid, rows.length.toLong, rad))
+      Iterator.single((pid, rad))
     }
   }
 }

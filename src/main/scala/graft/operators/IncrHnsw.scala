@@ -53,37 +53,26 @@ object IncrHnsw {
       name.stripPrefix("rebase-").stripSuffix(".bin").split("-")(0).toLong
     else 0L
 
-  /** Build the graph file(s) for one segment, each in one executor task
-    * over at most [[Segments.maxGrowingRows]] rows: a segment within the
-    * cap gets one file at `stem.bin`; an oversized one is hash-split on
-    * the id into ceil(n/cap) files `stem-CCCCC.bin`, each an independent
-    * searchable graph over a bounded slice (searches scan every resident
-    * graph already, so more files = more bounded tasks, not a semantic
-    * change). The cap bounds EXECUTOR task memory now — the driver holds
-    * no rows at any point in an append. */
-  private def buildSegmentGraphs(spark: SparkSession, rows: DataFrame,
-      idCol: String, vecCol: String, metric: String,
-      dataDir: java.io.File, stem: String, m: Int, efConstruction: Int): Unit = {
-    buildSegmentGraphsAll(spark, Seq(stem -> rows), idCol, vecCol, metric,
-      dataDir, m, efConstruction)
-  }
-
-  /** Build the graph files of a SET of segments in ONE shuffle job
-    * (round 16): the former per-segment (and per-chunk) loops ran
-    * sequential single-task jobs — a 5M base at the 20k cap meant 250
-    * serial scans+builds, and the incr BigSmoke measured each 50k
-    * append paying 3 sequential side builds (~19 s) where one task
-    * wave suffices. Per-segment chunk counts come from one union count
-    * job (UNfiltered, the serial path's n<=cap naming rule); the exact
-    * [[Hnsw.PidPartitioner]] pins partition == (segment, chunk)
-    * ordinal, so chunk assignment (pmod(xxhash64(id), nChunks)) and
-    * id-sorted insertion — and therefore every published file's BYTES
-    * and NAME — are identical to the serial path (HybridSpec asserts
-    * it per chunk file). */
+  /** Build the graph files of a SET of segments in ONE job (round 16),
+    * each file in one executor task over at most
+    * [[Segments.maxGrowingRows]] rows: a segment within the cap gets one
+    * file at `stem.bin`; an oversized one is hash-split on the id
+    * (pmod(xxhash64(id), nChunks)) into ceil(n/cap) files
+    * `stem-CCCCC.bin`, each an independent searchable graph over a
+    * bounded slice (searches scan every resident graph already, so more
+    * files = more bounded tasks, not a semantic change). The cap bounds
+    * EXECUTOR task memory — the driver holds no rows at any point in an
+    * append. One job, not one per segment: per-segment loops ran
+    * sequential single-task jobs (a 5M base at the 20k cap meant 250
+    * serial scans+builds; the incr BigSmoke measured each 50k append
+    * paying 3 sequential side builds, ~19 s). Per-segment chunk counts
+    * come from one union count job (UNfiltered); the (segment, chunk)
+    * ordinal is the file's pid in
+    * [[Hnsw.buildGraphFiles]], so every published file's NAME and BYTES
+    * depend only on its own rows (HybridSpec locks them). */
   private def buildSegmentGraphsAll(spark: SparkSession,
       segs: Seq[(String, DataFrame)], idCol: String, vecCol: String,
-      metric: String, dataDir: java.io.File, m: Int,
-      efConstruction: Int): Unit = {
+      dataDir: java.io.File, m: Int, efConstruction: Int): Unit = {
     if (segs.isEmpty) return
     import spark.implicits._
     dataDir.mkdirs()
@@ -102,9 +91,7 @@ object IncrHnsw {
       if (chunks(i) == 1) Seq(s"$stem.bin")
       else (0 until chunks(i)).map(c => f"$stem-$c%05d.bin")
     }.toArray
-    val writer = new SegmentGraphWriter(dataDir.getAbsolutePath, names,
-      metric, m, efConstruction, Hnsw.confEntries(spark))
-    segs.zipWithIndex.map { case ((_, df), i) =>
+    val rows = segs.zipWithIndex.map { case ((_, df), i) =>
       val pidExpr =
         if (chunks(i) == 1) lit(pidBase(i))
         else lit(pidBase(i)) +
@@ -112,17 +99,24 @@ object IncrHnsw {
             .cast("int")
       df.filter(col(vecCol).isNotNull &&
           graft.functions.vectorIsFinite(col(vecCol)))
-        .select(pidExpr.cast("int").as("_pid"),
-          col(idCol).cast("long").as("_id"), col(vecCol).as("_v"))
+        .select(pidExpr.cast("int").as("pid"),
+          col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
     }.reduce(_ unionAll _)
-      .as[(Int, Long, Array[Float])]
-      .rdd.map { case (p, id, v) => (p, (id, v)) }
-      .partitionBy(new Hnsw.PidPartitioner(pidBase.last))
-      .map(_._2)
-      .mapPartitions(writer.run _)
-      .collect()
+    Hnsw.buildGraphFiles(spark, rows, dataDir.getAbsolutePath, names, "l2",
+      m, efConstruction)
     ()
   }
+
+  /** The manifest of a graph set covering store state `st`. Graphs are
+    * built and searched in l2 only; `metric_int` records it so committed
+    * manifests stay fresh. */
+  private def manifest(segDir: String, st: Segments.State, m: Int,
+      efConstruction: Int): graft.index.IndexCatalog.Manifest =
+    graft.index.IndexCatalog.Manifest("hnsw_incr", segDir, "l2",
+      Map("gen" -> st.gen.toString, "seq" -> st.seq.toString,
+        "metric_int" -> "l2", "m" -> m.toString,
+        "ef_construction" -> efConstruction.toString,
+        "format" -> GraphFormat))
 
   /** Sync the index to the segment store's committed state, building
     * ONLY what is new: base graphs on first ensure (or after a gen
@@ -133,11 +127,11 @@ object IncrHnsw {
     * assumed-small: every segment (base or delta) larger than
     * `spark.graft.segments.maxGrowingRows` is hash-split into multiple
     * graph files, so no single task exceeds the cap
-    * ([[buildSegmentGraphs]] — the enforced form of the reference's
+    * ([[buildSegmentGraphsAll]] — the enforced form of the reference's
     * max_growing_segment_size sealing rule,
     * crates/base/src/index.rs:199-226). */
   def ensure(spark: SparkSession, name: String, segDir: String,
-      idCol: String, vecCol: String, metric: String = "l2",
+      idCol: String, vecCol: String,
       m: Int = 12, efConstruction: Int = 300): String = synchronized {
     import graft.index.IndexCatalog
     // delete_threshold policy (round 17): a due store takes the vacuum
@@ -148,7 +142,7 @@ object IncrHnsw {
     val dataDir = new java.io.File(graftDir(spark, name))
     val prior = IndexCatalog.load(spark, name)
       .filter(_.source == segDir)
-      .filter(_.params.get("metric_int").contains(metric))
+      .filter(_.params.get("metric_int").contains("l2"))
       // graph-layout generation: snapshot-time connectivity repair
       // (round 8) changed stored edges, so pre-repair artifacts (no
       // format key, or an older one) must full-rebuild — the staleness
@@ -168,14 +162,9 @@ object IncrHnsw {
           val seq = new java.io.File(dd).getName.stripPrefix("delta-").toLong
           s"side-$seq" -> graft.ParquetCache.read(spark, dd)
         }
-      buildSegmentGraphsAll(spark, segsAll, idCol, vecCol, metric,
-        dataDir, m, efConstruction)
-      IndexCatalog.commit(spark, name, IndexCatalog.Manifest(
-        "hnsw_incr", segDir, metric,
-        Map("gen" -> st.gen.toString, "seq" -> st.seq.toString,
-          "metric_int" -> metric, "m" -> m.toString,
-          "ef_construction" -> efConstruction.toString,
-          "format" -> GraphFormat)))
+      buildSegmentGraphsAll(spark, segsAll, idCol, vecCol, dataDir, m,
+        efConstruction)
+      IndexCatalog.commit(spark, name, manifest(segDir, st, m, efConstruction))
     } else if (st.seq > priorSeq) {
       // incremental: ONLY deltas newer than what the index covers get a
       // side graph; existing files are untouched (deletes are pure
@@ -187,8 +176,8 @@ object IncrHnsw {
           Some(s"side-$seq" -> graft.ParquetCache.read(spark, dd))
         else None
       }
-      buildSegmentGraphsAll(spark, newSegs, idCol, vecCol, metric,
-        dataDir, m, efConstruction)
+      buildSegmentGraphsAll(spark, newSegs, idCol, vecCol, dataDir, m,
+        efConstruction)
       val pm = prior.get
       IndexCatalog.commit(spark, name, pm.copy(
         params = pm.params + ("seq" -> st.seq.toString)))
@@ -213,28 +202,21 @@ object IncrHnsw {
     * while a LATER delete (version > seq) hides exactly as on side
     * graphs. */
   def reindex(spark: SparkSession, name: String, segDir: String,
-      idCol: String, vecCol: String, metric: String = "l2",
+      idCol: String, vecCol: String,
       m: Int = 12, efConstruction: Int = 300): String = synchronized {
     import graft.index.IndexCatalog
     val st = Segments.state(segDir)
     require(st.gen >= 0, s"no committed generation under $segDir")
     IndexCatalog.reindex(spark, name) { dataDir =>
-      val dd = new java.io.File(dataDir)
-      dd.mkdirs()
       // the fold reads the snapshot pinned at `st` — an append that
       // commits during the build stays invisible here and gets its own
       // side graph from the next ensure (stamping st.seq while folding
       // a LATER delta would double-index it)
-      buildSegmentGraphs(spark,
-        Segments.readAt(spark, segDir, idCol, st)
-          .select(col(idCol), col(vecCol)),
-        idCol, vecCol, metric, dd, f"rebase-${st.seq}%d-00000",
-        m, efConstruction)
-      IndexCatalog.Manifest("hnsw_incr", segDir, metric,
-        Map("gen" -> st.gen.toString, "seq" -> st.seq.toString,
-          "metric_int" -> metric, "m" -> m.toString,
-          "ef_construction" -> efConstruction.toString,
-          "format" -> GraphFormat))
+      buildSegmentGraphsAll(spark, Seq(f"rebase-${st.seq}%d-00000" ->
+          Segments.readAt(spark, segDir, idCol, st)
+            .select(col(idCol), col(vecCol))),
+        idCol, vecCol, new java.io.File(dataDir), m, efConstruction)
+      manifest(segDir, st, m, efConstruction)
     }
     graftDir(spark, name)
   }
@@ -243,10 +225,10 @@ object IncrHnsw {
     * reclaims tombstoned rows and folds side graphs into the base
     * (shared [[IncrMaint.vacuum]] contract). */
   def vacuum(spark: SparkSession, name: String, segDir: String,
-      idCol: String, vecCol: String, metric: String = "l2",
+      idCol: String, vecCol: String,
       m: Int = 12, efConstruction: Int = 300): String =
     IncrMaint.vacuum(spark, name, segDir, idCol) {
-      ensure(spark, name, segDir, idCol, vecCol, metric, m, efConstruction)
+      ensure(spark, name, segDir, idCol, vecCol, m, efConstruction)
     }
 
   /** Compact the segment store WITHOUT rebuilding graphs: snapshot the
@@ -321,42 +303,6 @@ object IncrHnsw {
       // per-graph cap at k: the global top-k is covered by the union of
       // per-graph visible top-k (results are dist-sorted)
       vis.take(k).iterator.map { case (d, id) => (id, d) }
-    }
-  }
-}
-
-/** Top-level serializable per-(segment, chunk) graph writer for
-  * [[IncrHnsw.buildSegmentGraphsAll]]'s one-job path (the
-  * GraphFileWriter convention: a local def would capture the
-  * non-serializable IncrHnsw$ singleton). Sorts its partition by id and
-  * publishes `names(pid)` write-then-rename with an attempt-unique tmp
-  * — the serial per-segment naming and bytes, task-parallel. */
-private[graft] class SegmentGraphWriter(dataDir: String,
-    names: Array[String], metric: String, m: Int, efConstruction: Int,
-    hconf: Seq[(String, String)]) extends Serializable {
-  def run(it: Iterator[(Long, Array[Float])]): Iterator[Int] = {
-    val rows = it.toArray.sortBy(_._1)
-    if (rows.isEmpty) Iterator.empty
-    else {
-      val g = new Hnsw.Graph(metric, m, efConstruction)
-      rows.foreach { case (id, v) => g.insert(id, v) }
-      val tc = org.apache.spark.TaskContext.get()
-      val pid = tc.partitionId()
-      val attempt = tc.taskAttemptId()
-      val name = names(pid)
-      val p = new org.apache.hadoop.fs.Path(s"$dataDir/$name")
-      val tmp = new org.apache.hadoop.fs.Path(
-        s"$dataDir/.$name-$attempt.tmp")
-      val pfs = p.getFileSystem(Hnsw.mkConf(hconf))
-      val out = new java.io.DataOutputStream(
-        new java.io.BufferedOutputStream(pfs.create(tmp, true), 1 << 20))
-      try Hnsw.FlatGraph.write(out, g.snapshot) finally out.close()
-      if (!pfs.rename(tmp, p)) {
-        if (!pfs.exists(p))
-          throw new java.io.IOException(s"failed to publish $p")
-        pfs.delete(tmp, false)
-      }
-      Iterator.single(pid)
     }
   }
 }

@@ -52,10 +52,16 @@ class AnnSpec extends SparkSpec {
   }
 
   test("HNSW: k rows, recall@50 >= 0.9") {
-    val got = Hnsw.topk(emb.repartition(4), "vec_id", "embedding", "l2", q, 50)
-      .as[(Long, Double)].collect()
-    assert(got.length == 50)
-    assert(recall(got.map(_._1), flatTopk(50, "l2")) >= 0.9)
+    val name = "annspec_hnsw_p4"
+    graft.index.IndexCatalog.drop(spark, name)
+    try {
+      val path = Hnsw.ensure(spark, name, emb.toDF(),
+        s"$sf001/embeddings.parquet", "vec_id", "embedding", "l2", parts = 4)
+      val got = Hnsw.searchIndex(spark, path, "vec_id", q, 50)
+        .as[(Long, Double)].collect()
+      assert(got.length == 50)
+      assert(recall(got.map(_._1), flatTopk(50, "l2")) >= 0.9)
+    } finally graft.index.IndexCatalog.drop(spark, name)
   }
 
   test("search_mode basic = one fetch (may underfill); vbase refills to k") {

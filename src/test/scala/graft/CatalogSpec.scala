@@ -171,4 +171,22 @@ class CatalogSpec extends SparkSpec {
     assert(hm.params("m") == "8" && hm.params("ef_construction") == "120")
     IndexCatalog.drop(spark, hname)
   }
+
+  test("a commit that cannot publish MANIFEST.bin throws, naming the index") {
+    val name = "catalog_spec_unpublishable"
+    IndexCatalog.drop(spark, name)
+    // a non-empty directory where MANIFEST.bin belongs: the rename of the
+    // written temp file onto it fails
+    val blocker = new java.io.File(IndexCatalog.dir(spark, name), "MANIFEST.bin")
+    blocker.mkdirs()
+    java.nio.file.Files.writeString(new java.io.File(blocker, "x").toPath, "x")
+    try {
+      val e = intercept[java.io.IOException] {
+        IndexCatalog.commit(spark, name,
+          IndexCatalog.Manifest("ivf", "srcU", "l2", Map("nlist" -> "4")))
+      }
+      assert(e.getMessage.contains(name))
+      assert(IndexCatalog.load(spark, name).isEmpty)
+    } finally IndexCatalog.drop(spark, name)
+  }
 }

@@ -834,4 +834,27 @@ class SqlDdlStmtSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
       rm(root)
     }
   }
+
+  test("an idempotent re-CREATE leaves MANIFEST.bin untouched") {
+    val src = tmpSrc()
+    val name = "stmtspec_recreate"
+    IndexCatalog.drop(spark, name)
+    val stmt = s"""CREATE VECTOR INDEX $name ON '$src'
+                   USING vectors (vec_id, embedding vector_l2_ops)
+                   WITH (m = 8, ef_construction = 100)"""
+    def fileKey(): AnyRef = java.nio.file.Files.readAttributes(
+        new File(IndexCatalog.dir(spark, name), "MANIFEST.bin").toPath,
+        classOf[java.nio.file.attribute.BasicFileAttributes])
+      .fileKey()
+    try {
+      assert(spark.sql(stmt).head().getString(0) === "ok")
+      val before = fileKey()
+      assert(spark.sql(stmt).head().getString(0) === "ok")
+      assert(fileKey() == before, "a re-CREATE with unchanged options " +
+        "rewrote MANIFEST.bin")
+    } finally {
+      spark.sql(s"DROP VECTOR INDEX IF EXISTS $name")
+      IndexCatalog.drop(spark, name)
+    }
+  }
 }
